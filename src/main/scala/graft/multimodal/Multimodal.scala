@@ -2239,13 +2239,16 @@ object Multimodal {
           .select((col("doc_id") + 800000).as("media_id"),
             (col("doc_id") + 2000000).as("g"), lit(0).as("v"))))
 
+  /** Bands per image hash: 6 × 10-bit slices of the 64-bit dhash. */
+  private val MediaBands = 6
+
   /** (media_id, dhash) → the 6 ten-bit band rows — the ONE band
     * definition, shared by the index write, the probe's query side,
     * and the incremental upsert so their rows cannot drift.
     */
   private def bandsOfHashes(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id"), col("dhash"),
-      explode(expr("transform(sequence(0, 5), b -> " +
+      explode(expr(s"transform(sequence(0, ${MediaBands - 1}), b -> " +
         "struct(b AS bno, shiftright(dhash, b * 10) & 1023 AS bval))"))
         .as("b"))
       .select(col("media_id"), col("dhash"),
@@ -2508,6 +2511,11 @@ object Multimodal {
       .select(col("media_id"), col("dhash"), col("bno"), col("bval"),
         mediaBandBkt.as("bkt"))
       .collect()
+    // every incoming image yields exactly one bno = 0 row
+    val images = bandRows.count(_.getInt(2) == 0)
+    require(bandRows.length <= MediaBands * images,
+      s"probeMediaIndex: ${bandRows.length} band rows for $images " +
+        s"incoming images — the collect is bounded by $MediaBands per image")
     val bkts = bandRows.map(_.getInt(4)).distinct.sorted
     val bandsI = s.createDataFrame(
       bandRows.toSeq.map(r =>

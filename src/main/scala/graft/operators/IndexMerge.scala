@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** The ONE partitioned-index merge kernel (r14 verdict tasks 1+4).
   *
@@ -22,17 +23,26 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * This kernel replaces the loop with ONE dynamic-partition-overwrite
   * job and ONE commit point:
   *
-  *  1. ONE narrow locating pass over (key, partition) columns —
-  *     parquet column pruning reads a few percent of index bytes —
-  *     computes, per partition holding a batch key, the total row
-  *     count and the batch-key row count (the batch keys ride in as a
-  *     broadcast). Touched = those partitions ∪ the batch's own
-  *     target partitions; bounded collects. The pass is BOUNDED BY
-  *     THE BATCH, not the index, whenever the `_meta/part_stats`
-  *     sidecar (below) is live: per-partition key min/max prunes the
-  *     scan to partitions whose key range can intersect a batch key,
-  *     so a nightly batch touching 0.1 % of a production index reads
-  *     0.1 % of its (key, part) columns instead of all of them.
+  *  1. ONE bounded collect of the batch's (key, partition) column pair
+  *     (free when the batch is a driver-local relation) gives the
+  *     batch's target partitions, the key set and — under a [[PartOf]]
+  *     hint — the contract check below. ONE collect of the
+  *     `_meta/part_stats` sidecar (≤ |partitions| rows; none when the
+  *     rows this JVM last wrote or read are still the files on disk)
+  *     serves both the range pruning and the post-commit sidecar
+  *     rewrite. Then ONE narrow job over the candidate partitions' key
+  *     column — parquet column pruning reads a few percent of index
+  *     bytes, per-task partials merge on the driver, no shuffle, no
+  *     broadcast — computes, per partition, the stored row count, the
+  *     batch-key row count and the row count and key range of the rows
+  *     that survive.
+  *     Touched = partitions holding a batch key ∪ the batch's own
+  *     target partitions. The pass is BOUNDED BY THE BATCH, not the
+  *     index, whenever a hint or the live sidecar (below) names the
+  *     candidates: per-partition key min/max prunes the scan to
+  *     partitions whose key range can intersect a batch key, so a
+  *     nightly batch touching 0.1 % of a production index reads 0.1 %
+  *     of its key column instead of all of it.
   *  2. Partitions whose EVERY stored row carries a batch key and that
   *     gain no batch rows end up empty after the merge; Spark's
   *     dynamic overwrite replaces only partitions present in the
@@ -41,13 +51,31 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *     (or the purge is deleting) — a crash here re-applies cleanly.
   *  3. ONE job: the touched partitions' stored rows (read via
   *     `basePath`, so the output root is never an input root path),
-  *     anti-joined on the batch keys, unioned with the batch, written
+  *     minus the batch keys, unioned with the batch, written
   *     `mode=overwrite` with `partitionOverwriteMode=dynamic` and
   *     `partitionBy(part)`. Spark stages the files under the root and
   *     swaps exactly the written partitions at JOB COMMIT — the single
   *     commit point. Untouched partition directories keep their files
   *     byte-identical (the reads all complete before the commit's
   *     deletes, so reading the partitions being replaced is safe).
+  *
+  * == Job budget ==
+  *
+  * Every read of the kernel's own tables carries its schema (the
+  * caller's `readSchema`, else one parquet footer read on the driver),
+  * so no call pays a schema-inference job. One `merge`/`delete` call
+  * launches at most: the batch collect (0 jobs for a driver-local
+  * batch), the sidecar collect (1; 0 when the previous call on the
+  * index left the rows cached), the locating scan (1), the commit (2
+  * under AQE: the per-partition shuffle and the write; the commit
+  * re-reads the scan's relation, so the touched paths resolve once)
+  * and the sidecar write (1) — 4 or 5 jobs for a local batch, whatever
+  * the number of touched partitions. A custom `mergeFn` adds one
+  * read-back job (its final content is not derivable from the batch).
+  * One warm IVF upsert through [[KeyRouting.mergeThrough]] (route
+  * read, route add, data merge, route settle) runs 13 jobs, one IVF
+  * delete 9 (call-site table in `plans/r17/ivf_write_jobs.md`; pinned
+  * with headroom by `IvfWriteBudgetSpec`).
   *
   * The merge itself is idempotent (anti-join on key + union), so a
   * crash BEFORE the filesystem commit converges on re-application.
@@ -82,6 +110,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * untrusted and the locating pass reads the whole index (and the
   * next completed commit rewrites both). The sidecar itself swaps in
   * via write-to-sibling + rename, so a torn write is never readable.
+  * The rewritten rows of the touched partitions come from the
+  * locating scan (surviving rows) plus the batch's own rows — exact
+  * for the default combine, with no read-back of the committed data.
   * First merge against a pre-sidecar index pays one full locating
   * scan and bootstraps the sidecar from the same pass — no extra I/O.
   *
@@ -96,7 +127,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * [[KeyRouting]]) — and the locating pass reads exactly the hinted
   * partitions plus the batch's own targets: O(batch) whatever the
   * key distribution, sidecar or no sidecar. The sidecar remains the
-  * unhinted fallback and the audit surface.
+  * unhinted fallback and the audit surface. A [[PartOf]] merge
+  * VALIDATES its contract inside the batch collect: a batch row whose
+  * partition column differs from `f(key)` fails the merge before the
+  * pending marker or any partition delete — a wrong hint would
+  * otherwise leave the key's stale rows in an unscanned partition.
   *
   * Compaction: `repartition(partCol)` routes each partition value to
   * one task, so each touched directory rewrites to one file — the
@@ -120,7 +155,8 @@ sealed trait LocateHint
 /** The table is hash-bucketed: a key's partition is the pure function
   * `f(key)`, so stored rows with a batch key can live nowhere else
   * (and the batch's own partition column must equal `f(key)` — the
-  * writer and the hint must share one derivation helper).
+  * writer and the hint must share one derivation helper; a merge
+  * checks it row by row and fails loudly on a mismatch).
   */
 final case class PartOf(f: org.apache.spark.sql.Column =>
   org.apache.spark.sql.Column) extends LocateHint
@@ -132,7 +168,8 @@ final case class PartOf(f: org.apache.spark.sql.Column =>
   * safe (extra partitions scan as no-ops); under-reporting leaks
   * stale rows, so maintainers must only ever let a lookup go stale in
   * the over-reporting direction (commit data BEFORE trimming the
-  * lookup; add lookup rows BEFORE the data they describe).
+  * lookup; add lookup rows BEFORE the data they describe). A
+  * driver-local lookup (KeyRouting's) is read without a job.
   */
 final case class StoredAt(lookup: DataFrame) extends LocateHint
 
@@ -168,12 +205,14 @@ object IndexMerge {
     val fs = fsOf(s, root)
     require(fs.exists(hPath(root)), s"no partitioned index at $root")
     recoverStaging(fs, root, partCol)
-    // the batch feeds the locating pass, the partition probe, and the
-    // commit job — cache it once (bounded: the nightly batch)
-    val batch = batch0.persist()
+    // the batch feeds the locating collect and the commit job — cache
+    // it once (bounded: the nightly batch) unless it already is a
+    // driver-local relation, which both read for free
+    val local = isLocal(batch0)
+    val batch = if (local) batch0 else batch0.persist()
     try mergeCached(s, root, partCol, keyCol, batch, readSchema, mergeFn,
       hint)
-    finally batch.unpersist()
+    finally if (!local) batch.unpersist()
   }
 
   private def mergeCached(s: SparkSession, root: String, partCol: String,
@@ -181,45 +220,65 @@ object IndexMerge {
       mergeFn: Option[(DataFrame, DataFrame) => DataFrame],
       hint: Option[LocateHint]): Seq[Int] = {
     val fs = fsOf(s, root)
-    val keys = batch.select(col(keyCol))
-    // r16 (guide §1.1): a PartOf hint pins batch.partCol == f(key), so
-    // the hint's candidate set IS the batch's own target-partition set
-    // — one bounded collect serves both instead of two near-identical
-    // jobs per merge (every hinted maintenance row and ingest batch
-    // paid the duplicate).
-    val preHinted: Option[Seq[Int]] = hint.collect {
-      case h @ PartOf(_) => hintParts(s, h, keys, keyCol, partCol)
+    val onDisk = partsOnDisk(fs, root, partCol)
+    val schema = dataSchema(s, root, partCol, readSchema, batch)
+    val keyType = keyTypeOf(schema, keyCol, batch)
+    // THE bounded batch collect: (key, part[, f(key)]) per batch row —
+    // the same keys a broadcast of the batch keys would ship through
+    // the driver. Under PartOf it checks the hint's contract BEFORE
+    // anything durable happens: a row filed under another partition
+    // than f(key) would leave that key's stored rows unscanned.
+    val hinted = hint.collect { case PartOf(f) => f(col(keyCol)).cast("int") }
+    val rows = batch.select(Seq(col(keyCol).cast(keyType),
+      col(partCol).cast("int")) ++ hinted: _*).collect()
+    if (hinted.nonEmpty) rows.find(r => r.isNullAt(2) ||
+        r.getInt(1) != r.getInt(2)).foreach { r =>
+      throw new IllegalArgumentException(
+        s"IndexMerge.merge($root): PartOf hint violated — batch row " +
+          s"$keyCol=${r.get(0)} carries $partCol=${r.get(1)} but the " +
+          s"hint places it in ${r.get(2)}; the writer and the hint " +
+          "must share one derivation")
     }
-    val loc = locate(s, root, partCol, keyCol, keys, readSchema, hint,
-      preHinted)
-    val newParts = preHinted.map(_.toSet).getOrElse(
-      batch.select(col(partCol)).distinct()
-        .collect().map(_.getInt(0)).toSet) // bounded: batch partitions
-    val touched = (newParts ++ loc.stats.map(_._1)).toSeq.sorted
+    // a null key matches nothing stored (the anti-join semantics)
+    val keys = rows.iterator.map(_.get(0)).filter(_ != null).toSet
+    val landing: Map[Int, KeyStat] = rows.groupBy(_.getInt(1)).map {
+      case (p, rs) => p -> rs.foldLeft(KeyStat.empty)((a, r) => a.add(r.get(0)))
+    }
+    val newParts = landing.keySet
+    // the batch's own partitions always scan (their surviving rows feed
+    // the sidecar rewrite) — and under PartOf they ARE the candidates
+    val loc = locate(s, root, partCol, keyCol, keyType, schema, keys, hint,
+      newParts.toSeq, onDisk)
+    val touched = (newParts ++ loc.scanned.collect {
+      case (p, sc) if sc.nb > 0 => p
+    }).toSeq.sorted
     if (touched.isEmpty) return Nil
+    // each touched partition's final content: its surviving stored rows
+    // plus the batch rows landing in it (exact for the default combine)
+    val after = touched.map(p => p ->
+      loc.scanned.get(p).fold(KeyStat.empty)(_.rest)
+        .merge(landing.getOrElse(p, KeyStat.empty))).toMap
     // partitions left EMPTY by the merge: all stored rows replaced,
     // no batch rows land (the moved-key old home)
-    val empties = loc.stats.collect {
-      case (p, total, nb) if total == nb && !newParts(p) => p
-    }
+    val empties = touched.filter(after(_).n == 0)
     require(empties.isEmpty || mergeFn.isEmpty,
       s"custom mergeFn with fully-replaced partitions ${empties.sorted} — " +
         "the kernel cannot clear partitions whose final content it " +
         "cannot derive from the batch alone")
     markPending(fs, root, touched)
     empties.foreach(p => fs.delete(hPath(s"$root/$partCol=$p"), true))
-    val readable = touched.filterNot(empties.toSet)
-      .filter(p => fs.exists(hPath(s"$root/$partCol=$p")))
-    val stored = readParts(s, root, partCol, readable, readSchema)
+    val stored = loc.storedIn(partCol,
+      touched.filter(p => loc.scanned.contains(p) && !empties.contains(p)))
       .getOrElse(batch.limit(0))
     val merged = mergeFn match {
       case Some(f) => f(stored, batch)
-      case None =>
-        stored.join(broadcast(keys), Seq(keyCol), "left_anti")
-          .unionByName(batch)
+      case None => withoutKeys(stored, keyCol, keys).unionByName(batch)
     }
     overwriteParts(s, root, partCol, merged)
-    writeStats(s, root, partCol, keyCol, loc.preMeta, touched, readSchema)
+    val fresh =
+      if (mergeFn.isEmpty) after.filter(_._2.n > 0)
+      else readBack(s, root, partCol, keyCol, schema, touched)
+    writeStats(s, root, keyCol, keyType, loc, touched, fresh)
     clearPending(fs, root)
     s.catalog.refreshByPath(root)
     touched
@@ -233,29 +292,36 @@ object IndexMerge {
     * Returns touched partition ids (sorted).
     */
   def delete(s: SparkSession, root: String, partCol: String, keyCol: String,
-      purge0: DataFrame, readSchema: Option[String] = None,
+      purge: DataFrame, readSchema: Option[String] = None,
       hint: Option[LocateHint] = None): Seq[Int] = {
     val fs = fsOf(s, root)
     require(fs.exists(hPath(root)), s"no partitioned index at $root")
     recoverStaging(fs, root, partCol)
-    val purge = purge0.select(col(keyCol)).distinct().persist()
-    try {
-      val loc = locate(s, root, partCol, keyCol, purge, readSchema, hint)
-      val touched = loc.stats.map(_._1).sorted
-      if (touched.isEmpty) return Nil
-      val empties = loc.stats.collect { case (p, total, nb) if total == nb => p }
-      markPending(fs, root, touched)
-      empties.foreach(p => fs.delete(hPath(s"$root/$partCol=$p"), true))
-      val readable = touched.filterNot(empties.toSet)
-      readParts(s, root, partCol, readable, readSchema).foreach { stored =>
-        val survivors = stored.join(broadcast(purge), Seq(keyCol), "left_anti")
-        overwriteParts(s, root, partCol, survivors)
-      }
-      writeStats(s, root, partCol, keyCol, loc.preMeta, touched, readSchema)
-      clearPending(fs, root)
-      s.catalog.refreshByPath(root)
-      touched
-    } finally purge.unpersist()
+    val onDisk = partsOnDisk(fs, root, partCol)
+    val schema = dataSchema(s, root, partCol, readSchema, purge)
+    val keyType = keyTypeOf(schema, keyCol, purge)
+    // one bounded collect: the purge keys (and their PartOf homes)
+    val hinted = hint.collect { case PartOf(f) => f(col(keyCol)).cast("int") }
+    val rows = purge.select(Seq(col(keyCol).cast(keyType)) ++ hinted: _*)
+      .collect()
+    val keys = rows.iterator.map(_.get(0)).filter(_ != null).toSet
+    val cands = if (hinted.isEmpty) Nil
+      else rows.iterator.filterNot(_.isNullAt(1)).map(_.getInt(1)).toSeq
+    val loc = locate(s, root, partCol, keyCol, keyType, schema, keys, hint,
+      cands, onDisk)
+    val touched = loc.scanned.collect { case (p, sc) if sc.nb > 0 => p }
+      .toSeq.sorted
+    if (touched.isEmpty) return Nil
+    val (empties, kept) = touched.partition(loc.scanned(_).rest.n == 0)
+    markPending(fs, root, touched)
+    empties.foreach(p => fs.delete(hPath(s"$root/$partCol=$p"), true))
+    loc.storedIn(partCol, kept).foreach(stored =>
+      overwriteParts(s, root, partCol, withoutKeys(stored, keyCol, keys)))
+    writeStats(s, root, keyCol, keyType, loc, touched,
+      kept.map(p => p -> loc.scanned(p).rest).toMap)
+    clearPending(fs, root)
+    s.catalog.refreshByPath(root)
+    touched
   }
 
   /** The custom-merge escape hatch (band index: hot-band suppression
@@ -307,35 +373,33 @@ object IndexMerge {
       staging: String): Unit = {
     val fs = fsOf(s, root)
     recoverStaging(fs, root, partCol)
-    val stagedParts = fs.listStatus(hPath(staging)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$partCol=") =>
-        n.stripPrefix(s"$partCol=").toInt }
-      .toSet
-    // pre-commit sidecar rows: the live sidecar if trusted, else an
-    // empty frame typed off the staged data — partitions absent from
-    // the sidecar are always scanned, so a staged commit may create a
-    // PARTIAL sidecar safely
-    val preMetaOpt = readStatsIfLive(s, root, keyCol)
-      .orElse(if (stagedParts.nonEmpty) Some(emptyStats(s, staging, keyCol))
-              else None)
-    markPending(fs, root, (touched ++ stagedParts).distinct)
+    val stagedParts = partsOnDisk(fs, staging, partCol).toSet
+    val stagedSchema = footerSchema(s, staging)
+    val schema = stagedSchema.orElse(footerSchema(s, root))
+    // pre-commit sidecar rows: the live sidecar if trusted, else none —
+    // partitions absent from the sidecar are always scanned, so a
+    // staged commit may create a PARTIAL sidecar safely
+    val keyType = schema.flatMap(_.find(_.name == keyCol)).map(_.dataType)
+    val preMeta = keyType.flatMap(readStatsIfLive(s, root, keyCol, _))
+      .orElse(if (stagedParts.nonEmpty) Some(Nil) else None)
+    val all = (touched ++ stagedParts).distinct
+    markPending(fs, root, all)
     touched.filterNot(stagedParts)
       .foreach(p => fs.delete(hPath(s"$root/$partCol=$p"), true))
-    if (stagedParts.nonEmpty) {
+    stagedSchema.foreach { sch =>
       // no repartition: the staging job already compacted per partition
-      s.read.parquet(staging)
+      s.read.schema(sch).parquet(staging)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol)
         .parquet(root)
     }
     fs.delete(hPath(staging), true)
-    preMetaOpt match {
-      case Some(preMeta) =>
-        writeStats(s, root, partCol, keyCol, preMeta,
-          (touched ++ stagedParts).distinct, None)
-      case None =>
+    (preMeta, schema, keyType) match {
+      case (Some(pre), Some(sch), Some(kt)) =>
+        swapStats(s, root, kt, pre.filterNot(r => all.contains(r.getInt(0))) ++
+          statsRows(readBack(s, root, partCol, keyCol, sch, all), keyCol))
+      case _ =>
         // nothing staged AND no trusted sidecar to carry forward: drop
         // any stale sidecar outright (absent = full-scan fallback) —
         // clearing pending over stale rows would re-trust them
@@ -356,10 +420,14 @@ object IndexMerge {
     val fs = fsOf(s, root)
     require(fs.exists(hPath(root)), s"no partitioned index at $root")
     recoverStaging(fs, root, partCol)
-    if (readStatsIfLive(s, root, keyCol).isDefined) return
-    if (partsOnDisk(fs, root, partCol).isEmpty) return
-    val base = readSchema.fold(s.read)(s.read.schema).parquet(root)
-    swapStats(s, fs, root, statsAgg(base, partCol, keyCol))
+    val onDisk = partsOnDisk(fs, root, partCol)
+    if (onDisk.isEmpty) return
+    val schema = dataSchema(s, root, partCol, readSchema,
+      s.read.parquet(root))
+    val keyType = schema(keyCol).dataType
+    if (readStatsIfLive(s, root, keyCol, keyType).isDefined) return
+    swapStats(s, root, keyType,
+      statsRows(readBack(s, root, partCol, keyCol, schema, onDisk), keyCol))
     clearPending(fs, root)
   }
 
@@ -415,16 +483,18 @@ object IndexMerge {
     if (!fs.exists(hPath(s"${statsPath(root)}/_SUCCESS"))) return
     val recorded = pendingParts(fs, root)
     if (fs.exists(hPath(pendingPath(root))) && recorded.isEmpty) return
-    val pre = s.read.parquet(statsPath(root))
-    // a sidecar written under another key (or pre-key_col) cannot be
-    // partially refreshed — leave it untrusted for the next full
-    // commit to rewrite under a single key
-    if (!pre.columns.contains("key_col") ||
-        !pre.select(col("key_col")).distinct()
-          .collect().map(_.getString(0)).toSet.subsetOf(Set(keyCol)))
-      return
-    writeStats(s, root, partCol, keyCol, pre,
-      (touched ++ recorded.getOrElse(Nil)).distinct, readSchema)
+    val schema = dataSchema(s, root, partCol, readSchema,
+      s.read.parquet(root))
+    // a sidecar written under another key (or pre-key_col, or another
+    // key type) cannot be partially refreshed — leave it untrusted for
+    // the next full commit to rewrite under a single key
+    val pre = readStats(s, root, schema(keyCol).dataType)
+      .filter(_.forall(_.getString(4) == keyCol))
+    if (pre.isEmpty) return
+    val all = (touched ++ recorded.getOrElse(Nil)).distinct
+    swapStats(s, root, schema(keyCol).dataType,
+      pre.get.filterNot(r => all.contains(r.getInt(0))) ++
+        statsRows(readBack(s, root, partCol, keyCol, schema, all), keyCol))
     clearPending(fs, root)
   }
 
@@ -456,66 +526,66 @@ object IndexMerge {
 
   // ---- locating pass --------------------------------------------------
 
-  /** (part, total stored rows, stored rows with a batch key) for every
-    * partition holding a batch key, plus the PRE-commit sidecar rows
-    * for every partition the pass did not invalidate — the input to
-    * the post-commit sidecar rewrite.
+  /** Row count and key range of a set of stored rows (`kmin`/`kmax`
+    * null when no row has a non-null key) — a sidecar row's payload.
     */
-  private case class Located(stats: Seq[(Int, Long, Long)],
-      preMeta: DataFrame)
+  private final case class KeyStat(n: Long, kmin: Any, kmax: Any) {
+    def add(k: Any): KeyStat =
+      if (k == null) copy(n = n + 1)
+      else KeyStat(n + 1, lo(kmin, k), hi(kmax, k))
+    def merge(o: KeyStat): KeyStat =
+      KeyStat(n + o.n, lo(kmin, o.kmin), hi(kmax, o.kmax))
+  }
+  private object KeyStat { val empty = KeyStat(0L, null, null) }
 
+  /** One scanned partition: stored rows, rows carrying a located key,
+    * and the count/range of the rows that survive the batch.
+    */
+  private final case class Scanned(total: Long, nb: Long, rest: KeyStat) {
+    def merge(o: Scanned): Scanned =
+      Scanned(total + o.total, nb + o.nb, rest.merge(o.rest))
+  }
+
+  /** Per scanned partition its [[Scanned]] counts, the trusted
+    * PRE-commit sidecar rows (None = no trusted sidecar) — the input
+    * to the post-commit sidecar rewrite — and the scanned partitions'
+    * stored rows, which the commit reads again (every partition it
+    * rewrites was scanned) without resolving the paths a second time.
+    */
+  private final case class Located(scanned: Map[Int, Scanned],
+      meta: Option[Seq[Row]], stored: Option[DataFrame]) {
+    def storedIn(partCol: String, parts: Seq[Int]): Option[DataFrame] =
+      if (parts.isEmpty) None
+      else stored.map(_.filter(col(partCol).isin(parts: _*)))
+  }
+
+  /** The locating pass: the sidecar collect, the candidate set (the
+    * hint's, else the sidecar's ranges, else every partition), and ONE
+    * scan of the candidates' key column. `alsoScan` joins the
+    * candidates (the merge's own targets, whose surviving rows the
+    * sidecar rewrite needs); partitions not on disk drop out.
+    */
   private def locate(s: SparkSession, root: String, partCol: String,
-      keyCol: String, keys: DataFrame, readSchema: Option[String],
-      hint: Option[LocateHint] = None,
-      preHinted: Option[Seq[Int]] = None): Located = {
-    val fs = fsOf(s, root)
+      keyCol: String, keyType: DataType, schema: StructType,
+      keys: Set[Any], hint: Option[LocateHint], alsoScan: Seq[Int],
+      onDisk: Seq[Int]): Located = {
     // a freshly-initialized table may hold no partition directory at
     // all (only a _SUCCESS marker) — nothing stored, nothing touched
-    val onDisk = partsOnDisk(fs, root, partCol)
-    if (onDisk.isEmpty)
-      return Located(Nil, emptyStatsFromKeys(s, keys, keyCol))
+    if (onDisk.isEmpty) return Located(Map.empty, None, None)
+    val meta = readStatsIfLive(s, root, keyCol, keyType)
     // an exact hint outranks the sidecar ranges; without one, the
-    // sidecar prunes (None = no trusted sidecar → full scan).
-    // `preHinted` is the caller's already-collected hint set (the
-    // merge path shares one collect between hint and target
-    // partitions) — same values [[hintParts]] would produce.
-    val cands: Option[Seq[Int]] = hint match {
-      case Some(h) =>
-        val onDiskSet = onDisk.toSet
-        Some(preHinted.getOrElse(hintParts(s, h, keys, keyCol, partCol))
-          .filter(onDiskSet).distinct.sorted)
-      case None => candidateParts(s, root, partCol, keyCol, keys)
+    // sidecar prunes (None = no trusted sidecar → full scan)
+    val cands = hint match {
+      case Some(PartOf(_)) => alsoScan
+      case Some(StoredAt(lookup)) =>
+        storedAtParts(lookup, keyCol, partCol, keys) ++ alsoScan
+      case None => meta.fold(onDisk)(m =>
+        rangeParts(m, keys) ++ uncovered(m, onDisk) ++ alsoScan)
     }
-    cands match {
-      case None =>
-        // no trusted sidecar: ONE full (key, part) scan locates the
-        // batch AND bootstraps the sidecar (same I/O the pre-sidecar
-        // kernel paid every merge)
-        val base = readSchema.fold(s.read)(s.read.schema).parquet(root)
-        val rows = scanStats(s, base, partCol, keyCol, keys)
-        Located(statsOf(rows), statsDf(s, rows, keys, keyCol))
-      case Some(cands) =>
-        val rows =
-          if (cands.isEmpty) Nil
-          else scanStats(s,
-            readParts(s, root, partCol, cands, readSchema).get,
-            partCol, keyCol, keys)
-        readStatsIfLive(s, root, keyCol) match {
-          case Some(meta) =>
-            val metaParts = meta.select(col("part"))
-              .collect().map(_.getInt(0)).toSet // bounded: sidecar rows
-            val extra = rows.filter(r => !metaParts(r.getInt(0)))
-            Located(statsOf(rows),
-              meta.unionByName(statsDf(s, extra, keys, keyCol)))
-          case None =>
-            // hinted pass with no trusted sidecar: the scanned
-            // partitions seed a PARTIAL sidecar (uncovered partitions
-            // always scan on an unhinted pass, so partial is safe —
-            // the staged-commit precedent); stale untrusted rows are
-            // overwritten wholesale, never re-trusted
-            Located(statsOf(rows), statsDf(s, rows, keys, keyCol))
-        }
-    }
+    val onDiskSet = onDisk.toSet
+    val stored = readParts(s, root, partCol,
+      cands.filter(onDiskSet).distinct.sorted, schema)
+    Located(scanParts(stored, partCol, keyCol, keys), meta, stored)
   }
 
   /** The hint's candidate partitions for `keys` — exact by the hint's
@@ -527,14 +597,23 @@ object IndexMerge {
       keys: DataFrame, keyCol: String, partCol: String): Seq[Int] =
     hint match {
       case PartOf(f) =>
-        keys.select(f(col(keyCol)).cast("int").as("part")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded: batch partitions
+        keys.select(f(col(keyCol)).cast("int")).collect()
+          .map(_.getInt(0)).distinct.sorted.toSeq // bounded: batch partitions
       case StoredAt(lookup) =>
-        lookup
-          .join(broadcast(keys.distinct()), Seq(keyCol), "left_semi")
-          .select(col(partCol).cast("int")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded: ≤ |partitions|
+        storedAtParts(lookup, keyCol, partCol,
+          keys.select(col(keyCol)).collect().map(_.get(0)).toSet)
     }
+
+  /** The lookup's partitions for `keys`: one collect of the lookup rows
+    * carrying a key (a job-free read when the lookup is driver-local;
+    * bounded: ≤ |keys| × locations per key).
+    */
+  private def storedAtParts(lookup: DataFrame, keyCol: String,
+      partCol: String, keys: Set[Any]): Seq[Int] =
+    if (keys.isEmpty) Nil
+    else lookup.filter(col(keyCol).isin(keys.toSeq: _*))
+      .select(col(partCol).cast("int")).collect()
+      .map(_.getInt(0)).distinct.sorted.toSeq
 
   /** The partitions the locating pass must scan for `keys` — pruned by
     * the `_meta/part_stats` key ranges when the sidecar is live, plus
@@ -546,40 +625,92 @@ object IndexMerge {
   private[graft] def candidateParts(s: SparkSession, root: String,
       partCol: String, keyCol: String, keys: DataFrame): Option[Seq[Int]] = {
     val fs = fsOf(s, root)
-    val metaOpt = readStatsIfLive(s, root, keyCol)
-    if (metaOpt.isEmpty) return None
-    val meta = metaOpt.get
-    val metaParts = meta.select(col("part"))
-      .collect().map(_.getInt(0)).toSet // bounded: sidecar rows
-    val ranged = keys.distinct()
-      .join(broadcast(meta),
-        col(keyCol) >= col("kmin") && col(keyCol) <= col("kmax"))
-      .select(col("part")).distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded: ≤ |partitions|
-    val onDisk = partsOnDisk(fs, root, partCol)
-    val onDiskSet = onDisk.toSet
-    Some((ranged.filter(onDiskSet) ++ onDisk.filterNot(metaParts))
-      .distinct.sorted)
+    val keyType = footerSchema(s, root).flatMap(_.find(_.name == keyCol))
+      .fold(keys.schema(keyCol).dataType)(_.dataType)
+    readStatsIfLive(s, root, keyCol, keyType).map { meta =>
+      val ks = keys.select(col(keyCol).cast(keyType)).collect()
+        .map(_.get(0)).toSet // bounded: the batch keys
+      val onDisk = partsOnDisk(fs, root, partCol)
+      val onDiskSet = onDisk.toSet
+      (rangeParts(meta, ks).filter(onDiskSet) ++ uncovered(meta, onDisk))
+        .distinct.sorted
+    }
   }
 
-  /** One narrow (key, part) pass over `df`: per partition, Row(part,
-    * total, n_batch, kmin, kmax). Column-pruned; the keys broadcast;
-    * bounded output (≤ |scanned partitions| rows).
-    */
-  private def scanStats(s: SparkSession, df: DataFrame, partCol: String,
-      keyCol: String, keys: DataFrame): Seq[Row] =
-    df.select(col(keyCol), col(partCol))
-      .join(broadcast(keys.distinct().withColumn("__inb", lit(1))),
-        Seq(keyCol), "left")
-      .groupBy(col(partCol))
-      .agg(count(lit(1)).as("__total"), count(col("__inb")).as("__nb"),
-        min(col(keyCol)).as("kmin"), max(col(keyCol)).as("kmax"))
-      .collect().toSeq
-
-  private def statsOf(rows: Seq[Row]): Seq[(Int, Long, Long)] =
-    rows.collect {
-      case r if r.getLong(2) > 0 => (r.getInt(0), r.getLong(1), r.getLong(2))
+  /** Sidecar partitions whose [kmin, kmax] holds at least one key. */
+  private def rangeParts(meta: Seq[Row], keys: Set[Any]): Seq[Int] = {
+    val sorted = keys.iterator.filter(_ != null).toArray
+      .sortWith(keyCmp(_, _) < 0)
+    meta.collect {
+      case r if !r.isNullAt(1) && !r.isNullAt(2) && {
+        // first key ≥ kmin, then is it ≤ kmax
+        var (lo, hi) = (0, sorted.length)
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (keyCmp(sorted(mid), r.get(1)) < 0) lo = mid + 1 else hi = mid
+        }
+        lo < sorted.length && keyCmp(sorted(lo), r.get(2)) <= 0
+      } => r.getInt(0)
     }
+  }
+
+  /** On-disk partitions the sidecar has no row for (always scanned). */
+  private def uncovered(meta: Seq[Row], onDisk: Seq[Int]): Seq[Int] = {
+    val covered = meta.iterator.map(_.getInt(0)).toSet
+    onDisk.filterNot(covered)
+  }
+
+  /** ONE job over the key column of `stored`: per partition, the
+    * stored row count, the rows carrying a key in `keys`, and the
+    * count/range of the rest. Per-task partials (≤ |partitions| each)
+    * merge on the driver — no shuffle stage, and the key set rides in
+    * the task closure instead of a broadcast-exchange job.
+    */
+  private def scanParts(stored: Option[DataFrame], partCol: String,
+      keyCol: String, keys: Set[Any]): Map[Int, Scanned] =
+    stored.fold(Map.empty[Int, Scanned]) { df =>
+      df.select(col(keyCol), col(partCol).cast("int")).rdd
+        .mapPartitions { it =>
+          val acc = scala.collection.mutable.HashMap.empty[Int, Scanned]
+          it.foreach { r =>
+            val (k, p) = (r.get(0), r.getInt(1))
+            val a = acc.getOrElse(p, Scanned(0L, 0L, KeyStat.empty))
+            acc(p) =
+              if (k != null && keys(k)) a.copy(total = a.total + 1, nb = a.nb + 1)
+              else Scanned(a.total + 1, a.nb, a.rest.add(k))
+          }
+          acc.iterator
+        }
+        .collect() // bounded: ≤ tasks × |partitions|
+        .groupMapReduce(_._1)(_._2)(_ merge _)
+    }
+
+  /** The committed rows' stats of those of `parts` still on disk — the
+    * read-back for combines whose result the kernel cannot derive.
+    */
+  private def readBack(s: SparkSession, root: String, partCol: String,
+      keyCol: String, schema: StructType, parts: Seq[Int]): Map[Int, KeyStat] = {
+    val onDisk = partsOnDisk(fsOf(s, root), root, partCol).toSet
+    scanParts(readParts(s, root, partCol, parts.filter(onDisk), schema),
+      partCol, keyCol, Set.empty).map { case (p, sc) => p -> sc.rest }
+  }
+
+  /** Total order on key values matching Spark's min/max: strings by
+    * UTF-8 bytes, everything else by its Java natural order (the key
+    * types are atomic and collected in one type, so both sides match).
+    */
+  private def keyCmp(a: Any, b: Any): Int = (a, b) match {
+    case (x: String, y: String) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(x)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case _ => throw new IllegalArgumentException(
+      s"IndexMerge: key type ${a.getClass} has no range order")
+  }
+  private def lo(a: Any, b: Any): Any =
+    if (a == null) b else if (b == null || keyCmp(a, b) <= 0) a else b
+  private def hi(a: Any, b: Any): Any =
+    if (a == null) b else if (b == null || keyCmp(a, b) >= 0) a else b
 
   // ---- sidecar maintenance ---------------------------------------------
 
@@ -588,23 +719,62 @@ object IndexMerge {
     !fs.exists(hPath(pendingPath(root))) &&
       fs.exists(hPath(s"${statsPath(root)}/_SUCCESS"))
 
+  /** The sidecar rows this JVM last wrote or read, per sidecar
+    * directory, with their key type and the identity (name, length,
+    * mtime) of the files they came from: a call's locating pass reuses
+    * the rows the previous commit on the same index wrote instead of
+    * reading them back. A sidecar rewritten by anyone else carries new
+    * file names, so it reads as a miss.
+    */
+  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, DataType, Seq[Row])]()
+
+  private def statsIdentity(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Option[String] =
+    if (!fs.exists(hPath(dir))) None
+    else Some(fs.listStatus(hPath(dir)).filter(visible)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(",")).filter(_.nonEmpty)
+
+  private def remember(dir: String, id: String, keyType: DataType,
+      rows: Seq[Row]): Unit = {
+    if (statsCache.size() > 256) statsCache.clear()
+    statsCache.put(dir, (id, keyType, rows))
+  }
+
+  /** The sidecar rows as (part, kmin, kmax, n, key_col) — from
+    * [[statsCache]] when its files are the ones last seen, else read
+    * with the schema its footer records in ONE bounded collect
+    * (≤ |partitions| rows). None when there is no sidecar file, or it
+    * predates `key_col`, or its ranges are not of `keyType`.
+    */
+  private def readStats(s: SparkSession, root: String,
+      keyType: DataType): Option[Seq[Row]] = {
+    val dir = statsPath(root)
+    statsIdentity(fsOf(s, root), dir).flatMap { id =>
+      Option(statsCache.get(dir)).filter(_._1 == id)
+        .map { case (_, kt, rows) => (kt, rows) }
+        .orElse(footerSchema(s, dir)
+          .filter(_.fieldNames.contains("key_col"))
+          .map { sch =>
+            val rows = s.read.schema(sch).parquet(dir)
+              .select("part", "kmin", "kmax", "n", "key_col")
+              .collect().toSeq // bounded: sidecar rows
+            remember(dir, id, sch("kmin").dataType, rows)
+            (sch("kmin").dataType, rows)
+          })
+    }.collect { case (kt, rows) if kt == keyType => rows }
+  }
+
   /** The live sidecar, provided it is trusted AND describes `keyCol`'s
     * ranges — a sidecar written under a different key (the mixed-key
     * MaxSim tables) or by a pre-key_col build reads as absent, so the
     * caller full-scans and rewrites it under its own key.
     */
   private def readStatsIfLive(s: SparkSession, root: String,
-      keyCol: String): Option[DataFrame] =
+      keyCol: String, keyType: DataType): Option[Seq[Row]] =
     if (!statsLive(fsOf(s, root), root)) None
-    else {
-      val meta = s.read.parquet(statsPath(root))
-      if (!meta.columns.contains("key_col")) None
-      else {
-        val ks = meta.select(col("key_col")).distinct()
-          .collect().map(_.getString(0)).toSet // bounded: sidecar rows
-        if (ks.subsetOf(Set(keyCol))) Some(meta) else None
-      }
-    }
+    else readStats(s, root, keyType).filter(_.forall(_.getString(4) == keyCol))
 
   /** Write the pending marker, recording the partitions whose sidecar
     * rows the in-flight write will invalidate: while it exists the
@@ -640,91 +810,134 @@ object IndexMerge {
       root: String): Unit =
     fs.delete(hPath(pendingPath(root)), false)
 
-  private def statsSchema(keyType: org.apache.spark.sql.types.DataType) =
+  private def statsSchema(keyType: DataType) =
     StructType(Seq(StructField("part", IntegerType, nullable = false),
       StructField("kmin", keyType), StructField("kmax", keyType),
       StructField("n", LongType, nullable = false),
-      StructField("key_col", org.apache.spark.sql.types.StringType,
-        nullable = false)))
+      StructField("key_col", StringType, nullable = false)))
 
-  /** (part, kmin, kmax, n, key_col) rows as a DataFrame, from the
-    * locating pass's collected Row(part, total, nb, kmin, kmax) shape.
-    * `key_col` records WHICH column the ranges describe: a table
-    * maintained under more than one key (the MaxSim copies merge on
-    * vec_id but purge on did) must never have one key's values pruned
-    * against the other key's ranges — a mismatched sidecar reads as
-    * untrusted and the commit rewrites it under its own key.
+  /** `stats` as (part, kmin, kmax, n, key_col) sidecar rows. `key_col`
+    * records WHICH column the ranges describe: a table maintained
+    * under more than one key (the MaxSim copies merge on vec_id but
+    * purge on did) must never have one key's values pruned against the
+    * other key's ranges — a mismatched sidecar reads as untrusted and
+    * the commit rewrites it under its own key.
     */
-  private def statsDf(s: SparkSession, rows: Seq[Row], keys: DataFrame,
-      keyCol: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val out = rows.map(r =>
-      Row(r.getInt(0), r.get(3), r.get(4), r.getLong(1), keyCol))
-    s.createDataFrame(out.asJava,
-      statsSchema(keys.schema(keyCol).dataType))
-  }
-
-  private def emptyStatsFromKeys(s: SparkSession, keys: DataFrame,
-      keyCol: String): DataFrame =
-    statsDf(s, Nil, keys, keyCol)
-
-  private def emptyStats(s: SparkSession, anyTable: String,
-      keyCol: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(Seq.empty[Row].asJava,
-      statsSchema(s.read.parquet(anyTable).schema(keyCol).dataType))
-  }
-
-  /** Per-partition (part, kmin, kmax, n, key_col) of `df` — the
-    * read-back aggregation that recomputes exact sidecar rows for
-    * just-committed partitions.
-    */
-  private def statsAgg(df: DataFrame, partCol: String,
-      keyCol: String): DataFrame =
-    df.groupBy(col(partCol).cast("int").as("part"))
-      .agg(min(col(keyCol)).as("kmin"), max(col(keyCol)).as("kmax"),
-        count(lit(1)).as("n"))
-      .withColumn("key_col", lit(keyCol))
+  private def statsRows(stats: Map[Int, KeyStat], keyCol: String): Seq[Row] =
+    stats.toSeq.map { case (p, k) => Row(p, k.kmin, k.kmax, k.n, keyCol) }
 
   /** Post-commit sidecar rewrite: pre-commit rows for untouched
-    * partitions ∪ exact read-back rows for the touched partitions
-    * still on disk, swapped in via write-to-sibling + rename (a torn
-    * sidecar write is never readable; the `pending` marker covers the
-    * delete→rename gap).
+    * partitions (the sidecar collect's rows, plus the untouched
+    * partitions the locating scan covered and the sidecar did not) ∪
+    * `fresh` rows for the touched partitions still holding rows.
     */
-  private def writeStats(s: SparkSession, root: String, partCol: String,
-      keyCol: String, preMeta: DataFrame, touched: Seq[Int],
-      readSchema: Option[String]): Unit = {
-    val fs = fsOf(s, root)
-    val survivors = touched
-      .filter(p => fs.exists(hPath(s"$root/$partCol=$p")))
+  private def writeStats(s: SparkSession, root: String, keyCol: String,
+      keyType: DataType, loc: Located, touched: Seq[Int],
+      fresh: Map[Int, KeyStat]): Unit = {
+    val meta = loc.meta.getOrElse(Nil)
+    val covered = meta.iterator.map(_.getInt(0)).toSet
     val touchedSet = touched.toSet
-    val kept = preMeta.filter(!col("part")
-      .isin(touchedSet.toSeq.map(Integer.valueOf): _*))
-    val fresh = readParts(s, root, partCol, survivors, readSchema)
-      .map(df => statsAgg(df, partCol, keyCol))
-    swapStats(s, fs, root, fresh.fold(kept)(kept.unionByName(_)))
+    val extra = loc.scanned.collect {
+      case (p, sc) if !covered(p) && !touchedSet(p) => p -> sc.rest
+    }
+    swapStats(s, root, keyType,
+      meta.filterNot(r => touchedSet(r.getInt(0))) ++
+        statsRows(extra ++ fresh, keyCol))
   }
 
-  private def swapStats(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String,
-      stats: DataFrame): Unit = {
+  /** Write `rows` as the sidecar via write-to-sibling + rename (a torn
+    * sidecar write is never readable; the `pending` marker covers the
+    * delete→rename gap) — one job.
+    */
+  private def swapStats(s: SparkSession, root: String, keyType: DataType,
+      rows: Seq[Row]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val fs = fsOf(s, root)
     val live = statsPath(root)
     val next = live + "__new"
-    stats.coalesce(1).write.mode("overwrite").parquet(next)
+    val sorted = rows.sortBy(_.getInt(0))
+    s.createDataFrame(sorted.asJava, statsSchema(keyType))
+      .coalesce(1).write.mode("overwrite").parquet(next)
     fs.delete(hPath(live), true)
     fs.rename(hPath(next), hPath(live))
+    statsIdentity(fs, live).foreach(remember(live, _, keyType, sorted))
   }
 
   // ---- shared reads / the single commit ---------------------------------
 
   private def partsOnDisk(fs: org.apache.hadoop.fs.FileSystem,
       root: String, partCol: String): Seq[Int] =
-    fs.listStatus(hPath(root)).toSeq.collect {
+    if (!fs.exists(hPath(root))) Nil
+    else fs.listStatus(hPath(root)).toSeq.collect {
       case st if st.isDirectory &&
           st.getPath.getName.startsWith(s"$partCol=") =>
         st.getPath.getName.stripPrefix(s"$partCol=").toInt
     }
+
+  /** True when `df` is a driver-local relation: its collects run
+    * without a job, so caching it would only add one.
+    */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The Spark schema the first parquet file under `dir` (or one
+    * partition level below it) was written with, from its footer on the
+    * driver — the schema-inference job a schema-less read pays, minus
+    * the job. Underscore/dot entries (`_meta`, `_SUCCESS`, staging
+    * litter) are skipped; None when `dir` holds no data file.
+    */
+  private[graft] def footerSchema(s: SparkSession,
+      dir: String): Option[StructType] = {
+    val fs = fsOf(s, dir)
+    def firstFile(p: org.apache.hadoop.fs.Path, depth: Int)
+        : Option[org.apache.hadoop.fs.Path] = {
+      val sts = fs.listStatus(p).filter(visible).sortBy(_.getPath.getName)
+      sts.find(st => st.isFile && st.getLen > 0).map(_.getPath).orElse(
+        if (depth == 0) None
+        else sts.iterator.filter(_.isDirectory)
+          .flatMap(d => firstFile(d.getPath, depth - 1)).nextOption())
+    }
+    if (!fs.exists(hPath(dir))) None
+    else firstFile(hPath(dir), 1).map { f =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+          s.sparkContext.hadoopConfiguration))
+      val json =
+        try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally in.close()
+      // a file not written by Spark: fall back to inference on it alone
+      json.map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(s.read.parquet(f.toString).schema)
+    }
+  }
+
+  /** Not `_meta`, `_SUCCESS`, a `.crc` or staging litter. */
+  private def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** The stored rows' data schema: the caller's `readSchema`, else the
+    * table's footer, else (a table with no data file yet) `like`'s
+    * columns minus the partition column.
+    */
+  private def dataSchema(s: SparkSession, root: String, partCol: String,
+      readSchema: Option[String], like: => DataFrame): StructType =
+    readSchema.map(StructType.fromDDL)
+      .orElse(footerSchema(s, root))
+      .getOrElse(StructType(like.schema.filterNot(_.name == partCol)))
+
+  private def keyTypeOf(schema: StructType, keyCol: String,
+      like: DataFrame): DataType =
+    schema.find(_.name == keyCol).getOrElse(like.schema(keyCol)).dataType
+
+  /** `stored` minus the rows carrying one of `keys` (null keys stay). */
+  private def withoutKeys(stored: DataFrame, keyCol: String,
+      keys: Set[Any]): DataFrame =
+    if (keys.isEmpty) stored
+    else stored.filter(col(keyCol).isNull ||
+      !col(keyCol).isin(keys.toSeq: _*))
 
   /** The stored rows of `parts` under `root`, read via `basePath` so
     * the partition column is recovered but the OUTPUT root is never an
@@ -733,13 +946,10 @@ object IndexMerge {
     * file reads all complete before the dynamic commit's deletes).
     */
   private def readParts(s: SparkSession, root: String, partCol: String,
-      parts: Seq[Int], readSchema: Option[String]): Option[DataFrame] =
+      parts: Seq[Int], schema: StructType): Option[DataFrame] =
     if (parts.isEmpty) None
-    else {
-      val reader = readSchema.fold(s.read)(s.read.schema)
-        .option("basePath", root)
-      Some(reader.parquet(parts.map(p => s"$root/$partCol=$p"): _*))
-    }
+    else Some(s.read.schema(schema).option("basePath", root)
+      .parquet(parts.map(p => s"$root/$partCol=$p"): _*))
 
   /** The single commit: dynamic partition overwrite of exactly the
     * partitions present in `df`, compacted one-task-per-partition.

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, hash, lit, pmod}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Routing tables for cell-partitioned indexes — the [[StoredAt]]
   * hint's production backing store.
@@ -67,6 +70,7 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
     buckets: Int, rbFns: Map[String, Column => Column],
     locCol: String = "cell", carryCols: Seq[String] = Nil,
     dirName: String = "route", schemaDdl: Option[String] = None) {
+  import KeyRouting.Rows
 
   private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
   private[graft] val routeDir = s"$root/$dirName"
@@ -131,36 +135,73 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
     f.rename(hPath(tmp), hPath(routeDir))
   }
 
-  /** The route rows whose bucket can hold one of `keys` (single key
-    * column; any of `keyCols`) — reads ONLY those buckets, the PartOf
-    * geometry applied as a read. Returns (key…, cell) rows narrowed
-    * to the exact keys.
+  /** The route's (key…, cell) schema: from its footer (driver-only),
+    * else `schemaDdl` (the fully-empty route — no bucket file to read;
+    * the media tables' bare-schema rule applied here).
     */
-  def lookup(s: SparkSession, keys: DataFrame): DataFrame = {
-    val keyCol = keys.columns.head
-    val rb = rbFor(keyCol)
-    val f = fs(s)
-    val bkts = keys.select(rb(col(keyCol)).cast("int").as("rb"))
-      .distinct().collect().map(_.getInt(0)) // bounded: batch buckets
-      .filter(b => f.exists(hPath(s"$routeDir/rb=$b"))).sorted
-    if (bkts.isEmpty)
-      // schemaDdl covers the fully-empty route (no bucket dirs =
-      // nothing for schema inference; the media tables' bare-schema
-      // rule applied here)
-      schemaDdl.fold(s.read)(d => s.read.schema(s"$d, rb INT"))
-        .parquet(routeDir).limit(0).select(routeCols: _*)
-    else
-      s.read.option("basePath", routeDir)
-        .parquet(bkts.map(b => s"$routeDir/rb=$b"): _*)
-        .join(broadcast(keys.distinct()), Seq(keyCol), "left_semi")
-        .select(routeCols: _*)
+  private def routeSchema(s: SparkSession): StructType = {
+    val full = IndexMerge.footerSchema(s, routeDir)
+      .orElse(schemaDdl.map(StructType.fromDDL))
+      .getOrElse(s.read.parquet(routeDir).schema)
+    StructType((keyCols ++ carryCols :+ locCol).map(full(_)))
   }
+
+  /** `df`'s (key…, cell) rows cast to the route's types, deduplicated
+    * on the driver, and each row's (key, bucket) — ONE bounded collect
+    * (the batch's pairs; no job for a driver-local batch).
+    */
+  private def pairsOf(sch: StructType, df: DataFrame): (Rows, Seq[(Any, Int)]) = {
+    val key = keyCols.head
+    val rows = df.select(sch.map(f => col(f.name).cast(f.dataType)) :+
+      rbFor(key)(col(key)).cast("int"): _*).collect()
+    (Rows(sch, rows.toSeq.map(r => Row(r.toSeq.init: _*)).distinct),
+      rows.toSeq.map(r => (r.get(0), r.getInt(sch.length))))
+  }
+
+  /** `keys` (single key column; any of `keyCols`) with their buckets —
+    * one bounded collect (no job for a driver-local frame).
+    */
+  private def keyed(keys: DataFrame): Seq[(Any, Int)] = {
+    val keyCol = keys.columns.head
+    keys.select(col(keyCol), rbFor(keyCol)(col(keyCol)).cast("int"))
+      .collect().toSeq.map(r => (r.get(0), r.getInt(1))) // bounded: the batch keys
+  }
+
+  /** The route rows of the (key, bucket) pairs `kb` of `keyCol`: ONE
+    * job reading ONLY those buckets — the PartOf geometry applied as a
+    * read — keys filtered in the scan. Bounded: the keys' route rows.
+    */
+  private def storedRows(s: SparkSession, sch: StructType, keyCol: String,
+      kb: Seq[(Any, Int)]): Rows = {
+    val f = fs(s)
+    val ks = kb.iterator.map(_._1).filter(_ != null).toSet
+    val bkts = kb.map(_._2).distinct
+      .filter(b => f.exists(hPath(s"$routeDir/rb=$b"))).sorted
+    Rows(sch,
+      if (bkts.isEmpty) Nil
+      else s.read.schema(sch).option("basePath", routeDir)
+        .parquet(bkts.map(b => s"$routeDir/rb=$b"): _*)
+        .filter(col(keyCol).isin(ks.toSeq: _*))
+        .select(routeCols: _*)
+        .collect().toSeq) // bounded: the keys' route rows
+  }
+
+  /** The route rows of `keys` (single key column; any of `keyCols`) as
+    * a driver-local frame of (key…, cell) rows narrowed to the exact
+    * keys — read once, so a [[StoredAt]] over it costs the kernel no
+    * further job.
+    */
+  def lookup(s: SparkSession, keys: DataFrame): DataFrame =
+    lookupRows(s, keys).df(s)
 
   /** True when none of `keys` has a route row — the pure-insert fast
     * path probe (bounded: reads only the keys' buckets).
     */
   def allNew(s: SparkSession, keys: DataFrame): Boolean =
-    lookup(s, keys).limit(1).collect().isEmpty
+    lookupRows(s, keys).rows.isEmpty
+
+  private def lookupRows(s: SparkSession, keys: DataFrame): Rows =
+    storedRows(s, routeSchema(s), keys.columns.head, keyed(keys))
 
   /** The route buckets `keys` hash to — a bounded collect (≤ batch
     * buckets), for callers that maintain per-bucket side state.
@@ -173,38 +214,46 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
 
   /** The stored DATA rows of `keys` under the partitioned table at
     * `dataPath`, read through the route: only the route-listed
-    * partitions open, then the keys semi-join narrows to the exact
-    * rows. The route may over-report (an extra partition scans as a
-    * no-op); the data read is the truth — so this is the right
-    * primitive for presence probes and pre-commit stats arithmetic,
-    * where route staleness must never fabricate a row.
+    * partitions open, then the keys filter narrows to the exact rows.
+    * The route may over-report (an extra partition scans as a no-op);
+    * the data read is the truth — so this is the right primitive for
+    * presence probes and pre-commit stats arithmetic, where route
+    * staleness must never fabricate a row.
     */
   def dataOf(s: SparkSession, dataPath: String, keys: DataFrame,
       readSchema: Option[String] = None): DataFrame = {
     val keyCol = keys.columns.head
     val f = fs(s)
-    val parts = lookup(s, keys).select(col(locCol).cast("int"))
-      .distinct().collect().map(_.getInt(0)) // bounded: ≤ |partitions|
+    val kb = keyed(keys)
+    val routed = storedRows(s, routeSchema(s), keyCol, kb)
+    val locAt = routed.schema.fieldIndex(locCol)
+    val parts = routed.rows.map(_.getInt(locAt)).distinct
       .filter(p => f.exists(hPath(s"$dataPath/$locCol=$p"))).sorted
-    if (parts.isEmpty)
-      readSchema.fold(s.read)(s.read.schema).parquet(dataPath).limit(0)
-    else
-      readSchema.fold(s.read)(s.read.schema)
-        .option("basePath", dataPath)
-        .parquet(parts.map(p => s"$dataPath/$locCol=$p"): _*)
-        .join(broadcast(keys.distinct()), Seq(keyCol), "left_semi")
+    val reader = readSchema.map(StructType.fromDDL)
+      .orElse(IndexMerge.footerSchema(s, dataPath))
+      .fold(s.read)(s.read.schema)
+    if (parts.isEmpty) reader.parquet(dataPath).limit(0)
+    else reader.option("basePath", dataPath)
+      .parquet(parts.map(p => s"$dataPath/$locCol=$p"): _*)
+      .filter(col(keyCol).isin(kb.map(_._1).filter(_ != null).distinct: _*))
   }
 
   /** Union-merge `pairs` (key…, cell) into the route, KEEPING existing
     * pairs of the same keys — the upsert protocol's first commit.
     * Idempotent (distinct over stored ∪ batch).
     */
-  def addLocations(s: SparkSession, pairs: DataFrame): Unit =
-    IndexMerge.merge(s, routeDir, "rb", keyCols.head,
-      pairs.withColumn("rb", rbFor(keyCols.head)(col(keyCols.head))),
-      mergeFn = Some((stored, batch) =>
-        stored.unionByName(batch).distinct()),
-      hint = Some(PartOf(rbFor(keyCols.head))))
+  def addLocations(s: SparkSession, pairs: DataFrame): Unit = {
+    val sch = routeSchema(s)
+    val (batch, kb) = pairsOf(sch, pairs)
+    addRows(s, batch, storedRows(s, sch, keyCols.head, kb))
+  }
+
+  /** [[addLocations]] with the batch keys' stored route rows already
+    * read: they ride in the batch, so a plain replace-merge keeps them
+    * — no custom combine, no read-back of the committed buckets.
+    */
+  private def addRows(s: SparkSession, pairs: Rows, stored: Rows): Unit =
+    settleLocations(s, (stored ++ pairs).df(s))
 
   /** Replace-merge each batch key's route rows down to exactly
     * `pairs` — the upsert protocol's final commit (and the whole
@@ -229,23 +278,27 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
     * route-add → data merge under `StoredAt` → route-settle (or one
     * settle + merge on the pure-insert fast path). `batch` carries
     * `keyCols`, `cell`, and the payload; returns the data merge's
-    * touched cells.
+    * touched cells. The batch keys' route rows are read ONCE: empty,
+    * they are the all-new probe; otherwise they ride into the add and
+    * are the data merge's `StoredAt` lookup (the batch's own cells,
+    * which the add records, always scan anyway).
     */
   def mergeThrough(s: SparkSession, cells: String, batch: DataFrame,
       readSchema: Option[String] = None): Seq[Int] = {
     ensure(s, cells, readSchema)
     val keyCol = keyCols.head
-    val pairs = batch.select(routeCols: _*).distinct()
-    if (allNew(s, batch.select(col(keyCol)))) {
-      settleLocations(s, pairs)
+    val sch = routeSchema(s)
+    val (pairs, kb) = pairsOf(sch, batch)
+    val stored = storedRows(s, sch, keyCol, kb)
+    if (stored.rows.isEmpty) {
+      settleLocations(s, pairs.df(s))
       IndexMerge.merge(s, cells, locCol, keyCol, batch, readSchema,
-        hint = Some(StoredAt(pairs)))
+        hint = Some(StoredAt(pairs.df(s))))
     } else {
-      addLocations(s, pairs)
-      val locs = lookup(s, batch.select(col(keyCol)))
+      addRows(s, pairs, stored)
       val touched = IndexMerge.merge(s, cells, locCol, keyCol, batch,
-        readSchema, hint = Some(StoredAt(locs)))
-      settleLocations(s, pairs)
+        readSchema, hint = Some(StoredAt(stored.df(s))))
+      settleLocations(s, pairs.df(s))
       touched
     }
   }
@@ -258,17 +311,29 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
   def deleteThrough(s: SparkSession, cells: String, keys0: DataFrame,
       readSchema: Option[String] = None): Seq[Int] = {
     ensure(s, cells, readSchema)
-    val keys = keys0.select(col(keys0.columns.head)).distinct()
-    val locs = lookup(s, keys)
-    val touched = IndexMerge.delete(s, cells, locCol,
-      keys.columns.head, keys, readSchema,
-      hint = Some(StoredAt(locs)))
+    val keyCol = keys0.columns.head
+    val kb = keyed(keys0)
+    val keys = s.createDataFrame(kb.map(k => Row(k._1)).distinct.asJava,
+      keys0.select(col(keyCol)).schema)
+    val stored = storedRows(s, routeSchema(s), keyCol, kb)
+    val touched = IndexMerge.delete(s, cells, locCol, keyCol, keys,
+      readSchema, hint = Some(StoredAt(stored.df(s))))
     dropLocations(s, keys)
     touched
   }
 }
 
 object KeyRouting {
+  /** Driver rows under a known schema — the route's bounded working
+    * sets (a batch's pairs, its keys' route rows), turned into a
+    * driver-local frame only where a kernel call consumes one.
+    */
+  private final case class Rows(schema: StructType, rows: Seq[Row]) {
+    def df(s: SparkSession): DataFrame =
+      s.createDataFrame(rows.asJava, schema)
+    def ++(o: Rows): Rows = Rows(schema, (rows ++ o.rows).distinct)
+  }
+
   /** Demo bucket count — production sizes this ~√N (doc above). */
   val Buckets = 16
 

@@ -926,12 +926,14 @@ object SimilarityQueries {
 
   def upsertIvfIndex(s: SparkSession, idx: String,
       batch: DataFrame): Seq[Int] = {
-    val dup = batch.groupBy(col("vec_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty)
+    // the duplicate check runs on the batch's ids on the driver — the
+    // same bounded key set the merge kernel collects, and no job at all
+    // for a driver-local batch, where an aggregate costs two
+    val ids = batch.select(col("vec_id")).collect().map(_.get(0))
+    ids.diff(ids.distinct).headOption.foreach(id =>
       throw new IllegalArgumentException(
-        s"upsertIvfIndex: duplicate vec_id in batch (${dup.head.get(0)}) " +
-          "— MERGE needs one row per key")
+        s"upsertIvfIndex: duplicate vec_id in batch ($id) " +
+          "— MERGE needs one row per key"))
     val cents = loadCentroids(s, idx)
     val assigned = batch
       .select(col("vec_id"), col("embedding"), argmaxCell(cents).as("cell"))

@@ -22,4 +22,11 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every listener event posted so far is delivered
+    * (`listenerBus` is private[spark]) — job counters read after this
+    * see every job the measured call launched.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

@@ -300,19 +300,6 @@ class PlanAuditSpec extends SparkSuite {
       "idsI" -> ("the screened batch's own ids (local relation from " +
         "the one band-row collect), anti-joined so a foreachBatch " +
         "retry screens index-minus-batch (the bounded nightly unit)")),
-    "operators/IndexMerge.scala" -> Map(
-      "keys" -> ("the merge batch's key column — the bounded nightly " +
-        "maintenance unit every partitioned-index MERGE is keyed by"),
-      "keys.distinct()" -> ("the same batch keys, deduplicated for " +
-        "the StoredAt hint's lookup semi-join"),
-      "purge" -> "the deletion list (same bounded maintenance unit)",
-      "meta" -> ("the _meta/part_stats sidecar — one row per index " +
-        "partition (≤ |partitions|), the locating pass's pruning " +
-        "table")),
-    "operators/KeyRouting.scala" -> Map(
-      "keys.distinct()" -> ("the batch/purge keys (the bounded " +
-        "nightly maintenance unit) semi-joined against their own " +
-        "route buckets in lookup/dataOf")),
     "streaming/EventStreams.scala" -> Map(
       "dim" -> ("caller-declared static dimension frame (the stream-" +
         "static enrich contract: dims are re-resolved per micro-batch)")))

@@ -433,6 +433,32 @@ class IndexMergeSpec extends SparkSuite {
       (0L, 0, "a"), (1L, 1, "b"), (4L, 1, "B"), (2L, 2, "NEW")))
   }
 
+  test("a wrong PartOf hint fails the merge before anything durable happens") {
+    // the hint claims part = id % 3, but the batch files id 7 under
+    // part 0 (7 % 3 = 1): trusting it would scan bucket 0 only and
+    // leave any stored id-7 rows of bucket 1 alive next to the new row
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-indexmerge-wronghint").toString + "/idx"
+    Seq((0L, 0, "a"), (3L, 0, "b"), (1L, 1, "c"), (7L, 1, "d"))
+      .toDF("id", "part", "payload")
+      .write.partitionBy("part").parquet(root)
+    val partOf = PartOf(k => pmod(k, lit(3)))
+    val before = fileState(root)
+    val err = intercept[IllegalArgumentException] {
+      IndexMerge.merge(spark, root, "part", "id",
+        Seq((3L, 0, "B"), (7L, 0, "D")).toDF("id", "part", "payload"),
+        hint = Some(partOf))
+    }
+    assert(err.getMessage.contains("PartOf hint violated"), err.getMessage)
+    assert(err.getMessage.contains("id=7"), err.getMessage)
+    assert(fileState(root) === before,
+      "a rejected merge touched a partition directory")
+    assert(!fs(root).exists(hp(s"$root/_meta")),
+      "a rejected merge wrote the pending marker or the sidecar")
+    assert(rowsOf(root) === Set(
+      (0L, 0, "a"), (3L, 0, "b"), (1L, 1, "c"), (7L, 1, "d")))
+  }
+
   test("a StoredAt hint prunes to the lookup's partitions; over-reporting is a no-op; moved keys clear their hinted old home") {
     val root = freshIdx(base)
     // id=5 moves part 2 -> 0; the lookup (a routing table) knows its
