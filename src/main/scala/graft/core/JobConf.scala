@@ -31,7 +31,11 @@ final case class JobConf(
       * combiner defaults to the reducer itself,
       * `schedule/MasterServant.java:198-201` — only sound for
       * associative+commutative reducers, which is the caller's contract
-      * exactly as in the reference).
+      * exactly as in the reference). The combiner is a partial merge
+      * applied 0..N times: on a split whose first
+      * [[MapReduceJob.CombineProbe]] records are more than half
+      * distinct keys, only those records are combined and the rest pass
+      * through; smaller splits are always combined whole.
       */
     combine: Boolean = true,
     /** merge all reducer outputs into a single file (the reference's

@@ -45,6 +45,15 @@ object MapReduceApp {
     obj.asInstanceOf[T]
   }
 
+  /** Bytes under `input` — a file or a directory tree, on any Hadoop
+    * file system; 0 when it does not exist.
+    */
+  private def inputBytes(input: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(input)
+    val fs   = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+  }
+
   def parseConf(props: Properties): JobConf = {
     val input = Option(props.getProperty("mapred.Input.name"))
       .getOrElse(sys.error("mapred.Input.name is required"))
@@ -56,9 +65,7 @@ object MapReduceApp {
       .map(_.toLong)
       .orElse {
         Option(props.getProperty("mapred.Mappers.number")).map { m =>
-          val f = new java.io.File(input)
-          val bytes = if (f.isFile) f.length() else 0L
-          math.max(1L, math.ceil(bytes.toDouble / m.toInt).toLong)
+          math.max(1L, math.ceil(inputBytes(input).toDouble / m.toInt).toLong)
         }
       }
       .getOrElse(2048L)

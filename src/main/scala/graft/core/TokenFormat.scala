@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.hadoop.io.{NullWritable, Text}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The reference's token text format, byte-semantics-compatible.
@@ -29,16 +31,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * (`... sao|2881 `, trailing space, no newline).
   */
 class NoNewlineTextOutputFormat
-    extends org.apache.hadoop.mapreduce.lib.output.TextOutputFormat[
-      org.apache.hadoop.io.NullWritable, org.apache.hadoop.io.Text] {
+    extends org.apache.hadoop.mapreduce.lib.output.TextOutputFormat[NullWritable, Text] {
   override def getRecordWriter(
       job: org.apache.hadoop.mapreduce.TaskAttemptContext) = {
     val file = getDefaultWorkFile(job, ".txt")
     val out  = file.getFileSystem(job.getConfiguration).create(file, false)
-    new org.apache.hadoop.mapreduce.RecordWriter[
-      org.apache.hadoop.io.NullWritable, org.apache.hadoop.io.Text] {
-      override def write(k: org.apache.hadoop.io.NullWritable,
-          v: org.apache.hadoop.io.Text): Unit =
+    new org.apache.hadoop.mapreduce.RecordWriter[NullWritable, Text] {
+      override def write(k: NullWritable, v: Text): Unit =
         out.write(v.getBytes, 0, v.getLength)
       override def close(c: org.apache.hadoop.mapreduce.TaskAttemptContext): Unit =
         out.close()
@@ -51,12 +50,33 @@ object TokenFormat extends Serializable {
   val MaxTokenLen  = 1000
   val Separator    = ' '
 
+  private val SeparatorRun = java.util.regex.Pattern.compile("[ \n\r]+")
+
   /** Tokenize one chunk of text (reference O2 semantics; newline is
     * normalized to a separator — see the read() scale note).
+    *
+    * The space-separated scan hands over one token per record, so the
+    * common chunk — at most [[MaxTokenLen]] chars, no separator — is
+    * returned as is, without the regex or the 1000-char split.
     */
   def tokenize(chunk: String): Iterator[String] =
-    chunk.split("[ \n\r]+").iterator.filter(_.nonEmpty)
-      .flatMap(_.grouped(MaxTokenLen))
+    if (chunk.length <= MaxTokenLen && !hasSeparator(chunk)) {
+      if (chunk.isEmpty) Iterator.empty else Iterator.single(chunk)
+    } else {
+      SeparatorRun.split(chunk).iterator.filter(_.nonEmpty).flatMap { t =>
+        if (t.length <= MaxTokenLen) Iterator.single(t) else t.grouped(MaxTokenLen)
+      }
+    }
+
+  private def hasSeparator(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ' || c == '\n' || c == '\r') return true
+      i += 1
+    }
+    false
+  }
 
   /** Parse one token into a (key, value) record — replica of
     * `TokenRecordReader.next` (`user/TokenRecordReader.java:156-165`),
@@ -65,11 +85,26 @@ object TokenFormat extends Serializable {
     * (every field is a trailing empty), which would throw in the
     * reference; we treat it as a none-token — the semantics the
     * mr_tokenize oracle (`NOT regexp '^[^|]*\|+$'`) already declares.
+    *
+    * Computed with `indexOf` instead of materializing every field: the
+    * split has two or more fields exactly when some char after the
+    * first `|` is not a `|` (trailing empty fields are dropped).
     */
   def parse(token: String): (String, String) = {
-    val split = token.split("\\|")
-    if (split.length <= 1) (KeyNone, token)
-    else (split(0), split(1))
+    val bar = token.indexOf('|')
+    if (bar < 0) (KeyNone, token)
+    else {
+      val end   = token.indexOf('|', bar + 1)
+      val value = token.substring(bar + 1, if (end < 0) token.length else end)
+      if (value.isEmpty && onlyPipesFrom(token, bar + 1)) (KeyNone, token)
+      else (token.substring(0, bar), value)
+    }
+  }
+
+  private def onlyPipesFrom(s: String, from: Int): Boolean = {
+    var i = from
+    while (i < s.length && s.charAt(i) == '|') i += 1
+    i == s.length
   }
 
   /** Serialize one record — `TokenRecordWriter.write` format string
@@ -107,24 +142,32 @@ object TokenFormat extends Serializable {
     * `key|value ` tokens on one line with NO trailing newline — the
     * reference's writer emits only the tokens (`user/TokenRecordWriter
     * .java:85`), so output files are byte-identical to its artifacts.
-    * One file per reduce partition, like the `reduced<index>` files.
+    * One file per partition, like the `reduced<index>` files; one file
+    * in all when `conf.joinOutput` is set.
+    *
+    * Each partition is appended into one buffer and written as one
+    * record through [[NoNewlineTextOutputFormat]].
     */
-  def write(ds: Dataset[(String, String)], conf: JobConf): Unit = {
-    val lines = ds.mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else Iterator(it.map { case (k, v) => format(k, v) }.mkString(" ") + " ")
-    }(org.apache.spark.sql.Encoders.STRING)
+  def writePairs(pairs: RDD[(String, String)], conf: JobConf): Unit = {
+    val lines = pairs.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val sb = new java.lang.StringBuilder
+        it.foreach { case (k, v) =>
+          sb.append(k).append('|').append(v).append(Separator)
+        }
+        Iterator.single((NullWritable.get(), new Text(sb.toString)))
+      }
+    }
     val out = if (conf.joinOutput) lines.coalesce(1) else lines
     val path = new org.apache.hadoop.fs.Path(conf.output)
-    val fs = path.getFileSystem(
-      ds.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(pairs.sparkContext.hadoopConfiguration)
     if (fs.exists(path)) fs.delete(path, true)
-    out.rdd
-      .map(l => (org.apache.hadoop.io.NullWritable.get(),
-        new org.apache.hadoop.io.Text(l)))
-      .saveAsNewAPIHadoopFile(conf.output,
-        classOf[org.apache.hadoop.io.NullWritable],
-        classOf[org.apache.hadoop.io.Text],
-        classOf[NoNewlineTextOutputFormat])
+    out.saveAsNewAPIHadoopFile(conf.output, classOf[NullWritable],
+      classOf[Text], classOf[NoNewlineTextOutputFormat])
   }
+
+  /** [[writePairs]] over a Dataset. */
+  def write(ds: Dataset[(String, String)], conf: JobConf): Unit =
+    writePairs(ds.rdd, conf)
 }

@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.core.{JobConf, TokenFormat}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The reference's pluggable IOFormat seam (O4: `idl/mapReduce.idl:
@@ -20,6 +21,14 @@ trait KVFormat extends Serializable {
   def read(spark: SparkSession, conf: JobConf): Dataset[(String, String)]
   def write(ds: Dataset[(String, String)], conf: JobConf): Unit
 
+  /** Write the engine's reduced pairs ([[graft.core.MapReduceJob.run]]).
+    * Formats that write through a Dataset take this default; a format
+    * with an RDD writer overrides it and skips the encoder.
+    */
+  def writePairs(pairs: RDD[(String, String)], conf: JobConf): Unit =
+    write(SparkSession.active.createDataset(pairs)(
+      Encoders.tuple(Encoders.STRING, Encoders.STRING)), conf)
+
   protected def maybeJoin[T](ds: Dataset[T], conf: JobConf): Dataset[T] =
     if (conf.joinOutput) ds.coalesce(1) else ds
 }
@@ -30,6 +39,8 @@ object TokenKVFormat extends KVFormat {
     TokenFormat.read(spark, conf)
   override def write(ds: Dataset[(String, String)], conf: JobConf): Unit =
     TokenFormat.write(ds, conf)
+  override def writePairs(pairs: RDD[(String, String)], conf: JobConf): Unit =
+    TokenFormat.writePairs(pairs, conf)
 }
 
 /** Headered CSV with `key,value` columns. */

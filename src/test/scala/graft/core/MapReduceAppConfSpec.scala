@@ -19,6 +19,24 @@ class MapReduceAppConfSpec extends AnyFunSuite {
     assert(conf.splitSize == 2001L)
   }
 
+  test("Mappers.number derives the split size from a file's length") {
+    // the hermetic twin of the leg above: a 100,010-byte temp file
+    val f = java.nio.file.Files.createTempFile("graft-conf", ".txt")
+    java.nio.file.Files.write(f, Array.fill[Byte](100010)('a'))
+    val conf = MapReduceApp.parseConf(props(
+      "mapred.Input.name" -> f.toString, "mapred.Mappers.number" -> "50"))
+    assert(conf.splitSize == 2001L)
+  }
+
+  test("Mappers.number sizes a directory input by all the bytes under it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-conf")
+    java.nio.file.Files.write(dir.resolve("a.txt"), Array.fill[Byte](60000)('a'))
+    java.nio.file.Files.write(dir.resolve("b.txt"), Array.fill[Byte](40010)('b'))
+    val conf = MapReduceApp.parseConf(props(
+      "mapred.Input.name" -> dir.toString, "mapred.Mappers.number" -> "50"))
+    assert(conf.splitSize == 2001L)
+  }
+
   test("explicit split-size wins over Mappers.number") {
     val conf = MapReduceApp.parseConf(props(
       "mapred.Input.name" -> "/root/reference/mapreduce/seed/teste100K.txt",

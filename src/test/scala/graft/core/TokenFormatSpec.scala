@@ -48,6 +48,36 @@ class TokenFormatSpec extends AnyFunSuite with GenChecks {
     }
   }
 
+  /** 0–2500 chars of letters and `|`, with no separators, sparse ones
+    * or dense ones, so both tokens past 1000 chars and separator runs
+    * occur.
+    */
+  private val rawText: Gen[String] = for {
+    n       <- Gen.choose(0, 2500)
+    density <- Gen.oneOf(0, 1, 30)
+    tokenChar = Gen.frequency(40 -> Gen.alphaChar, 4 -> Gen.const('|'))
+    char = if (density == 0) tokenChar
+           else Gen.frequency(44 -> tokenChar, density -> Gen.oneOf(' ', '\n', '\r'))
+    cs      <- Gen.listOfN(n, char)
+  } yield cs.mkString
+
+  test("property: tokenize equals the regex split it replaces") {
+    forAll(rawText) { s =>
+      val want = s.split("[ \n\r]+").filter(_.nonEmpty).flatMap(_.grouped(1000)).toSeq
+      assert(TokenFormat.tokenize(s).toSeq == want)
+    }
+  }
+
+  test("property: parse equals the Java String.split formulation it replaces") {
+    val token = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(3 -> Gen.const('|'), 2 -> Gen.oneOf('a', 'b')))).map(_.mkString)
+    forAll(token, n = 1000) { t =>
+      val split = t.split("\\|")
+      val want = if (split.length <= 1) ("none", t) else (split(0), split(1))
+      assert(TokenFormat.parse(t) == want, t)
+    }
+  }
+
   test("property: parse never throws and key defaults to none without '|'") {
     forAll(word) { w =>
       assert(TokenFormat.parse(w) == ("none", w))
