@@ -78,8 +78,10 @@ object JavaHashPartitioner extends KeyPartitioner {
   *    partition stream, identical to `ReduceTaskServant.java:263-301`.
   *    Each group reaches the reducer as a lazy iterator over the stream
   *    itself; nothing is copied per group.
-  *  - write: [[run]] hands the reduced RDD to `format.writePairs`;
-  *    [[transform]] wraps it in one `createDataset`.
+  *  - write: [[run]] hands the pairs to `format.writePairs` with the
+  *    caller's session; [[transform]] wraps them in one `createDataset`.
+  *    A map-only job (`numReducers = 0`) takes the same path with the
+  *    mapper's output.
   *
   * The RDD layer is used deliberately here (SURVEY §7.3): an arbitrary
   * user partition function + user comparator + streaming grouped reduce
@@ -102,10 +104,8 @@ object MapReduceJob {
       partitioner: KeyPartitioner = JavaHashPartitioner,
       format: graft.sources.KVFormat = graft.sources.TokenKVFormat,
   ): Unit =
-    if (conf.numReducers == 0)
-      format.write(transform(spark, conf, mapper, reducer, partitioner, format), conf)
-    else
-      format.writePairs(reduced(spark, conf, mapper, reducer, partitioner, format), conf)
+    format.writePairs(spark,
+      pairs(spark, conf, mapper, reducer, partitioner, format), conf)
 
   /** The dataflow without the sink — exposed for tests and composition. */
   def transform(
@@ -117,17 +117,13 @@ object MapReduceJob {
       format: graft.sources.KVFormat = graft.sources.TokenKVFormat,
   ): Dataset[(String, String)] = {
     import spark.implicits._
-    if (conf.numReducers == 0) {
-      // O10 map-only: no partition/sort/shuffle, streams straight out
-      // (`servant/DirectOutputCollectorServant.java`).
-      format.read(spark, conf).flatMap { case (k, v) => mapper.map(k, v) }
-    } else {
-      spark.createDataset(reduced(spark, conf, mapper, reducer, partitioner, format))
-    }
+    spark.createDataset(pairs(spark, conf, mapper, reducer, partitioner, format))
   }
 
-  /** map → combine → partition/sort/shuffle → reduce, for `numReducers > 0`. */
-  private def reduced(
+  /** map, then combine → partition/sort/shuffle → reduce when the job
+    * has reducers.
+    */
+  private def pairs(
       spark: SparkSession,
       conf: JobConf,
       mapper: Mapper,
@@ -137,6 +133,10 @@ object MapReduceJob {
   ): RDD[(String, String)] = {
     val mapped = format.read(spark, conf).rdd
       .flatMap { case (k, v) => mapper.map(k, v) }
+    // O10 map-only: no partition/sort/shuffle, streams straight out
+    // (`servant/DirectOutputCollectorServant.java`).
+    if (conf.numReducers == 0) return mapped
+
     val combined =
       if (conf.combine) mapped.mapPartitions(it => combinePartition(it, reducer))
       else mapped

@@ -45,13 +45,24 @@ object MapReduceApp {
     obj.asInstanceOf[T]
   }
 
-  /** Bytes under `input` — a file or a directory tree, on any Hadoop
-    * file system; 0 when it does not exist.
+  /** Bytes a scan of `input` reads — a file, or the files of a
+    * directory tree, on any Hadoop file system; 0 when it does not
+    * exist. Like Spark's file listing, names starting with `_` or `.`
+    * below `input` (`_SUCCESS`, `.crc` checksums, `_temporary/`) are
+    * skipped.
     */
   private def inputBytes(input: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(input)
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val path = new Path(input)
     val fs   = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    def hidden(st: FileStatus): Boolean = {
+      val name = st.getPath.getName
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    }
+    def bytes(st: FileStatus): Long =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.filterNot(hidden).map(bytes).sum
+      else st.getLen
+    if (fs.exists(path)) bytes(fs.getFileStatus(path)) else 0L
   }
 
   def parseConf(props: Properties): JobConf = {

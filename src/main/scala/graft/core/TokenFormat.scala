@@ -54,29 +54,10 @@ object TokenFormat extends Serializable {
 
   /** Tokenize one chunk of text (reference O2 semantics; newline is
     * normalized to a separator — see the read() scale note).
-    *
-    * The space-separated scan hands over one token per record, so the
-    * common chunk — at most [[MaxTokenLen]] chars, no separator — is
-    * returned as is, without the regex or the 1000-char split.
     */
   def tokenize(chunk: String): Iterator[String] =
-    if (chunk.length <= MaxTokenLen && !hasSeparator(chunk)) {
-      if (chunk.isEmpty) Iterator.empty else Iterator.single(chunk)
-    } else {
-      SeparatorRun.split(chunk).iterator.filter(_.nonEmpty).flatMap { t =>
-        if (t.length <= MaxTokenLen) Iterator.single(t) else t.grouped(MaxTokenLen)
-      }
-    }
-
-  private def hasSeparator(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == ' ' || c == '\n' || c == '\r') return true
-      i += 1
-    }
-    false
-  }
+    SeparatorRun.split(chunk).iterator.filter(_.nonEmpty)
+      .flatMap(_.grouped(MaxTokenLen))
 
   /** Parse one token into a (key, value) record — replica of
     * `TokenRecordReader.next` (`user/TokenRecordReader.java:156-165`),
@@ -85,26 +66,11 @@ object TokenFormat extends Serializable {
     * (every field is a trailing empty), which would throw in the
     * reference; we treat it as a none-token — the semantics the
     * mr_tokenize oracle (`NOT regexp '^[^|]*\|+$'`) already declares.
-    *
-    * Computed with `indexOf` instead of materializing every field: the
-    * split has two or more fields exactly when some char after the
-    * first `|` is not a `|` (trailing empty fields are dropped).
     */
   def parse(token: String): (String, String) = {
-    val bar = token.indexOf('|')
-    if (bar < 0) (KeyNone, token)
-    else {
-      val end   = token.indexOf('|', bar + 1)
-      val value = token.substring(bar + 1, if (end < 0) token.length else end)
-      if (value.isEmpty && onlyPipesFrom(token, bar + 1)) (KeyNone, token)
-      else (token.substring(0, bar), value)
-    }
-  }
-
-  private def onlyPipesFrom(s: String, from: Int): Boolean = {
-    var i = from
-    while (i < s.length && s.charAt(i) == '|') i += 1
-    i == s.length
+    val split = token.split("\\|")
+    if (split.length <= 1) (KeyNone, token)
+    else (split(0), split(1))
   }
 
   /** Serialize one record — `TokenRecordWriter.write` format string

@@ -21,12 +21,14 @@ trait KVFormat extends Serializable {
   def read(spark: SparkSession, conf: JobConf): Dataset[(String, String)]
   def write(ds: Dataset[(String, String)], conf: JobConf): Unit
 
-  /** Write the engine's reduced pairs ([[graft.core.MapReduceJob.run]]).
-    * Formats that write through a Dataset take this default; a format
-    * with an RDD writer overrides it and skips the encoder.
+  /** Write the engine's output pairs ([[graft.core.MapReduceJob.run]])
+    * under `spark`, the job's session, so its SQL conf (codec, records
+    * per file, …) governs the write. Formats that write through a
+    * Dataset take this default; a format with an RDD writer overrides
+    * it and skips the encoder.
     */
-  def writePairs(pairs: RDD[(String, String)], conf: JobConf): Unit =
-    write(SparkSession.active.createDataset(pairs)(
+  def writePairs(spark: SparkSession, pairs: RDD[(String, String)], conf: JobConf): Unit =
+    write(spark.createDataset(pairs)(
       Encoders.tuple(Encoders.STRING, Encoders.STRING)), conf)
 
   protected def maybeJoin[T](ds: Dataset[T], conf: JobConf): Dataset[T] =
@@ -39,7 +41,8 @@ object TokenKVFormat extends KVFormat {
     TokenFormat.read(spark, conf)
   override def write(ds: Dataset[(String, String)], conf: JobConf): Unit =
     TokenFormat.write(ds, conf)
-  override def writePairs(pairs: RDD[(String, String)], conf: JobConf): Unit =
+  override def writePairs(spark: SparkSession, pairs: RDD[(String, String)],
+      conf: JobConf): Unit =
     TokenFormat.writePairs(pairs, conf)
 }
 

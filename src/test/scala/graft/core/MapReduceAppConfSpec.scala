@@ -28,10 +28,15 @@ class MapReduceAppConfSpec extends AnyFunSuite {
     assert(conf.splitSize == 2001L)
   }
 
-  test("Mappers.number sizes a directory input by all the bytes under it") {
+  test("Mappers.number sizes a directory input by the bytes a scan reads") {
     val dir = java.nio.file.Files.createTempDirectory("graft-conf")
     java.nio.file.Files.write(dir.resolve("a.txt"), Array.fill[Byte](60000)('a'))
     java.nio.file.Files.write(dir.resolve("b.txt"), Array.fill[Byte](40010)('b'))
+    // files a Hadoop writer leaves beside its output; a scan skips them
+    java.nio.file.Files.write(dir.resolve(".a.txt.crc"), Array.fill[Byte](800)('c'))
+    java.nio.file.Files.write(dir.resolve("_SUCCESS"), Array.fill[Byte](300)('s'))
+    val temporary = java.nio.file.Files.createDirectories(dir.resolve("_temporary/0"))
+    java.nio.file.Files.write(temporary.resolve("part-00000"), Array.fill[Byte](5000)('t'))
     val conf = MapReduceApp.parseConf(props(
       "mapred.Input.name" -> dir.toString, "mapred.Mappers.number" -> "50"))
     assert(conf.splitSize == 2001L)

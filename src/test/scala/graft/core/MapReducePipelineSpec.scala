@@ -256,23 +256,42 @@ class MapReducePipelineSpec extends SparkSuite {
     assert(partFiles(out).map(f => new String(Files.readAllBytes(f), UTF_8)) == golden)
   }
 
-  test("run works through the CSV, JSON and Parquet sinks") {
+  /** Runs word count over 5 000 `k|v` pairs through each non-token
+    * sink on `session`; checks the round trip and returns each format's
+    * output directory.
+    */
+  private def sinkRuns(session: org.apache.spark.sql.SparkSession): Seq[(KVFormat, String)] = {
     import spark.implicits._
     val pairs = oracleTokens(distinctCorpus.text).take(5000).map { t =>
       val f = t.split("\\|"); (f(0), f(1))
     }
     val want = pairs.groupBy(_._2).map { case (v, ps) => v -> ps.size.toString }
-    for (fmt <- Seq[KVFormat](CsvKVFormat, JsonKVFormat, ParquetKVFormat)) {
+    for (fmt <- Seq[KVFormat](CsvKVFormat, JsonKVFormat, ParquetKVFormat)) yield {
       val dir = tmp("graft-mrp-sink")
       val in  = JobConf(input = dir.resolve("in").toString,
         output = dir.resolve("in").toString)
       fmt.write(pairs.toDS().repartition(3), in)
       val job = JobConf(input = in.input, output = dir.resolve("out").toString,
         numReducers = 3)
-      MapReduceJob.run(spark, job, WordCount.TokenMapper, WordCount.SumReducer,
+      MapReduceJob.run(session, job, WordCount.TokenMapper, WordCount.SumReducer,
         format = fmt)
       val back = fmt.read(spark, job.copy(input = job.output)).collect().toMap
       assert(back == want, fmt.getClass.getSimpleName)
+      fmt -> job.output
+    }
+  }
+
+  test("run works through the CSV, JSON and Parquet sinks") {
+    sinkRuns(spark).foreach { case (fmt, out) =>
+      assert(partFiles(out).size == 3, fmt.getClass.getSimpleName)
+    }
+  }
+
+  test("run writes a sink under the session it is given, not the active one") {
+    // ~1 660 records per reducer: without the child's cap, one file each
+    val child = Sessions.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "1000")
+    sinkRuns(child).foreach { case (fmt, out) =>
+      assert(partFiles(out).size == 6, fmt.getClass.getSimpleName)
     }
   }
 }

@@ -68,16 +68,6 @@ class TokenFormatSpec extends AnyFunSuite with GenChecks {
     }
   }
 
-  test("property: parse equals the Java String.split formulation it replaces") {
-    val token = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n,
-      Gen.frequency(3 -> Gen.const('|'), 2 -> Gen.oneOf('a', 'b')))).map(_.mkString)
-    forAll(token, n = 1000) { t =>
-      val split = t.split("\\|")
-      val want = if (split.length <= 1) ("none", t) else (split(0), split(1))
-      assert(TokenFormat.parse(t) == want, t)
-    }
-  }
-
   test("property: parse never throws and key defaults to none without '|'") {
     forAll(word) { w =>
       assert(TokenFormat.parse(w) == ("none", w))
