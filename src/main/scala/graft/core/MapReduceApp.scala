@@ -12,6 +12,9 @@ import java.util.Properties
   *   mapred.Input.name            input path (required)
   *   mapred.Output.name           output path (default: <input>.out)
   *   mapred.Input.split-size      split bytes (default 2048)
+  *   mapred.Mappers.number        map tasks; without a split size, the
+  *                                split size is the input's bytes over
+  *                                this (the input must exist: no glob)
   *   mapred.Reducers.number       reduce parallelism (default 1)
   *   mapred.Combine.flag          true/false (default true)
   *   mapred.Join.flag             true/false merge outputs (default false)
@@ -46,12 +49,13 @@ object MapReduceApp {
   }
 
   /** Bytes a scan of `input` reads — a file, or the files of a
-    * directory tree, on any Hadoop file system; 0 when it does not
-    * exist. Like Spark's file listing, names starting with `_` or `.`
-    * below `input` (`_SUCCESS`, `.crc` checksums, `_temporary/`) are
-    * skipped.
+    * directory tree, on any Hadoop file system; `None` when no file or
+    * directory of that name exists. A glob is not expanded, so a
+    * pattern such as `part-*` is `None` too. Like Spark's file
+    * listing, names starting with `_` or `.` below `input` (`_SUCCESS`,
+    * `.crc` checksums, `_temporary/`) are skipped.
     */
-  private def inputBytes(input: String): Long = {
+  private def inputBytes(input: String): Option[Long] = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     val path = new Path(input)
     val fs   = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -62,7 +66,7 @@ object MapReduceApp {
     def bytes(st: FileStatus): Long =
       if (st.isDirectory) fs.listStatus(st.getPath).iterator.filterNot(hidden).map(bytes).sum
       else st.getLen
-    if (fs.exists(path)) bytes(fs.getFileStatus(path)) else 0L
+    if (fs.exists(path)) Some(bytes(fs.getFileStatus(path))) else None
   }
 
   def parseConf(props: Properties): JobConf = {
@@ -76,7 +80,11 @@ object MapReduceApp {
       .map(_.toLong)
       .orElse {
         Option(props.getProperty("mapred.Mappers.number")).map { m =>
-          math.max(1L, math.ceil(inputBytes(input).toDouble / m.toInt).toLong)
+          val bytes = inputBytes(input).getOrElse(throw new IllegalArgumentException(
+            s"mapred.Input.name=$input names no file or directory (globs are not " +
+              "expanded), so mapred.Mappers.number cannot size its splits; " +
+              "set mapred.Input.split-size instead"))
+          math.max(1L, math.ceil(bytes.toDouble / m.toInt).toLong)
         }
       }
       .getOrElse(2048L)

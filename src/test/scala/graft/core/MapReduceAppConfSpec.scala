@@ -13,8 +13,10 @@ class MapReduceAppConfSpec extends AnyFunSuite {
 
   test("Mappers.number derives the split size from the input length") {
     // teste100K.txt is 100,010 bytes; 50 mappers => 2001-byte splits
+    val input = s"${Corpora.ReferenceSeedDir}/teste100K.txt"
+    Corpora.assumeReference(input)
     val conf = MapReduceApp.parseConf(props(
-      "mapred.Input.name" -> "/root/reference/mapreduce/seed/teste100K.txt",
+      "mapred.Input.name" -> input,
       "mapred.Mappers.number" -> "50"))
     assert(conf.splitSize == 2001L)
   }
@@ -42,9 +44,24 @@ class MapReduceAppConfSpec extends AnyFunSuite {
     assert(conf.splitSize == 2001L)
   }
 
+  test("Mappers.number on an input that does not exist fails naming mapred.Input.name") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-conf")
+    java.nio.file.Files.write(dir.resolve("a.txt"), Array.fill[Byte](100)('a'))
+    // a missing file, and a glob (not expanded): neither has bytes on
+    // disk to derive a split size from
+    Seq(dir.resolve("missing.txt").toString, s"$dir/*.txt").foreach { input =>
+      val e = intercept[IllegalArgumentException] {
+        MapReduceApp.parseConf(props(
+          "mapred.Input.name" -> input, "mapred.Mappers.number" -> "50"))
+      }
+      assert(e.getMessage.contains("mapred.Input.name") && e.getMessage.contains(input),
+        e.getMessage)
+    }
+  }
+
   test("explicit split-size wins over Mappers.number") {
     val conf = MapReduceApp.parseConf(props(
-      "mapred.Input.name" -> "/root/reference/mapreduce/seed/teste100K.txt",
+      "mapred.Input.name" -> s"${Corpora.ReferenceSeedDir}/teste100K.txt",
       "mapred.Mappers.number" -> "50",
       "mapred.Input.split-size" -> "4096"))
     assert(conf.splitSize == 4096L)

@@ -4,14 +4,18 @@ import graft.SparkSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** End-to-end word count over the reference's own seed corpora,
-  * checked against its golden outputs (`mapreduce/seed/out*`,
-  * `mapreduce/dataset/teste100K49reduced0.txt`) — the reference's
-  * correctness methodology (SURVEY §5) automated.
+/** End-to-end word count checked against golden outputs — the
+  * reference's correctness methodology (SURVEY §5) automated. The
+  * `golden:` legs read the reference's own seed corpora and run
+  * artifact (`mapreduce/seed/out*`,
+  * `mapreduce/dataset/teste100K49reduced0.txt`) and cancel where no
+  * checkout of the reference is present; the other legs write their
+  * corpus with `SeedGenerator`.
   */
 class MapReduceGoldenSpec extends SparkSuite {
+  import Corpora._
 
-  private val seedDir = "/root/reference/mapreduce/seed"
+  private val seedDir = ReferenceSeedDir
 
   private def tmpOut(): String =
     Files.createTempDirectory("graft-mr").resolve("out").toString
@@ -33,6 +37,7 @@ class MapReduceGoldenSpec extends SparkSuite {
   }
 
   test("golden: teste1K word counts (sentence counts 15/14/11 per out1K)") {
+    assumeReference(s"$seedDir/teste1K.txt")
     val got = runWordCount(s"$seedDir/teste1K.txt")
     assert(got == expectedCounts(s"$seedDir/teste1K.txt"))
     // cross-check against the published generator counts in out1K:
@@ -46,15 +51,16 @@ class MapReduceGoldenSpec extends SparkSuite {
   }
 
   test("golden: teste10K word counts") {
+    assumeReference(s"$seedDir/teste10K.txt")
     val got = runWordCount(s"$seedDir/teste10K.txt")
     assert(got == expectedCounts(s"$seedDir/teste10K.txt"))
     assert(got("e") == 146L + 142L + 109L) // out10k sentence counts
   }
 
   test("golden: teste100K matches the in-tree reduced run artifact") {
+    assumeReference(s"$seedDir/teste100K.txt", ReferenceReduced100K)
     val got = runWordCount(s"$seedDir/teste100K.txt")
-    val golden = new String(Files.readAllBytes(
-      Paths.get("/root/reference/mapreduce/dataset/teste100K49reduced0.txt")))
+    val golden = new String(Files.readAllBytes(Paths.get(ReferenceReduced100K)))
     val goldenCounts = golden.split(" ").filter(_.nonEmpty).map { tok =>
       val Array(k, v) = tok.split("\\|")
       k -> v.toLong
@@ -63,24 +69,26 @@ class MapReduceGoldenSpec extends SparkSuite {
   }
 
   test("golden: teste1M word counts (largest reference corpus, 10 reducers)") {
+    assumeReference(s"$seedDir/teste1M.txt")
     val got = runWordCount(s"$seedDir/teste1M.txt", reducers = 10)
     assert(got == expectedCounts(s"$seedDir/teste1M.txt"))
     assert(got("e") == 16538L + 12240L + 12578L) // out1M sentence counts
   }
 
   test("combine=false produces identical results (O8 equivalence)") {
-    val in = s"$seedDir/teste10K.txt"
+    val in = generate(Bytes10K).path
     assert(runWordCount(in, combine = true) == runWordCount(in, combine = false))
   }
 
   test("multiple reducers partition by Java hashCode and preserve totals") {
-    val in  = s"$seedDir/teste10K.txt"
+    val in  = generate(Bytes10K).path
     val one = runWordCount(in, reducers = 1)
     val ten = runWordCount(in, reducers = 10)
     assert(one == ten)
   }
 
   test("golden byte format: single-reducer output file reproduces the reference bytes") {
+    assumeReference(s"$seedDir/teste100K.txt", ReferenceReduced100K)
     val out  = tmpOut()
     val conf = JobConf(input = s"$seedDir/teste100K.txt", output = out,
       numReducers = 1)
@@ -89,26 +97,25 @@ class MapReduceGoldenSpec extends SparkSuite {
       .filter(_.getFileName.toString.startsWith("part-")).toSeq
     assert(files.size == 1)
     val content = new String(Files.readAllBytes(files.head))
-    val golden = new String(Files.readAllBytes(
-      Paths.get("/root/reference/mapreduce/dataset/teste100K49reduced0.txt")))
+    val golden = new String(Files.readAllBytes(Paths.get(ReferenceReduced100K)))
     // byte-identical, including the trailing space and absent newline
     assert(content == golden)
   }
 
   test("map-only job (numReducers=0) skips the shuffle and keeps raw pairs") {
-    val conf = JobConf(input = s"$seedDir/teste1K.txt", output = tmpOut(),
-      numReducers = 0)
+    val in   = generate(Bytes1K).path
+    val conf = JobConf(input = in, output = tmpOut(), numReducers = 0)
     val ds = MapReduceJob.transform(spark, conf, WordCount.TokenMapper,
       WordCount.SumReducer)
     // map-only: one (word,"1") pair per input token, unreduced
-    assert(ds.count() == expectedCounts(s"$seedDir/teste1K.txt").values.sum)
+    assert(ds.count() == expectedCounts(in).values.sum)
     assert(!ds.rdd.toDebugString.contains("Shuffle"),
       "map-only pipeline must plan no shuffle stage")
   }
 
   test("joinOutput merges all reducer files into one (SURVEY §2.3)") {
     val out  = tmpOut()
-    val conf = JobConf(input = s"$seedDir/teste1K.txt", output = out,
+    val conf = JobConf(input = generate(Bytes1K).path, output = out,
       numReducers = 4, joinOutput = true)
     WordCount.run(spark, conf)
     val files = Files.list(Paths.get(out)).iterator().asScala

@@ -4,11 +4,12 @@ import graft.SparkSuite
 
 /** O1/O14: `mapred.Input.split-size` must control scan parallelism
   * through `files.maxPartitionBytes` (the reference cuts ~50 × 2 KB
-  * splits from the 100 KB input, `servant/IOFormatServant.java:77-80`).
+  * splits from the 100 KB input, `servant/IOFormatServant.java:77-80`),
+  * over generated corpora the size of the reference's.
   */
 class SplitSizeSpec extends SparkSuite {
   test("splitSize controls the number of input partitions") {
-    val input = "/root/reference/mapreduce/seed/teste100K.txt"
+    val input = Corpora.generate(Corpora.Bytes100K).path
     val small = TokenFormat.read(spark,
       JobConf(input = input, output = "/tmp/unused", splitSize = 2048))
       .rdd.getNumPartitions
@@ -23,7 +24,7 @@ class SplitSizeSpec extends SparkSuite {
   test("read does not leak maxPartitionBytes into the shared session") {
     val before = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     TokenFormat.read(spark, JobConf(
-      input = "/root/reference/mapreduce/seed/teste1K.txt",
+      input = Corpora.generate(Corpora.Bytes1K).path,
       output = "/tmp/unused", splitSize = 2048)).count()
     assert(spark.conf.getOption("spark.sql.files.maxPartitionBytes") == before,
       "per-read split size leaked into the parent session conf")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{SparkSuite, Tables}
-import graft.core.Aggregators
+import graft.core.{Aggregators, Corpora}
 import org.apache.spark.sql.functions._
 
 class SkewAndAggregatorSpec extends SparkSuite {
@@ -9,7 +9,7 @@ class SkewAndAggregatorSpec extends SparkSuite {
   test("typed Aggregator word count matches the RDD-path golden counts") {
     import spark.implicits._
     val conf = graft.core.JobConf(
-      input = "/root/reference/mapreduce/seed/teste10K.txt", output = "/tmp/unused")
+      input = Corpora.generate(Corpora.Bytes10K).path, output = "/tmp/unused")
     val pairs = graft.core.TokenFormat.read(spark, conf)
       .flatMap(kv => graft.core.WordCount.TokenMapper.map(kv._1, kv._2))
     val typed = Aggregators.reduceByKey(pairs, Aggregators.sumValueStrings)
@@ -24,7 +24,7 @@ class SkewAndAggregatorSpec extends SparkSuite {
   test("typed Aggregator plans map-side partial aggregation (combiner)") {
     import spark.implicits._
     val conf = graft.core.JobConf(
-      input = "/root/reference/mapreduce/seed/teste1K.txt", output = "/tmp/unused")
+      input = Corpora.generate(Corpora.Bytes1K).path, output = "/tmp/unused")
     val pairs = graft.core.TokenFormat.read(spark, conf)
       .flatMap(kv => graft.core.WordCount.TokenMapper.map(kv._1, kv._2))
     val plan = Aggregators.reduceByKey(pairs, Aggregators.sumValueStrings)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSuite
-import graft.core.JobConf
+import graft.core.{Corpora, JobConf}
 import java.nio.file.Files
 
 class KVFormatSpec extends SparkSuite {
@@ -34,8 +34,9 @@ class KVFormatSpec extends SparkSuite {
 
   test("word count runs end-to-end with a parquet sink via the format seam") {
     val outDir = Files.createTempDirectory("kvfmt-wc").resolve("out").toString
+    val corpus = Corpora.generate(Corpora.Bytes1K)
     val conf = JobConf(
-      input  = "/root/reference/mapreduce/seed/teste1K.txt",
+      input  = corpus.path,
       output = outDir, numReducers = 2)
     // read token text, write parquet: formats are independent per job
     // stage here, so run the transform with the token reader and sink
@@ -46,7 +47,8 @@ class KVFormatSpec extends SparkSuite {
     import spark.implicits._
     val back = spark.read.parquet(outDir)
       .as[(String, String)].collect().toMap
-    assert(back("e") == "40") // 15+14+11 per out1K
-    assert(back("Goaiania") == "15")
+    // the generator's golden counts: "e" is in every sentence
+    assert(back("e") == corpus.counts.sum.toString)
+    assert(back("Goaiania") == corpus.counts(0).toString)
   }
 }

@@ -341,26 +341,25 @@ class EventStreamsSpec extends SparkSuite {
   test("streaming word count over arriving token files matches the batch goldens") {
     val dir = java.nio.file.Files.createTempDirectory("stream-wc")
     val in  = dir.resolve("in"); java.nio.file.Files.createDirectories(in)
+    val corpus = graft.core.Corpora.generate(graft.core.Corpora.Bytes1K)
+    val file   = java.nio.file.Paths.get(corpus.path)
+    val (goaiania, e) = (corpus.counts(0), corpus.counts.sum)
     val q = EventStreams.streamingWordCount(spark, in.toString)
       .writeStream.format("memory").queryName("wc_stream")
       .outputMode("complete").start()
     try {
-      // the reference's 1K corpus arrives as the first file...
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/reference/mapreduce/seed/teste1K.txt"),
-        in.resolve("a.txt"))
+      // a 1K generated corpus arrives as the first file...
+      java.nio.file.Files.copy(file, in.resolve("a.txt"))
       q.processAllAvailable()
       val c1 = spark.table("wc_stream").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(c1("Goaiania") == 15 && c1("e") == 40) // out1K goldens
+      assert(c1("Goaiania") == goaiania && c1("e") == e) // generator goldens
       // ...then the same file again: counts must double incrementally
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/reference/mapreduce/seed/teste1K.txt"),
-        in.resolve("b.txt"))
+      java.nio.file.Files.copy(file, in.resolve("b.txt"))
       q.processAllAvailable()
       val c2 = spark.table("wc_stream").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(c2("Goaiania") == 30 && c2("e") == 80)
+      assert(c2("Goaiania") == 2 * goaiania && c2("e") == 2 * e)
     } finally q.stop()
   }
 
