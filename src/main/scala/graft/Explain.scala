@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints the formatted physical plan of each (or one
   * named) registry query so scan pushdown, broadcast choices, and
@@ -21,13 +20,7 @@ object Explain {
     require(dirs.length <= 1,
       s"at most one sf directory argument allowed, got: ${dirs.mkString(", ")}")
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     val targets =
       if (names.nonEmpty) names.toSeq.map(QueryRegistry.byName)

@@ -3,19 +3,47 @@ package graft.core
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Publish discipline for persisted tmpdir indexes keyed by
-  * source-data identity (the `buildTextIndex` / `buildIvfIndex`
-  * family).
+/** The one lifecycle of every persisted index family (and of the lakes
+  * and ingest logs published the same way): name a generation after its
+  * source file's identity, publish it atomically, maintain it once, cut
+  * over to a retrained generation. Family modules keep only their model
+  * code (centroids, codebooks, bands, codecs, BM25 stats).
   *
-  * The naive build-in-place these replaced had two hazards (round-10
-  * advice):
-  *  - `synchronized` is JVM-local, so two concurrent JVMs could
-  *    interleave the overwrite writes and the `_built` marker on the
-  *    SAME directory, and a crash mid-build left a half-written index
-  *    observable at the final path;
-  *  - fingerprint-keyed directories stranded every PREVIOUS corpus
-  *    generation's full index in java.io.tmpdir forever.
+  * Naming rule ([[generation]]): a generation of `family` built from
+  * `dir/source` lives at
+  * `java.io.tmpdir/<family>_<slug>_<hash><variant>_fp<len>_<mtime>`.
+  *  - `slug`: `dir` with each non-alphanumeric run replaced by `_`, its
+  *    last 40 characters (readable);
+  *  - `hash`: the hex `String.hashCode` of the unsanitized `dir`, so two
+  *    paths with the same slug do not collide;
+  *  - `variant`: an optional same-source sub-family that keeps its own
+  *    generations (IVF's `_k<n>` cell counts);
+  *  - `<len>_<mtime>` ([[fingerprint]]): the source file's length and
+  *    modification time, so a regenerated source at the same path is
+  *    never served a stale index.
+  * Everything before the fingerprint is the family's GC prefix.
   *
+  * Prefix safety: [[publish]] deletes every published sibling whose name
+  * starts with the prefix, so no family's prefix may be a prefix of
+  * another family's directory names. The rule guarantees it when no
+  * family string is another's `_`-extension (`graft_x` next to
+  * `graft_x_y` would let a crafted 40-character slug line up) and no
+  * variant contains `_fp`: every prefix ends in `<hex hash><variant>_fp`,
+  * and after the hex hash a different variant diverges before any
+  * fingerprint digit (`..._fp` vs `..._k23_fp`, `..._k2_fp` vs
+  * `..._k23_fp`).
+  *
+  * One-time rebuild: directories named by an older rule (the
+  * decimal-hash `<family>_<slug>_<hash>_<len>_<mtime>` of the text,
+  * media, band, lake and ingest-log families) do not carry the current
+  * prefix. They are never served, each family rebuilds once under its
+  * current name, and the old directories are not GC'd.
+  *
+  * Publish discipline: the naive build-in-place had two hazards —
+  * `synchronized` is JVM-local, so two JVMs could interleave writes and
+  * the `_built` marker on the SAME directory (a crash mid-build left a
+  * half-written index at the final path), and fingerprint-keyed
+  * directories stranded every PREVIOUS generation in the tmpdir.
   * [[publish]] fixes both: the build writes into a `.build_<nonce>`
   * sibling, the `_built` marker lands INSIDE the temp, and the whole
   * directory renames into place in one atomic move (rename(2) on the
@@ -29,6 +57,74 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * other processes are left alone.
   */
 object IndexDirs {
+
+  /** A source file's identity, `<len>_<mtime>`: the generation key of
+    * every family built from it, and what the manifest audit checks the
+    * served generations against.
+    */
+  def fingerprint(conf: Configuration, dir: String, source: String): String = {
+    val p  = new Path(s"$dir/$source")
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    s"${st.getLen}_${st.getModificationTime}"
+  }
+
+  /** One generation of a family: its directory and the GC prefix (the
+    * directory name up to the fingerprint) all its generations share.
+    */
+  final case class Generation(path: String, prefix: String)
+
+  /** The current generation of `family` over `dir/source`, named by the
+    * rule in the object doc.
+    */
+  def generation(conf: Configuration, dir: String, source: String,
+      family: String, variant: String = ""): Generation = {
+    require(!variant.contains("_fp"), s"variant $variant breaks prefix safety")
+    val slug   = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
+    val prefix = s"${family}_${slug}_" +
+      java.lang.Integer.toHexString(dir.hashCode) + s"${variant}_fp"
+    Generation(s"${System.getProperty("java.io.tmpdir")}/$prefix" +
+      fingerprint(conf, dir, source), prefix)
+  }
+
+  /** [[publish]] the current generation of `family` over `dir/source`. */
+  def publishCurrent(conf: Configuration, dir: String, source: String,
+      family: String, variant: String = "")(build: String => Unit): String = {
+    val g = generation(conf, dir, source, family, variant)
+    publish(conf, g.path, g.prefix)(build)
+  }
+
+  /** The maintain-once shape of the maintenance demos: publish the
+    * current generation's `base` (a build, or [[cloneInto]] from a
+    * serving index), then once per generation ([[appliedOnce]] under
+    * `marker`) run `apply` if the data-derived `pending` guard says the
+    * batch has not fully landed. Returns the index.
+    */
+  def maintainOnce(conf: Configuration, dir: String, source: String,
+      family: String, marker: String)(base: String => Unit)(
+      pending: String => Boolean)(apply: String => Unit): String = {
+    val idx = publishCurrent(conf, dir, source, family)(base)
+    appliedOnce(conf, idx, marker) { if (pending(idx)) apply(idx) }
+    idx
+  }
+
+  /** The two-generation retrain cutover. Serve `<root>_g2` if it is
+    * published; otherwise publish `<root>_g1` via `build1` and run the
+    * family's `gate` on it (the gate also merges the nightly batch). A
+    * declined gate (`None`) leaves generation 1 serving and creates no
+    * `_g2` directory; a tripped gate returns generation 2's build, which
+    * publishes under the same `prefix` — the atomic cutover, whose GC
+    * removes generation 1. Generation 2 is checked FIRST on re-entry:
+    * republishing generation 1 would GC a completed generation 2.
+    */
+  def cutover(conf: Configuration, root: String, prefix: String)(
+      build1: String => Unit)(
+      gate: String => Option[String => Unit]): String = {
+    val gen2 = s"${root}_g2"
+    if (new Path(gen2).getFileSystem(conf).exists(new Path(gen2, "_built")))
+      return gen2
+    val gen1 = publish(conf, s"${root}_g1", prefix)(build1)
+    gate(gen1).fold(gen1)(build2 => publish(conf, gen2, prefix)(build2))
+  }
 
   /** Return `idx`, building it first via `build(tmpDir)` if no
     * published index exists there. `prefix` is the directory-name

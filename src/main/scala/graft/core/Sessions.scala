@@ -15,6 +15,30 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** The local session the driver and dev mains start from: `cpus`
+    * worker threads and as many shuffle partitions, UTC, no UI, WARN
+    * logging with the bounded-window warning silenced. `getOrCreate`:
+    * a caller that already runs a session (perfbench calls
+    * `graft.Verify.main` inside its own) gets that session with these
+    * runtime confs applied. `MapReduceApp` keeps its own builder
+    * (cluster master, reducer-sized partitions, speculation).
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietBoundedWindowWarnings()
+    spark
+  }
+
+  /** A main's worker-thread count: `SPARK_GRAFT_CPUS`, else `default`. */
+  def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
+
   /** A child session of `spark` with `kv` applied on top of the
     * parent's current runtime conf. Static/core entries that can't be
     * set at runtime are skipped (they're inherited via the shared

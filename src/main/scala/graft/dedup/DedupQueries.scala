@@ -675,15 +675,8 @@ object DedupQueries {
     */
   private[graft] def shardedCorpus(s: SparkSession, dir: String): String =
     synchronized {
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val prefix =
-        s"graft_shard_corpus_${slug}_${dir.hashCode & 0x7fffffff}_"
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, root, prefix) { tmp =>
+      graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", "graft_shard_corpus") { tmp =>
         Tables(s, dir).documents
           .withColumn("shard", shardOf(col("doc_id")))
           .write.mode("overwrite").partitionBy("shard")
@@ -757,16 +750,13 @@ object DedupQueries {
   private[graft] def ensurePurgedTextLake(s: SparkSession,
       dir: String): String = {
     val layout = shardedCorpus(s, dir)
-    val conf   = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$layout/_purge_applied")
-    val fs     = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) {
+    graft.core.IndexDirs.appliedOnce(s.sparkContext.hadoopConfiguration,
+        layout, "_purge_applied") {
       val plan = textPurgeIds(s, dir)
       val remaining = s.read.parquet(s"$layout/docs")
         .join(plan.select(col("doc_id")), Seq("doc_id"), "left_semi")
         .limit(1).collect()
       if (remaining.nonEmpty) applyPurge(s, layout, plan)
-      fs.create(marker, true).close()
     }
     layout
   }
@@ -1394,21 +1384,11 @@ object DedupQueries {
     * Atomic publish + stale-generation GC via [[graft.core.IndexDirs]],
     * keyed by the documents file's identity like its two siblings.
     */
-  def buildBandIndex(s: SparkSession, dir: String): String =
-    publishBandIndex(s, dir, "graft_band_index_v3",
-      Tables(s, dir).documents.select(col("doc_id"), col("text")))
-
-  private def publishBandIndex(s: SparkSession, dir: String, family: String,
-      docs: DataFrame): String = synchronized {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-    val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-      writeBandIndex(s, docs, tmp)
+  def buildBandIndex(s: SparkSession, dir: String): String = synchronized {
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+        dir, "documents.parquet", "graft_band_index_v3") { tmp =>
+      writeBandIndex(s, Tables(s, dir).documents
+        .select(col("doc_id"), col("text")), tmp)
     }
   }
 
@@ -1531,11 +1511,8 @@ object DedupQueries {
     val fs = sigsRoot.getFileSystem(conf)
     require(fs.exists(sigsRoot), s"no band index at $idx — build it first")
     val shI = cdcSigs(batch)
-    val dup = shI.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsertBandIndex: duplicate doc_id in batch (${dup.head.get(0)})")
+    graft.operators.Maintenance.requireUniqueKeys(shI, "doc_id",
+      "upsertBandIndex")
     val ids = shI.select(col("doc_id"))
     val existing = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
       .join(ids, Seq("doc_id"), "left_semi").limit(1).collect()
@@ -1643,23 +1620,21 @@ object DedupQueries {
     * once (a re-run sees them in sigs and skips — deterministic either
     * way).
     */
-  private def upsertBandDemoIndex(s: SparkSession, dir: String): String = {
-    val d = Tables(s, dir).documents
-    val idx = publishBandIndex(s, dir, "graft_band_upsert_v3",
-      d.select(col("doc_id"), col("text")))
-    val fresh = d.filter(col("source") === "src1")
-      .select((col("doc_id") + 600000).as("doc_id"),
-        concat(lit("fresh content row "), col("doc_id").cast("string"),
-          lit(" batch nightly ingest")).as("text"))
-    graft.core.IndexDirs.appliedOnce(
-      s.sparkContext.hadoopConfiguration, idx, "_upsert_applied") {
-      val already = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
-        .join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .limit(1).collect()
-      if (already.isEmpty) upsertBandIndex(s, idx, fresh)
+  private def upsertBandDemoIndex(s: SparkSession, dir: String): String =
+    synchronized {
+      val d = Tables(s, dir).documents
+      val fresh = d.filter(col("source") === "src1")
+        .select((col("doc_id") + 600000).as("doc_id"),
+          concat(lit("fresh content row "), col("doc_id").cast("string"),
+            lit(" batch nightly ingest")).as("text"))
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", "graft_band_upsert_v3", "_upsert_applied")(
+        tmp => writeBandIndex(s, d.select(col("doc_id"), col("text")), tmp))(
+        idx => s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+          .join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .limit(1).collect().isEmpty)(
+        idx => upsertBandIndex(s, idx, fresh))
     }
-    idx
-  }
 
   /** Band-index MAINTENANCE under the gate — the ingest step after
     * admission: tonight's fresh documents append into the persisted
@@ -1826,22 +1801,19 @@ object DedupQueries {
     * re-derives the list once, anti-joins to a no-op, and writes the
     * marker — idempotent.
     */
-  private def deleteBandDemoIndex(s: SparkSession, dir: String): String = {
-    val d = Tables(s, dir).documents
-    val idx = publishBandIndex(s, dir, "graft_band_delete_v2",
-      d.select(col("doc_id"), col("text")))
-    val conf = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$idx/_purge_applied")
-    val fs = marker.getFileSystem(conf)
-    if (!fs.exists(marker)) {
-      val purge = textPurgeIds(s, dir).select(col("doc_id"))
-      val present = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
-        .join(purge, Seq("doc_id"), "left_semi").limit(1).collect()
-      if (present.nonEmpty) deleteFromBandIndex(s, idx, purge)
-      fs.create(marker, true).close()
+  private def deleteBandDemoIndex(s: SparkSession, dir: String): String =
+    synchronized {
+      // derived only when the marker is absent
+      lazy val purge = textPurgeIds(s, dir).select(col("doc_id"))
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", "graft_band_delete_v2", "_purge_applied")(
+        tmp => writeBandIndex(s, Tables(s, dir).documents
+          .select(col("doc_id"), col("text")), tmp))(
+        idx => s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+          .join(purge, Seq("doc_id"), "left_semi").limit(1).collect()
+          .nonEmpty)(
+        idx => deleteFromBandIndex(s, idx, purge))
     }
-    idx
-  }
 
   /** Purge propagation under the gate — the serving-tier invariant the
     * r11 verdict called every real pipeline's nastiest operational bug:

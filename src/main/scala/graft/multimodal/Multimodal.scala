@@ -830,14 +830,8 @@ object Multimodal {
     */
   private def shardedBlobLake(s: SparkSession, dir: String,
       family: String, rows: => DataFrame): String = synchronized {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-    val root = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, root, prefix) { tmp =>
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+        dir, "documents.parquet", family) { tmp =>
       rows
         .withColumn("shard",
           graft.dedup.DedupQueries.shardOf(col("media_id")))
@@ -947,19 +941,17 @@ object Multimodal {
     * deletion is applied exactly once per lake generation.
     */
   private def applyMediaPurge(s: SparkSession, layout: String,
-      plan: DataFrame): Unit = {
-    val conf   = s.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$layout/_purge_applied")
-    val fs     = marker.getFileSystem(conf)
-    if (fs.exists(marker)) return
-    val remaining = s.read.parquet(s"$layout/media")
-      .join(plan.select(col("media_id")), Seq("media_id"), "left_semi")
-      .limit(1).collect()
-    if (remaining.nonEmpty)
-      graft.dedup.DedupQueries.applyPurge(s, layout, plan,
-        sub = "media", key = "media_id")
-    fs.create(marker, true).close()
-  }
+      plan: => DataFrame): Unit =
+    graft.core.IndexDirs.appliedOnce(s.sparkContext.hadoopConfiguration,
+        layout, "_purge_applied") {
+      val p = plan
+      val remaining = s.read.parquet(s"$layout/media")
+        .join(p.select(col("media_id")), Seq("media_id"), "left_semi")
+        .limit(1).collect()
+      if (remaining.nonEmpty)
+        graft.dedup.DedupQueries.applyPurge(s, layout, p,
+          sub = "media", key = "media_id")
+    }
 
   /** The image blob lake in its POST-PURGE state — the media-side twin
     * of `ensurePurgedTextLake`, consumed by the manifest's lake audit.
@@ -967,16 +959,11 @@ object Multimodal {
   private[graft] def ensurePurgedMediaLake(s: SparkSession,
       dir: String): String = {
     val layout = shardedMediaLake(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(s"$layout/_purge_applied")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      val plan = graft.dedup.DedupQueries
-        .purgePlan(imageClusterFrame(s, dir)
-          .withColumnRenamed("media_id", "doc_id"))
-        .filter(col("action") === "purge")
-        .select(col("shard"), col("doc_id").as("media_id"))
-      applyMediaPurge(s, layout, plan)
-    }
+    applyMediaPurge(s, layout, graft.dedup.DedupQueries
+      .purgePlan(imageClusterFrame(s, dir)
+        .withColumnRenamed("media_id", "doc_id"))
+      .filter(col("action") === "purge")
+      .select(col("shard"), col("doc_id").as("media_id")))
     layout
   }
 
@@ -2324,17 +2311,15 @@ object Multimodal {
     */
   private def publishMediaIndex(s: SparkSession, dir: String,
       family: String)(hashes: => DataFrame): String = synchronized {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-    val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-      assertWaveHeadroom(s, dir)
-      writeMediaIndex(s, hashes, tmp)
-    }
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+      dir, "documents.parquet", family)(writeMediaBase(s, dir, hashes))
+  }
+
+  /** A media index's base build: the headroom check, then the write. */
+  private def writeMediaBase(s: SparkSession, dir: String,
+      hashes: => DataFrame)(tmp: String): Unit = {
+    assertWaveHeadroom(s, dir)
+    writeMediaIndex(s, hashes, tmp)
   }
 
   def buildImageIndex(s: SparkSession, dir: String): String =
@@ -2592,12 +2577,8 @@ object Multimodal {
     require(fs.exists(sigsRoot), s"no image index at $idx — build it first")
     val hashes = batchHashes.select(col("media_id"), col("dhash")).persist()
     try {
-      val dup = hashes.groupBy(col("media_id")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalArgumentException(
-          s"upsertMediaIndex: duplicate media_id in batch " +
-            s"(${dup.head.get(0)})")
+      graft.operators.Maintenance.requireUniqueKeys(hashes, "media_id",
+        "upsertMediaIndex")
       val ids = hashes.select(col("media_id"))
       // The presence check distinguishes a TRUE re-ingest (every batch
       // id already in sigs → throw: admission is append-only) from a
@@ -2880,27 +2861,14 @@ object Multimodal {
   private def deleteDemoMediaIndex(s: SparkSession, dir: String,
       family: String, hashes: DataFrame, purgeList: => DataFrame): String =
     synchronized {
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        assertWaveHeadroom(s, dir)
-        writeMediaIndex(s, hashes, tmp)
-      }
-      val fs     = new org.apache.hadoop.fs.Path(idx).getFileSystem(conf)
-      val marker = new org.apache.hadoop.fs.Path(s"$idx/_purge_applied")
-      if (!fs.exists(marker)) {
-        val purge = purgeList
-        val present = s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
+      lazy val purge = purgeList // derived only when the marker is absent
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", family, "_purge_applied")(
+        writeMediaBase(s, dir, hashes))(
+        idx => s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
           .join(purge, Seq("media_id"), "left_semi").limit(1).collect()
-        if (present.nonEmpty) deleteFromMediaIndex(s, idx, purge)
-        fs.create(marker, true).close()
-      }
-      idx
+          .nonEmpty)(
+        idx => deleteFromMediaIndex(s, idx, purge))
     }
 
   private def deleteDemoImageIndex(s: SparkSession, dir: String): String =
@@ -2990,17 +2958,6 @@ object Multimodal {
   private def upsertDemoMediaIndex(s: SparkSession, dir: String,
       family: String, hashes: DataFrame): String =
     synchronized {
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        assertWaveHeadroom(s, dir)
-        writeMediaIndex(s, hashes.filter(col("media_id") % 5 =!= 0), tmp)
-      }
       // apply the nightly batch once per corpus generation (the
       // applied-once discipline: a serving tier probes an up-to-date
       // index, it does not re-run last night's ingest per query). The
@@ -3008,13 +2965,12 @@ object Multimodal {
       // stat; the no-marker path keeps the data-derived presence check
       // (the append-only contract makes re-ingest loud, so presence IS
       // the evidence) before the marker stamps convergence.
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_upsert_applied") {
-        val applied = s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
-          .filter(col("media_id") % 5 === 0).limit(1).collect()
-        if (applied.isEmpty)
-          upsertMediaIndex(s, idx, hashes.filter(col("media_id") % 5 === 0))
-      }
-      idx
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", family, "_upsert_applied")(
+        writeMediaBase(s, dir, hashes.filter(col("media_id") % 5 =!= 0)))(
+        idx => s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
+          .filter(col("media_id") % 5 === 0).limit(1).collect().isEmpty)(
+        idx => upsertMediaIndex(s, idx, hashes.filter(col("media_id") % 5 === 0)))
     }
 
   private def upsertDemoImageIndex(s: SparkSession, dir: String): String =

@@ -85,6 +85,20 @@ object Maintenance {
       .select(cols.map(c => col("__w." + c).as(c)): _*)
   }
 
+  /** The MERGE contract every upsert shares: `batch` holds each `key`
+    * at most once. Fails loudly, naming the entry point `who` and the
+    * offending key. One aggregate, two jobs (`upsertIvfIndex` checks its
+    * driver-collected ids instead, which costs none).
+    */
+  def requireUniqueKeys(batch: DataFrame, key: String, who: String): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val dup = batch.groupBy(col(key)).agg(count(lit(1)).as("n"))
+      .filter(col("n") > 1).limit(1).collect()
+    if (dup.nonEmpty)
+      throw new IllegalArgumentException(s"$who: duplicate $key in batch " +
+        s"(${dup.head.get(0)}) — MERGE needs one row per $key")
+  }
+
   /** Key-based upsert (MERGE) into a parquet directory: incoming rows
     * replace existing rows with the same key, new keys append — the
     * nightly-ingest primitive for a lake without a table format.
@@ -118,17 +132,10 @@ object Maintenance {
     */
   def upsertParquet(spark: SparkSession, dir: String, updates0: DataFrame,
       key: String, newestBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{col, count, hash, lit, pmod}
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val updates =
       if (newestBy.isEmpty) updates0 else keepNewest(updates0, key, newestBy)
-    if (newestBy.isEmpty) {
-      val dup = updates.groupBy(col(key)).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalArgumentException(
-          s"upsertParquet: duplicate key in updates batch " +
-            s"(${key}=${dup.head.get(0)}) — MERGE needs one row per key")
-    }
+    if (newestBy.isEmpty) requireUniqueKeys(updates, key, "upsertParquet")
     def merge(existing: DataFrame, upd: DataFrame): DataFrame =
       if (newestBy.isEmpty)
         existing.join(upd.select(upd(key)), Seq(key), "left_anti")

@@ -627,32 +627,6 @@ object SimilarityQueries {
       "SELECT greatest(2, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM embeddings")),
   )
 
-  /** Root for persisted ANN indexes, keyed by the data directory so
-    * every SF gets its own index (deterministic rebuild — same data,
-    * same 3dp-quantized model, same index bytes' values).
-    */
-  private def ivfIndexDir(sfDir: String, k: Int = GateK,
-      fp: String = ""): String = {
-    // sanitized path + hash: humanly readable AND collision-free across
-    // data directories that sanitize to the same token; a non-gate cell
-    // count gets its own suffix so differently-shaped indexes coexist;
-    // `fp` carries the SOURCE DATA's identity (embeddings file
-    // length+mtime) so a regenerated corpus at the same path can never
-    // be served a stale index (the buildTextIndex discipline)
-    val slug = sfDir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val kSuffix = if (k == GateK) "" else s"_k$k"
-    // the fingerprint rides behind an explicit `_fp` separator so the
-    // GC prefix for one cell-count's family (`..._fp`) can never be a
-    // prefix of a DIFFERENT cell-count's directories (`..._k23_fp...`)
-    // v3: the profile gained the per-cell size column `n` (round 16);
-    // fingerprint-keyed v2 directories from earlier rounds survive in
-    // java.io.tmpdir without it, so the family prefix bumps — the
-    // graft_band_upsert_v3 precedent for on-disk layout changes
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_v3_${slug}_" +
-      java.lang.Integer.toHexString(sfDir.hashCode) + kSuffix +
-      (if (fp.isEmpty) "_fp" else s"_fp$fp")
-  }
-
   /** Build-and-persist the IVF index — the OFFLINE half of a real ANN
     * tier (a 100 TB pipeline trains centroids nightly and serves probes
     * against the materialized index, it never re-trains per query):
@@ -675,15 +649,12 @@ object SimilarityQueries {
     // index directory is keyed by the RESOLVED cell count so
     // differently-shaped indexes never collide
     val kk     = if (k > 0) k else sqrtCellCount(e.count())
-    val conf   = s.sparkContext.hadoopConfiguration
-    val src    = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st     = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = new org.apache.hadoop.fs.Path(ivfIndexDir(dir, kk)).getName
-    val idx    = ivfIndexDir(dir, kk, s"${st.getLen}_${st.getModificationTime}")
-    // atomic publish + stale-generation GC (the buildTextIndex
-    // discipline): build in a temp sibling, rename into place, then
-    // drop this family's previous-fingerprint directories
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
+    // a non-gate cell count is its own variant so differently-shaped
+    // indexes coexist; v3: the profile gained the per-cell size column
+    // `n` (round 16), so the family string bumped past v2's layout
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+      dir, "embeddings.parquet", "graft_ivf_index_v3",
+      if (kk == GateK) "" else s"_k$kk") { tmp =>
       writeIvfIndex(s, e, trainIvfCentroids(e, kk), tmp)
     }
   }
@@ -759,20 +730,13 @@ object SimilarityQueries {
   private[similarity] def ivfBalanceArc(s: SparkSession, root: String,
       prefix: String, e: DataFrame, k: Int,
       maxSkew: Double = 4.0): String = synchronized {
-    val conf = s.sparkContext.hadoopConfiguration
-    val gen2 = s"${root}_g2"
-    val fs   = new org.apache.hadoop.fs.Path(gen2).getFileSystem(conf)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$gen2/_built")))
-      return gen2
-    val gen1 = s"${root}_g1"
-    graft.core.IndexDirs.publish(conf, gen1, prefix) { tmp =>
-      writeIvfIndex(s, e, trainIvfCentroids(e, k), tmp)
+    graft.core.IndexDirs.cutover(s.sparkContext.hadoopConfiguration, root,
+        prefix)(tmp => writeIvfIndex(s, e, trainIvfCentroids(e, k), tmp)) {
+      gen1 =>
+        if (ivfCellSkew(s, gen1) <= maxSkew) None
+        else Some(tmp =>
+          writeIvfIndex(s, e, trainIvfCentroids(e, k, iters = 2), tmp))
     }
-    if (ivfCellSkew(s, gen1) <= maxSkew) return gen1
-    graft.core.IndexDirs.publish(conf, gen2, prefix) { tmp =>
-      writeIvfIndex(s, e, trainIvfCentroids(e, k, iters = 2), tmp)
-    }
-    gen2
   }
 
   /** The balance gate's input as a gated row: the per-cell
@@ -1053,24 +1017,14 @@ object SimilarityQueries {
   private def deleteDemoIvfIndex(s: SparkSession, dir: String): String =
     synchronized {
       val e = Tables(s, dir).embeddings
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val prefix = s"graft_ivf_delete_${slug}_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        writeIvfIndex(s, e, trainIvfCentroids(e, GateK), tmp)
-      }
       val purge = e.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_purge_applied") {
-        val present = graft.Tables.readPq(s, s"$idx/cells")
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "embeddings.parquet", "graft_ivf_delete", "_purge_applied")(
+        tmp => writeIvfIndex(s, e, trainIvfCentroids(e, GateK), tmp))(
+        idx => graft.Tables.readPq(s, s"$idx/cells")
           .join(purge, Seq("vec_id"), "left_semi").limit(1).collect()
-        if (present.nonEmpty) deleteFromIvfIndex(s, idx, purge)
-      }
-      idx
+          .nonEmpty)(
+        idx => deleteFromIvfIndex(s, idx, purge))
     }
 
   /** Purge propagation under the gate — after the embedding purge, an
@@ -1140,13 +1094,9 @@ object SimilarityQueries {
     (s, dir) => {
       import s.implicits._
       val conf = s.sparkContext.hadoopConfiguration
-      def fpOf(file: String): String = {
-        val p  = new org.apache.hadoop.fs.Path(s"$dir/$file")
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        s"${st.getLen}_${st.getModificationTime}"
-      }
-      val docsFp = fpOf("documents.parquet")
-      val embFp  = fpOf("embeddings.parquet")
+      // the publisher's own fingerprint rule, so audit and naming agree
+      val docsFp = graft.core.IndexDirs.fingerprint(conf, dir, "documents.parquet")
+      val embFp  = graft.core.IndexDirs.fingerprint(conf, dir, "embeddings.parquet")
       def ok(idx: String, fp: String): Boolean =
         graft.core.IndexDirs.stalePublishedGenerations(conf, idx, fp).isEmpty
       val textIdx = graft.text.TextQueries.buildTextIndex(s, dir)
@@ -2037,15 +1987,8 @@ object SimilarityQueries {
     */
   def buildIvfPqIndex(s: SparkSession, dir: String): String = synchronized {
     val e = Tables(s, dir).embeddings
-    val conf   = s.sparkContext.hadoopConfiguration
-    val src    = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st     = src.getFileSystem(conf).getFileStatus(src)
-    val slug   = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val prefix = s"graft_ivfpq_index_v2_${slug}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-    val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+        dir, "embeddings.parquet", "graft_ivfpq_index_v2") { tmp =>
       writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
         trainPqCodebooks(e), tmp)
     }
@@ -2231,12 +2174,8 @@ object SimilarityQueries {
     */
   def upsertIvfPqIndex(s: SparkSession, idx: String,
       batch: DataFrame): Seq[Int] = {
-    val dup = batch.groupBy(col("vec_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsertIvfPqIndex: duplicate vec_id in batch (${dup.head.get(0)}) " +
-          "— MERGE needs one row per key")
+    graft.operators.Maintenance.requireUniqueKeys(batch, "vec_id",
+      "upsertIvfPqIndex")
     val cents    = loadCentroids(s, idx)
     val codebook = loadCodebooks(s, idx)
     // ONE locating pass + ONE dynamic-partition-overwrite commit over
@@ -2338,25 +2277,14 @@ object SimilarityQueries {
     */
   private def upsertDemoIvfPqIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val e    = Tables(s, dir).embeddings
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val prefix = s"graft_ivfpq_upsert_${slug}_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
-          trainPqCodebooks(e), tmp)
-      }
+      val e     = Tables(s, dir).embeddings
       val batch = retrainBatch(e)
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_upsert_applied") {
-        if (!cellIdsPresent(s, idx, batch))
-          upsertIvfPqIndex(s, idx, batch)
-      }
-      idx
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "embeddings.parquet", "graft_ivfpq_upsert", "_upsert_applied")(
+        tmp => writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
+          trainPqCodebooks(e), tmp))(
+        idx => !cellIdsPresent(s, idx, batch))(
+        idx => upsertIvfPqIndex(s, idx, batch))
     }
 
   /** Compressed-index MAINTENANCE under the gate — the probe after a
@@ -2429,26 +2357,16 @@ object SimilarityQueries {
     */
   private def deleteDemoIvfPqIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val e    = Tables(s, dir).embeddings
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val prefix = s"graft_ivfpq_delete_${slug}_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
-          trainPqCodebooks(e), tmp)
-      }
+      val e     = Tables(s, dir).embeddings
       val purge = e.filter(col("vec_id") % 7 === 3).select(col("vec_id"))
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_purge_applied") {
-        val present = graft.Tables.readPq(s, s"$idx/cells")
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "embeddings.parquet", "graft_ivfpq_delete", "_purge_applied")(
+        tmp => writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
+          trainPqCodebooks(e), tmp))(
+        idx => graft.Tables.readPq(s, s"$idx/cells")
           .join(purge, Seq("vec_id"), "left_semi").limit(1).collect()
-        if (present.nonEmpty) deleteFromIvfPqIndex(s, idx, purge)
-      }
-      idx
+          .nonEmpty)(
+        idx => deleteFromIvfPqIndex(s, idx, purge))
     }
 
   /** Purge propagation in the compressed family under the gate — after
@@ -2484,16 +2402,10 @@ object SimilarityQueries {
     */
   private[similarity] def retrainDemoIvfPqIndex(s: SparkSession,
       dir: String): String = {
-    val e    = Tables(s, dir).embeddings
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val fp   = s"${st.getLen}_${st.getModificationTime}"
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val prefix = s"graft_ivfpq_retrain_v2_${slug}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-    val root = s"${System.getProperty("java.io.tmpdir")}/$prefix$fp"
-    pqRetrainArc(s, root, prefix, e, retrainBatch(e))
+    val e = Tables(s, dir).embeddings
+    val g = graft.core.IndexDirs.generation(s.sparkContext.hadoopConfiguration,
+      dir, "embeddings.parquet", "graft_ivfpq_retrain_v2")
+    pqRetrainArc(s, g.path, g.prefix, e, retrainBatch(e))
   }
 
   /** The gated retrain arc on the compressed family, parameterized on
@@ -2509,35 +2421,26 @@ object SimilarityQueries {
   private[similarity] def pqRetrainArc(s: SparkSession, root: String,
       prefix: String, e: DataFrame, batch: DataFrame): String =
     synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      val gen2 = s"${root}_g2"
-      val fs   = new org.apache.hadoop.fs.Path(gen2).getFileSystem(conf)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$gen2/_built")))
-        return gen2
-      val gen1 = s"${root}_g1"
-      graft.core.IndexDirs.publish(conf, gen1, prefix) { tmp =>
-        writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
-          trainPqCodebooks(e), tmp)
+      graft.core.IndexDirs.cutover(s.sparkContext.hadoopConfiguration, root,
+          prefix)(tmp => writeIvfPqIndex(s, e, trainIvfCentroids(e, GateK),
+          trainPqCodebooks(e), tmp)) { gen1 =>
+        // the drift gate runs BEFORE the upsert (the nightly order: a
+        // batch is scored against the serving model as it lands), and —
+        // the r14 verdict's ask #2 — it is a REAL gate: the integer
+        // n_worse signal schedules the rebuild (the reversed demo batch
+        // trips it at every shipped SF)
+        val nWorse = pqDriftWorse(s, gen1, batch)
+        if (!cellIdsPresent(s, gen1, batch))
+          upsertIvfPqIndex(s, gen1, batch)
+        // tripped: BOTH models retrain over the post-upsert corpus, read
+        // from the source lake (the index holds codes)
+        val corpus2 = e.select(col("vec_id"), col("embedding"))
+          .unionByName(batch)
+        Option.when(nWorse != 0) { tmp =>
+          writeIvfPqIndex(s, corpus2, trainIvfCentroids(corpus2, GateK),
+            trainPqCodebooks(corpus2), tmp)
+        }
       }
-      // the drift gate runs BEFORE the upsert (the nightly order: a
-      // batch is scored against the serving model as it lands), and —
-      // the r14 verdict's ask #2 — it is a REAL gate: the integer
-      // n_worse signal schedules the rebuild (the reversed demo batch
-      // trips it at every shipped SF)
-      val nWorse = pqDriftWorse(s, gen1, batch)
-      if (!cellIdsPresent(s, gen1, batch))
-        upsertIvfPqIndex(s, gen1, batch)
-      if (nWorse == 0) return gen1
-      // the gate tripped: BOTH models retrain over the post-upsert
-      // corpus (read from the source lake — the index holds codes),
-      // published as the next generation (gen1 GC'd by the publish)
-      val corpus2 = e.select(col("vec_id"), col("embedding"))
-        .unionByName(batch)
-      graft.core.IndexDirs.publish(conf, gen2, prefix) { tmp =>
-        writeIvfPqIndex(s, corpus2, trainIvfCentroids(corpus2, GateK),
-          trainPqCodebooks(corpus2), tmp)
-      }
-      gen2
     }
 
   /** The executed compressed-family re-train under the gate: the
@@ -2715,16 +2618,10 @@ object SimilarityQueries {
     * rebuilt (publishing it again would GC generation 2).
     */
   private[similarity] def retrainDemoIndex(s: SparkSession, dir: String): String = {
-    val e    = Tables(s, dir).embeddings
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val fp   = s"${st.getLen}_${st.getModificationTime}"
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val prefix = s"graft_ivf_retrain_v2_${slug}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-    val root = s"${System.getProperty("java.io.tmpdir")}/$prefix$fp"
-    ivfRetrainArc(s, root, prefix, e, retrainBatch(e))
+    val e = Tables(s, dir).embeddings
+    val g = graft.core.IndexDirs.generation(s.sparkContext.hadoopConfiguration,
+      dir, "embeddings.parquet", "graft_ivf_retrain_v2")
+    ivfRetrainArc(s, g.path, g.prefix, e, retrainBatch(e))
   }
 
   /** The gated retrain arc on the raw family — [[pqRetrainArc]]'s twin
@@ -2737,34 +2634,25 @@ object SimilarityQueries {
   private[similarity] def ivfRetrainArc(s: SparkSession, root: String,
       prefix: String, e: DataFrame, batch: DataFrame): String =
     synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      val gen2 = s"${root}_g2"
-      val fs   = new org.apache.hadoop.fs.Path(gen2).getFileSystem(conf)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$gen2/_built")))
-        return gen2
-      val gen1 = s"${root}_g1"
-      graft.core.IndexDirs.publish(conf, gen1, prefix) { tmp =>
-        writeIvfIndex(s, e, trainIvfCentroids(e, GateK), tmp)
+      graft.core.IndexDirs.cutover(s.sparkContext.hadoopConfiguration, root,
+          prefix)(tmp => writeIvfIndex(s, e, trainIvfCentroids(e, GateK),
+          tmp)) { gen1 =>
+        // the drift gate runs BEFORE the upsert (the nightly order), and
+        // — the r14 verdict's ask #2 — it is a REAL gate: the integer
+        // signal ([[ivfDriftWorse]] — batch vectors cohering worse than
+        // anything their cell was trained on, read against the persisted
+        // build-time profile) schedules the rebuild; a drift-free batch
+        // upserts, the gate declines, and generation 1 keeps serving
+        val nWorse = ivfDriftWorse(s, gen1, batch)
+        if (!cellIdsPresent(s, gen1, batch))
+          upsertIvfIndex(s, gen1, batch)
+        // tripped: full re-train over the post-upsert corpus
+        Option.when(nWorse != 0) { tmp =>
+          val corpus2 = s.read.parquet(s"$gen1/cells")
+            .select(col("vec_id"), col("embedding"))
+          writeIvfIndex(s, corpus2, trainIvfCentroids(corpus2, GateK), tmp)
+        }
       }
-      // the drift gate runs BEFORE the upsert (the nightly order), and
-      // — the r14 verdict's ask #2 — it is a REAL gate: the integer
-      // signal ([[ivfDriftWorse]] — batch vectors cohering worse than
-      // anything their cell was trained on, read against the persisted
-      // build-time profile) schedules the rebuild; a drift-free batch
-      // upserts, the gate declines, and generation 1 keeps serving
-      val nWorse = ivfDriftWorse(s, gen1, batch)
-      if (!cellIdsPresent(s, gen1, batch))
-        upsertIvfIndex(s, gen1, batch)
-      if (nWorse == 0) return gen1
-      // the gate tripped: full re-train over the post-upsert corpus,
-      // published as the next generation (gen1 GC'd by the publish)
-      val corpus2 = s.read.parquet(s"$gen1/cells")
-        .select(col("vec_id"), col("embedding"))
-      val cents2 = trainIvfCentroids(corpus2, GateK)
-      graft.core.IndexDirs.publish(conf, gen2, prefix) { tmp =>
-        writeIvfIndex(s, corpus2, cents2, tmp)
-      }
-      gen2
     }
 
   /** The executed re-train arc under the gate: after the nightly batch
@@ -3196,16 +3084,9 @@ object SimilarityQueries {
     *    the standard serving trade (the raw vectors are 64 floats).
     */
   def buildMaxsimIndex(s: SparkSession, dir: String): String = synchronized {
-    val e      = Tables(s, dir).embeddings
-    val conf   = s.sparkContext.hadoopConfiguration
-    val src    = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st     = src.getFileSystem(conf).getFileStatus(src)
-    val slug   = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val prefix = s"graft_maxsim_index_${slug}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-    val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
+    val e = Tables(s, dir).embeddings
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+        dir, "embeddings.parquet", "graft_maxsim_index") { tmp =>
       writeMaxsimIndex(s, e, trainIvfCentroids(e, GateK),
         trainPqCodebooks(e), tmp)
     }
@@ -3525,12 +3406,8 @@ object SimilarityQueries {
     */
   def upsertMaxsimIndex(s: SparkSession, idx: String,
       batch: DataFrame): Seq[Int] = {
-    val dup = batch.groupBy(col("vec_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsertMaxsimIndex: duplicate vec_id in batch " +
-          s"(${dup.head.get(0)}) — MERGE needs one row per token")
+    graft.operators.Maintenance.requireUniqueKeys(batch, "vec_id",
+      "upsertMaxsimIndex")
     val cents    = loadCentroids(s, idx)
     val codebook = loadCodebooks(s, idx)
     val coded = batch.select(Seq(maxsimDid(col("vec_id")).as("did"),
@@ -3561,29 +3438,18 @@ object SimilarityQueries {
     */
   private def upsertDemoMaxsimIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val e    = Tables(s, dir).embeddings
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val prefix = s"graft_maxsim_upsert_${slug}_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
+      val conf  = s.sparkContext.hadoopConfiguration
+      val batch = Tables(s, dir).embeddings.filter(col("vec_id") < 50)
+        .select((col("vec_id") + 200000).as("vec_id"), col("embedding"))
       // the base is a CLONE of the published serving index (r15
       // verdict task 6): same fingerprint ⇒ byte-equivalent models and
       // codes, so the maintenance row's first touch pays a file copy,
       // not a second model train + corpus encode
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        graft.core.IndexDirs.cloneInto(conf, buildMaxsimIndex(s, dir), tmp)
-      }
-      val batch = e.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 200000).as("vec_id"), col("embedding"))
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_upsert_applied") {
-        if (!maxsimBatchApplied(s, idx, batch))
-          upsertMaxsimIndex(s, idx, batch)
-      }
-      idx
+      graft.core.IndexDirs.maintainOnce(conf, dir, "embeddings.parquet",
+          "graft_maxsim_upsert", "_upsert_applied")(
+        tmp => graft.core.IndexDirs.cloneInto(conf, buildMaxsimIndex(s, dir), tmp))(
+        idx => !maxsimBatchApplied(s, idx, batch))(
+        idx => upsertMaxsimIndex(s, idx, batch))
     }
 
   /** The multi-vector family's applied-once guard, resolved against
@@ -3653,26 +3519,16 @@ object SimilarityQueries {
     */
   private def deleteDemoMaxsimIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val e    = Tables(s, dir).embeddings
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val prefix = s"graft_maxsim_delete_${slug}_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      // clone of the published serving index — see upsertDemoMaxsimIndex
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        graft.core.IndexDirs.cloneInto(conf, buildMaxsimIndex(s, dir), tmp)
-      }
-      val purge = e.select(expr("vec_id div 10").as("did")).distinct()
+      val conf  = s.sparkContext.hadoopConfiguration
+      val purge = Tables(s, dir).embeddings
+        .select(expr("vec_id div 10").as("did")).distinct()
         .filter(col("did") % 7 === 3)
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_purge_applied") {
-        if (maxsimPurgePending(s, idx, purge))
-          deleteFromMaxsimIndex(s, idx, purge)
-      }
-      idx
+      // clone of the published serving index — see upsertDemoMaxsimIndex
+      graft.core.IndexDirs.maintainOnce(conf, dir, "embeddings.parquet",
+          "graft_maxsim_delete", "_purge_applied")(
+        tmp => graft.core.IndexDirs.cloneInto(conf, buildMaxsimIndex(s, dir), tmp))(
+        idx => maxsimPurgePending(s, idx, purge))(
+        idx => deleteFromMaxsimIndex(s, idx, purge))
     }
 
   /** The multi-vector purge's idempotence probe, resolved against BOTH
@@ -3762,32 +3618,23 @@ object SimilarityQueries {
   private[similarity] def maxsimRetrainArc(s: SparkSession, root: String,
       prefix: String, e: DataFrame, batch: DataFrame): String =
     synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      val gen2 = s"${root}_g2"
-      val fs   = new org.apache.hadoop.fs.Path(gen2).getFileSystem(conf)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$gen2/_built")))
-        return gen2
-      val gen1 = s"${root}_g1"
-      graft.core.IndexDirs.publish(conf, gen1, prefix) { tmp =>
-        writeMaxsimIndex(s, e, trainIvfCentroids(e, GateK),
-          trainPqCodebooks(e), tmp)
+      graft.core.IndexDirs.cutover(s.sparkContext.hadoopConfiguration, root,
+          prefix)(tmp => writeMaxsimIndex(s, e, trainIvfCentroids(e, GateK),
+          trainPqCodebooks(e), tmp)) { gen1 =>
+        // nightly order: the batch scores against the serving profile as
+        // it lands, then merges; only a tripped gate rebuilds
+        val nWorse = pqDriftWorse(s, gen1, batch)
+        if (!maxsimBatchApplied(s, gen1, batch))
+          upsertMaxsimIndex(s, gen1, batch)
+        // BOTH models retrain over the post-upsert corpus, read from the
+        // source lake (the index holds codes)
+        val corpus2 = e.select(col("vec_id"), col("embedding"))
+          .unionByName(batch)
+        Option.when(nWorse != 0) { tmp =>
+          writeMaxsimIndex(s, corpus2, trainIvfCentroids(corpus2, GateK),
+            trainPqCodebooks(corpus2), tmp)
+        }
       }
-      // nightly order: the batch scores against the serving profile as
-      // it lands, then merges; only a tripped gate rebuilds
-      val nWorse = pqDriftWorse(s, gen1, batch)
-      if (!maxsimBatchApplied(s, gen1, batch))
-        upsertMaxsimIndex(s, gen1, batch)
-      if (nWorse == 0) return gen1
-      // BOTH models retrain over the post-upsert corpus, read from the
-      // source lake (the index holds codes), published as the next
-      // generation (gen1 GC'd by the publish)
-      val corpus2 = e.select(col("vec_id"), col("embedding"))
-        .unionByName(batch)
-      graft.core.IndexDirs.publish(conf, gen2, prefix) { tmp =>
-        writeMaxsimIndex(s, corpus2, trainIvfCentroids(corpus2, GateK),
-          trainPqCodebooks(corpus2), tmp)
-      }
-      gen2
     }
 
   /** The retrain demo behind `ss_maxsim_retrain`: its own family over
@@ -3798,16 +3645,10 @@ object SimilarityQueries {
     */
   private[similarity] def retrainDemoMaxsimIndex(s: SparkSession,
       dir: String): String = {
-    val e    = Tables(s, dir).embeddings
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val fp   = s"${st.getLen}_${st.getModificationTime}"
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val prefix = s"graft_maxsim_retrain_${slug}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_fp"
-    val root = s"${System.getProperty("java.io.tmpdir")}/$prefix$fp"
-    maxsimRetrainArc(s, root, prefix, e, retrainBatch(e))
+    val e = Tables(s, dir).embeddings
+    val g = graft.core.IndexDirs.generation(s.sparkContext.hadoopConfiguration,
+      dir, "embeddings.parquet", "graft_maxsim_retrain")
+    maxsimRetrainArc(s, g.path, g.prefix, e, retrainBatch(e))
   }
 
   /** The executed multi-vector re-train under the gate: the served

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Replays an events parquet table as a file stream through a
@@ -12,14 +11,8 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val mode  = args.drop(1).headOption.getOrElse("sessionize")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus(4))
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     // stage the batch table as a file-source stream (1 file per batch)
     val staging = java.nio.file.Files.createTempDirectory("stream-in").toString

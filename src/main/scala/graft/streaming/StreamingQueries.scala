@@ -1279,14 +1279,8 @@ object StreamingQueries {
       setup: (SparkSession, String) => (DataFrame, Long) => Seq[Row],
       continuousTrigger: Boolean = false): String = {
     import java.nio.file.Files
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val conf = s.sparkContext.hadoopConfiguration
-    val src  = new org.apache.hadoop.fs.Path(s"$dir/$srcFile")
-    val st   = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = s"${family}_${slug}_${dir.hashCode & 0x7fffffff}_"
-    val root = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, root, prefix) { tmp =>
+    val root = graft.core.IndexDirs.publishCurrent(
+        s.sparkContext.hadoopConfiguration, dir, srcFile, family) { tmp =>
       val child = graft.core.Sessions.withConf(s,
         "spark.sql.shuffle.partitions" -> streamPartitions)
       val idx    = s"$tmp/idx"

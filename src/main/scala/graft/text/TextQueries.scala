@@ -1711,25 +1711,11 @@ object TextQueries {
     * (doc, term) aggregation — the tx_tfidf-scale pass, paid once.
     */
   def buildTextIndex(s: SparkSession, dir: String): String = synchronized {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-    val conf = s.sparkContext.hadoopConfiguration
-    // the index directory is keyed by the SOURCE DATA's identity — the
-    // documents file's (length, mtime) plus the unsanitized path's hash
-    // — so a regenerated corpus at the same path can never be served a
-    // stale index (a bare `_built` marker would survive the regen and
-    // silently diverge the probe from tx_bm25 and its oracle), and two
-    // long paths with the same sanitized 40-char tail cannot collide.
-    // The prefix (everything before the file fingerprint) identifies
-    // THIS corpus path's index family: IndexDirs.publish builds into a
-    // temp sibling renamed atomically into place (a half-written index
-    // is never observable, even across JVMs) and garbage-collects the
-    // previous generations' directories after a successful build.
-    val src    = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st     = src.getFileSystem(conf).getFileStatus(src)
-    val prefix = s"graft_text_index_${slug}_${dir.hashCode & 0x7fffffff}_"
-    val idx    = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"$prefix${st.getLen}_${st.getModificationTime}"
-    graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
+    // keyed by the documents file's identity (IndexDirs' naming rule):
+    // a bare `_built` marker would survive a regenerated corpus and
+    // silently diverge the probe from tx_bm25 and its oracle
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+        dir, "documents.parquet", "graft_text_index") { tmp =>
       writeTextIndex(s, Tables(s, dir).documents, tmp)
     }
   }
@@ -2011,12 +1997,8 @@ object TextQueries {
     require(fs.exists(postingsRoot), s"no text index at $idx — build it first")
     val d = batch.select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) > 0)
-    val dup = d.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsertTextIndex: duplicate doc_id in batch (${dup.head.get(0)}) " +
-          "— MERGE needs one row per doc")
+    graft.operators.Maintenance.requireUniqueKeys(d, "doc_id",
+      "upsertTextIndex")
     val ids = d.select(col("doc_id"))
     val route = docRoute(idx)
     route.ensure(s, s"$idx/postings")
@@ -2081,18 +2063,9 @@ object TextQueries {
     */
   private def upsertDemoIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val prefix =
-        s"graft_text_upsert_${slug}_${dir.hashCode & 0x7fffffff}_"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
       val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        writeTextIndex(s, docs.filter(col("doc_id") % 5 =!= 0), tmp)
-      }
+      val batch =
+        docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 10 === 1)
       // apply the nightly batch once per corpus generation: when the
       // batch's new slice is already in the postings the MERGE would
       // be a (correct but costly) no-op — a serving tier probes an
@@ -2102,26 +2075,23 @@ object TextQueries {
       // pass may have committed the postings but died before the
       // docmap settle / stats refresh, and only the re-apply heals
       // those tails. The presence read prunes through the docmap.
-      val batchIds = docs
-        .filter(col("doc_id") % 5 === 0 || col("doc_id") % 10 === 1)
-        .select(col("doc_id"))
       // r16 marker fast path: steady-state re-entry is one file stat;
       // the no-marker path keeps the stats-pending + presence guard
       // (a crashed pass may have committed postings but died before
       // the stats settle — only the re-apply heals those tails, and
       // the marker stamps only AFTER the settle completed).
-      graft.core.IndexDirs.appliedOnce(conf, idx, "_upsert_applied") {
-        val route = docRoute(idx)
-        route.ensure(s, s"$idx/postings")
-        val applied = !statsPending(s, idx) &&
-          route.dataOf(s, s"$idx/postings",
-              batchIds.filter(col("doc_id") % 5 === 0))
-            .limit(1).collect().nonEmpty
-        if (!applied)
-          upsertTextIndex(s, idx,
-            docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 10 === 1))
-      }
-      idx
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", "graft_text_upsert", "_upsert_applied")(
+        tmp => writeTextIndex(s, docs.filter(col("doc_id") % 5 =!= 0), tmp))(
+        { idx =>
+          val route = docRoute(idx)
+          route.ensure(s, s"$idx/postings")
+          statsPending(s, idx) ||
+            route.dataOf(s, s"$idx/postings",
+                batch.select(col("doc_id")).filter(col("doc_id") % 5 === 0))
+              .limit(1).collect().isEmpty
+        })(
+        idx => upsertTextIndex(s, idx, batch))
     }
 
   /** Sparse-index MAINTENANCE under the gate — `Maintenance
@@ -2260,36 +2230,25 @@ object TextQueries {
     */
   private def deleteDemoIndex(s: SparkSession, dir: String): String =
     synchronized {
-      val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
-      val conf = s.sparkContext.hadoopConfiguration
-      val src  = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st   = src.getFileSystem(conf).getFileStatus(src)
-      val prefix =
-        s"graft_text_delete_${slug}_${dir.hashCode & 0x7fffffff}_"
-      val idx = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"$prefix${st.getLen}_${st.getModificationTime}"
-      graft.core.IndexDirs.publish(conf, idx, prefix) { tmp =>
-        writeTextIndex(s, Tables(s, dir).documents, tmp)
-      }
-      val marker = new org.apache.hadoop.fs.Path(s"$idx/_purge_applied")
-      val fs = marker.getFileSystem(conf)
-      if (!fs.exists(marker)) {
-        val purge = graft.dedup.DedupQueries.textPurgeIds(s, dir)
-          .select(col("doc_id"))
-        // pending = purged postings still on disk (docmap-pruned data
-        // read), OR purged docmap pairs surviving, OR a live
-        // stats-pending marker — any of the three means a crashed
-        // pass left tails only the re-apply heals
-        val route = docRoute(idx)
-        route.ensure(s, s"$idx/postings")
-        val pending = statsPending(s, idx) ||
-          route.dataOf(s, s"$idx/postings", purge)
-            .limit(1).collect().nonEmpty ||
-          route.lookup(s, purge).limit(1).collect().nonEmpty
-        if (pending) deleteFromTextIndex(s, idx, purge)
-        fs.create(marker, true).close()
-      }
-      idx
+      // derived only when the marker is absent
+      lazy val purge = graft.dedup.DedupQueries.textPurgeIds(s, dir)
+        .select(col("doc_id"))
+      graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
+          dir, "documents.parquet", "graft_text_delete", "_purge_applied")(
+        tmp => writeTextIndex(s, Tables(s, dir).documents, tmp))(
+        { idx =>
+          // pending = purged postings still on disk (docmap-pruned data
+          // read), OR purged docmap pairs surviving, OR a live
+          // stats-pending marker — any of the three means a crashed
+          // pass left tails only the re-apply heals
+          val route = docRoute(idx)
+          route.ensure(s, s"$idx/postings")
+          statsPending(s, idx) ||
+            route.dataOf(s, s"$idx/postings", purge)
+              .limit(1).collect().nonEmpty ||
+            route.lookup(s, purge).limit(1).collect().nonEmpty
+        })(
+        idx => deleteFromTextIndex(s, idx, purge))
     }
 
   /** Purge propagation under the gate — the serving-tier invariant the

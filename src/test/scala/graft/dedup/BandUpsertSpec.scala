@@ -209,4 +209,18 @@ class BandUpsertSpec extends SparkSuite {
     }
     assert(e2.getMessage.contains("duplicate doc_id"))
   }
+
+  test("a batch with a duplicated doc_id fails naming the entry point and the key") {
+    val idx = tmpIdx("dupkey")
+    DedupQueries.writeBandIndex(spark, docs, idx)
+    val fresh = docs.filter(col("doc_id") === 0)
+      .select((col("doc_id") + 900000).as("doc_id"), col("text"))
+    val e = intercept[IllegalArgumentException] {
+      DedupQueries.upsertBandIndex(spark, idx, fresh.unionAll(fresh))
+    }
+    assert(e.getMessage.contains("upsertBandIndex") &&
+      e.getMessage.contains("duplicate doc_id") &&
+      e.getMessage.contains("(900000)"), e.getMessage)
+    assert(!sigIdsOf(idx).contains(900000L), "the rejected batch landed")
+  }
 }

@@ -151,4 +151,27 @@ class MaxsimIndexSpec extends SparkSuite {
       .filter(col("did") === 50001L).count() == 0,
       "the re-applied purge did not clean the fetch copy")
   }
+
+  test("a batch with a duplicated vec_id fails naming the entry point and the key") {
+    val e = graft.Tables(spark, dir).embeddings
+      .select(col("vec_id"), col("embedding"))
+    val idx = java.nio.file.Files
+      .createTempDirectory("graft-maxsim-dupkey").toString + "/idx"
+    SimilarityQueries.writeMaxsimIndex(spark, e,
+      SimilarityQueries.trainIvfCentroids(e, 16),
+      SimilarityQueries.trainPqCodebooks(e), idx)
+    val batch = e.filter(col("vec_id") === 3)
+      .select((col("vec_id") + 300000).as("vec_id"), col("embedding"))
+    val ex = intercept[IllegalArgumentException] {
+      SimilarityQueries.upsertMaxsimIndex(spark, idx, batch.unionAll(batch))
+    }
+    assert(ex.getMessage.contains("upsertMaxsimIndex") &&
+      ex.getMessage.contains("duplicate vec_id") &&
+      ex.getMessage.contains("(300003)"), ex.getMessage)
+    Seq("cells", "docs").foreach { copy =>
+      assert(spark.read.parquet(s"$idx/$copy")
+        .filter(col("vec_id") === 300003L).count() == 0,
+        s"the rejected batch landed in $copy")
+    }
+  }
 }
