@@ -415,8 +415,12 @@ object DedupQueries {
         .toDF("id", "lbl")
       // NOTE: `e` stays persisted — the returned frame reads it when the
       // caller's action runs (unpersisting here would silently re-run
-      // the whole edge pipeline at materialization time); the
-      // ContextCleaner reaps the cache once the frame is unreachable.
+      // the whole edge pipeline at materialization time). Nothing ever
+      // releases it: Spark's CacheManager keeps a persisted plan until
+      // `unpersist`, whatever becomes of the frame, so the cache lives
+      // for the session, and a later call over an identical edge plan
+      // (every `textPurgeIds`) finds it warm — and logs "Asked to cache
+      // already cached data" at the `persist()` above.
       return labels
     }
     val bidir = e.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -1371,108 +1375,82 @@ object DedupQueries {
     * next to the IVF index (dense) and the inverted index (sparse);
     * [[minhashCdc]]'s own Scaladoc promises exactly this ("at 100 TB
     * the corpus band table would persist like the IVF index and
-    * amortize across batches"):
-    *  - `bands/`: the corpus (doc_id, bh) band keys, HOT-BAND CAPPED
-    *    at build time (bc ≤ 50 — the cap is a property of the corpus
-    *    index, paid once, not re-derived per batch), Hive-partitioned
-    *    by `bkt = pmod(hash(bh), 16)` so a SMALL probe batch
-    *    partition-prunes to its bands' buckets (a corpus-sized batch
-    *    touches all 16 — the honest bound; the amortized win is not
-    *    recomputing corpus signatures/bands per batch).
+    * amortize across batches"). The layout is the shared banded
+    * near-dup layout ([[BandLayout]], [[graft.operators.BandedIndex]]):
+    *  - `bands/`: the corpus (doc_id, bh) band keys, UNCAPPED,
+    *    Hive-partitioned by `bkt = pmod(hash(bh), 16)` so a SMALL probe
+    *    batch partition-prunes to its bands' buckets (a corpus-sized
+    *    batch touches all 16 — the honest bound; the amortized win is
+    *    not recomputing corpus signatures/bands per batch). The ≤50
+    *    hot-band cap is applied at probe time ([[probeBandIndex]]).
     *  - `sigs/`: the (doc_id, sh) shingle signatures the exact-Jaccard
-    *    confirm reads back.
+    *    confirm reads back, partitioned by `sbkt = pmod(hash(doc_id),
+    *    16)`.
+    *  - `bandmap/`: the doc_id → band-bucket route maintenance locates
+    *    through.
     * Atomic publish + stale-generation GC via [[graft.core.IndexDirs]],
     * keyed by the documents file's identity like its two siblings.
     */
   def buildBandIndex(s: SparkSession, dir: String): String = synchronized {
     graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
-        dir, "documents.parquet", "graft_band_index_v3") { tmp =>
+        dir, "documents.parquet", "graft_band_index_v4") { tmp =>
       writeBandIndex(s, Tables(s, dir).documents
         .select(col("doc_id"), col("text")), tmp)
     }
   }
 
-  /** Write sigs + capped bands + hot-band tombstones for `docs`
+  /** The band index's layout: (doc_id, sh) signatures bucketed by
+    * `sbkt`, (doc_id, bh) band rows bucketed by `bkt`. The explicit
+    * schemas keep every reachable state readable — Spark cannot infer
+    * a schema from an empty partitioned directory.
+    */
+  private[graft] val BandLayout = graft.operators.BandedIndex("band",
+    "doc_id", Seq("bh"),
+    sigsSchema = "doc_id LONG, sh ARRAY<LONG>, sbkt INT",
+    bandsSchema = "doc_id LONG, bh STRING, bkt INT", sigBktCol = "sbkt")
+
+  /** Write sigs + uncapped bands + the bandmap route for `docs`
     * (doc_id, text) under `idx` — shared by the from-scratch build and
-    * the rebuild oracle in BandUpsertSpec. `hot/` carries the KEYS of
-    * bands whose member count exceeds the cap: the rows themselves are
-    * dropped (a hot band is boilerplate, useless as a candidate
-    * generator), but the key must persist so incremental maintenance
-    * can tell "capped out" from "never seen" — a band can only ever
-    * GAIN members under the append-only admission contract, so a
-    * key-only tombstone set (no counts) is sufficient AND idempotent.
+    * the rebuild oracles in BandUpsertSpec/PurgePropagationSpec. Docs
+    * that tokenize to no shingles are not indexed.
     */
-  /** Explicit read schemas for the band index's three tables: an index
-    * over a fully-boilerplate corpus legitimately has an EMPTY bands
-    * table (every band hot), and Spark cannot infer a schema from an
-    * empty partitioned directory — the format must stay readable in
-    * every reachable state.
-    */
-  private val bandsSchema = "doc_id LONG, bh STRING, bkt INT"
-  private val bucketSchema = "doc_id LONG, bh STRING"
-  private val hotSchema = "bh STRING, bkt INT"
-  private val sigsSchema = "doc_id LONG, sh ARRAY<LONG>, sbkt INT"
-  /** A single sigs bucket directory read bare (the partition column is
-    * not in the files). */
-  private val sigBucketSchema = "doc_id LONG, sh ARRAY<LONG>"
-
-  /** The sigs table's id-bucket key — `sigs/` is Hive-partitioned by
-    * it (r12's stated layout evolution, executed in r13) so delete and
-    * crash-repair rewrites prune to the buckets actually holding a
-    * purged id instead of rewriting the table whole; upsert appends
-    * land only in the batch's buckets for free.
-    */
-  private def sigBktOf(id: Column): Column = pmod(hash(id), lit(16))
-
   private[graft] def writeBandIndex(s: SparkSession, docs: DataFrame,
       idx: String): Unit = {
     val shE = cdcSigs(spread(docs))
-    shE.withColumn("sbkt", sigBktOf(col("doc_id")))
-      .write.mode("overwrite").partitionBy("sbkt").parquet(s"$idx/sigs")
-    val wBand = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bh"))
-    val counted = cdcBandsOf(shE)
-      .withColumn("bc", count(lit(1)).over(wBand))
-      .withColumn("bkt", pmod(hash(col("bh")), lit(16)))
-    counted.filter(col("bc") <= 50).drop("bc")
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$idx/bands")
-    // plain (not partitioned) on purpose: the tombstone set is the
-    // heavy-hitter band keys — tiny at any scale, and an empty
-    // partitioned write would leave a schema-less directory
-    counted.filter(col("bc") > 50)
-      .select(col("bh"), col("bkt")).distinct()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$idx/hot")
+    BandLayout.write(s, idx, shE, cdcBandsOf(shE))
   }
 
   /** The ONE probe kernel against a persisted band index: compute only
     * the batch's signatures + bands, statically prune the index scan
-    * to their buckets, candidate-join against the broadcast batch
+    * to their buckets, drop the probed band keys with more than 50
+    * stored members (the probe-time hot-band cap, counted over only
+    * the probed keys), candidate-join against the broadcast batch
     * bands, confirm with the shared exact-Jaccard tail over the
     * persisted signatures. Shared by `dd_band_probe` (probe after
-    * build) and `dd_band_upsert` (probe after incremental ingest).
+    * build), `dd_band_upsert`/`dd_band_delete` (probe after
+    * maintenance) and the streaming admission rows.
     */
   private[graft] def probeBandIndex(s: SparkSession, idx: String,
       incoming: DataFrame, excludeBatchIds: Boolean = false): DataFrame = {
     val shI = cdcSigs(incoming)
     val bandsI = cdcBandsOf(shI)
-    val bkts = bandsI
-      .select(pmod(hash(col("bh")), lit(16)).as("b"))
+    val bkts = bandsI.select(BandLayout.bandBkt.as("b"))
       .distinct().collect().map(_.getInt(0)).sorted // bounded: ≤ 16
-    val bandsE0 = s.read.schema(bandsSchema).parquet(s"$idx/bands")
-      .filter(col("bkt").isin(bkts.map(Integer.valueOf): _*))
+    val stored0 = BandLayout.storedBands(s, idx, bkts)
       .select(col("doc_id"), col("bh"))
     // excludeBatchIds: the ingest LOOP's retry contract — a
     // foreachBatch retry after a committed ingest must reproduce the
-    // FIRST attempt's verdicts, so the loop screens index-minus-batch
-    // (IngestLogRestartSpec). A later-session re-screen (dd_band_upsert:
+    // FIRST attempt's verdicts, including the probe-time cap counts,
+    // so the loop screens index-minus-batch (IngestLogRestartSpec,
+    // BandUpsertSpec). A later-session re-screen (dd_band_upsert:
     // tomorrow's screen of ids ingested yesterday) keeps the default —
     // a re-submitted id IS a dup against its stored self.
-    val bandsE =
-      if (!excludeBatchIds) bandsE0
-      else bandsE0.join(broadcast(incoming.select(col("doc_id"))),
+    val stored =
+      if (!excludeBatchIds) stored0
+      else stored0.join(broadcast(incoming.select(col("doc_id"))),
         Seq("doc_id"), "left_anti")
-    val shE = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+    val bandsE = BandLayout.belowCap(stored, bandsI.select(col("bh")).distinct())
+    val shE = s.read.schema(BandLayout.sigsSchema).parquet(s"$idx/sigs")
     val cands = bandsE.as("e")
       .join(broadcast(bandsI.as("i")), col("e.bh") === col("i.bh"))
       .select(col("i.doc_id").as("new_id"), col("e.doc_id").as("old_id"))
@@ -1484,134 +1462,19 @@ object DedupQueries {
     * admission tier's INGEST step: the docs a screen admitted as 'new'
     * append into the index so tomorrow's screen sees them. Contract is
     * APPEND-ONLY (a re-submitted doc is 'dup' and never re-ingested;
-    * replacements are the purge/re-ingest tier's job): a batch id
-    * already present in the signatures fails loudly, duplicate ids
-    * within a batch fail loudly, docs that tokenize to no shingles are
-    * not indexed (the build's own rule). Only the batch's ≤16 band
-    * buckets rewrite; within each, the hot-band cap is RE-CHECKED —
-    * a stored band pushed past the cap by the batch drops its rows and
-    * gains a tombstone, exactly what a from-scratch rebuild over the
-    * extended corpus produces (BandUpsertSpec pins the equivalence,
-    * including the over-cap transition). Crash safety: ALL staging
-    * writes land first, then hot/ (the tombstones) swaps, then the
-    * bands table commits in ONE dynamic-partition-overwrite job
-    * ([[graft.operators.IndexMerge.commitStaged]]), then the sigs
-    * append — the batch's commit point (the presence check reads
-    * sigs), with the merges anti-joined on the batch ids AND on the
-    * tombstone keys, so a crashed run at any point re-applies cleanly:
-    * a bands commit that dropped an over-cap band's rows is never
-    * durable before its tombstone is, and the re-run's tombstone
-    * anti-join finishes any half-applied state.
-    * Returns the touched bucket ids.
+    * replacements are the purge/re-ingest tier's job): a batch whose
+    * every id is already indexed fails loudly, duplicate ids within a
+    * batch fail loudly, docs that tokenize to no shingles are not
+    * indexed (the build's own rule). The shared banded-index path
+    * ([[graft.operators.BandedIndex.upsert]]) commits the bands
+    * through the bandmap route and the sigs last; no cap bookkeeping —
+    * the cap is probe-time, so the upserted index equals a from-scratch
+    * rebuild over the extended corpus (BandUpsertSpec). Returns the
+    * touched band buckets.
     */
   def upsertBandIndex(s: SparkSession, idx: String,
-      batch: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigsRoot = new org.apache.hadoop.fs.Path(s"$idx/sigs")
-    val fs = sigsRoot.getFileSystem(conf)
-    require(fs.exists(sigsRoot), s"no band index at $idx — build it first")
-    val shI = cdcSigs(batch)
-    graft.operators.Maintenance.requireUniqueKeys(shI, "doc_id",
-      "upsertBandIndex")
-    val ids = shI.select(col("doc_id"))
-    val existing = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
-      .join(ids, Seq("doc_id"), "left_semi").limit(1).collect()
-    if (existing.nonEmpty)
-      throw new IllegalArgumentException(
-        s"upsertBandIndex: doc ${existing.head.get(0)} already indexed — " +
-          "admission is append-only; replacements go through purge + " +
-          "re-ingest")
-    val newBands = cdcBandsOf(shI)
-      .withColumn("bkt", pmod(hash(col("bh")), lit(16)))
-      .persist()
-    try {
-      val touched = newBands.select(col("bkt")).distinct()
-        .collect().map(_.getInt(0)).sorted // bounded: ≤ 16
-      // docs that tokenize to no shingles are not indexed (the build's
-      // own rule) — a batch of only such docs is a documented no-op,
-      // not a zero-paths read error downstream
-      if (touched.isEmpty) return Nil
-      val hotTbl = s.read.schema(hotSchema).parquet(s"$idx/hot") // tiny tombstone set
-      val staging = s"$idx/hot__new"
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true) // crash leftovers
-      // PHASE 1 — materialize BOTH derived sets across ALL touched
-      // buckets at once; NOTHING under the index changes yet. keep and
-      // newHot share the `stored` scan, so a write executed after a
-      // swap would try to re-read replaced files.
-      //
-      // A band is suppressed if already hot, or if its full member
-      // count (stored rows are complete for non-hot bands) + the
-      // batch's rows passes the cap; counts only grow under
-      // append-only admission, so suppression is monotone and the
-      // key-only tombstone needs no count. STORED rows anti-join the
-      // tombstones too: a no-op in normal operation (the invariant
-      // says a hot band has no stored rows), but after a crash between
-      // the hot swap below and the bands commit it repairs the table —
-      // the re-run sees the new tombstone in hot/ and drops the
-      // now-hot band's surviving stored rows, exactly what the
-      // from-scratch rebuild produces. A band key determines its
-      // bucket (bkt = hash(bh) % 16), so the one window over the
-      // all-buckets union counts per band exactly as the old
-      // per-bucket loop did.
-      val existing = touched.filter(b =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands/bkt=$b")))
-      val stored =
-        if (existing.isEmpty) newBands.limit(0)
-        else s.read.schema(bandsSchema).option("basePath", s"$idx/bands")
-          .parquet(existing.map(b => s"$idx/bands/bkt=$b"): _*)
-          .join(ids, Seq("doc_id"), "left_anti") // crashed-run rows
-      val hot0   = hotTbl.select(col("bh"))
-      val merged = stored.join(hot0, Seq("bh"), "left_anti")
-        .unionByName(newBands.join(hot0, Seq("bh"), "left_anti"))
-      val wBand = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("bh"))
-      val counted = merged.withColumn("bc", count(lit(1)).over(wBand))
-      val keep    = counted.filter(col("bc") <= 50).drop("bc")
-      val newHot  = counted.filter(col("bc") > 50)
-        .select(col("bh"), col("bkt")).distinct()
-      newHot.coalesce(1).write.mode("overwrite").parquet(staging)
-      val bandsStaging = graft.operators.IndexMerge.stageParts(
-        s, s"$idx/bands", "bkt", keep)
-      // PHASE 2 — hot/ swaps FIRST (one whole-table tombstone merge;
-      // the set is tiny at any scale). Ordering the tombstone publish
-      // BEFORE the bands commit closes the r11-advice crash window: a
-      // bands commit that dropped an over-cap band's rows can never be
-      // durable while hot/ still lacks that band's tombstone, so no
-      // crash point loses a band's pre-existing rows without also
-      // suppressing the band (the repair anti-join above finishes the
-      // job on re-run).
-      val newHotAll = s.read.schema(hotSchema).parquet(staging)
-      val hotTmp = s"$idx/hot__upserting"
-      hotTbl.unionByName(newHotAll).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(hotTmp)
-      graft.operators.Maintenance.swapDirs(s, hotTmp, s"$idx/hot")
-      // PHASE 3 — the bands table commits in ONE dynamic-overwrite job
-      // from the staged copy (buckets whose every band went hot clear).
-      graft.operators.IndexMerge.commitStaged(
-        s, s"$idx/bands", "bkt", "doc_id", touched, bandsStaging)
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      // the batch's commit point: sigs append LAST, so a crashed run
-      // re-applies (the presence check above reads sigs); the
-      // partitioned append writes only the batch's id-buckets
-      // the append bypasses the merge kernel, so the sigs part-stats
-      // sidecar (written by the purge path's kernel delete) would go
-      // stale: distrust FIRST (recording the ≤16 appended id-buckets),
-      // append, then refresh those buckets' rows from read-back — a
-      // crash between append and refresh leaves the marker, never a
-      // stale range a later purge's pruned locate could miss
-      val sbkts = shI.select(sigBktOf(col("doc_id")).as("sbkt"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      graft.operators.IndexMerge.distrustStats(s, s"$idx/sigs", sbkts)
-      shI.withColumn("sbkt", sigBktOf(col("doc_id")))
-        .write.mode("append").partitionBy("sbkt").parquet(s"$idx/sigs")
-      graft.operators.IndexMerge.refreshStats(s, s"$idx/sigs", "sbkt",
-        "doc_id", sbkts, readSchema = Some(sigsSchema))
-      // swapped directories keep their paths — drop any cached file
-      // listings so later reads can't resolve to replaced files
-      s.catalog.refreshByPath(idx)
-      touched
-    } finally newBands.unpersist()
-  }
+      batch: DataFrame): Seq[Int] =
+    BandLayout.upsert(s, idx, cdcSigs(batch), "upsertBandIndex")(cdcBandsOf)
 
   /** The maintenance demo behind `dd_band_upsert`: its OWN index
     * family (never the one `dd_band_probe` serves — ingest mutates the
@@ -1628,9 +1491,9 @@ object DedupQueries {
           concat(lit("fresh content row "), col("doc_id").cast("string"),
             lit(" batch nightly ingest")).as("text"))
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
-          dir, "documents.parquet", "graft_band_upsert_v3", "_upsert_applied")(
+          dir, "documents.parquet", "graft_band_upsert_v4", "_upsert_applied")(
         tmp => writeBandIndex(s, d.select(col("doc_id"), col("text")), tmp))(
-        idx => s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+        idx => s.read.schema(BandLayout.sigsSchema).parquet(s"$idx/sigs")
           .join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
           .limit(1).collect().isEmpty)(
         idx => upsertBandIndex(s, idx, fresh))
@@ -1638,14 +1501,14 @@ object DedupQueries {
 
   /** Band-index MAINTENANCE under the gate — the ingest step after
     * admission: tonight's fresh documents append into the persisted
-    * band index (touched-buckets-only, cap re-checked, tombstoned),
+    * band index (touched buckets only, through the bandmap route),
     * then the SAME nightly batch screens again — re-submissions are
     * still dups against the corpus, and the just-ingested fresh docs
     * now flag 'dup' against themselves (except where their shared
     * boilerplate bands went hot — exactly what the cap is for). The
     * oracle recomputes the whole screen over the EXTENDED corpus
     * (documents ∪ ingested), so the row passes only if the bucket
-    * merges, the cap transitions, and the signature appends all
+    * merges, the signature merge and the probe-time cap all
     * reproduce a from-scratch view.
     */
   val bandUpsert = Query(
@@ -1664,129 +1527,20 @@ object DedupQueries {
   )
 
   /** Purge propagation into the persisted band index — the DELETE path
-    * through [[upsertBandIndex]]'s touched-bucket discipline, closing
-    * the r11 gap: `dd_purge_apply` cleans the LAKE, but a probe against
-    * an unmaintained index still serves the purged docs as candidates.
-    * Semantics = a from-scratch [[writeBandIndex]] over the surviving
-    * corpus:
-    *  - purged docs' rows leave `bands/` (anti-join, touched buckets
-    *    only) and `sigs/`;
-    *  - a TOMBSTONED band whose surviving member count drops to ≤ 50
-    *    must RESURRECT — its tombstone leaves `hot/` and its surviving
-    *    rows return to `bands/` (a rebuild over the survivors would
-    *    carry them). A hot band's rows exist nowhere but the
-    *    signatures, so resurrection recomputes membership from `sigs/`
-    *    — ONE narrow pass, filtered by the broadcast ≤ 4×|batch|
-    *    affected tombstone keys, and it runs at all only when the
-    *    purge actually touches a hot band. A tombstone ALL of whose
-    *    members are purged also leaves hot/ (zero-member resurrection).
-    * Crash safety: every temp writes first, then buckets swap, then
-    * hot/, then sigs/ — the commit point (a re-run sees purged ids
-    * still in sigs and re-applies; the bucket merges anti-join on both
-    * the purge ids and the resurrected keys, so every intermediate
-    * state converges). Idempotent once sigs swap. Returns the touched
-    * bucket ids.
+    * closing the r11 gap: `dd_purge_apply` cleans the LAKE, but a probe
+    * against an unmaintained index still serves the purged docs as
+    * candidates. Semantics = a from-scratch [[writeBandIndex]] over the
+    * surviving corpus: purged docs' rows leave `bands/` (located
+    * through the bandmap route) and `sigs/` (the commit point), through
+    * the shared banded-index path
+    * ([[graft.operators.BandedIndex.delete]]). A capped band whose
+    * membership drops back under the cap needs no maintenance event:
+    * the next probe's membership count simply sees the smaller set.
+    * Idempotent once sigs commit. Returns the touched band buckets.
     */
   def deleteFromBandIndex(s: SparkSession, idx: String,
-      purge0: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigsRoot = new org.apache.hadoop.fs.Path(s"$idx/sigs")
-    val fs = sigsRoot.getFileSystem(conf)
-    require(fs.exists(sigsRoot), s"no band index at $idx — build it first")
-    val purge = purge0.select(col("doc_id"))
-    val purgedSigs = s.read.schema(sigsSchema).parquet(s"$idx/sigs")
-      .join(purge, Seq("doc_id"), "left_semi").persist()
-    var members: Option[DataFrame] = None
-    try {
-      // ids with no signature were never indexed — purging them is the
-      // documented no-op, mirroring the build's own rule
-      if (purgedSigs.limit(1).collect().isEmpty) return Nil
-      val purgedBands = cdcBandsOf(purgedSigs)
-        .withColumn("bkt", pmod(hash(col("bh")), lit(16))).persist()
-      try {
-        import s.implicits._
-        val hotTbl = s.read.schema(hotSchema).parquet(s"$idx/hot")
-        // tombstones the purge might un-cap — bounded: ≤ 4 × |batch|
-        val affectedHot = hotTbl
-          .join(purgedBands.select(col("bh")).distinct(),
-            Seq("bh"), "left_semi")
-          .collect().map(r => (r.getString(0), r.getInt(1)))
-        val (resKeysArr, resRows) =
-          if (affectedHot.isEmpty)
-            (Array.empty[(String, Int)],
-              purgedBands.select(col("doc_id"), col("bh"), col("bkt"))
-                .limit(0))
-          else {
-            val keys = affectedHot.toSeq.toDF("bh", "bkt")
-            val m = cdcBandsOf(
-                s.read.schema(sigsSchema).parquet(s"$idx/sigs"))
-              .join(broadcast(keys.select(col("bh"))), Seq("bh"))
-              .join(purge, Seq("doc_id"), "left_anti")
-              .persist()
-            members = Some(m)
-            // per-key surviving counts, LEFT from the keys so an
-            // all-members-purged tombstone (count 0) still resurrects
-            val counts = keys
-              .join(m.groupBy(col("bh")).agg(count(lit(1)).as("n")),
-                Seq("bh"), "left")
-              .select(col("bh"), col("bkt"),
-                coalesce(col("n"), lit(0L)).as("n"))
-              .collect() // bounded: ≤ |affectedHot| tombstones
-            val rk = counts.filter(_.getLong(2) <= 50)
-              .map(r => (r.getString(0), r.getInt(1)))
-            val rkDf = broadcast(rk.toSeq.map(_._1).toDF("bh"))
-            (rk, m.join(rkDf, Seq("bh"))
-              .withColumn("bkt", pmod(hash(col("bh")), lit(16)))
-              .select(col("doc_id"), col("bh"), col("bkt")))
-          }
-        val resKeysDf = broadcast(resKeysArr.toSeq.map(_._1).toDF("bh"))
-        val touched = (purgedBands.select(col("bkt")).distinct()
-          .collect().map(_.getInt(0)) ++ resKeysArr.map(_._2))
-          .distinct.sorted // bounded: ≤ 16
-        // PHASE 1 — materialize every derived set across ALL touched
-        // buckets at once; nothing under the index changes yet. Stored
-        // rows drop purged docs AND any rows of a resurrecting band
-        // (none in normal operation; after a crash mid-delete the
-        // re-run re-adds the freshly computed surviving set instead of
-        // duplicating it), then the resurrected survivors union in.
-        val existing = touched.filter(b =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands/bkt=$b")))
-        val stored =
-          if (existing.isEmpty)
-            resRows.limit(0).select(col("doc_id"), col("bh"), col("bkt"))
-          else s.read.schema(bandsSchema).option("basePath", s"$idx/bands")
-            .parquet(existing.map(b => s"$idx/bands/bkt=$b"): _*)
-        val merged = stored
-          .join(purge, Seq("doc_id"), "left_anti")
-          .join(resKeysDf, Seq("bh"), "left_anti")
-          .unionByName(resRows.select(col("doc_id"), col("bh"), col("bkt")))
-        val bandsStaging = graft.operators.IndexMerge.stageParts(
-          s, s"$idx/bands", "bkt", merged)
-        val newHot = hotTbl.join(resKeysDf, Seq("bh"), "left_anti")
-        val hotTmp = s"$idx/hot__deleting"
-        newHot.coalesce(1).write.mode("overwrite").parquet(hotTmp)
-        // PHASE 2 — the bands table commits in ONE dynamic-overwrite
-        // job, then hot/ swaps, then the sigs table commits in one
-        // dynamic-overwrite job pruned to the id-buckets holding a
-        // purged signature (the commit point: a crash anywhere earlier
-        // leaves purged ids visible in sigs, so the re-run's presence
-        // probe re-applies and every anti-join converges)
-        graft.operators.IndexMerge.commitStaged(
-          s, s"$idx/bands", "bkt", "doc_id", touched, bandsStaging)
-        graft.operators.Maintenance.swapDirs(s, hotTmp, s"$idx/hot")
-        graft.operators.IndexMerge.delete(s, s"$idx/sigs", "sbkt",
-          "doc_id", purge, readSchema = Some(sigsSchema),
-          // sbkt is a pure hash of the id — exact locating hint (r16)
-          hint = Some(graft.operators.PartOf(sigBktOf)))
-        // replaced partitions keep their paths — drop cached listings
-        s.catalog.refreshByPath(idx)
-        touched.toSeq
-      } finally purgedBands.unpersist()
-    } finally {
-      members.foreach(_.unpersist())
-      purgedSigs.unpersist()
-    }
-  }
+      purge0: DataFrame): Seq[Int] =
+    BandLayout.delete(s, idx, purge0)
 
   /** The purge-propagation demo behind `dd_band_delete`: its OWN index
     * family (deletion mutates the index; the probe/upsert rows' oracles
@@ -1806,10 +1560,10 @@ object DedupQueries {
       // derived only when the marker is absent
       lazy val purge = textPurgeIds(s, dir).select(col("doc_id"))
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
-          dir, "documents.parquet", "graft_band_delete_v2", "_purge_applied")(
+          dir, "documents.parquet", "graft_band_delete_v3", "_purge_applied")(
         tmp => writeBandIndex(s, Tables(s, dir).documents
           .select(col("doc_id"), col("text")), tmp))(
-        idx => s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+        idx => s.read.schema(BandLayout.sigsSchema).parquet(s"$idx/sigs")
           .join(purge, Seq("doc_id"), "left_semi").limit(1).collect()
           .nonEmpty)(
         idx => deleteFromBandIndex(s, idx, purge))
@@ -1823,8 +1577,8 @@ object DedupQueries {
     * recomputes the whole screen over documents MINUS the purge list
     * (the same recursive cluster chain `dd_purge_apply` gates on) — so
     * the row passes only if the purged docs are gone from bands AND
-    * sigs, and any un-capped tombstones resurrected, exactly as a
-    * rebuild would have them.
+    * sigs, and the probe-time cap counts the survivors exactly as a
+    * rebuild would.
     */
   val bandDelete = Query(
     "dd_band_delete",

@@ -2137,19 +2137,17 @@ object Multimodal {
     * band-index rule: every reachable state (including a bucket
     * directory that does not exist yet) must stay readable.
     */
-  private val mediaSigsSchema  = "media_id LONG, dhash LONG, sb INT"
-  private val mediaBandsSchema =
-    "media_id LONG, dhash LONG, bno INT, bval LONG, bkt INT"
-  // single bucket directories read bare (the partition column lives in
-  // the directory name, not the files)
-  private val mediaSigsBare  = "media_id LONG, dhash LONG"
-  private val mediaBandsBare = "media_id LONG, dhash LONG, bno INT, bval LONG"
-  private[graft] final val MediaIndexBuckets = 16
-
-  private def mediaSigBkt(id: Column): Column =
-    pmod(hash(id), lit(MediaIndexBuckets))
-  private def mediaBandBkt: Column =
-    pmod(hash(col("bno"), col("bval")), lit(MediaIndexBuckets))
+  /** The media index's layout — the shared banded near-dup layout
+    * ([[graft.operators.BandedIndex]]): (media_id, dhash) signatures
+    * bucketed by `sb`, (media_id, dhash, bno, bval) band rows bucketed
+    * by `bkt = pmod(hash(bno, bval), 16)`; dhash is denormalized into
+    * the band rows so the Hamming confirm needs no sigs join.
+    */
+  private[graft] val MediaLayout = graft.operators.BandedIndex("media",
+    "media_id", Seq("bno", "bval"),
+    sigsSchema = "media_id LONG, dhash LONG, sb INT",
+    bandsSchema = "media_id LONG, dhash LONG, bno INT, bval LONG, bkt INT",
+    sigBktCol = "sb")
 
   /** Decode-seam hashing: one (media_id, dhash) row per image
     * described by its synthesis params (media_id, g, v, w, h) — the
@@ -2242,48 +2240,18 @@ object Multimodal {
         col("b.bno").cast("int").as("bno"), col("b.bval").as("bval"))
 
   /** Write the persisted image near-dup index for `hashes`
-    * (media_id, dhash): `sigs/` id-bucketed (delete/crash-repair
-    * rewrites prune to the buckets actually holding a purged id) and
-    * `bands/` band-key-bucketed (a probe's band keys resolve to a
-    * static partition filter). UNLIKE the MinHash band index, bands
-    * are stored UNCAPPED — no hot/ tombstone table: the ≤50-members
-    * hot-band cap is evaluated AT PROBE TIME by [[probeMediaIndex]]'s
-    * bounded membership pass, so cap semantics are from-scratch by
-    * construction under ANY maintenance history (the tombstone
-    * machinery the MinHash index needs to keep monotone suppression
-    * consistent across upserts/deletes — including the r12
-    * resurrection pass — is simply not needed here; images carry one
-    * 8-byte hash each, so the 6 uncapped band rows per image are
-    * storage-trivial). Shared by the from-scratch build and the
-    * rebuild oracles in ImageIndexSpec.
+    * (media_id, dhash): `sigs/` id-bucketed, `bands/` band-key-bucketed
+    * and UNCAPPED, plus the `bandmap` id→band-bucket route (band
+    * buckets derive from dhash CONTENT, so an id's band rows are not
+    * locatable from the id). The ≤50-members hot-band cap is evaluated
+    * AT PROBE TIME by [[probeMediaIndex]], so cap semantics are
+    * from-scratch under any maintenance history. Shared by the
+    * from-scratch build and the rebuild oracles in ImageIndexSpec.
     */
   private[graft] def writeMediaIndex(s: SparkSession, hashes: DataFrame,
-      idx: String): Unit = {
-    hashes.select(col("media_id"), col("dhash"))
-      .withColumn("sb", mediaSigBkt(col("media_id")))
-      .write.mode("overwrite").partitionBy("sb").parquet(s"$idx/sigs")
-    bandsOfHashes(hashes)
-      .withColumn("bkt", mediaBandBkt)
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$idx/bands")
-    // the id→band-buckets routing table (r16): band buckets derive
-    // from dhash CONTENT, so an id's band rows are not locatable from
-    // the id — the bandmap bounds every bands-table locate to the
-    // batch's hash buckets, and its add-first protocol covers even a
-    // crashed changed-content re-ingest (the state the sigs-derived
-    // lookup could not)
-    mediaBandRoute(idx).ensure(s, s"$idx/bands",
-      readSchema = Some(mediaBandsSchema))
-  }
-
-  /** The media bands routing table — [[graft.operators.KeyRouting]]
-    * with the band bucket as the location column, one row per
-    * (media_id, bucket) the id has band rows in.
-    */
-  private def mediaBandRoute(idx: String): graft.operators.KeyRouting =
-    graft.operators.KeyRouting(idx, Seq("media_id"), MediaIndexBuckets,
-      Map("media_id" -> (id => pmod(hash(id), lit(MediaIndexBuckets)))),
-      locCol = "bkt", dirName = "bandmap",
-      schemaDdl = Some("media_id LONG, bkt INT"))
+      idx: String): Unit =
+    MediaLayout.write(s, idx, hashes.select(col("media_id"), col("dhash")),
+      bandsOfHashes(hashes))
 
   /** Arrival-fixture headroom guard (r13 advice): the media arrival
     * waves stack at +500000/+600000/+700000/+800000 offsets and key
@@ -2471,8 +2439,9 @@ object Multimodal {
     * filter; a first bounded pass counts stored membership of ONLY the
     * probed band keys (map-side-combining aggregate, ≤ 6×|batch| keys
     * out) so hot bands (> 50 members — boilerplate, flat images) are
-    * excluded BEFORE candidate generation rather than via stored
-    * tombstones; a second pass joins the surviving stored bands
+    * excluded BEFORE candidate generation
+    * ([[graft.operators.BandedIndex.belowCap]], the cap the MinHash
+    * band index shares); a second pass joins the surviving stored bands
     * against the broadcast batch bands and confirms with
     * `bit_count(xor) ≤ 5` (dhash is denormalized into the band rows,
     * so the confirm needs no sigs join). Per-image verdict:
@@ -2494,7 +2463,7 @@ object Multimodal {
     // rides the same job (bkt is a pure function of the band key).
     val bandRows = bandsOfHashes(incomingHashes)
       .select(col("media_id"), col("dhash"), col("bno"), col("bval"),
-        mediaBandBkt.as("bkt"))
+        MediaLayout.bandBkt.as("bkt"))
       .collect()
     // every incoming image yields exactly one bno = 0 row
     val images = bandRows.count(_.getInt(2) == 0)
@@ -2516,8 +2485,7 @@ object Multimodal {
           org.apache.spark.sql.types.LongType, nullable = false))))
     val keysI = bandsI.select(col("bno"), col("bval")).distinct()
     val idsI  = bandsI.select(col("media_id")).distinct()
-    val stored0 = s.read.schema(mediaBandsSchema).parquet(s"$idx/bands")
-      .filter(col("bkt").isin(bkts.map(Integer.valueOf): _*))
+    val stored0 = MediaLayout.storedBands(s, idx, bkts.toSeq)
     // excludeBatchIds: the ingest LOOP's retry contract — a
     // foreachBatch retry after a committed ingest must reproduce the
     // FIRST attempt's verdicts, including the probe-time band-cap
@@ -2528,12 +2496,7 @@ object Multimodal {
     val stored =
       if (!excludeBatchIds) stored0
       else stored0.join(broadcast(idsI), Seq("media_id"), "left_anti")
-    val okKeys = stored
-      .join(broadcast(keysI), Seq("bno", "bval"), "left_semi")
-      .groupBy(col("bno"), col("bval")).agg(count(lit(1)).as("bc"))
-      .filter(col("bc") <= 50).select(col("bno"), col("bval"))
-    val cands = stored
-      .join(broadcast(okKeys), Seq("bno", "bval"), "left_semi").as("e")
+    val cands = MediaLayout.belowCap(stored, keysI).as("e")
       .join(broadcast(bandsI.as("i")),
         col("e.bno") === col("i.bno") && col("e.bval") === col("i.bval"))
       .select(col("i.media_id").as("new_id"),
@@ -2551,103 +2514,25 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Incremental maintenance for the image index — the admission
+  /** Incremental maintenance for the media index — the admission
     * tier's INGEST step, APPEND-ONLY like [[graft.dedup.DedupQueries
-    * .upsertBandIndex]] (a re-submitted image is 'dup' and never
-    * re-ingested; replacements are the purge tier's job): batch ids
-    * already in the signatures fail loudly, duplicate ids within a
-    * batch fail loudly. Only the batch's ≤16 band buckets and ≤16 sig
-    * buckets rewrite — each table in ONE dynamic-partition-overwrite
-    * commit ([[graft.operators.IndexMerge.merge]]), anti-joined on the
-    * batch ids so a crashed run at any point re-applies cleanly; the
-    * bands table commits first, the sigs table LAST — the batch's
-    * commit point (the presence check reads sigs). No cap bookkeeping:
-    * the cap is probe-time
-    * ([[writeMediaIndex]]), so an upsert that pushes a band past 50
-    * members changes nothing in the store — the NEXT probe's
-    * membership pass simply stops emitting that band's candidates,
-    * exactly the from-scratch semantics. Returns the touched band
-    * bucket ids.
+    * .upsertBandIndex]] and through the same shared path
+    * ([[graft.operators.BandedIndex.upsert]]): a batch whose every id
+    * is already indexed fails loudly, a partially present one is
+    * logged and re-applied (the crashed-commit repair), duplicate ids
+    * within a batch fail loudly. Bands commit through the bandmap
+    * route, sigs LAST (the commit point). No cap bookkeeping: the cap
+    * is probe-time ([[writeMediaIndex]]), so an upsert that pushes a
+    * band past 50 members changes nothing in the store but the band's
+    * rows — the NEXT probe's membership pass simply stops emitting
+    * that band's candidates, exactly the from-scratch semantics.
+    * Returns the touched band bucket ids.
     */
   def upsertMediaIndex(s: SparkSession, idx: String,
-      batchHashes: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigsRoot = new org.apache.hadoop.fs.Path(s"$idx/sigs")
-    val fs = sigsRoot.getFileSystem(conf)
-    require(fs.exists(sigsRoot), s"no image index at $idx — build it first")
-    val hashes = batchHashes.select(col("media_id"), col("dhash")).persist()
-    try {
-      graft.operators.Maintenance.requireUniqueKeys(hashes, "media_id",
-        "upsertMediaIndex")
-      val ids = hashes.select(col("media_id"))
-      // The presence check distinguishes a TRUE re-ingest (every batch
-      // id already in sigs → throw: admission is append-only) from a
-      // crashed run's partial sig commit (some-but-not-all ids present
-      // → continue: the anti-joined merges make finishing the job the
-      // repair — an any-id-present throw would brick such a batch
-      // forever, the r13 advice finding). Since r15 each table commits
-      // in ONE dynamic-overwrite job, so the partial state is only
-      // reachable through a crash inside the sigs commit itself; a
-      // NON-crash partial overlap (a user-error mixed batch re-
-      // ingesting changed content under existing ids) is
-      // indistinguishable from it, so proceeding is logged loudly
-      // (the r14 advice). Both counts are bounded by the nightly batch.
-      val nBatch = ids.distinct().count()
-      // the presence read prunes to the batch ids' sig buckets — sb is
-      // a pure hash of the id, so this is exact (r16)
-      val presSbs = ids.select(mediaSigBkt(col("media_id")).as("b"))
-        .distinct().collect().map(_.getInt(0))
-        .filter { b =>
-          val p = new org.apache.hadoop.fs.Path(s"$idx/sigs/sb=$b")
-          p.getFileSystem(conf).exists(p)
-        }.sorted // bounded: ≤ MediaIndexBuckets
-      val nPresent =
-        if (presSbs.isEmpty) 0L
-        else s.read.schema(mediaSigsSchema).option("basePath", s"$idx/sigs")
-          .parquet(presSbs.map(b => s"$idx/sigs/sb=$b"): _*)
-          .join(ids, Seq("media_id"), "left_semi")
-          .select(col("media_id")).distinct().count()
-      if (nPresent > 0 && nPresent == nBatch)
-        throw new IllegalArgumentException(
-          s"upsertMediaIndex: all $nPresent batch ids already " +
-            "indexed — admission is append-only; replacements go through " +
-            "purge + re-ingest")
-      if (nPresent > 0)
-        System.err.println(
-          s"[graft.Multimodal] upsertMediaIndex: $nPresent of $nBatch " +
-            "batch ids already indexed — treating as a crashed-commit " +
-            "repair and re-applying the merge; if this batch was a " +
-            "deliberate partial re-ingest, its stored signatures are " +
-            "being REPLACED (append-only admission bypassed)")
-      val newBands = bandsOfHashes(hashes).withColumn("bkt", mediaBandBkt)
-      // bands first; sigs LAST (the commit point — presence reads
-      // sigs); each table commits in ONE dynamic-partition-overwrite
-      // job through the shared kernel (anti-join on the batch ids
-      // clears crashed-run rows before the union).
-      // The BANDS commit rides the bandmap route protocol (r16): a
-      // band row's bucket derives from dhash CONTENT, not the id, so
-      // the locating pass used to scan the whole bands table — and a
-      // sigs-derived hint could not cover a crashed CHANGED-CONTENT
-      // re-ingest (bands committed under the new dhash, sigs still
-      // old/absent), where a stale band row is a correctness input
-      // (candidates are hash-matched pairs, so an extra stale row can
-      // surface an extra pair). The route's add-first discipline
-      // covers exactly that state: an attempt's band buckets enter
-      // the bandmap before any of its band rows land, so a re-applied
-      // merge — same content or changed — always finds the orphans
-      // (KeyRoutingSpec pins the window). The SIGS merge hints
-      // exactly: sb is a pure hash of the id (r16).
-      val touched = mediaBandRoute(idx).mergeThrough(s, s"$idx/bands",
-        newBands, readSchema = Some(mediaBandsSchema))
-      graft.operators.IndexMerge.merge(s, s"$idx/sigs",
-        "sb", "media_id",
-        hashes.withColumn("sb", mediaSigBkt(col("media_id"))),
-        readSchema = Some(mediaSigsSchema),
-        hint = Some(graft.operators.PartOf(mediaSigBkt)))
-      s.catalog.refreshByPath(idx)
-      touched
-    } finally hashes.unpersist()
-  }
+      batchHashes: DataFrame): Seq[Int] =
+    MediaLayout.upsert(s, idx,
+      batchHashes.select(col("media_id"), col("dhash")),
+      "upsertMediaIndex")(bandsOfHashes)
 
   /** The image screen as a suffix-parameterized DuckDB CTE chain
     * ending in `iverdict_<sfx>(media_id, status, best_hamming)` —
@@ -2781,66 +2666,20 @@ object Multimodal {
         FROM documents WHERE doc_id % 7 = 3
       )"""
 
-  /** Purge propagation into the image index — the DELETE path, so the
+  /** Purge propagation into the media index — the DELETE path, so the
     * admission tier stops matching arrivals against purged media (the
-    * serving-tier invariant the r11 verdict ranked first, upheld for
-    * this index from its first round): purged ids' band keys resolve
-    * from the ID-PRUNED sigs scan (sb = pmod(hash(media_id), 16) is
-    * computable from the purge list alone, so the locating read
-    * touches only the buckets that can hold a purged id), then the
-    * touched band buckets and sig buckets anti-join the purge list
-    * out — plain rewrites, one dynamic-partition-overwrite commit per
-    * table, because the cap is PROBE-TIME: a tombstoned
-    * band "resurrecting" when its membership drops back under the cap
-    * is not an event this index has to handle — the next probe's
-    * membership pass simply sees the smaller count and the band's
-    * candidates reappear, exactly the from-scratch semantics (the
-    * MinHash index needs a dedicated resurrection pass for the same
-    * transition). Swap order: band buckets first, sig buckets LAST —
-    * the commit point, and the callers' idempotence probe ("any
-    * purged id still in sigs?"); a crash anywhere leaves purged ids
-    * in sigs and the re-run finishes the job (the anti-joins are
-    * idempotent). Ids with no sigs row (never indexed) are the
-    * documented no-op. Returns the touched band bucket ids.
+    * serving-tier invariant the r11 verdict ranked first): the shared
+    * banded-index delete ([[graft.operators.BandedIndex.delete]]) —
+    * presence from the id-pruned sigs read, bands out through the
+    * bandmap route, sigs LAST (the commit point, and the callers'
+    * idempotence probe). A hot band whose membership drops back under
+    * the cap needs no maintenance event: the next probe's membership
+    * pass sees the smaller count. Ids with no sigs row (never indexed)
+    * are the documented no-op. Returns the touched band bucket ids.
     */
   def deleteFromMediaIndex(s: SparkSession, idx: String,
-      purge0: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigsRoot = new org.apache.hadoop.fs.Path(s"$idx/sigs")
-    val fs = sigsRoot.getFileSystem(conf)
-    require(fs.exists(sigsRoot), s"no image index at $idx — build it first")
-    val purge = purge0.select(col("media_id")).persist()
-    try {
-      // presence resolves against SIGS — the commit-point table, so a
-      // crashed run (bands purged, sigs not yet) still locates its
-      // remaining work; the ID-PRUNED scan reads only the sig buckets
-      // that can hold a purged id
-      val sbs = purge.select(mediaSigBkt(col("media_id")).as("b")).distinct()
-        .collect().map(_.getInt(0)).sorted // bounded: ≤ MediaIndexBuckets
-      if (sbs.isEmpty) return Nil
-      val anyIndexed = s.read.schema(mediaSigsSchema)
-        .parquet(s"$idx/sigs")
-        .filter(col("sb").isin(sbs.map(Integer.valueOf): _*))
-        .join(purge, Seq("media_id"), "left_semi")
-        .limit(1).collect()
-      if (anyIndexed.isEmpty) return Nil // no purged id is indexed
-      // the bands table first; the sigs table LAST (the commit point);
-      // each table purges in ONE dynamic-partition-overwrite commit
-      // (fully-purged buckets clear; a re-applied list is a no-op).
-      // bands locate through the bandmap route (r16) — a read of the
-      // purge list's hash buckets, never a bands scan, and unlike the
-      // sigs-derived band keys the route also covers rows a crashed
-      // changed-content re-ingest left under a dhash the sigs never
-      // recorded. sigs: sb is a pure hash of the id.
-      val touched = mediaBandRoute(idx).deleteThrough(s, s"$idx/bands",
-        purge, readSchema = Some(mediaBandsSchema))
-      graft.operators.IndexMerge.delete(s, s"$idx/sigs",
-        "sb", "media_id", purge, readSchema = Some(mediaSigsSchema),
-        hint = Some(graft.operators.PartOf(mediaSigBkt)))
-      s.catalog.refreshByPath(idx)
-      touched
-    } finally purge.unpersist()
-  }
+      purge0: DataFrame): Seq[Int] =
+    MediaLayout.delete(s, idx, purge0)
 
   /** A channel's purge list — the SAME keep-one-representative closure
     * its `dd_*_purge_apply` row executes against the blob lake, so
@@ -2865,7 +2704,7 @@ object Multimodal {
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
           dir, "documents.parquet", family, "_purge_applied")(
         writeMediaBase(s, dir, hashes))(
-        idx => s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
+        idx => s.read.schema(MediaLayout.sigsSchema).parquet(s"$idx/sigs")
           .join(purge, Seq("media_id"), "left_semi").limit(1).collect()
           .nonEmpty)(
         idx => deleteFromMediaIndex(s, idx, purge))
@@ -2968,7 +2807,7 @@ object Multimodal {
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
           dir, "documents.parquet", family, "_upsert_applied")(
         writeMediaBase(s, dir, hashes.filter(col("media_id") % 5 =!= 0)))(
-        idx => s.read.schema(mediaSigsSchema).parquet(s"$idx/sigs")
+        idx => s.read.schema(MediaLayout.sigsSchema).parquet(s"$idx/sigs")
           .filter(col("media_id") % 5 === 0).limit(1).collect().isEmpty)(
         idx => upsertMediaIndex(s, idx, hashes.filter(col("media_id") % 5 === 0)))
     }

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *
   * Every persisted index in this repo is a hive-partitioned parquet
   * directory (`root/part=N/`) maintained by key-based MERGE/DELETE:
-  * IVF cells, IVF-PQ code cells, media band/sig buckets, text postings
-  * buckets, key-bucketed lakes. Through round 14 each of them carried
+  * IVF cells, IVF-PQ code cells, the banded near-dup indexes' band and
+  * sig buckets (MinHash and media, [[BandedIndex]]), text postings
+  * buckets, key-bucketed lakes and the [[KeyRouting]] route tables.
+  * Through round 14 each of them carried
   * its own copy of the same per-partition loop — locate touched
   * partitions, then ONE Spark job + ONE crash-safe directory swap PER
   * touched partition, serially. Correct, and cheap while `touched` is
@@ -324,91 +326,6 @@ object IndexMerge {
     touched
   }
 
-  /** The custom-merge escape hatch (band index: hot-band suppression
-    * derives a partition's final rows from a window over stored ∪
-    * batch, so emptiness is not computable from key counts): `merged`
-    * — carrying `partCol` and covering exactly the final content of
-    * the `touched` partitions — is STAGED to a sibling directory in
-    * one job, partitions absent from the staged output are cleared,
-    * and the staged rows commit to `root` in one dynamic-overwrite
-    * job that reads only the staging copy. Two jobs, still one commit
-    * point; a crash anywhere leaves stored rows at most missing the
-    * batch's effect (or recoverable staging litter), which the
-    * caller's idempotent re-apply (plus [[recoverStaging]]) restores.
-    */
-  private[graft] def publishStaged(s: SparkSession, root: String,
-      partCol: String, keyCol: String, touched: Seq[Int],
-      merged: DataFrame): Unit =
-    commitStaged(s, root, partCol, keyCol, touched,
-      stageParts(s, root, partCol, merged))
-
-  /** Stage `merged` to the `root`__staging sibling in one job and
-    * return the staging path — the MATERIALIZATION half of
-    * [[publishStaged]], split out so a caller can durably publish an
-    * ordering-constrained side artifact (the band index's hot
-    * tombstones, which must land before any bands change is durable)
-    * between the staging write and [[commitStaged]]. Nothing under
-    * `root` changes.
-    */
-  private[graft] def stageParts(s: SparkSession, root: String,
-      partCol: String, merged: DataFrame): String = {
-    val fs = fsOf(s, root)
-    val staging = root + "__staging"
-    fs.delete(hPath(staging), true) // crash leftovers
-    merged.repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(staging)
-    staging
-  }
-
-  /** The COMMIT half of [[publishStaged]]: clear the `touched`
-    * partitions absent from the staged output (vacated), then commit
-    * the staged rows to `root` in one dynamic-overwrite job that reads
-    * only the staging copy, drop the staging directory, and rewrite
-    * the `_meta/part_stats` sidecar for the touched partitions (r15
-    * verdict task 5 — without this the band family's sidecar goes
-    * stale after one hot-band suppression pass).
-    */
-  private[graft] def commitStaged(s: SparkSession, root: String,
-      partCol: String, keyCol: String, touched: Seq[Int],
-      staging: String): Unit = {
-    val fs = fsOf(s, root)
-    recoverStaging(fs, root, partCol)
-    val stagedParts = partsOnDisk(fs, staging, partCol).toSet
-    val stagedSchema = footerSchema(s, staging)
-    val schema = stagedSchema.orElse(footerSchema(s, root))
-    // pre-commit sidecar rows: the live sidecar if trusted, else none —
-    // partitions absent from the sidecar are always scanned, so a
-    // staged commit may create a PARTIAL sidecar safely
-    val keyType = schema.flatMap(_.find(_.name == keyCol)).map(_.dataType)
-    val preMeta = keyType.flatMap(readStatsIfLive(s, root, keyCol, _))
-      .orElse(if (stagedParts.nonEmpty) Some(Nil) else None)
-    val all = (touched ++ stagedParts).distinct
-    markPending(fs, root, all)
-    touched.filterNot(stagedParts)
-      .foreach(p => fs.delete(hPath(s"$root/$partCol=$p"), true))
-    stagedSchema.foreach { sch =>
-      // no repartition: the staging job already compacted per partition
-      s.read.schema(sch).parquet(staging)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(root)
-    }
-    fs.delete(hPath(staging), true)
-    (preMeta, schema, keyType) match {
-      case (Some(pre), Some(sch), Some(kt)) =>
-        swapStats(s, root, kt, pre.filterNot(r => all.contains(r.getInt(0))) ++
-          statsRows(readBack(s, root, partCol, keyCol, sch, all), keyCol))
-      case _ =>
-        // nothing staged AND no trusted sidecar to carry forward: drop
-        // any stale sidecar outright (absent = full-scan fallback) —
-        // clearing pending over stale rows would re-trust them
-        fs.delete(hPath(statsPath(root)), true)
-    }
-    clearPending(fs, root)
-    s.catalog.refreshByPath(root)
-  }
-
   /** Rebuild the `_meta/part_stats` sidecar from one full (key, part)
     * scan if it is missing or untrusted (a `pending` marker from a
     * crashed commit) — the explicit repair/bootstrap seam. A no-op
@@ -437,65 +354,12 @@ object IndexMerge {
     * raw write can put keys outside the sidecar's recorded ranges, and
     * a later pruned locating pass would miss them. An absent sidecar
     * is the full-scan fallback — always correct; the next kernel
-    * commit re-bootstraps it from that scan. A writer that CAN name
-    * its touched partitions should call [[refreshStats]] instead and
-    * keep the sidecar live.
+    * commit re-bootstraps it from that scan.
     */
   def invalidateStats(s: SparkSession, root: String): Unit = {
     val fs = fsOf(s, root)
     fs.delete(hPath(statsPath(root)), true)
     fs.delete(hPath(pendingPath(root)), false)
-  }
-
-  /** Mark the sidecar untrusted BEFORE an out-of-kernel write to the
-    * named partitions, recording them in the pending marker — so a
-    * crash between the write's commit and the [[refreshStats]] that
-    * must follow degrades to the full-scan fallback (and the next
-    * refresh/commit repairs exactly the recorded partitions) instead
-    * of serving ranges the write just outgrew. A no-op when no
-    * sidecar exists (nothing can go stale).
-    */
-  def distrustStats(s: SparkSession, root: String,
-      touched: Seq[Int]): Unit = {
-    val fs = fsOf(s, root)
-    if (fs.exists(hPath(s"${statsPath(root)}/_SUCCESS")))
-      markPending(fs, root, touched)
-  }
-
-  /** Recompute the sidecar rows of exactly `touched` after an
-    * out-of-kernel write to those partitions (the band family's
-    * append-only sigs admission names its ≤16 id-buckets) — the
-    * cheap alternative to [[invalidateStats]] that keeps the next
-    * purge's locating pass bounded instead of degrading it to a full
-    * scan. Also repairs any partitions a pending marker recorded (a
-    * crashed earlier commit or out-of-kernel write): the sidecar
-    * invariant is "rows reflect what is on disk", and the read-back
-    * recomputes exactly that for every recorded-or-touched partition,
-    * so the rewrite may re-trust the remaining rows. A marker with NO
-    * recorded set (unknown crash) is left in place — full-scan
-    * fallback until the next kernel commit. No-op without a sidecar.
-    */
-  def refreshStats(s: SparkSession, root: String, partCol: String,
-      keyCol: String, touched: Seq[Int],
-      readSchema: Option[String] = None): Unit = {
-    val fs = fsOf(s, root)
-    recoverStaging(fs, root, partCol)
-    if (!fs.exists(hPath(s"${statsPath(root)}/_SUCCESS"))) return
-    val recorded = pendingParts(fs, root)
-    if (fs.exists(hPath(pendingPath(root))) && recorded.isEmpty) return
-    val schema = dataSchema(s, root, partCol, readSchema,
-      s.read.parquet(root))
-    // a sidecar written under another key (or pre-key_col, or another
-    // key type) cannot be partially refreshed — leave it untrusted for
-    // the next full commit to rewrite under a single key
-    val pre = readStats(s, root, schema(keyCol).dataType)
-      .filter(_.forall(_.getString(4) == keyCol))
-    if (pre.isEmpty) return
-    val all = (touched ++ recorded.getOrElse(Nil)).distinct
-    swapStats(s, root, schema(keyCol).dataType,
-      pre.get.filterNot(r => all.contains(r.getInt(0))) ++
-        statsRows(readBack(s, root, partCol, keyCol, schema, all), keyCol))
-    clearPending(fs, root)
   }
 
   /** Crash-leftover recovery for Spark's dynamic-overwrite commit
@@ -778,9 +642,8 @@ object IndexMerge {
 
   /** Write the pending marker, recording the partitions whose sidecar
     * rows the in-flight write will invalidate: while it exists the
-    * sidecar is untrusted wholesale (full-scan locate), and a
-    * [[refreshStats]] repair can re-trust the rest after recomputing
-    * exactly the recorded set.
+    * sidecar is untrusted wholesale (full-scan locate) until the next
+    * completed commit rewrites it.
     */
   private def markPending(fs: org.apache.hadoop.fs.FileSystem,
       root: String, touched: Seq[Int]): Unit = {
@@ -789,22 +652,6 @@ object IndexMerge {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
   }
-
-  /** The partition set a pending marker recorded — None when there is
-    * no marker OR its content is unreadable/empty (an unknown-crash
-    * marker must never be "repaired" into re-trusting the sidecar).
-    */
-  private def pendingParts(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Seq[Int]] =
-    if (!fs.exists(hPath(pendingPath(root)))) None
-    else scala.util.Try {
-      val in = fs.open(hPath(pendingPath(root)))
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-      txt.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-    }.toOption.filter(_.nonEmpty)
 
   private def clearPending(fs: org.apache.hadoop.fs.FileSystem,
       root: String): Unit =

@@ -270,13 +270,6 @@ class PlanAuditSpec extends SparkSuite {
       "flags" -> "<=|batch| per-new-doc verdict frame",
       "bench" -> ("benchmark-suite n-gram set (eval suites are fixed-" +
         "size and corpus-independent; modeled as the 1/97 slice)"),
-      "keys.select" -> ("affected tombstone keys in deleteFromBandIndex " +
-        "(<= 4 x |purge batch| band keys — the purge batch is the " +
-        "bounded maintenance unit)"),
-      "rk.toSeq" -> ("resurrected tombstone keys (subset of the " +
-        "affected keys above)"),
-      "resKeysArr.toSeq" -> ("resurrected tombstone keys (same bound; " +
-        "driver-collected, <= |affectedHot|)"),
       "incoming.select" -> ("the screened batch's own ids, anti-joined " +
         "so a foreachBatch retry screens index-minus-batch (the " +
         "bounded nightly unit)")),
@@ -291,10 +284,11 @@ class PlanAuditSpec extends SparkSuite {
     "streaming/StreamingQueries.scala" -> Map(
       "dim" -> "customer x nation dimension join (star-schema dim side)",
       "sk" -> "1-row quantile-sketch aggregate"),
+    "operators/BandedIndex.scala" -> Map(
+      "probed" -> ("probed band keys in belowCap (<= bands per item x " +
+        "|batch| — the probe batch is the bounded nightly unit)"),
+      "okKeys" -> "probed un-hot band keys (subset of probed, same bound)"),
     "multimodal/Multimodal.scala" -> Map(
-      "keysI" -> ("probed band keys in probeMediaIndex (<= 6 x |batch| " +
-        "— the arrival batch is the bounded nightly unit)"),
-      "okKeys" -> "probed un-hot band keys (subset of keysI, same bound)",
       "bandsI" -> "arrival-batch band rows (6 per image, same bound)",
       "flags" -> "<=|batch| per-arrival verdict frame",
       "idsI" -> ("the screened batch's own ids (local relation from " +

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Pins upsertBandIndex's maintenance contract against the one oracle
   * that matters: a from-scratch writeBandIndex over the same final
-  * corpus — bands row-set, hot-tombstone key-set, and signature-set
-  * all identical, INCLUDING the over-cap transition (a stored band
-  * pushed past 50 members by the batch must drop its rows and gain a
-  * tombstone). The append-only admission preconditions fail loudly.
+  * corpus — bands row-set, signature-set and probe output all
+  * identical, INCLUDING the over-cap transition (a band pushed past 50
+  * members by the batch stops yielding candidates at probe time). The
+  * append-only admission preconditions fail loudly, and a foreachBatch
+  * retry's screen reproduces the first attempt's verdicts.
   */
 class BandUpsertSpec extends SparkSuite {
 
@@ -29,9 +30,22 @@ class BandUpsertSpec extends SparkSuite {
     spark.read.schema("doc_id LONG, bh STRING, bkt INT").parquet(s"$idx/bands").select(col("doc_id"), col("bh"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-  private def hotOf(idx: String): Set[String] =
-    spark.read.schema("bh STRING, bkt INT").parquet(s"$idx/hot").select(col("bh"))
-      .collect().map(_.getString(0)).toSet
+  private def probeOf(idx: String, batch: DataFrame,
+      excludeBatchIds: Boolean = false): Seq[(Long, String, Double)] =
+    DedupQueries.probeBandIndex(spark, idx, batch, excludeBatchIds)
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+
+  private def clones(ids: Range): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
+      .toDF("doc_id", "text")
+  }
+
+  /** One more clone under a never-indexed id: it shares every band of
+    * the clone fixture, so it is 'dup' exactly when those bands are
+    * under the cap. */
+  private def cloneProbe: DataFrame = clones(1000 until 1001)
 
   private def sigIdsOf(idx: String): Set[Long] =
     spark.read.schema("doc_id LONG, sh ARRAY<LONG>, sbkt INT")
@@ -52,8 +66,9 @@ class BandUpsertSpec extends SparkSuite {
 
     assert(bandsOf(upserted) == bandsOf(rebuilt),
       "upserted bands diverge from the rebuild")
-    assert(hotOf(upserted) == hotOf(rebuilt),
-      "hot tombstones diverge from the rebuild")
+    val incoming = DedupQueries.cdcIncoming(graft.Tables(spark, dir).documents)
+    assert(probeOf(upserted, incoming) == probeOf(rebuilt, incoming),
+      "probe of the upserted index diverges from the rebuild's")
     assert(sigIdsOf(upserted) == sigIdsOf(rebuilt),
       "signatures diverge from the rebuild")
   }
@@ -89,26 +104,25 @@ class BandUpsertSpec extends SparkSuite {
     assert(stale.isEmpty, s"$what: stale sidecar rows $stale vs $full")
   }
 
-  test("the staged commit keeps the bands part-stats sidecar exact (r15 verdict task 5)") {
-    // the named staleness: the band family maintains its bands table
-    // through the STAGED path (hot-band suppression), which before r16
-    // did not touch the sidecar — one suppression pass would leave
-    // stale ranges that mis-prune every later locating pass
+  test("upsert and delete keep the bands and sigs part-stats sidecars exact") {
+    // a stale PRESENT sidecar row would mis-prune every later locating
+    // pass: both tables must stay exact through upserts over
+    // overlapping buckets, a delete, and an upsert after the delete
     val idx = tmpIdx("m")
     DedupQueries.writeBandIndex(spark, docs, idx)
     val b1 = docs.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 900000).as("doc_id"), col("text"))
     DedupQueries.upsertBandIndex(spark, idx, b1)
     assertSidecarFresh(s"$idx/bands", "doc_id LONG, bh STRING, bkt INT",
-      "bkt", "bands after staged upsert")
-    // a second staged pass over overlapping buckets must stay exact
+      "bkt", "bands after upsert")
+    // a second pass over overlapping buckets must stay exact
     val b2 = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 950000).as("doc_id"), col("text"))
     DedupQueries.upsertBandIndex(spark, idx, b2)
     assertSidecarFresh(s"$idx/bands", "doc_id LONG, bh STRING, bkt INT",
-      "bkt", "bands after second staged upsert")
-    // the delete path: bands recommit through the staged path, sigs
-    // through the kernel delete — both sidecars must stay exact
+      "bkt", "bands after second upsert")
+    // the delete path: bands through the route, sigs through the
+    // kernel delete — both sidecars must stay exact
     import spark.implicits._
     val purge = (0L to 200L by 5).toDF("doc_id")
     DedupQueries.deleteFromBandIndex(spark, idx, purge)
@@ -116,82 +130,110 @@ class BandUpsertSpec extends SparkSuite {
       "bkt", "bands after delete")
     assertSidecarFresh(s"$idx/sigs", "doc_id LONG, sh ARRAY<LONG>, sbkt INT",
       "sbkt", "sigs after delete")
-    // the one OUT-OF-KERNEL write (the sigs admission append) must
-    // keep the live sigs sidecar exact via the bucket refresh — a
-    // stale range here would make the next purge's pruned locate miss
-    // the appended signatures
+    // the next admission's sigs merge must keep the live sigs sidecar
+    // exact — a stale range here would make the next purge's pruned
+    // locate miss the admitted signatures
     val b3 = docs.filter(col("doc_id") % 11 === 0)
       .select((col("doc_id") + 970000).as("doc_id"), col("text"))
     DedupQueries.upsertBandIndex(spark, idx, b3)
     assertSidecarFresh(s"$idx/sigs", "doc_id LONG, sh ARRAY<LONG>, sbkt INT",
-      "sbkt", "sigs after the post-delete admission append")
+      "sbkt", "sigs after the post-delete admission")
   }
 
-  test("a band pushed past the cap drops its rows and gains a tombstone") {
-    // synthetic corpus engineered for the transition: 30 near-identical
-    // docs share every band; 25 more arrive in the batch, pushing the
-    // shared bands to 55 > 50 — the rebuild caps them out, and the
-    // upsert must reproduce that exactly
-    import spark.implicits._
-    def clones(ids: Range): DataFrame = ids
-      .map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
-      .toDF("doc_id", "text")
+  test("a band pushed past the cap stops yielding candidates, as in the rebuild") {
+    // 30 near-identical docs share every band; 25 more arrive in the
+    // batch, pushing the shared bands to 55 > 50 — the rebuild's probe
+    // caps them out, and the upserted index's probe must agree
     val idx = tmpIdx("h")
     DedupQueries.writeBandIndex(spark, clones(0 until 30), idx)
-    assert(hotOf(idx).isEmpty && bandsOf(idx).nonEmpty)
+    assert(probeOf(idx, cloneProbe).head._2 == "dup",
+      "fixture: the under-cap shared bands yield no candidate")
     DedupQueries.upsertBandIndex(spark, idx, clones(30 until 55))
-    assert(bandsOf(idx).isEmpty,
-      "rows of an over-cap band survived the upsert")
-    assert(hotOf(idx).nonEmpty, "no tombstone for the over-cap band")
     val rebuilt = tmpIdx("h2")
     DedupQueries.writeBandIndex(spark, clones(0 until 55), rebuilt)
-    assert(hotOf(idx) == hotOf(rebuilt) && bandsOf(idx) == bandsOf(rebuilt))
-    // and hot stays hot: another batch of clones must not resurrect it
+    assert(bandsOf(idx) == bandsOf(rebuilt))
+    assert(probeOf(idx, cloneProbe) == probeOf(rebuilt, cloneProbe),
+      "probe of the upserted index diverges from the rebuild's")
+    assert(probeOf(idx, cloneProbe) == Seq((1000L, "new", 0.0)),
+      "an over-cap band still yields candidates")
+    // and hot stays hot: another batch of clones keeps it capped
     DedupQueries.upsertBandIndex(spark, idx, clones(55 until 60))
-    assert(bandsOf(idx).isEmpty && hotOf(idx) == hotOf(rebuilt))
+    val rebuilt60 = tmpIdx("h3")
+    DedupQueries.writeBandIndex(spark, clones(0 until 60), rebuilt60)
+    assert(probeOf(idx, cloneProbe) == probeOf(rebuilt60, cloneProbe) &&
+      probeOf(idx, cloneProbe) == Seq((1000L, "new", 0.0)),
+      "a second clone batch un-capped the band")
+  }
+
+  test("a retried screen reproduces the first attempt's verdicts across the cap") {
+    // the foreachBatch retry contract of probeBandIndex(excludeBatchIds):
+    // 45 clones in the index, 10 more arrive — the first attempt
+    // screens them against 45 members (under the cap), and a retry
+    // after the committed upsert (55 stored) must screen them against
+    // the same 45, not against a band the upsert pushed over the cap
+    val idx = tmpIdx("retry")
+    DedupQueries.writeBandIndex(spark, clones(0 until 45), idx)
+    val batch = clones(100 until 110)
+    val first = probeOf(idx, batch, excludeBatchIds = true)
+    assert(first.nonEmpty && first.forall(_._2 == "dup"),
+      s"fixture: the first attempt did not screen dup: $first")
+    DedupQueries.upsertBandIndex(spark, idx, batch)
+    assert(probeOf(idx, batch, excludeBatchIds = true) == first,
+      "the retried screen's verdicts differ from the first attempt's")
   }
 
   test("a batch whose docs all tokenize to zero shingles is a no-op") {
     import spark.implicits._
     val idx = tmpIdx("z")
     DedupQueries.writeBandIndex(spark, docs, idx)
-    val (b0, h0, s0) = (bandsOf(idx), hotOf(idx), sigIdsOf(idx))
+    val (b0, s0) = (bandsOf(idx), sigIdsOf(idx))
     // shingling needs ≥ 3 tokens; these produce no signature at all
     val shingleless = Seq((910000L, "too short"), (910001L, "x"))
       .toDF("doc_id", "text")
     val touched = DedupQueries.upsertBandIndex(spark, idx, shingleless)
     assert(touched.isEmpty, "zero-shingle batch touched buckets")
-    assert(bandsOf(idx) == b0 && hotOf(idx) == h0 && sigIdsOf(idx) == s0,
+    assert(bandsOf(idx) == b0 && sigIdsOf(idx) == s0,
       "zero-shingle batch mutated the index")
   }
 
-  test("crash between hot swap and bands swap repairs on re-run") {
-    // reproduce the exact r11-advice crash window: the upsert published
-    // the new tombstones to hot/ but crashed before swapping the bands
-    // buckets and before the sigs commit point. The re-run (sigs says
-    // the batch never applied) must converge to the rebuild — the
-    // repair anti-join drops the now-hot band's surviving stored rows.
-    import spark.implicits._
-    def clones(ids: Range): DataFrame = ids
-      .map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
-      .toDF("doc_id", "text")
+  test("crash after the bands and route commit, before the sigs commit, converges to the rebuild") {
+    // the upsert's one crash window: bands and the bandmap route are
+    // committed, the sigs commit point is not. Plant it by restoring
+    // the pre-upsert sigs over a completed upsert; the re-run (sigs say
+    // the batch never applied) must converge to the rebuild — the route
+    // lists the batch's band buckets, so the bands merge replaces the
+    // already-committed rows instead of duplicating them
+    val fresh = docs.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 900000).as("doc_id"), col("text"))
+      .unionByName(clones(800000 until 800055))
     val idx = tmpIdx("c")
-    DedupQueries.writeBandIndex(spark, clones(0 until 30), idx)
-    val rebuilt = tmpIdx("c2")
-    DedupQueries.writeBandIndex(spark, clones(0 until 55), rebuilt)
-    // plant the post-crash state: hot/ = the new tombstones (the batch
-    // pushes every shared band past the cap), bands + sigs untouched
-    val plantedHot = spark.read
-      .schema("bh STRING, bkt INT").parquet(s"$rebuilt/hot")
-    val hotTmp = s"$idx/hot__crashplant"
-    plantedHot.coalesce(1).write.mode("overwrite").parquet(hotTmp)
-    graft.operators.Maintenance.swapDirs(spark, hotTmp, s"$idx/hot")
+    DedupQueries.writeBandIndex(spark, docs, idx)
+    val sigsSnapshot = tmpIdx("c_sigs")
+    spark.read.schema("doc_id LONG, sh ARRAY<LONG>, sbkt INT")
+      .parquet(s"$idx/sigs")
+      .write.mode("overwrite").partitionBy("sbkt").parquet(sigsSnapshot)
+    DedupQueries.upsertBandIndex(spark, idx, fresh)
+    val planted = s"$idx/sigs__crashplant"
+    spark.read.parquet(sigsSnapshot)
+      .write.mode("overwrite").partitionBy("sbkt").parquet(planted)
+    graft.operators.Maintenance.swapDirs(spark, planted, s"$idx/sigs")
     spark.catalog.refreshByPath(idx)
-    assert(bandsOf(idx).nonEmpty && hotOf(idx) == hotOf(rebuilt))
-    DedupQueries.upsertBandIndex(spark, idx, clones(30 until 55))
-    assert(bandsOf(idx) == bandsOf(rebuilt),
-      "post-crash re-run left stored rows of a tombstoned band")
-    assert(hotOf(idx) == hotOf(rebuilt) && sigIdsOf(idx) == sigIdsOf(rebuilt))
+    assert((sigIdsOf(idx) & fresh.select(col("doc_id")).collect()
+      .map(_.getLong(0)).toSet).isEmpty, "fixture: sigs still carry the batch")
+    DedupQueries.upsertBandIndex(spark, idx, fresh)
+    val rebuilt = tmpIdx("c2")
+    DedupQueries.writeBandIndex(spark, docs.unionByName(fresh), rebuilt)
+    def bandRows(i: String): Long =
+      spark.read.schema("doc_id LONG, bh STRING, bkt INT")
+        .parquet(s"$i/bands").count()
+    assert(bandsOf(idx) == bandsOf(rebuilt) &&
+      bandRows(idx) == bandRows(rebuilt),
+      "post-crash re-run left duplicate or stale band rows")
+    assert(sigIdsOf(idx) == sigIdsOf(rebuilt))
+    val incoming = DedupQueries.cdcIncoming(graft.Tables(spark, dir).documents)
+      .unionByName(cloneProbe)
+    assert(probeOf(idx, incoming) == probeOf(rebuilt, incoming),
+      "probe after the re-run diverges from the rebuild's")
   }
 
   test("append-only admission: existing or duplicate ids fail loudly") {

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** Pins the purge-propagation contract for the text (inverted) and
   * band (MinHash) persisted indexes: deleting the purge list from a
   * live index must equal a from-scratch rebuild over the surviving
-  * corpus — including the band index's hot-tombstone RESURRECTION (a
-  * capped band whose surviving member count drops back under the cap
-  * regains its rows) — and a purged doc_id must be unreachable through
+  * corpus — including the band index's probe-time cap (a capped band
+  * whose surviving member count drops back under the cap yields
+  * candidates again) — and a purged doc_id must be unreachable through
   * every index structure afterwards. Crash states converge: each
   * delete re-applied from its documented mid-crash point reaches the
   * same final index. (The IVF twin lives in
@@ -36,20 +36,34 @@ class PurgePropagationSpec extends SparkSuite {
       .parquet(s"$idx/bands").select(col("doc_id"), col("bh"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-  private def hotOf(idx: String): Set[String] =
-    spark.read.schema("bh STRING, bkt INT").parquet(s"$idx/hot")
-      .select(col("bh")).collect().map(_.getString(0)).toSet
+  private def probeOf(idx: String, batch: DataFrame): Seq[(Long, String, Double)] =
+    DedupQueries.probeBandIndex(spark, idx, batch).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+
+  private def clones(ids: Range): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
+      .toDF("doc_id", "text")
+  }
+
+  /** A never-indexed clone: 'dup' exactly when the clone fixture's
+    * shared bands are under the cap. */
+  private def cloneProbe: DataFrame = clones(1000 until 1001)
+
+  private def nightly: DataFrame =
+    DedupQueries.cdcIncoming(graft.Tables(spark, dir).documents)
 
   private def sigIdsOf(idx: String): Set[Long] =
     spark.read.schema("doc_id LONG, sh ARRAY<LONG>, sbkt INT")
       .parquet(s"$idx/sigs")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
 
-  private def assertBandEquals(idx: String, rebuilt: String): Unit = {
+  private def assertBandEquals(idx: String, rebuilt: String,
+      probe: => DataFrame = nightly): Unit = {
     assert(bandsOf(idx) == bandsOf(rebuilt),
       "post-delete bands diverge from the rebuild")
-    assert(hotOf(idx) == hotOf(rebuilt),
-      "post-delete tombstones diverge from the rebuild")
+    assert(probeOf(idx, probe) == probeOf(rebuilt, probe),
+      "post-delete probe diverges from the rebuild's")
     assert(sigIdsOf(idx) == sigIdsOf(rebuilt),
       "post-delete signatures diverge from the rebuild")
   }
@@ -133,46 +147,47 @@ class PurgePropagationSpec extends SparkSuite {
       "re-applying a completed delete is not a no-op")
   }
 
-  test("a tombstoned band resurrects when the purge un-caps it") {
-    // 55 near-identical docs cap every shared band out at build time;
-    // purging 10 leaves 45 ≤ 50 survivors, so a rebuild carries the
-    // band WITH its rows — the delete must resurrect them from sigs
-    import spark.implicits._
-    def clones(ids: Range): DataFrame = ids
-      .map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
-      .toDF("doc_id", "text")
+  test("a capped band yields candidates again once the purge un-caps it") {
+    // 55 near-identical docs share every band — capped at probe time;
+    // purging 10 leaves 45 ≤ 50 survivors, so the rebuild's probe
+    // finds candidates through the band again, and so must the
+    // maintained index's
     val idx = tmpIdx("hot")
     DedupQueries.writeBandIndex(spark, clones(0 until 55), idx)
-    assert(bandsOf(idx).isEmpty && hotOf(idx).nonEmpty,
+    assert(probeOf(idx, cloneProbe) == Seq((1000L, "new", 0.0)),
       "fixture did not cap the shared bands out")
     DedupQueries.deleteFromBandIndex(spark, idx, clones(45 until 55)
       .select(col("doc_id")))
     val rebuilt = tmpIdx("hot_r")
     DedupQueries.writeBandIndex(spark, clones(0 until 45), rebuilt)
-    assert(bandsOf(rebuilt).nonEmpty && hotOf(rebuilt).isEmpty)
-    assertBandEquals(idx, rebuilt)
+    assertBandEquals(idx, rebuilt, cloneProbe)
+    assert(probeOf(idx, cloneProbe) == Seq((1000L, "dup", 1.0)),
+      "the un-capped band yields no candidate")
   }
 
-  test("a tombstone all of whose members are purged also resurrects away") {
-    import spark.implicits._
-    def clones(ids: Range): DataFrame = ids
-      .map(i => (i.toLong, "the same boilerplate sentence repeated verbatim"))
-      .toDF("doc_id", "text")
+  test("purging every member of a capped band leaves no trace of the cap") {
+    // all 55 members purged: the rebuild over the empty corpus has
+    // nothing to cap, so clones ingested afterwards must find each
+    // other through the band — as they do in the rebuild
     val idx = tmpIdx("zero")
     DedupQueries.writeBandIndex(spark, clones(0 until 55), idx)
-    assert(hotOf(idx).nonEmpty)
+    assert(probeOf(idx, cloneProbe) == Seq((1000L, "new", 0.0)),
+      "fixture did not cap the shared bands out")
     DedupQueries.deleteFromBandIndex(spark, idx, clones(0 until 55)
       .select(col("doc_id")))
     assert(bandsOf(idx).isEmpty, "rows for an emptied band survived")
-    assert(hotOf(idx).isEmpty,
-      "a zero-member tombstone survived the purge (a rebuild over the " +
-        "empty corpus has no tombstones)")
     assert(sigIdsOf(idx).isEmpty)
+    DedupQueries.upsertBandIndex(spark, idx, clones(2000 until 2005))
+    val rebuilt = tmpIdx("zero_r")
+    DedupQueries.writeBandIndex(spark, clones(2000 until 2005), rebuilt)
+    assertBandEquals(idx, rebuilt, cloneProbe)
+    assert(probeOf(idx, cloneProbe) == Seq((1000L, "dup", 1.0)),
+      "the emptied band stayed capped")
   }
 
   test("band-index delete converges from the pre-sigs-swap crash state") {
-    // documented crash window: buckets and hot/ swapped, crash before
-    // the sigs swap (the commit point) — plant it by restoring the
+    // documented crash window: bands and route committed, crash before
+    // the sigs commit (the commit point) — plant it by restoring the
     // pre-delete sigs over a completed delete, then re-run
     val idx = tmpIdx("bdc")
     DedupQueries.writeBandIndex(spark, docs, idx)
@@ -320,7 +335,7 @@ class PurgePropagationSpec extends SparkSuite {
     row.run(spark, dir).collect() // ensures the demo index is built+deleted
     val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(40)
     val fam = new java.io.File(System.getProperty("java.io.tmpdir"))
-      .listFiles().filter(f => f.getName.startsWith("graft_band_delete_v2")
+      .listFiles().filter(f => f.getName.startsWith("graft_band_delete_v3")
         && f.getName.contains(slug) && !f.getName.contains(".build_"))
     assert(fam.nonEmpty, "demo index not published")
     fam.foreach { f =>

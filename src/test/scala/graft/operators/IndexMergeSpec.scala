@@ -183,37 +183,6 @@ class IndexMergeSpec extends SparkSuite {
     assert(metaOf(root)(3) === ((6L, 7L, 2L)))
   }
 
-  test("out-of-kernel writes: distrust-then-refresh repairs the recorded partitions; unknown markers stay untrusted") {
-    val root = freshIdx(base)
-    val keys = Seq(1L).toDF("id")
-    IndexMerge.merge(spark, root, "part", "id",
-      Seq((6L, 3, "f")).toDF("id", "part", "payload"))
-    assert(IndexMerge.candidateParts(spark, root, "part", "id", keys)
-      === Some(Seq(0)))
-    // an out-of-kernel append protocol: distrust FIRST (recording the
-    // partitions), write, refresh — a crash after the write leaves the
-    // marker, so the stale range can never mis-prune
-    IndexMerge.distrustStats(spark, root, Seq(0))
-    Seq((99L, 0, "q")).toDF("id", "part", "payload")
-      .write.option("basePath", root).mode("append")
-      .parquet(s"$root/part=0")
-    assert(IndexMerge.candidateParts(spark, root, "part", "id", keys)
-      .isEmpty, "distrusted sidecar still pruned")
-    // refresh with NO explicit touched set: the marker's recorded
-    // partitions repair from read-back and the rest re-trusts
-    IndexMerge.refreshStats(spark, root, "part", "id", Nil)
-    assert(IndexMerge.candidateParts(spark, root, "part", "id", keys)
-      === Some(Seq(0)))
-    assert(metaOf(root)(0) === ((1L, 99L, 3L)),
-      "the refreshed row does not cover the appended key")
-    // a marker with no recorded set (unknown crash) must NOT be
-    // repaired into re-trusting the sidecar
-    fs(root).create(hp(s"$root/_meta/pending"), true).close()
-    IndexMerge.refreshStats(spark, root, "part", "id", Seq(0))
-    assert(IndexMerge.candidateParts(spark, root, "part", "id", keys)
-      .isEmpty, "an unknown-crash marker was cleared by refreshStats")
-  }
-
   test("a partition on disk but absent from the sidecar is always a locating candidate") {
     val root = freshIdx(base)
     IndexMerge.merge(spark, root, "part", "id",
@@ -297,7 +266,7 @@ class IndexMergeSpec extends SparkSuite {
       .head().getString(0) == "C")
   }
 
-  test("delete and publishStaged keep the sidecar consistent") {
+  test("delete keeps the sidecar consistent") {
     val root = freshIdx(base)
     IndexMerge.merge(spark, root, "part", "id",
       Seq((6L, 3, "f")).toDF("id", "part", "payload"))
@@ -306,15 +275,6 @@ class IndexMergeSpec extends SparkSuite {
       0 -> (1L, 1L, 1L), 1 -> (3L, 4L, 2L), 3 -> (6L, 6L, 1L)),
       "delete left stale sidecar rows (fully-purged part 2 or the " +
         "purged row of part 0)")
-    // the staged path (band family's hot-band suppression) maintains
-    // the same sidecar — the r15 verdict's task 5
-    val merged = Seq((1L, 0, "a"), (9L, 0, "x")).toDF("id", "part", "payload")
-    IndexMerge.publishStaged(spark, root, "part", "id", Seq(0, 3), merged)
-    assert(metaOf(root) === Map(
-      0 -> (1L, 9L, 2L), 1 -> (3L, 4L, 2L)),
-      "publishStaged did not rewrite the touched partitions' stats " +
-        "(vacated part 3 must drop; part 0's range must cover the " +
-        "staged key 9)")
   }
 
   test("leftover dynamic-overwrite staging recovers: a deleted-but-not-renamed partition's rows are restored") {
@@ -345,23 +305,6 @@ class IndexMergeSpec extends SparkSuite {
     IndexMerge.delete(spark, root, "part", "id", Seq(6L).toDF("id"))
     assert(!f.exists(hp(s"$root/.spark-staging-deadjob2")))
     assert(rowsOf(root).contains((1L, 0, "a")))
-  }
-
-  test("publishStaged commits exactly the staged partitions and clears vacated ones") {
-    val root = freshIdx(base)
-    // caller-computed final content for touched = {0, 2}: part 0 keeps
-    // one row plus a new one, part 2 ends empty (vacated)
-    val merged = Seq((1L, 0, "a"), (9L, 0, "x")).toDF("id", "part", "payload")
-    val before = fileState(root)
-    IndexMerge.publishStaged(spark, root, "part", "id", Seq(0, 2), merged)
-    assert(fileState(root)(1) === before(1))
-    assert(!fileState(root).contains(2), "vacated part=2 survived")
-    assert(rowsOf(root) === Set(
-      (1L, 0, "a"), (9L, 0, "x"), (3L, 1, "c"), (4L, 1, "d")))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root + "__staging")),
-      "staging directory survived the publish")
   }
 
   test("a PartOf hint locates exactly the hashed partitions, sidecar or no sidecar") {

@@ -1,10 +1,8 @@
 package graft.similarity
 
 import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 
 /** Pins the IVF write path's job budget: one `upsertIvfIndex` (route
   * read, route add, data merge, route settle) and one
@@ -21,30 +19,8 @@ class IvfWriteBudgetSpec extends SparkSuite {
   private val UpsertBudget = 30
   private val DeleteBudget = 20
 
-  /** `body`'s result and the number of Spark jobs it launched, counted
-    * under a private job group once the listener bus has drained.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"ivf-write-budget-${System.nanoTime}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "IvfWriteBudgetSpec")
-    try {
-      val out = body
-      Bridge.drainListenerBus(sc)
-      (out, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[T](body: => T): (T, Int) =
+    graft.JobCount.jobsOf(spark, "ivf-write-budget")(body)
 
   private def local(df: DataFrame): DataFrame =
     spark.createDataFrame(df.collectAsList(), df.schema)
