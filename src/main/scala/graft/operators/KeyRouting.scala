@@ -49,13 +49,24 @@ import scala.jdk.CollectionConverters._
   *    attempt whose batch CONTENT differed (re-encoded embeddings
   *    landing in different cells) stays covered — its addLocations
   *    recorded the attempt's cells before any data row landed there.
-  *    When no batch key has an existing pair ([[allNew]] — the
-  *    pure-insert ingest fast path), add+settle collapse into one
-  *    replace-merge before the data commit.
+  *    When no batch key has an existing pair (the pure-insert
+  *    ingest fast path), add+settle collapse into one replace-merge
+  *    before the data commit.
   *  - DELETE ([[deleteThrough]]): the data delete under
   *    `StoredAt(lookup)` first, then [[dropLocations]]. A crash
   *    between leaves the purged keys' route rows over-reporting until
   *    the re-applied delete drops them.
+  *
+  * Every route-backed family commits through these two methods; none
+  * hand-rolls the steps:
+  *  - IVF and IVF-PQ: `cells/` by nearest centroid, route `route/`
+  *    keyed by `vec_id`;
+  *  - MaxSim: `cells/` of token vectors, route `route/` keyed by
+  *    `vec_id` and `did`, bucketed by the document id;
+  *  - the banded near-dup indexes (MinHash band, image, audio, video;
+  *    [[BandedIndex]]): `bands/` by band-key hash, route `bandmap/`;
+  *  - text: `postings/` by term hash, route `docmap/`, which carries
+  *    each doc's length (`dl`) for the BM25 stats refresh.
   *
   * Bootstrapping ([[ensure]]): a pre-route index (an earlier
   * generation's published fingerprint) pays ONE column-pruned (key…,
@@ -193,12 +204,6 @@ final case class KeyRouting(root: String, keyCols: Seq[String],
     */
   def lookup(s: SparkSession, keys: DataFrame): DataFrame =
     lookupRows(s, keys).df(s)
-
-  /** True when none of `keys` has a route row — the pure-insert fast
-    * path probe (bounded: reads only the keys' buckets).
-    */
-  def allNew(s: SparkSession, keys: DataFrame): Boolean =
-    lookupRows(s, keys).rows.isEmpty
 
   private def lookupRows(s: SparkSession, keys: DataFrame): Rows =
     storedRows(s, routeSchema(s), keys.columns.head, keyed(keys))

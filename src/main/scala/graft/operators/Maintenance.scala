@@ -178,8 +178,11 @@ object Maintenance {
     * original moves aside to a backup, the new directory renames into
     * place, then the backup is dropped. A crash at any point leaves
     * either the original (as `dir` or recoverable at `dir__backup`) or
-    * the completed swap — never neither. The FS is resolved from the
-    * path itself, not the default FS, so scheme-qualified dirs work.
+    * the completed swap — never neither. An absent `dir` (a first
+    * write, or a crash between the two renames) takes `tmp` directly,
+    * and any stale backup goes once the new content is in place. The
+    * FS is resolved from the path itself, not the default FS, so
+    * scheme-qualified dirs work.
     */
   private[graft] def swapDirs(spark: SparkSession, tmp: String,
       dir: String): Unit = {
@@ -188,16 +191,19 @@ object Maintenance {
     val dst    = new org.apache.hadoop.fs.Path(dir)
     val backup = new org.apache.hadoop.fs.Path(dir + "__backup")
     val fs     = dst.getFileSystem(conf)
-    if (fs.exists(backup)) fs.delete(backup, true) // stale from a crash
-    if (!fs.rename(dst, backup))
-      throw new java.io.IOException(s"rename $dst -> $backup failed")
+    val present = fs.exists(dst)
+    if (present) {
+      if (fs.exists(backup)) fs.delete(backup, true) // stale from a crash
+      if (!fs.rename(dst, backup))
+        throw new java.io.IOException(s"rename $dst -> $backup failed")
+    }
     // Hadoop FileSystems variously return false OR throw for a bad
     // source — treat both as "swap-in failed" so the rollback runs
     val swappedIn =
       try fs.rename(src, dst)
       catch { case _: java.io.IOException => false }
     if (!swappedIn) {
-      fs.rename(backup, dst) // roll back; original untouched
+      if (present) fs.rename(backup, dst) // roll back; original untouched
       throw new java.io.IOException(s"rename $src -> $dst failed")
     }
     fs.delete(backup, true)

@@ -1799,8 +1799,9 @@ object TextQueries {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(conf).exists(hp)
     }
-    // no dstats yet (first touch of a pre-docmap generation): refresh
-    // EVERY bucket, so the sum is never partial
+    // no dstats (the build's first refresh, or a crash between the
+    // dstats swap's two renames): refresh EVERY bucket, so the sum is
+    // never partial
     val rbs =
       if (exists(s"$idx/dstats/_SUCCESS")) rbs0.distinct
       else (0 until TextIndexBuckets).toSeq
@@ -1824,29 +1825,17 @@ object TextQueries {
     val dsTmp = s"$idx/dstats__refreshing"
     kept.unionByName(fresh)
       .coalesce(1).write.mode("overwrite").parquet(dsTmp)
-    swapInto(s, dsTmp, s"$idx/dstats")
+    graft.operators.Maintenance.swapDirs(s, dsTmp, s"$idx/dstats")
     val tot = graft.Tables.readPq(s, s"$idx/dstats")
       .agg(coalesce(sum(col("n_docs")), lit(0L)).cast("long").as("n"),
         coalesce(sum(col("sum_dl")), lit(0L)).cast("long").as("sdl"))
       .head() // 1-row bounded collect
     val (nDocs, sumDl) = (tot.getLong(0), tot.getLong(1))
-    import s.implicits._
     val stTmp = s"$idx/stats__refreshing"
     Seq((nDocs, if (nDocs == 0) 0.0 else sumDl.toDouble / nDocs, sumDl))
       .toDF("n_docs", "avgdl", "sum_dl")
       .coalesce(1).write.mode("overwrite").parquet(stTmp)
-    swapInto(s, stTmp, s"$idx/stats")
-  }
-
-  /** [[graft.operators.Maintenance.swapDirs]] when `live` exists, a
-    * plain rename when it does not (the first refresh of a table the
-    * build no longer pre-writes).
-    */
-  private def swapInto(s: SparkSession, tmp: String, live: String): Unit = {
-    val lp = new org.apache.hadoop.fs.Path(live)
-    val fs = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(lp)) graft.operators.Maintenance.swapDirs(s, tmp, live)
-    else fs.rename(new org.apache.hadoop.fs.Path(tmp), lp)
+    graft.operators.Maintenance.swapDirs(s, stTmp, s"$idx/stats")
   }
 
   /** (doc_id, t) tokenized docs → the postings payload (term, doc_id,
@@ -1971,86 +1960,49 @@ object TextQueries {
     * re-ingests documents daily, and rebuilding the postings from
     * scratch per batch is O(corpus); this is O(batch + touched
     * buckets). MERGE semantics: a batch doc's postings REPLACE its
-    * existing ones (anti join on doc_id + union), new docs append;
-    * duplicate doc_ids in one batch fail loudly; docs that tokenize
-    * empty are not indexed (the build's own rule — deletions are the
-    * purge tier's job, not the indexer's). Only the TOUCHED term
-    * buckets — the batch's own postings' buckets plus every bucket
-    * currently holding a replaced doc's postings (a changed doc's
-    * removed terms must not survive in their old buckets) — are
-    * merged, COMPACTED to a size-derived file count, and crash-safely
-    * swapped via [[graft.operators.Maintenance.swapDirs]]; untouched
-    * bucket directories keep their files byte-identical. Stats refresh
-    * is exact integer arithmetic (n_docs ± new, sum_dl − replaced +
-    * batch; avgdl = one final division), never a float reconstruction,
-    * so a probe after any upsert chain equals a from-scratch rebuild
-    * bit-for-bit (TextIndexUpsertSpec pins it). Locating replaced
-    * docs' buckets reads only the (doc_id, dl, bkt) columns — parquet
-    * column pruning makes that a few percent of index bytes. Returns
-    * the touched bucket ids (sorted).
+    * existing ones, new docs append; duplicate doc_ids in one batch
+    * fail loudly; docs that tokenize empty are not indexed (the build's
+    * own rule — deletions are the purge tier's job, not the indexer's).
+    *
+    * The postings commit through the docmap's route protocol
+    * ([[graft.operators.KeyRouting.mergeThrough]]: route add → one
+    * dynamic-overwrite commit over exactly the touched term buckets,
+    * the batch's own plus every bucket holding a replaced doc's
+    * postings → route settle), so untouched bucket directories keep
+    * their files byte-identical. The stats then RECOMPUTE from the
+    * batch docs' docmap buckets ([[refreshDocStats]]; never delta
+    * arithmetic, which a crash between the commit and the stats swap
+    * would lose), and the [[statsPending]] marker brackets the whole
+    * pass, so a crash anywhere inside it re-applies. A probe after any
+    * upsert chain equals a from-scratch rebuild bit-for-bit
+    * (TextIndexUpsertSpec pins it). Returns the touched bucket ids
+    * (sorted).
     */
   def upsertTextIndex(s: SparkSession, idx: String,
       batch: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val postingsRoot = new org.apache.hadoop.fs.Path(s"$idx/postings")
-    val fs = postingsRoot.getFileSystem(conf)
-    require(fs.exists(postingsRoot), s"no text index at $idx — build it first")
+    requireTextIndex(s, idx)
+    // read by the key check, the postings merge and the stats buckets
     val d = batch.select(col("doc_id"), toks(col("text")).as("t"))
-      .filter(size(col("t")) > 0)
-    graft.operators.Maintenance.requireUniqueKeys(d, "doc_id",
-      "upsertTextIndex")
-    val ids = d.select(col("doc_id"))
-    val route = docRoute(idx)
-    route.ensure(s, s"$idx/postings")
-    val newPosts = postingsOf(d).persist()
+      .filter(size(col("t")) > 0).persist()
     try {
-      val newBkts = newPosts.select(col("bkt")).distinct()
-        .collect().map(_.getInt(0)).toSet // bounded: ≤ TextIndexBuckets
-      // route protocol, step 1 (the KeyRouting discipline): the
-      // batch's (doc, dl, bucket) pairs enter the docmap BEFORE any
-      // postings commit, so the docmap only ever over-reports
-      val newPairs = newPosts
-        .select(col("doc_id"), col("dl"), col("bkt")).distinct()
-      // pending marker up BEFORE the first mutation — cleared only
-      // after the stats refresh, so a crash anywhere inside the pass
-      // is observable to applied-once probes ([[statsPending]])
+      graft.operators.Maintenance.requireUniqueKeys(d, "doc_id",
+        "upsertTextIndex")
       setStatsPending(s, idx, on = true)
-      val fastPath = route.allNew(s, ids)
-      if (fastPath) route.settleLocations(s, newPairs)
-      else route.addLocations(s, newPairs)
-      // pre-merge truth, route-pruned: the docmap lists the candidate
-      // buckets, the DATA read is the truth (an over-reporting docmap
-      // just reads an extra bucket) — replaces the full postings scan
-      val oldInfo = route.dataOf(s, s"$idx/postings", ids)
-        .select(col("doc_id"), col("dl"), col("bkt"))
-      val oldBkts = oldInfo.select(col("bkt")).distinct()
-        .collect().map(_.getInt(0)).toSet // bounded: ≤ TextIndexBuckets
-      // ONE dynamic-partition-overwrite commit over exactly the touched
-      // buckets (per-bucket compaction included — the kernel routes
-      // each bucket to one task), located through the docmap instead
-      // of a stats scan; the locating result must agree with newBkts ∪
-      // oldBkts (computed from the same pruned reads)
-      val touched = graft.operators.IndexMerge.merge(s, s"$idx/postings",
-        "bkt", "doc_id", newPosts,
-        hint = Some(graft.operators.StoredAt(route.lookup(s, ids))))
-      assert(touched.toSet == (newBkts ++ oldBkts),
-        s"postings merge touched $touched but the pruned locating " +
-          s"reads covered ${(newBkts ++ oldBkts).toSeq.sorted}")
-      // route protocol, step 3: settle each batch doc's pairs to
-      // exactly its new buckets
-      if (!fastPath) route.settleLocations(s, newPairs)
-      // stats refresh — RECOMPUTED from the batch docs' docmap
-      // buckets (never delta arithmetic: recompute-from-data converges
-      // under any crash/re-apply interleaving, where a delta computed
-      // after a crashed run's committed merge would be zero and the
-      // batch's contribution lost forever)
-      refreshDocStats(s, idx, route.bucketsOf(s, ids))
+      val route = docRoute(idx)
+      val touched = route.mergeThrough(s, s"$idx/postings", postingsOf(d))
+      refreshDocStats(s, idx, route.bucketsOf(s, d.select(col("doc_id"))))
       setStatsPending(s, idx, on = false)
       // swapped directories keep their paths — drop any cached file
       // listings so later reads can't resolve to replaced files
       s.catalog.refreshByPath(idx)
       touched
-    } finally newPosts.unpersist()
+    } finally d.unpersist()
+  }
+
+  private def requireTextIndex(s: SparkSession, idx: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$idx/postings")
+    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
+      s"no text index at $idx — build it first")
   }
 
   /** The maintenance demo behind `tx_index_upsert`: a base index built
@@ -2083,14 +2035,10 @@ object TextQueries {
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
           dir, "documents.parquet", "graft_text_upsert", "_upsert_applied")(
         tmp => writeTextIndex(s, docs.filter(col("doc_id") % 5 =!= 0), tmp))(
-        { idx =>
-          val route = docRoute(idx)
-          route.ensure(s, s"$idx/postings")
-          statsPending(s, idx) ||
-            route.dataOf(s, s"$idx/postings",
-                batch.select(col("doc_id")).filter(col("doc_id") % 5 === 0))
-              .limit(1).collect().isEmpty
-        })(
+        idx => statsPending(s, idx) ||
+          docRoute(idx).dataOf(s, s"$idx/postings",
+              batch.select(col("doc_id")).filter(col("doc_id") % 5 === 0))
+            .limit(1).collect().isEmpty)(
         idx => upsertTextIndex(s, idx, batch))
     }
 
@@ -2122,26 +2070,10 @@ object TextQueries {
     * the pending-marker healing — the whole r16 stats chain, not
     * just the final division.
     */
-  /** Pre-r16 generation repair: a published index whose maintenance
-    * pass predates the derived-stats chain has no dstats table — one
-    * full refresh bootstraps docmap + dstats (and rewrites stats to
-    * the same values the old direct aggregation produced). The same
-    * bootstrap-on-first-read rule every fingerprint-persisted layout
-    * addition follows.
-    */
-  private def ensureDerivedStats(s: SparkSession, idx: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$idx/dstats/_SUCCESS")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) {
-      docRoute(idx).ensure(s, s"$idx/postings")
-      refreshDocStats(s, idx, 0 until TextIndexBuckets)
-    }
-  }
-
   val statsAudit = Query(
     "tx_stats_audit",
     (s, dir) => {
       val idx = upsertDemoIndex(s, dir)
-      ensureDerivedStats(s, idx)
       val st = graft.Tables.readPq(s, s"$idx/stats")
       val ds = graft.Tables.readPq(s, s"$idx/dstats")
         .agg(coalesce(sum(col("n_docs")), lit(0L)).cast("long")
@@ -2165,51 +2097,28 @@ object TextQueries {
   )
 
   /** Purge propagation into the persisted inverted index — the DELETE
-    * path through [[upsertTextIndex]]'s touched-bucket discipline,
-    * closing the r11 gap: `dd_purge_apply` cleans the LAKE, but a probe
-    * against an unmaintained index still scores (and can return) the
-    * purged docs. Semantics = a from-scratch [[writeTextIndex]] over
-    * the surviving corpus: the purged docs' postings leave their
-    * buckets in ONE dynamic-overwrite commit (located through the
-    * docmap — a read of the purge list's hash buckets, r16, never an
-    * O(index) scan), their docmap pairs drop, and the stats
-    * RECOMPUTE from the touched docmap buckets
-    * ([[refreshDocStats]] — recompute-from-data, so every
-    * crash/re-apply interleaving converges; the [[statsPending]]
-    * marker brackets the pass and the docmap-drop + stats tails run
-    * UNCONDITIONALLY, healing a crashed run whose postings commit
-    * landed but whose tails died). Ids with no postings (never
-    * indexed, or zero-token docs) are the documented no-op. Returns
-    * the touched bucket ids (sorted).
+    * twin of [[upsertTextIndex]], closing the r11 gap: `dd_purge_apply`
+    * cleans the LAKE, but a probe against an unmaintained index still
+    * scores (and can return) the purged docs. Semantics = a
+    * from-scratch [[writeTextIndex]] over the surviving corpus: the
+    * purged docs' postings leave their buckets through the docmap's
+    * route protocol ([[graft.operators.KeyRouting.deleteThrough]]: one
+    * dynamic-overwrite commit over the buckets the docmap names, then
+    * the route drop), and the stats RECOMPUTE from the purge list's
+    * docmap buckets ([[refreshDocStats]]). The [[statsPending]] marker
+    * brackets the pass and every step runs unconditionally, so a
+    * re-apply heals a crashed run whose postings commit landed but
+    * whose tails died. Ids with no postings (never indexed, or
+    * zero-token docs) are the documented no-op. Returns the touched
+    * bucket ids (sorted).
     */
   def deleteFromTextIndex(s: SparkSession, idx: String,
       purge0: DataFrame): Seq[Int] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val postingsRoot = new org.apache.hadoop.fs.Path(s"$idx/postings")
-    val fs = postingsRoot.getFileSystem(conf)
-    require(fs.exists(postingsRoot), s"no text index at $idx — build it first")
+    requireTextIndex(s, idx)
     val purge = purge0.select(col("doc_id"))
-    val route = docRoute(idx)
-    route.ensure(s, s"$idx/postings")
-    // the purged docs' buckets resolve through the docmap, and the
-    // DATA read is the presence truth (an over-reporting docmap —
-    // a crashed earlier run — reads an extra bucket as a no-op)
-    val touched = route.dataOf(s, s"$idx/postings", purge)
-      .select(col("bkt")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded: ≤ TextIndexBuckets
     setStatsPending(s, idx, on = true)
-    if (touched.nonEmpty) {
-      // ONE dynamic-partition-overwrite commit over exactly the
-      // buckets holding a purged doc (fully-purged buckets clear)
-      graft.operators.IndexMerge.delete(s, s"$idx/postings", "bkt",
-        "doc_id", purge,
-        hint = Some(graft.operators.StoredAt(route.lookup(s, purge))))
-    }
-    // the docmap drop and the stats refresh run UNCONDITIONALLY: a
-    // crashed earlier run may have committed the postings delete and
-    // died before these tails, and a presence-gated re-entry would
-    // never heal them (recompute-from-data makes both idempotent)
-    route.dropLocations(s, purge)
+    val route = docRoute(idx)
+    val touched = route.deleteThrough(s, s"$idx/postings", purge)
     refreshDocStats(s, idx, route.bucketsOf(s, purge))
     setStatsPending(s, idx, on = false)
     s.catalog.refreshByPath(idx)
@@ -2224,30 +2133,29 @@ object TextQueries {
     * A `_purge_applied` marker records the completed propagation so
     * re-runs skip without RE-DERIVING the purge list (the cluster
     * chain costs more than the probe; an applied deletion is durable
-    * and its application is recorded). Crash between the delete's
-    * commit (last bucket swap) and the marker: the re-run re-derives
-    * the list once, anti-joins to a no-op, and writes the marker.
+    * and its application is recorded). Without the marker the list is
+    * derived and collected ONCE into a driver-local frame, which the
+    * guard, the delete and its stats refresh all read for free. Crash
+    * between the delete and the marker: the re-run re-derives the list
+    * once, finds no docmap pair left, and writes the marker.
     */
   private def deleteDemoIndex(s: SparkSession, dir: String): String =
     synchronized {
       // derived only when the marker is absent
-      lazy val purge = graft.dedup.DedupQueries.textPurgeIds(s, dir)
-        .select(col("doc_id"))
+      lazy val purge = {
+        val ids = graft.dedup.DedupQueries.textPurgeIds(s, dir)
+          .select(col("doc_id"))
+        s.createDataFrame(ids.collectAsList(), ids.schema) // bounded: the purge list
+      }
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
           dir, "documents.parquet", "graft_text_delete", "_purge_applied")(
         tmp => writeTextIndex(s, Tables(s, dir).documents, tmp))(
-        { idx =>
-          // pending = purged postings still on disk (docmap-pruned data
-          // read), OR purged docmap pairs surviving, OR a live
-          // stats-pending marker — any of the three means a crashed
-          // pass left tails only the re-apply heals
-          val route = docRoute(idx)
-          route.ensure(s, s"$idx/postings")
-          statsPending(s, idx) ||
-            route.dataOf(s, s"$idx/postings", purge)
-              .limit(1).collect().nonEmpty ||
-            route.lookup(s, purge).limit(1).collect().nonEmpty
-        })(
+        // pending = a purged doc's docmap pair survives (the docmap
+        // never under-reports, so this covers purged postings still on
+        // disk), or a live stats-pending marker — either means a
+        // crashed pass left tails only the re-apply heals
+        idx => statsPending(s, idx) ||
+          docRoute(idx).lookup(s, purge).limit(1).collect().nonEmpty)(
         idx => deleteFromTextIndex(s, idx, purge))
     }
 

@@ -165,6 +165,25 @@ class BandUpsertSpec extends SparkSuite {
       "a second clone batch un-capped the band")
   }
 
+  test("the hot-band cap keeps a band of exactly HotBandCap members and drops one more") {
+    import spark.implicits._
+    val cap = graft.operators.BandedIndex.HotBandCap
+    assert(cap == 50)
+    // synthetic stored rows: band "at" has exactly cap members, band
+    // "over" one more; a third, unprobed band must not appear at all
+    val stored = ((0 until cap).map(i => (i.toLong, "at", 0)) ++
+      (0 to cap).map(i => (1000L + i, "over", 1)) ++
+      Seq((5000L, "unprobed", 2)))
+      .toDF("doc_id", "bh", "bkt")
+    val probed = Seq("at", "over").toDF("bh")
+    val kept = DedupQueries.BandLayout.belowCap(stored, probed)
+      .groupBy(col("bh")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(kept == Map("at" -> cap.toLong),
+      s"belowCap kept $kept; a band of exactly $cap members must " +
+        s"survive and one of ${cap + 1} must drop")
+  }
+
   test("a retried screen reproduces the first attempt's verdicts across the cap") {
     // the foreachBatch retry contract of probeBandIndex(excludeBatchIds):
     // 45 clones in the index, 10 more arrive — the first attempt

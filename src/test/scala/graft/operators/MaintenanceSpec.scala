@@ -46,6 +46,21 @@ class MaintenanceSpec extends SparkSuite {
     t.nation.write.mode("overwrite").parquet(nation)
     Maintenance.swapDirs(spark, nation, dst)
     assert(spark.read.parquet(dst).count() == t.nation.count())
+
+    // a crash between the two renames leaves no destination and the
+    // old content at the backup: the next swap installs the new
+    // content and drops the stale backup
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(dst),
+      new org.apache.hadoop.fs.Path(dst + "__backup")))
+    val region = base.resolve("v3").toString
+    t.region.write.mode("overwrite").parquet(region)
+    Maintenance.swapDirs(spark, region, dst)
+    assert(spark.read.parquet(dst).count() == before,
+      "the new content did not land at a missing destination")
+    assert(!new java.io.File(dst + "__backup").exists(),
+      "stale backup left behind")
   }
 
   test("upsertParquet replaces matching keys and appends new ones") {

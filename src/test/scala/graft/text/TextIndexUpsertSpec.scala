@@ -9,11 +9,17 @@ import org.apache.spark.sql.functions._
   * Bucket layout stays the 16-way term hash, merged buckets compact,
   * the exact-integer stats refresh reproduces the rebuild's stats
   * bit-for-bit, the probe output is identical, re-applying a batch is
-  * idempotent, and the MERGE preconditions fail loudly.
+  * idempotent, and the MERGE preconditions fail loudly. The write path
+  * runs in a fixed job budget: a replace-path upsert, an all-new upsert
+  * and a delete each launch at most a fixed number of Spark jobs, for
+  * driver-local batches (CHANGES.md records the measured counts).
   */
 class TextIndexUpsertSpec extends SparkSuite {
 
   private val dir = sf("sf0.001")
+  private val ReplaceUpsertBudget = 38
+  private val NewUpsertBudget = 30
+  private val DeleteBudget = 21
 
   private def docs: DataFrame =
     graft.Tables(spark, dir).documents.select(col("doc_id"), col("text"))
@@ -36,9 +42,23 @@ class TextIndexUpsertSpec extends SparkSuite {
     val upserted = tmpIdx("u")
     TextQueries.writeTextIndex(spark,
       docs.filter(col("doc_id") % 5 =!= 0), upserted)
-    val touched = TextQueries.upsertTextIndex(spark, upserted,
-      docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 10 === 1))
+    val batch =
+      docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 10 === 1)
+    // the buckets holding a batch doc's postings, from a full scan
+    def batchBuckets(): Set[Int] =
+      spark.read.parquet(s"$upserted/postings")
+        .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .select(col("bkt")).distinct().collect().map(_.getInt(0)).toSet
+    val bucketsBefore = batchBuckets()
+    assert(bucketsBefore.nonEmpty, "fixture: the batch replaces no doc")
+    val touched = TextQueries.upsertTextIndex(spark, upserted, batch)
     assert(touched.nonEmpty && touched.forall(b => b >= 0 && b < 16))
+    // the merge touched exactly the buckets a replaced doc left and
+    // the buckets every batch doc landed in
+    val expected = bucketsBefore ++ batchBuckets()
+    assert(touched.toSet == expected, s"postings merge touched " +
+      s"${touched.sorted} but the batch docs' postings sit in " +
+      s"${expected.toSeq.sorted}")
 
     val rebuilt = tmpIdx("r")
     TextQueries.writeTextIndex(spark, docs, rebuilt)
@@ -169,6 +189,30 @@ class TextIndexUpsertSpec extends SparkSuite {
       "the completed re-apply left the pending marker up")
   }
 
+  test("a crash inside the dstats swap heals: the re-apply recounts every bucket") {
+    // the swap moved dstats to its backup and died before the new
+    // table landed; the re-apply's refresh finds no dstats, so it must
+    // recount every docmap bucket, not only the batch's
+    val idx = tmpIdx("s")
+    TextQueries.writeTextIndex(spark,
+      docs.filter(col("doc_id") % 5 =!= 0), idx)
+    val batch = docs.filter(col("doc_id") === 0)
+    TextQueries.upsertTextIndex(spark, idx, batch)
+    val good = spark.read.parquet(s"$idx/stats").head()
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$idx/dstats"),
+      new org.apache.hadoop.fs.Path(s"$idx/dstats__backup")))
+    fs.create(new org.apache.hadoop.fs.Path(s"$idx/stats__pending"), true)
+      .close()
+    TextQueries.upsertTextIndex(spark, idx, batch)
+    val healed = spark.read.parquet(s"$idx/stats").head()
+    assert(healed.getLong(healed.fieldIndex("n_docs")) ==
+      good.getLong(good.fieldIndex("n_docs")))
+    assert(healed.getLong(healed.fieldIndex("sum_dl")) ==
+      good.getLong(good.fieldIndex("sum_dl")))
+  }
+
   test("deleteFromTextIndex heals its tails: a crash after the postings purge re-applies to clean docmap and stats") {
     val idx = tmpIdx("x")
     TextQueries.writeTextIndex(spark, docs, idx)
@@ -198,5 +242,45 @@ class TextIndexUpsertSpec extends SparkSuite {
       sr.getLong(sr.fieldIndex("n_docs")))
     assert(sd.getLong(sd.fieldIndex("sum_dl")) ==
       sr.getLong(sr.fieldIndex("sum_dl")))
+  }
+
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collectAsList(), df.schema)
+
+  /** A fresh index over the corpus minus the doc_id % 5 == 0 slice,
+    * and the number of Spark jobs `op` launches against it. */
+  private def jobsAgainstBase[T](tag: String)(op: String => T): (T, Int) = {
+    val idx = tmpIdx(tag)
+    TextQueries.writeTextIndex(spark, docs.filter(col("doc_id") % 5 =!= 0), idx)
+    graft.JobCount.jobsOf(spark, s"text-write-budget-$tag")(op(idx))
+  }
+
+  private def within(what: String, jobs: Int, budget: Int): Unit = {
+    info(s"$what: $jobs jobs")
+    assert(jobs <= budget, s"$what ran $jobs jobs (budget $budget)")
+  }
+
+  test("a replace-path upsert stays inside the job budget") {
+    val batch = local(docs.filter(col("doc_id") % 10 === 1))
+    val (touched, jobs) = jobsAgainstBase("jr")(
+      TextQueries.upsertTextIndex(spark, _, batch))
+    assert(touched.nonEmpty)
+    within("replace-path upsertTextIndex", jobs, ReplaceUpsertBudget)
+  }
+
+  test("an all-new upsert stays inside the job budget") {
+    val batch = local(docs.filter(col("doc_id") % 5 === 0))
+    val (touched, jobs) = jobsAgainstBase("jn")(
+      TextQueries.upsertTextIndex(spark, _, batch))
+    assert(touched.nonEmpty)
+    within("all-new upsertTextIndex", jobs, NewUpsertBudget)
+  }
+
+  test("a delete stays inside the job budget") {
+    val purge = local(docs.filter(col("doc_id") % 7 === 0).select(col("doc_id")))
+    val (touched, jobs) = jobsAgainstBase("jd")(
+      TextQueries.deleteFromTextIndex(spark, _, purge))
+    assert(touched.nonEmpty)
+    within("deleteFromTextIndex", jobs, DeleteBudget)
   }
 }
