@@ -548,6 +548,364 @@ object Multimodal {
     hash
   }
 
+  private val AudioBins = Array(1, 2, 4, 8, 16, 32)
+
+  /** 60-bit audio fingerprint from decoded PCM: 10 windows × 64
+    * samples, bit (win·6 + b) = 1 iff the window's Walsh–Hadamard
+    * coefficient c_k (k = [[AudioBins]](b), the [[spectrogram]]
+    * kernel) is negative. WHT signs, not energy deltas, on purpose:
+    * signs are content-sensitive across unrelated clips (measured 6
+    * colliding group-pairs in 79 800 — an energy-contour hash
+    * collides two orders of magnitude more on phase-shifted
+    * synthetic audio), integer-exact (the spectrogram's ±1-basis
+    * argument), and gain-robust — a volume change scales every
+    * coefficient by the same positive factor, flipping only
+    * coefficients near zero, so a re-levelled copy sits a few bits
+    * away, not 30.
+    */
+  private def audioHash(samples: Array[Short]): Long = {
+    var h   = 0L
+    var win = 0
+    while (win < 10) {
+      var bi = 0
+      while (bi < 6) {
+        val k = AudioBins(bi)
+        var c = 0L
+        var j = 0
+        while (j < 64) {
+          val sign =
+            if (java.lang.Integer.bitCount(k & j) % 2 == 0) 1 else -1
+          c += samples(win * 64 + j).toLong * sign
+          j += 1
+        }
+        if (c < 0) h |= 1L << (win * 6 + bi)
+        bi += 1
+      }
+      win += 1
+    }
+    h
+  }
+
+  /** 60-bit TEMPORAL video fingerprint: bit f = 1 iff frame f+1's
+    * decoded luma sum is below frame f's — the luma-trajectory
+    * contour, walked out of real YUV4MPEG2 bytes (the mm_scenecut
+    * machinery). A uniform brightness shift moves every frame sum by
+    * the same amount, so the contour — and the hash — is unchanged.
+    */
+  private def contourHash60(bytes: Array[Byte]): Long = {
+    val sums = Y4mCodec.frameLumaSums(bytes)._3
+    var hash = 0L
+    var b = 0
+    while (b < 60) {
+      if (sums(b + 1) < sums(b)) hash |= 1L << b
+      b += 1
+    }
+    hash
+  }
+
+  // ─────────────── media near-dup channels (image, audio, video) ────
+
+  /** One media near-dup channel: what the image, audio and video rows
+    * differ in, and nothing else. The pair pipeline, the oracle CTE
+    * chains, the rows ([[MediaRows]]), the blob lake, the persisted
+    * index and the ingest loop are written once, over these values.
+    *
+    *  - `name` keys the row names (`dd_<name>_*`) and the index,
+    *    upsert-demo and delete-demo families ([[family]]);
+    *    `lakeFamily` and `streamFamily` name the blob lake and the
+    *    ingest loop's published root; `logArtifact` and `lakeArtifact`
+    *    name the channel's `ss_index_manifest` entries (a lake without
+    *    an artifact name is not audited);
+    *  - `params` is the DDL of the synthesis parameters after
+    *    `media_id` (the ingest loop's stream schema);
+    *  - `blob` synthesizes one container from its parameters (in
+    *    `params` order, as LONG) and `fingerprint` decodes it into the
+    *    60-bit hash — the decode seam; `hashExpr` is the same hash in
+    *    closed form over the parameter columns, so the DuckDB oracles
+    *    need no codec;
+    *  - `corpus`, `night1` and `night2` derive the parameter frames of
+    *    the corpus and the two nightly arrival waves from `documents`;
+    *    `corpusSql`, `night1Sql` and `night2Sql` are their SQL twins
+    *    (the same columns in the same order).
+    *
+    * Every channel's corpus keys a base group g = id − id%3: the three
+    * ids of a group are re-encodes of one item, the planted near-dups.
+    * The arrival waves sit at fixed id offsets: night 1 is a new
+    * re-encode of corpus items (+500000) plus a fresh wave (+600000);
+    * night 2 re-encodes night 1's fresh wave (+700000, a dup ONLY if
+    * night 1 was ingested) plus a second fresh wave (+800000).
+    */
+  final case class MediaChannel(name: String, lakeFamily: String,
+      streamFamily: String, logArtifact: String,
+      lakeArtifact: Option[String], params: String,
+      blob: Seq[Long] => Array[Byte], fingerprint: Array[Byte] => Long,
+      hashExpr: String,
+      corpus: DataFrame => DataFrame, night1: DataFrame => DataFrame,
+      night2: DataFrame => DataFrame,
+      corpusSql: String, night1Sql: String, night2Sql: String) {
+
+    def family(kind: String): String = s"graft_${name}_$kind"
+
+    def streamSchema: String = s"media_id LONG, $params"
+
+    /** `ps` narrowed to (media_id, params…), every column LONG. */
+    private def longParams(ps: DataFrame): DataFrame =
+      ps.select((col("media_id") +: org.apache.spark.sql.types.StructType
+        .fromDDL(params).fieldNames.toSeq.map(col))
+        .map(_.cast("long")): _*)
+
+    /** (media_id, content): each parameter row's synthesized container,
+      * encoded per partition. */
+    def blobs(ps: DataFrame): DataFrame = {
+      import ps.sparkSession.implicits._
+      val synth = blob
+      longParams(ps).mapPartitions(_.map { r =>
+        (r.getLong(0), synth((1 until r.length).map(r.getLong)))
+      }).toDF("media_id", "content")
+    }
+
+    /** (media_id, dhash): decode-seam hashing — each blob is encoded and
+      * fingerprinted per partition and never shuffles (a production
+      * pipeline reads the blob column of its media lake here). */
+    def hashes(ps: DataFrame): DataFrame = {
+      import ps.sparkSession.implicits._
+      val (synth, fp) = (blob, fingerprint)
+      longParams(ps).mapPartitions(_.map { r =>
+        (r.getLong(0), fp(synth((1 until r.length).map(r.getLong))))
+      }).toDF("media_id", "dhash")
+    }
+
+    def corpusHashes(s: SparkSession, dir: String): DataFrame =
+      hashes(corpus(Tables(s, dir).documents))
+
+    /** `SELECT media_id, <hash> AS dhash` over a parameter relation. */
+    def hashSql(rel: String): String =
+      s"SELECT media_id, $hashExpr AS dhash FROM $rel"
+  }
+
+  /** w, h of a corpus-sized canvas, keyed off the base group g. */
+  private def baseDims(df: DataFrame): DataFrame = df
+    .withColumn("w", (col("g") % 31 + 1).cast("int"))
+    .withColumn("h", (col("g") % 17 + 1).cast("int"))
+
+  /** w, h of a fresh-wave canvas: LARGER (97–127 × 53–69) than the
+    * corpus's ≤31×17. At corpus dims the 11×6 dHash sample grid
+    * degenerates (few distinct gradient patterns, so any "fresh" hash
+    * collides with some corpus image within Hamming 5) and the
+    * admission rows could not observe their own ingest. The night-2
+    * re-encode wave keys its canvas off its night-1 twin's id
+    * (media_id − 100000), so the twins hash the same grid.
+    */
+  private def freshDims(df: DataFrame, twinOffset: Long = 0L): DataFrame = df
+    .withColumn("w", ((col("media_id") - twinOffset) % 31 + 97).cast("int"))
+    .withColumn("h", ((col("media_id") - twinOffset) % 17 + 53).cast("int"))
+
+  /** Image: 24bpp BMP, grey(x, y) = (g·7 + (y·w + x)·3 + v) mod 256 —
+    * the three ids of a group are brightness shifts v = 0, 1, 2 of one
+    * image. Fingerprint: the 60-bit dHash ([[dhash60]]). Night 1 is a
+    * new shift (v = 3) of corpus images plus fresh bases on fresh
+    * canvases ([[freshDims]]); night 2 is v = 1 of night 1's fresh
+    * wave plus a second fresh wave.
+    */
+  val Image: MediaChannel = MediaChannel("image",
+    lakeFamily = "graft_media_lake", streamFamily = "graft_stream_img",
+    logArtifact = "media_ingest_log", lakeArtifact = Some("media_lake"),
+    params = "g LONG, v INT, w INT, h INT",
+    blob = { case Seq(g, v, w, h) =>
+      BmpCodec.encode(w.toInt, h.toInt,
+        (x, y) => ((g * 7 + (y * w + x) * 3 + v) % 256).toInt) },
+    fingerprint = dhash60,
+    hashExpr = """list_sum(list_transform(range(0, 60), b ->
+            CASE WHEN
+              (g * 7 + (((b // 10) * h) // 6 * w
+                 + ((b % 10) * w) // 11) * 3 + v) % 256
+              <
+              (g * 7 + (((b // 10) * h) // 6 * w
+                 + (((b % 10) + 1) * w) // 11) * 3 + v) % 256
+            THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT""",
+    corpus = d => baseDims(d.select(col("doc_id").as("media_id"),
+      (col("doc_id") - col("doc_id") % 3).as("g"),
+      (col("doc_id") % 3).cast("int").as("v"))),
+    night1 = d => baseDims(d.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 500000).as("media_id"),
+          (col("doc_id") - col("doc_id") % 3).as("g"), lit(3).as("v")))
+      .unionByName(freshDims(d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 600000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(0).as("v")))),
+    night2 = d => freshDims(d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 700000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(1).as("v")), 100000L)
+      .unionByName(freshDims(d.filter(col("doc_id") % 7 === 5)
+        .select((col("doc_id") + 800000).as("media_id"),
+          (col("doc_id") + 2000000).as("g"), lit(0).as("v")))),
+    corpusSql = """
+        SELECT doc_id AS media_id,
+               doc_id - (doc_id % 3) AS g,
+               doc_id % 3 AS v,
+               ((doc_id - (doc_id % 3)) % 31) + 1 AS w,
+               ((doc_id - (doc_id % 3)) % 17) + 1 AS h
+        FROM documents""",
+    night1Sql = """
+        SELECT doc_id + 500000 AS media_id,
+               doc_id - (doc_id % 3) AS g, 3 AS v,
+               ((doc_id - (doc_id % 3)) % 31) + 1 AS w,
+               ((doc_id - (doc_id % 3)) % 17) + 1 AS h
+        FROM documents WHERE doc_id % 7 = 0
+        UNION ALL
+        SELECT doc_id + 600000, doc_id + 1000000, 0,
+               ((doc_id + 600000) % 31) + 97,
+               ((doc_id + 600000) % 17) + 53
+        FROM documents WHERE doc_id % 7 = 3""",
+    night2Sql = """
+        SELECT doc_id + 700000 AS media_id,
+               doc_id + 1000000 AS g, 1 AS v,
+               ((doc_id + 600000) % 31) + 97 AS w,
+               ((doc_id + 600000) % 17) + 53 AS h
+        FROM documents WHERE doc_id % 7 = 3
+        UNION ALL
+        SELECT doc_id + 800000, doc_id + 2000000, 0,
+               ((doc_id + 800000) % 31) + 97,
+               ((doc_id + 800000) % 17) + 53
+        FROM documents WHERE doc_id % 7 = 5""")
+
+  /** Audio: mono 16-bit PCM RIFF/WAVE; the three ids of a group are
+    * GAIN-SHIFTED re-levelings of one clip (stored PCM divided by
+    * gain = 2^(id%3), truncating — DuckDB's `//`). The Knuth-multiplier
+    * phase term de-aliases base clips: a plain g·31 phase walk left 93
+    * of 1.39 M group pairs with IDENTICAL fingerprints at sf0.1,
+    * measured; this has zero. Fingerprint: WHT signs ([[audioHash]]).
+    * Night 1 is a new re-leveling (gain 8) plus never-heard clips (new
+    * g — the hashes are effectively random, no canvas trick needed);
+    * night 2 re-levels (gain 2) night 1's fresh wave plus a second
+    * fresh wave.
+    */
+  val Audio: MediaChannel = MediaChannel("audio",
+    lakeFamily = "graft_audio_lake", streamFamily = "graft_stream_aud",
+    logArtifact = "audio_ingest_log", lakeArtifact = None,
+    params = "g LONG, gain LONG",
+    blob = { case Seq(g, gain) =>
+      WavCodec.encode(8000 + (g % 5).toInt * 2000,
+        Array.tabulate((640 + (g % 5) * 64).toInt) { i =>
+          val s0 = (g * 2654435761L + i.toLong * 7 +
+            (g % 13 + 1) * i.toLong * i +
+            (g % 29 + 1) * i.toLong * 11) % 65536 - 32768
+          (s0 / gain).toShort
+        }) },
+    fingerprint = bytes => audioHash(WavCodec.decodeSamples(bytes)),
+    // WHT coefficients are exact sums of int16 in both engines
+    hashExpr = """list_sum(list_transform(range(0, 60), b ->
+            CASE WHEN
+              list_sum(list_transform(range(0, 64), j ->
+                (((g * 2654435761 + ((b // 6) * 64 + j) * 7
+                   + (g % 13 + 1) * ((b // 6) * 64 + j) * ((b // 6) * 64 + j)
+                   + (g % 29 + 1) * ((b // 6) * 64 + j) * 11)
+                  % 65536 - 32768) // gain)
+                * (CASE WHEN bit_count(([1,2,4,8,16,32][(b % 6)::INT + 1])
+                                       & j) % 2 = 0
+                   THEN 1 ELSE -1 END))) < 0
+            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT""",
+    corpus = d => d.select(col("doc_id").as("media_id"),
+      (col("doc_id") - col("doc_id") % 3).as("g"),
+      expr("shiftleft(cast(1 as bigint), cast(doc_id % 3 as int))")
+        .as("gain")),
+    night1 = d => d.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 500000).as("media_id"),
+          (col("doc_id") - col("doc_id") % 3).as("g"), lit(8L).as("gain"))
+      .unionByName(d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 600000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(1L).as("gain"))),
+    night2 = d => d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 700000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(2L).as("gain"))
+      .unionByName(d.filter(col("doc_id") % 7 === 5)
+        .select((col("doc_id") + 800000).as("media_id"),
+          (col("doc_id") + 2000000).as("g"), lit(1L).as("gain"))),
+    corpusSql = """
+        SELECT doc_id AS media_id, doc_id - (doc_id % 3) AS g,
+               (1::BIGINT << (doc_id % 3)::INT) AS gain
+        FROM documents""",
+    night1Sql = """
+        SELECT doc_id + 500000 AS media_id,
+               doc_id - (doc_id % 3) AS g, 8 AS gain
+        FROM documents WHERE doc_id % 7 = 0
+        UNION ALL
+        SELECT doc_id + 600000, doc_id + 1000000, 1
+        FROM documents WHERE doc_id % 7 = 3""",
+    night2Sql = """
+        SELECT doc_id + 700000 AS media_id,
+               doc_id + 1000000 AS g, 2 AS gain
+        FROM documents WHERE doc_id % 7 = 3
+        UNION ALL
+        SELECT doc_id + 800000, doc_id + 2000000, 1
+        FROM documents WHERE doc_id % 7 = 5""")
+
+  /** Video: C420jpeg YUV4MPEG2; the three ids of a group are uniform
+    * BRIGHTNESS-SHIFTED re-encodes (+v on every pixel, no wrap — luma
+    * stays ≤ 250). Per-frame base levels walk a quadratic Knuth family
+    * keyed by g mod 97 / mod 89 (a linear walk left thousands of
+    * unrelated clips with colliding contours), so unrelated clips
+    * collide zero times in 1.39 M group pairs at sf0.1. Fingerprint:
+    * the luma contour ([[contourHash60]]) — a shift cancels out of it,
+    * so every re-encode is hash-IDENTICAL to its base, and the closed
+    * form compares only the per-frame base levels (v does not enter).
+    * Night 1 is a new shift (v = 3) plus fresh clips; night 2 is v = 1
+    * of night 1's fresh wave plus a second fresh wave.
+    */
+  val Video: MediaChannel = MediaChannel("video",
+    lakeFamily = "graft_video_lake", streamFamily = "graft_stream_vid",
+    logArtifact = "video_ingest_log", lakeArtifact = None,
+    params = "g LONG, v INT",
+    blob = { case Seq(g, v) =>
+      def base(f: Int): Int =
+        (((g * 2654435761L + f.toLong * f * ((g % 97) + 1) * 31 +
+          f.toLong * ((g % 89) + 1) * 7) % 65521) % 200).toInt
+      Y4mCodec.encode(((g % 8) + 1).toInt * 2, ((g % 4) + 1).toInt * 2,
+        24 + (g % 4).toInt * 6, 1, (61 + g % 5).toInt,
+        (f, i) => base(f) + (i * 3) % 50 + v.toInt) },
+    fingerprint = contourHash60,
+    hashExpr = """list_sum(list_transform(range(0, 60), b ->
+            CASE WHEN
+              ((g * 2654435761 + (b+1)*(b+1) * ((g % 97) + 1) * 31
+                 + (b+1) * ((g % 89) + 1) * 7) % 65521) % 200
+              <
+              ((g * 2654435761 + b*b * ((g % 97) + 1) * 31
+                 + b * ((g % 89) + 1) * 7) % 65521) % 200
+            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT""",
+    corpus = d => d.select(col("doc_id").as("media_id"),
+      (col("doc_id") - col("doc_id") % 3).as("g"),
+      (col("doc_id") % 3).cast("int").as("v")),
+    night1 = d => d.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 500000).as("media_id"),
+          (col("doc_id") - col("doc_id") % 3).as("g"), lit(3).as("v"))
+      .unionByName(d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 600000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(0).as("v"))),
+    night2 = d => d.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 700000).as("media_id"),
+          (col("doc_id") + 1000000).as("g"), lit(1).as("v"))
+      .unionByName(d.filter(col("doc_id") % 7 === 5)
+        .select((col("doc_id") + 800000).as("media_id"),
+          (col("doc_id") + 2000000).as("g"), lit(0).as("v"))),
+    corpusSql = """
+        SELECT doc_id AS media_id, doc_id - (doc_id % 3) AS g,
+               doc_id % 3 AS v
+        FROM documents""",
+    night1Sql = """
+        SELECT doc_id + 500000 AS media_id,
+               doc_id - (doc_id % 3) AS g, 3 AS v
+        FROM documents WHERE doc_id % 7 = 0
+        UNION ALL
+        SELECT doc_id + 600000, doc_id + 1000000, 0
+        FROM documents WHERE doc_id % 7 = 3""",
+    night2Sql = """
+        SELECT doc_id + 700000 AS media_id, doc_id + 1000000 AS g, 1 AS v
+        FROM documents WHERE doc_id % 7 = 3
+        UNION ALL
+        SELECT doc_id + 800000, doc_id + 2000000, 0
+        FROM documents WHERE doc_id % 7 = 5""")
+
+  /** The channels, in registry order. */
+  val channels: Seq[MediaChannel] = Seq(Image, Audio, Video)
   /** Perceptual image fingerprint (difference hash): the image-side
     * near-duplicate primitive, bridging the multimodal tier into the
     * dedup family the way [[graft.dedup.DedupQueries]]' SimHash does
@@ -564,94 +922,36 @@ object Multimodal {
     */
   val imageDhash = Query(
     "mm_image_dhash",
-    (s, dir) => {
-      import s.implicits._
-      val params = Tables(s, dir).documents
-        .filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id")).as[Long]
-      val rows = params.mapPartitions { it =>
-        it.map { id =>
-          val w = (id % 31 + 1).toInt
-          val h = (id % 17 + 1).toInt
-          val bytes = BmpCodec.encode(w, h,
-            (x, y) => ((id * 7 + (y.toLong * w + x) * 3) % 256).toInt)
-          (id, dhash60(bytes))
-        }
-      }.toDF("media_id", "dhash")
-      rows.orderBy(col("media_id"))
-    },
-    oracle = Some("""
-      SELECT doc_id AS media_id,
-        list_sum(list_transform(range(0, 60), b ->
-          CASE WHEN
-            (doc_id * 7 + ((((b // 10) * ((doc_id % 17) + 1)) // 6)
-               * ((doc_id % 31) + 1)
-               + ((b % 10) * ((doc_id % 31) + 1)) // 11) * 3) % 256
-            <
-            (doc_id * 7 + ((((b // 10) * ((doc_id % 17) + 1)) // 6)
-               * ((doc_id % 31) + 1)
-               + (((b % 10) + 1) * ((doc_id % 31) + 1)) // 11) * 3) % 256
-          THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT AS dhash
-      FROM documents WHERE doc_id % 3 = 0 ORDER BY media_id
+    // the base images (v = 0) of the Image channel's corpus
+    (s, dir) => Image.hashes(Image.corpus(Tables(s, dir).documents)
+        .filter(col("media_id") % 3 === 0))
+      .orderBy(col("media_id")),
+    oracle = Some(s"""
+      WITH p0 AS (${Image.corpusSql}
+      ), p AS (SELECT * FROM p0 WHERE media_id % 3 = 0)
+      ${Image.hashSql("p")} ORDER BY media_id
     """),
   )
 
-  /** Image near-duplicate detection over the perceptual hashes — the
-    * image-side analog of `dd_minhash_lsh`, composing [[imageDhash]]'s
-    * fingerprint into the banded-candidate pattern of
-    * `graft.dedup.DedupQueries.simhash`: the corpus is every
-    * [[imageDhash]] base image PLUS two brightness-shifted re-encodes
-    * of each (the classic near-dup an image pipeline must catch — the
-    * same scene re-exported with a small level shift), each decoded
-    * and hashed from REAL BMP bytes in the sanctioned per-partition
-    * codec seam. The 60-bit dHash splits into 6 ten-bit bands;
-    * candidate pairs come from an equi-join on (band, value) — by
-    * pigeonhole, any pair within Hamming ≤ 5 shares at least one of
-    * the 6 bands EXACTLY, so banding loses nothing at the declared
-    * threshold — and candidates are confirmed with
-    * `bit_count(xor) ≤ 5`, all integer-exact so the oracle is direct
-    * SQL over the closed-form synthesis parameters.
-    *
-    * Scale shape: hashing is per-row in the decode seam (blobs never
-    * shuffle); the band join shuffles 6 scalar rows per image on the
-    * band key — bucketed by construction, never all-pairs — and a
-    * ≤50-docs-per-band hot-band cap (the `dd_minhash_lsh` cap,
-    * windowed on the same exchange the join needs) bounds the pair
-    * blowup from degenerate bands (flat images collapse to dhash 0;
-    * at sf0.1 that band saturates the cap and is dropped, on both
-    * engines). Hamming confirm touches candidate pairs only.
+  /** The banded-candidate pair pipeline behind every channel's dups and
+    * clusters rows — the media analog of `dd_minhash_lsh`: the
+    * channel's corpus hashes (decode seam, blobs never shuffle) → 6
+    * ten-bit bands → a ≤[[graft.operators.BandedIndex.HotBandCap]]
+    * members-per-band cap, windowed on the same exchange the self-join
+    * shuffles on (degenerate bands — flat images collapse to dhash 0 —
+    * saturate it at sf0.1 and drop on both engines) → (band, value)
+    * self-join → `bit_count(xor) ≤ 5` confirm. By pigeonhole a pair
+    * within Hamming 5 shares one of the 6 bands exactly, so banding
+    * loses nothing at the threshold. Returns (id_a, id_b, hamming),
+    * unsorted.
     */
-  /** The banded-candidate pair pipeline shared by [[imageDups]] (the
-    * pair report) and [[imageClusters]] (connected components over the
-    * pairs): decode-seam dHashes → 6 ten-bit bands → capped (band,
-    * value) self-join → `bit_count(xor) ≤ 5` confirm. Returns
-    * (id_a, id_b, hamming), unsorted.
-    */
-  private def imagePairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val params = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-    val hashes = params.mapPartitions { it =>
-      it.map { id =>
-        val g = id - (id % 3) // base image id (the imageDhash corpus)
-        val v = (id % 3).toInt // brightness shift of this re-encode
-        val w = (g % 31 + 1).toInt
-        val h = (g % 17 + 1).toInt
-        val bytes = BmpCodec.encode(w, h,
-          (x, y) => ((g * 7 + (y.toLong * w + x) * 3 + v) % 256).toInt)
-        (id, dhash60(bytes))
-      }
-    }.toDF("media_id", "dhash")
-    val bands = hashes.select(col("media_id"), col("dhash"),
-      explode(expr("transform(sequence(0, 5), b -> " +
-        "struct(b AS bno, shiftright(dhash, b * 10) & 1023 AS bval))"))
-        .as("b"))
-      .select(col("media_id"), col("dhash"),
-        col("b.bno").as("bno"), col("b.bval").as("bval"))
-    // hot-band cap: one bounded counter per band, on the same
-    // exchange the self-join shuffles on (the dd_minhash_lsh cap)
-    val wBand = Window.partitionBy(col("bno"), col("bval"))
-    val capped = bands.withColumn("bc", count(lit(1)).over(wBand))
-      .filter(col("bc") <= 50).drop("bc")
+  private def mediaPairs(s: SparkSession, dir: String,
+      ch: MediaChannel): DataFrame = {
+    val capped = bandsOfHashes(ch.corpusHashes(s, dir))
+      .withColumn("bc",
+        count(lit(1)).over(Window.partitionBy(col("bno"), col("bval"))))
+      .filter(col("bc") <= graft.operators.BandedIndex.HotBandCap)
+      .drop("bc")
     capped.as("a")
       .join(capped.as("b"),
         col("a.bno") === col("b.bno") && col("a.bval") === col("b.bval") &&
@@ -662,34 +962,12 @@ object Multimodal {
       .distinct()
   }
 
-  /** The SQL twin of [[imagePairs]] up to a `pairs` CTE (closed-form
-    * hashes from the synthesis parameters — everything integer).
+  /** The SQL twin of [[mediaPairs]] up to a `pairs` CTE, the corpus
+    * parameters in `p` (everything integer).
     */
-  /** The image synthesis-parameter CTE (one row per re-encoded image)
-    * — the root of both the near-dup pair chain and the alignment
-    * oracle.
-    */
-  private val imageParamsCte = """
-      p AS (
-        SELECT doc_id AS media_id,
-               doc_id - (doc_id % 3) AS g,
-               doc_id % 3 AS v,
-               ((doc_id - (doc_id % 3)) % 31) + 1 AS w,
-               ((doc_id - (doc_id % 3)) % 17) + 1 AS h
-        FROM documents
-      )"""
-
-  private[graft] val imagePairCtes = s"""$imageParamsCte, hh AS (
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              (g * 7 + (((b // 10) * h) // 6 * w
-                 + ((b % 10) * w) // 11) * 3 + v) % 256
-              <
-              (g * 7 + (((b // 10) * h) // 6 * w
-                 + (((b % 10) + 1) * w) // 11) * 3 + v) % 256
-            THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT AS dhash
-        FROM p
+  private[graft] def pairCtes(ch: MediaChannel): String = s"""
+      p AS (${ch.corpusSql}
+      ), hh AS (${ch.hashSql("p")}
       ), bands0 AS (
         SELECT media_id, dhash, unnest(range(0, 6)) AS bno FROM hh
       ), bands1 AS (
@@ -700,7 +978,7 @@ object Multimodal {
         SELECT media_id, dhash, bno, bval FROM (
           SELECT *, count(*) OVER (PARTITION BY bno, bval) AS bc
           FROM bands1)
-        WHERE bc <= 50
+        WHERE bc <= ${graft.operators.BandedIndex.HotBandCap}
       ), pairs AS (
         SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
           bit_count(xor(a.dhash, b.dhash))::INT AS hamming
@@ -709,130 +987,56 @@ object Multimodal {
         WHERE bit_count(xor(a.dhash, b.dhash)) <= 5
       )"""
 
-  val imageDups = Query(
-    "dd_image_dups",
-    (s, dir) => imagePairs(s, dir).orderBy(col("id_a"), col("id_b")),
-    oracle = Some(s"""
-      WITH $imagePairCtes
-      SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b
-    """),
-  )
-
-  /** Image near-dup CLUSTERS — the decision table a multimodal
-    * pipeline actually keys its "keep one per cluster" pass on: the
-    * transitive closure of [[imageDups]]' pairs, labeled with each
-    * component's minimum media_id (the canonical representative).
-    * Same machinery as the text-side `dd_dup_clusters`: union-find in
-    * one bounded task under the 50 M-edge threshold, iterative
-    * min-label propagation to fixpoint above it; the DuckDB oracle
-    * walks the same closure with a recursive CTE. Only images that
-    * appear in at least one near-dup pair are emitted (singletons
-    * need no decision).
+  /** [[pairCtes]] walked to its closure: `cl(media_id, cluster)` labels
+    * each paired item with its component's minimum id, and
+    * `purged(media_id)` lists the non-representatives. Needs
+    * `WITH RECURSIVE`.
     */
-  /** The ONE image near-dup cluster frame (media_id, cluster) — shared
-    * by [[imageClusters]] (the report) and [[pairManifest]]'s
-    * image_dup gate, so the manifest's representative rule can never
-    * drift from the clustering it claims to apply.
-    */
-  private[multimodal] def imageClusterFrame(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.DedupQueries.connectedComponents(imagePairs(s, dir))
-      .select(col("id").as("media_id"), col("lbl").as("cluster"))
-
-  val imageClusters = Query(
-    "dd_image_clusters",
-    (s, dir) => imageClusterFrame(s, dir).orderBy(col("media_id")),
-    oracle = Some(s"""
-      WITH RECURSIVE $imagePairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql}
-      SELECT id AS media_id, min(lbl) AS cluster
-      FROM walk GROUP BY id ORDER BY media_id
-    """),
-  )
-
-  /** Per-shard deletion lists over the IMAGE near-dup clusters — the
-    * second modality routed through the generic
-    * [[graft.dedup.DedupQueries.purgePlan]] emitter (the text chain is
-    * `dd_purge_plan`), making "purgePlan works for any modality's
-    * cluster frame" a driver-verified fact rather than a spec-only
-    * claim: same keep-one-representative rule, same purge rows, same
-    * salted-md5 shard routing — one definition of the deletion action
-    * across modalities, consuming the SAME [[imageClusterFrame]] the
-    * clustering report and the pair manifest use. Images in no cluster
-    * are implicit keeps and carry no row.
-    *
-    * Scale shape: inherited — the cluster chain is the banded/capped
-    * near-dup pipeline (`dd_image_clusters`), and the emitter adds
-    * per-row hash work plus ZERO shuffles beyond the presentation
-    * sort (PurgePlanSpec pins keep-one-per-cluster, purge + keep =
-    * members, and corpus identity for this chain).
-    */
-  val imagePurge = Query(
-    "dd_image_purge",
-    (s, dir) => graft.dedup.DedupQueries
-      .purgePlan(imageClusterFrame(s, dir)
-        .withColumnRenamed("media_id", "doc_id"))
-      .withColumnRenamed("doc_id", "media_id")
-      .orderBy(col("media_id")),
-    oracle = Some(s"""
-      WITH RECURSIVE $imagePairCtes,
+  private[graft] def clusterCtes(ch: MediaChannel): String =
+    s"""${pairCtes(ch)},
       edges AS (SELECT id_a, id_b FROM pairs),
       ${graft.dedup.DedupQueries.ccWalkSql},
       cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id)
-      SELECT ('0x' || substr(md5('shard1:' || media_id::VARCHAR), 1, 8))::BIGINT
-               % 16 AS shard,
-             media_id, cluster,
-             CASE WHEN media_id = cluster THEN 'keep' ELSE 'purge' END
-               AS action
-      FROM cl ORDER BY media_id
-    """),
-  )
+             FROM walk GROUP BY id),
+      purged AS (SELECT media_id FROM cl WHERE media_id <> cluster)"""
 
-  /** The image corpus as (media_id, width, height, content) — the SAME
-    * per-row BMP synthesis [[imagePairs]] decodes, shared as the
-    * media-lake row set so the lake's blobs are exactly the bytes the
-    * near-dup chain fingerprinted.
+  /** The ONE near-dup cluster frame (media_id, cluster) of a channel —
+    * the transitive closure of [[mediaPairs]] labeled with each
+    * component's minimum media_id (union-find in one bounded task under
+    * the 50 M-edge threshold, min-label propagation above it). Shared
+    * by the clusters report, the purge rows, the index delete demo and
+    * [[pairManifest]]'s image_dup gate, so none can drift from the
+    * clustering it claims to apply. Items in no pair carry no row.
     */
-  private def imageBlobRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val g = id - (id % 3)
-          val v = (id % 3).toInt
-          val w = (g % 31 + 1).toInt
-          val h = (g % 17 + 1).toInt
-          (id, w, h, BmpCodec.encode(w, h,
-            (x, y) => ((g * 7 + (y.toLong * w + x) * 3 + v) % 256).toInt))
-        }
-      }.toDF("media_id", "width", "height", "content")
-  }
+  private[multimodal] def clusterFrame(s: SparkSession, dir: String,
+      ch: MediaChannel): DataFrame =
+    graft.dedup.DedupQueries.connectedComponents(mediaPairs(s, dir, ch))
+      .select(col("id").as("media_id"), col("lbl").as("cluster"))
 
-  /** The media corpus laid out as the shard-partitioned BLOB lake the
-    * image purge routes against — `shardedCorpus`'s discipline with the
-    * content column carried: one Hive partition per tx_shards shard key
-    * of media_id (the SAME salted-md5 function that routes the purge
-    * plan), published once per corpus generation. Blobs never shuffle:
-    * the layout write is a per-row synthesis + partitioned write, and a
-    * purge later rewrites only the touched shard directories' rows.
+  /** A cluster frame's purge routes (shard, media_id): the generic
+    * [[graft.dedup.DedupQueries.purgePlan]] emitter's keep-one-
+    * representative rule, purges only — one deletion list for a
+    * channel's lake and its index.
     */
-  private[graft] def shardedMediaLake(s: SparkSession,
-      dir: String): String =
-    shardedBlobLake(s, dir, "graft_media_lake", imageBlobRows(s, dir))
+  private def purgeRoutes(clusters: DataFrame): DataFrame =
+    graft.dedup.DedupQueries
+      .purgePlan(clusters.withColumnRenamed("media_id", "doc_id"))
+      .filter(col("action") === "purge")
+      .select(col("shard"), col("doc_id").as("media_id"))
 
-  /** The generic shard-partitioned BLOB lake builder behind the image
-    * ([[shardedMediaLake]]), audio and video lakes: the rows' blobs
-    * land Hive-partitioned by the SAME salted-md5 shard key the purge
-    * plans route on, published once per corpus generation — one lake
-    * layout definition across modalities, so `applyPurge` is the one
-    * deletion pass for all of them.
+  /** A channel's corpus laid out as a shard-partitioned BLOB lake: one
+    * Hive partition per tx_shards shard key of media_id (the SAME
+    * salted-md5 function that routes the purge plans), the blobs
+    * exactly the bytes the near-dup chain fingerprints, published once
+    * per corpus generation — one lake layout across modalities, so
+    * `applyPurge` is the one deletion pass for all of them. Blobs never
+    * shuffle. The image lake is the manifest's `media_lake`.
     */
-  private def shardedBlobLake(s: SparkSession, dir: String,
-      family: String, rows: => DataFrame): String = synchronized {
+  private[graft] def shardedMediaLake(s: SparkSession, dir: String,
+      ch: MediaChannel = Image): String = synchronized {
     graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
-        dir, "documents.parquet", family) { tmp =>
-      rows
+        dir, "documents.parquet", ch.lakeFamily) { tmp =>
+      ch.blobs(ch.corpus(Tables(s, dir).documents))
         .withColumn("shard",
           graft.dedup.DedupQueries.shardOf(col("media_id")))
         .write.mode("overwrite").partitionBy("shard")
@@ -840,94 +1044,45 @@ object Multimodal {
     }
   }
 
-  /** The audio corpus as (media_id, rate, content) — the SAME per-row
-    * RIFF/WAVE synthesis [[audioPairs]] fingerprints, shared as the
-    * audio lake's row set so the lake's blobs are exactly the bytes
-    * the near-dup chain decoded.
+  /** A channel's blob lake in its POST-PURGE state — the media twin of
+    * `ensurePurgedTextLake`: the channel's purge routes applied once
+    * per lake generation (the remaining-probe + `applyPurge` +
+    * `_purge_applied` marker), so the deletion is durable and never
+    * re-run.
     */
-  private def audioBlobRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val g    = id - (id % 3)
-          val gain = 1L << (id % 3).toInt
-          val rate = 8000 + (g % 5).toInt * 2000
-          val n    = (640 + (g % 5) * 64).toInt
-          val synth = Array.tabulate(n) { i =>
-            val s0 = (g * 2654435761L + i.toLong * 7 +
-              (g % 13 + 1) * i.toLong * i +
-              (g % 29 + 1) * i.toLong * 11) % 65536 - 32768
-            (s0 / gain).toShort
-          }
-          (id, rate, WavCodec.encode(rate, synth))
-        }
-      }.toDF("media_id", "rate", "content")
+  private[graft] def ensurePurgedMediaLake(s: SparkSession, dir: String,
+      ch: MediaChannel): String = {
+    val layout = shardedMediaLake(s, dir, ch)
+    graft.core.IndexDirs.appliedOnce(s.sparkContext.hadoopConfiguration,
+        layout, "_purge_applied") {
+      val plan = purgeRoutes(clusterFrame(s, dir, ch))
+      val remaining = s.read.parquet(s"$layout/media")
+        .join(plan.select(col("media_id")), Seq("media_id"), "left_semi")
+        .limit(1).collect()
+      if (remaining.nonEmpty)
+        graft.dedup.DedupQueries.applyPurge(s, layout, plan,
+          sub = "media", key = "media_id")
+    }
+    layout
   }
 
-  /** The video corpus as (media_id, fps, content) — the SAME per-row
-    * YUV4MPEG2 synthesis [[videoPairs]] fingerprints.
+  /** The `dd_purge_apply` contract on a media lake: apply the
+    * channel's purge (per-shard anti-join, compacted, crash-safe swaps,
+    * untouched shards byte-identical) and report per-shard surviving
+    * counts READ BACK FROM THE POST-DELETE LAYOUT next to the plan's
+    * purge counts — full-outer, so a fully-purged shard still reports
+    * n_media = 0.
     */
-  private def videoBlobRows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val g   = id - (id % 3)
-          val v   = (id % 3).toInt
-          val w   = ((g % 8) + 1).toInt * 2
-          val h   = ((g % 4) + 1).toInt * 2
-          val fps = 24 + (g % 4).toInt * 6
-          val nf  = (61 + g % 5).toInt
-          def base(f: Int): Int =
-            (((g * 2654435761L + f.toLong * f * ((g % 97) + 1) * 31 +
-              f.toLong * ((g % 89) + 1) * 7) % 65521) % 200).toInt
-          (id, fps, Y4mCodec.encode(w, h, fps, 1, nf,
-            (f, i) => base(f) + (i * 3) % 50 + v))
-        }
-      }.toDF("media_id", "fps", "content")
-  }
-
-  /** The image deletion pass EXECUTED against the media lake —
-    * `dd_purge_apply`'s contract for the blob modality (the r11
-    * verdict's "purge execution for non-text modalities" gap):
-    * [[imagePurge]] emits the lists; this row applies them to the
-    * shard-partitioned blob lake through the SAME generic
-    * `applyPurge` (per-shard anti-join on media_id, blobs moved only
-    * within their own shard's rewrite, compacted, crash-safe swaps,
-    * untouched shards byte-identical) and reports per-shard surviving
-    * media counts READ BACK FROM THE POST-DELETE LAYOUT next to the
-    * plan's purge counts. The oracle reconciles both from scratch over
-    * the image cluster closure, so the row passes only if the physical
-    * deletion removed exactly the planned blobs in exactly the planned
-    * shards. Applied once per corpus generation; idempotence is
-    * PurgeApplySpec's pin.
-    */
-  /** The ONE media-lake deletion run shared by the image, audio, and
-    * video purge-apply rows: route the modality's cluster frame through
-    * the generic [[graft.dedup.DedupQueries.purgePlan]] emitter, apply
-    * once per corpus generation via the generic `applyPurge` (per-shard
-    * anti-join, compacted, crash-safe swaps, untouched shards
-    * byte-identical), and report per-shard surviving counts READ BACK
-    * FROM THE POST-DELETE LAYOUT next to the plan's purge counts —
-    * full-outer, so a fully-purged shard still reports n_media = 0.
-    */
-  private def mediaPurgeApplyRun(s: SparkSession, layout: String,
-      clusters: DataFrame): DataFrame = {
-    val plan = graft.dedup.DedupQueries
-      .purgePlan(clusters.withColumnRenamed("media_id", "doc_id"))
-      .filter(col("action") === "purge")
-      .select(col("shard"), col("doc_id").as("media_id"))
-    applyMediaPurge(s, layout, plan)
+  private def mediaPurgeApplyRun(s: SparkSession, dir: String,
+      ch: MediaChannel): DataFrame = {
+    val layout = ensurePurgedMediaLake(s, dir, ch)
     val survived = s.read.parquet(s"$layout/media")
       .groupBy(col("shard")).agg(count(lit(1)).as("n_media"))
       // the layout's partition column reads back int32 — int64 on
       // the wire, and match the plan's key type for the join
       .select(col("shard").cast("long").as("shard"), col("n_media"))
-    val purged = plan.groupBy(col("shard"))
+    val purged = purgeRoutes(clusterFrame(s, dir, ch)).groupBy(col("shard"))
       .agg(count(lit(1)).as("n_purged"))
-    // FULL outer (the dd_purge_apply rule): a shard whose media were
-    // all purged still reports with n_media = 0
     survived.join(purged, Seq("shard"), "full")
       .select(col("shard"),
         coalesce(col("n_media"), lit(0L)).as("n_media"),
@@ -935,49 +1090,53 @@ object Multimodal {
       .orderBy(col("shard"))
   }
 
-  /** Apply a routed media purge plan once, marker-recorded: the
-    * remaining-probe + applyPurge + `_purge_applied` marker shared by
-    * the gated purge rows and [[ensurePurgedMediaLake]], so a durable
-    * deletion is applied exactly once per lake generation.
+  /** The near-dup rows of one channel, each oracle-gated by DuckDB SQL
+    * over the channel's closed-form synthesis parameters:
+    *  - `dd_<c>_dups`: the [[mediaPairs]] report;
+    *  - `dd_<c>_clusters`: its closure ([[clusterFrame]]; the oracle
+    *    walks it with a recursive CTE);
+    *  - `dd_<c>_purge_apply`: the purge executed against the channel's
+    *    blob lake ([[mediaPurgeApplyRun]]); the oracle reconciles the
+    *    per-shard counts from scratch over the same closure;
+    *  - `dd_<c>_probe`: the night-1 admission SCREEN against the
+    *    persisted index ([[probeMediaIndex]]: dup/new at Hamming ≤ 5
+    *    with the best distance, 99 = no candidate);
+    *  - `dd_<c>_upsert`: the same screen after a base build minus the
+    *    media_id % 5 == 0 slice plus the nightly append of that slice —
+    *    the probe's oracle verbatim, which it meets only if the band
+    *    routing and the sig append are both right;
+    *  - `dd_<c>_index_delete`: the screen after the channel's purge
+    *    propagated into the index; the oracle screens against the
+    *    corpus minus the closure's non-representatives. The cap is
+    *    probe-time, so bands whose membership drops back under it must
+    *    produce candidates again.
+    * The two-night ingest row is `StreamingQueries.mediaStreamIngest`
+    * over [[streamIngestOracle]].
     */
-  private def applyMediaPurge(s: SparkSession, layout: String,
-      plan: => DataFrame): Unit =
-    graft.core.IndexDirs.appliedOnce(s.sparkContext.hadoopConfiguration,
-        layout, "_purge_applied") {
-      val p = plan
-      val remaining = s.read.parquet(s"$layout/media")
-        .join(p.select(col("media_id")), Seq("media_id"), "left_semi")
-        .limit(1).collect()
-      if (remaining.nonEmpty)
-        graft.dedup.DedupQueries.applyPurge(s, layout, p,
-          sub = "media", key = "media_id")
-    }
+  final class MediaRows(ch: MediaChannel) {
+    java.util.Objects.requireNonNull(ch,
+      "media channel read before its initialisation")
 
-  /** The image blob lake in its POST-PURGE state — the media-side twin
-    * of `ensurePurgedTextLake`, consumed by the manifest's lake audit.
-    */
-  private[graft] def ensurePurgedMediaLake(s: SparkSession,
-      dir: String): String = {
-    val layout = shardedMediaLake(s, dir)
-    applyMediaPurge(s, layout, graft.dedup.DedupQueries
-      .purgePlan(imageClusterFrame(s, dir)
-        .withColumnRenamed("media_id", "doc_id"))
-      .filter(col("action") === "purge")
-      .select(col("shard"), col("doc_id").as("media_id")))
-    layout
-  }
+    private def row(kind: String, oracle: String)(
+        run: (SparkSession, String) => DataFrame): Query =
+      Query(s"dd_${ch.name}_$kind", run, oracle = Some(oracle))
 
-  val imagePurgeApply = Query(
-    "dd_image_purge_apply",
-    (s, dir) => mediaPurgeApplyRun(s, shardedMediaLake(s, dir),
-      imageClusterFrame(s, dir)),
-    oracle = Some(s"""
-      WITH RECURSIVE $imagePairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      purged AS (SELECT media_id FROM cl WHERE media_id <> cluster),
+    private def screenNight1(s: SparkSession, dir: String,
+        idx: String): DataFrame =
+      probeMediaIndex(s, idx, ch.hashes(ch.night1(Tables(s, dir).documents)))
+
+    val dups: Query = row("dups", s"""
+      WITH ${pairCtes(ch)}
+      SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b
+    """)((s, dir) => mediaPairs(s, dir, ch).orderBy(col("id_a"), col("id_b")))
+
+    val clusters: Query = row("clusters", s"""
+      WITH RECURSIVE ${clusterCtes(ch)}
+      SELECT media_id, cluster FROM cl ORDER BY media_id
+    """)((s, dir) => clusterFrame(s, dir, ch).orderBy(col("media_id")))
+
+    val purgeApply: Query = row("purge_apply", s"""
+      WITH RECURSIVE ${clusterCtes(ch)},
       routed AS (
         SELECT d.doc_id AS media_id,
           ('0x' || substr(md5('shard1:' || d.doc_id::VARCHAR), 1, 8))::BIGINT
@@ -988,106 +1147,67 @@ object Multimodal {
         sum(CASE WHEN is_purged THEN 0 ELSE 1 END)::BIGINT AS n_media,
         sum(CASE WHEN is_purged THEN 1 ELSE 0 END)::BIGINT AS n_purged
       FROM routed GROUP BY 1 ORDER BY 1
-    """),
-  )
+    """)((s, dir) => mediaPurgeApplyRun(s, dir, ch))
 
-  /** The shared oracle tail for the media purge-apply rows: per-shard
-    * survivor/purged counts reconciled from scratch over a modality's
-    * `cl(media_id, cluster)` closure — callers prepend
-    * `WITH RECURSIVE <pairCtes>, edges, <ccWalkSql>, cl`.
-    */
-  private def mediaPurgeApplyOracleTail: String = s"""
-      purged AS (SELECT media_id FROM cl WHERE media_id <> cluster),
-      routed AS (
-        SELECT d.doc_id AS media_id,
-          ('0x' || substr(md5('shard1:' || d.doc_id::VARCHAR), 1, 8))::BIGINT
-            % 16 AS shard,
-          (p.media_id IS NOT NULL) AS is_purged
-        FROM documents d LEFT JOIN purged p ON p.media_id = d.doc_id)
-      SELECT shard,
-        sum(CASE WHEN is_purged THEN 0 ELSE 1 END)::BIGINT AS n_media,
-        sum(CASE WHEN is_purged THEN 1 ELSE 0 END)::BIGINT AS n_purged
-      FROM routed GROUP BY 1 ORDER BY 1"""
+    val probe: Query = row("probe", s"""
+      WITH ${admissionCtes(ch)},
+      ${mediaScreenCtes(ch, "p", "pc", "in1")}
+      SELECT media_id, status, best_hamming FROM iverdict_p
+      ORDER BY media_id
+    """)((s, dir) => screenNight1(s, dir, buildMediaIndex(s, dir, ch)))
 
-  /** The audio deletion pass EXECUTED against the audio blob lake —
-    * the third modality leg of `dd_purge_apply`'s contract (text and
-    * image legs shipped r11/r12; the r12 verdict listed audio/video as
-    * the remaining gap): the [[audioClusterFrame]] closure routes
-    * through the generic purge emitter and the generic per-shard
-    * deletion pass over a lake whose blobs are the exact RIFF/WAVE
-    * bytes the near-dup chain fingerprinted. The oracle reconciles the
-    * per-shard counts from scratch over the same closure; surviving
-    * blob bytes untouched is PurgeApplySpec's pin.
+    val upsert: Query = row("upsert", probe.oracle.get)(
+      (s, dir) => screenNight1(s, dir, upsertDemoMediaIndex(s, dir, ch)))
+
+    val indexDelete: Query = row("index_delete", s"""
+      WITH RECURSIVE ${clusterCtes(ch)},
+      ${admissionCtes(ch)},
+      sur AS (
+        SELECT * FROM pc WHERE media_id NOT IN (SELECT media_id FROM purged)
+      ),
+      ${mediaScreenCtes(ch, "d", "sur", "in1")}
+      SELECT media_id, status, best_hamming FROM iverdict_d
+      ORDER BY media_id
+    """)((s, dir) => screenNight1(s, dir, deleteDemoMediaIndex(s, dir, ch)))
+  }
+
+  val imageRows = new MediaRows(Image)
+  val audioRows = new MediaRows(Audio)
+  val videoRows = new MediaRows(Video)
+
+  /** Per-shard deletion lists over the IMAGE near-dup clusters,
+    * through the generic [[graft.dedup.DedupQueries.purgePlan]] emitter
+    * (the text chain is `dd_purge_plan`): the same keep-one-
+    * representative rule, purge rows and salted-md5 shard routing for
+    * any modality's cluster frame, checked by the driver. Images in no
+    * cluster are implicit keeps and carry no row. Zero shuffles beyond
+    * the cluster chain and the presentation sort (PurgePlanSpec pins
+    * keep-one-per-cluster, purge + keep = members, and corpus
+    * identity).
     */
-  val audioPurgeApply = Query(
-    "dd_audio_purge_apply",
-    (s, dir) => mediaPurgeApplyRun(s,
-      shardedBlobLake(s, dir, "graft_audio_lake", audioBlobRows(s, dir)),
-      audioClusterFrame(s, dir)),
+  val imagePurge = Query(
+    "dd_image_purge",
+    (s, dir) => graft.dedup.DedupQueries
+      .purgePlan(clusterFrame(s, dir, Image)
+        .withColumnRenamed("media_id", "doc_id"))
+      .withColumnRenamed("doc_id", "media_id")
+      .orderBy(col("media_id")),
     oracle = Some(s"""
-      WITH RECURSIVE $audioPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      $mediaPurgeApplyOracleTail
+      WITH RECURSIVE ${clusterCtes(Image)}
+      SELECT ('0x' || substr(md5('shard1:' || media_id::VARCHAR), 1, 8))::BIGINT
+               % 16 AS shard,
+             media_id, cluster,
+             CASE WHEN media_id = cluster THEN 'keep' ELSE 'purge' END
+               AS action
+      FROM cl ORDER BY media_id
     """),
   )
-
-  /** The video deletion pass EXECUTED against the video blob lake —
-    * the fourth and last modality leg, completing the matrix: every
-    * modality's near-dup closure now has an executed, reconciled
-    * deletion path against its own sharded lake.
-    */
-  val videoPurgeApply = Query(
-    "dd_video_purge_apply",
-    (s, dir) => mediaPurgeApplyRun(s,
-      shardedBlobLake(s, dir, "graft_video_lake", videoBlobRows(s, dir)),
-      videoClusterFrame(s, dir)),
-    oracle = Some(s"""
-      WITH RECURSIVE $videoPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      $mediaPurgeApplyOracleTail
-    """),
-  )
-
-  /** Cross-modal PAIR CURATION — the LAION-style joint filter that
-    * turns per-modality verdicts into ONE decision per (media,
-    * caption) pair: an image-text pair survives only if the image
-    * passes quality gating, the image is its near-dup cluster's
-    * REPRESENTATIVE (keep one per cluster — non-reps are dropped here,
-    * closing the loop `dd_image_clusters` opens), and the caption
-    * passes the text keep rule. Every kernel is shared verbatim with
-    * its single-modality query: the BMP decode + quality reduction is
-    * [[imageQuality]]'s (generalized to the full [[imagePairs]]
-    * re-encode corpus via the (g, v) synthesis parameters), clusters
-    * are [[imagePairs]] → connected components (= `dd_image_clusters`),
-    * and the caption verdict is `TextQueries.qualityScored` — one
-    * definition each, so the manifest cannot drift from the filters it
-    * composes. Drop reasons are prioritized (image_quality >
-    * image_dup > text_quality) so each dropped pair names the FIRST
-    * gate it failed, and `keep = (drop_reason = 'ok')`.
-    *
-    * Scale shape: image verdicts compute in the codec decode seam
-    * (blobs never shuffle); the caption verdict is per-row expression
-    * work on the same documents scan, joined on doc_id (co-partitioned
-    * scans of the same key); the cluster frame is CORPUS-derived (one
-    * row per image in any near-dup pair — at web scale a large
-    * corpus fraction), so it is joined PLAIN and AQE decides the
-    * strategy at runtime: broadcast when it measures small, shuffled
-    * hash join when it doesn't — the same discipline as the text
-    * side's `dd_cluster_split`. No corpus-sized shuffle beyond the
-    * presentation sort at test SFs.
-    */
   /** ONE decode pass per image producing BOTH the quality verdict and
     * the 8-dim alignment feature vector — the shared seam behind
     * [[pairManifest]] and [[alignScore]], so the manifest's gates and
     * the standalone score can never disagree AND the blobs are walked
     * once. The quality reduction is [[imageQuality]]'s (generalized to
-    * the full [[imagePairs]] re-encode corpus via the (g, v) synthesis
+    * the full [[Image]] channel corpus via the (g, v) synthesis
     * parameters); the feature vector is the 8 index-strided mean
     * intensities m_j = (Σ_{i ≡ j mod 8} grey_i) / |{i ≡ j mod 8}| —
     * integer-exact moments of the REAL decoded pixels (truncating
@@ -1096,15 +1216,10 @@ object Multimodal {
   private[multimodal] def imageFeatureFrame(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-    params.mapPartitions { it =>
-      it.map { id =>
-        val g = id - (id % 3) // base image id (the imagePairs corpus)
-        val v = (id % 3).toInt // brightness shift of this re-encode
-        val w = (g % 31 + 1).toInt
-        val h = (g % 17 + 1).toInt
-        val bytes = BmpCodec.encode(w, h,
-          (x, y) => ((g * 7 + (y.toLong * w + x) * 3 + v) % 256).toInt)
+    Image.blobs(Image.corpus(Tables(s, dir).documents))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+      it.map { case (id, bytes) =>
         val (dw, dh, grey) = BmpCodec.decodeGrey(bytes)
         val n = dw.toLong * dh
         var sum = 0L; var ss = 0L; var sharp = 0L
@@ -1167,7 +1282,7 @@ object Multimodal {
     * recomputing the strided image moments from the synthesis formula
     * and the per-mille-floored embedding reduction; shared verbatim by
     * `mm_align_score` and `mm_pair_manifest`. Depends on the `p`
-    * params CTE ([[imageParamsCte]]).
+    * CTE of the [[Image]] corpus parameters.
     */
   private val alignDotsSql = """
       afeats AS (
@@ -1229,8 +1344,8 @@ object Multimodal {
         .orderBy(col("media_id"))
     },
     oracle = Some(s"""
-      WITH $imageParamsCte,
-      $alignDotsSql
+      WITH p AS (${Image.corpusSql}
+      ), $alignDotsSql
       SELECT media_id, dot,
         CASE WHEN mm > 0 AND ee > 0
              THEN round(dot / (sqrt(mm) * sqrt(ee)), 4)
@@ -1240,11 +1355,39 @@ object Multimodal {
     """),
   )
 
+  /** Cross-modal PAIR CURATION — the LAION-style joint filter that
+    * turns per-modality verdicts into ONE decision per (media,
+    * caption) pair: an image-text pair survives only if the image
+    * passes quality gating, the image is its near-dup cluster's
+    * REPRESENTATIVE (keep one per cluster — non-reps are dropped here,
+    * closing the loop `dd_image_clusters` opens), and the caption
+    * passes the text keep rule. Every kernel is shared verbatim with
+    * its single-modality query: the BMP decode + quality reduction is
+    * [[imageQuality]]'s (generalized to the full [[Image]] channel
+    * re-encode corpus via the (g, v) synthesis parameters), clusters
+    * are the image [[clusterFrame]] (= `dd_image_clusters`),
+    * and the caption verdict is `TextQueries.qualityScored` — one
+    * definition each, so the manifest cannot drift from the filters it
+    * composes. Drop reasons are prioritized (image_quality >
+    * image_dup > text_quality) so each dropped pair names the FIRST
+    * gate it failed, and `keep = (drop_reason = 'ok')`.
+    *
+    * Scale shape: image verdicts compute in the codec decode seam
+    * (blobs never shuffle); the caption verdict is per-row expression
+    * work on the same documents scan, joined on doc_id (co-partitioned
+    * scans of the same key); the cluster frame is CORPUS-derived (one
+    * row per image in any near-dup pair — at web scale a large
+    * corpus fraction), so it is joined PLAIN and AQE decides the
+    * strategy at runtime: broadcast when it measures small, shuffled
+    * hash join when it doesn't — the same discipline as the text
+    * side's `dd_cluster_split`. No corpus-sized shuffle beyond the
+    * presentation sort at test SFs.
+    */
   val pairManifest = Query(
     "mm_pair_manifest",
     (s, dir) => {
       val imgQ = imageFeatureFrame(s, dir)
-      val clusters = imageClusterFrame(s, dir)
+      val clusters = clusterFrame(s, dir, Image)
       val captions = graft.text.TextQueries.qualityScored(s, dir)
         .select(col("doc_id"), (col("verdict") === "keep").as("text_keep"))
       imgQ
@@ -1272,11 +1415,7 @@ object Multimodal {
         .orderBy(col("media_id"))
     },
     oracle = Some(s"""
-      WITH RECURSIVE $imagePairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
+      WITH RECURSIVE ${clusterCtes(Image)},
       ${graft.text.TextQueries.qualityScoredSql},
       iq AS (
         SELECT media_id, w, h, w * h AS n,
@@ -1643,285 +1782,6 @@ object Multimodal {
     """),
   )
 
-  private val AudioBins = Array(1, 2, 4, 8, 16, 32)
-
-  /** 60-bit audio fingerprint from decoded PCM: 10 windows × 64
-    * samples, bit (win·6 + b) = 1 iff the window's Walsh–Hadamard
-    * coefficient c_k (k = [[AudioBins]](b), the [[spectrogram]]
-    * kernel) is negative. WHT signs, not energy deltas, on purpose:
-    * signs are content-sensitive across unrelated clips (measured 6
-    * colliding group-pairs in 79 800 — an energy-contour hash
-    * collides two orders of magnitude more on phase-shifted
-    * synthetic audio), integer-exact (the spectrogram's ±1-basis
-    * argument), and gain-robust — a volume change scales every
-    * coefficient by the same positive factor, flipping only
-    * coefficients near zero, so a re-levelled copy sits a few bits
-    * away, not 30.
-    */
-  private def audioHash(samples: Array[Short]): Long = {
-    var h   = 0L
-    var win = 0
-    while (win < 10) {
-      var bi = 0
-      while (bi < 6) {
-        val k = AudioBins(bi)
-        var c = 0L
-        var j = 0
-        while (j < 64) {
-          val sign =
-            if (java.lang.Integer.bitCount(k & j) % 2 == 0) 1 else -1
-          c += samples(win * 64 + j).toLong * sign
-          j += 1
-        }
-        if (c < 0) h |= 1L << (win * 6 + bi)
-        bi += 1
-      }
-      win += 1
-    }
-    h
-  }
-
-  /** The banded-candidate pair pipeline shared by [[audioDups]] and
-    * [[audioClusters]] — the audio leg of the near-dup triangle
-    * ([[imagePairs]] is the image leg, `dd_minhash_lsh` the text
-    * leg). Corpus: every document id synthesizes a clip; ids sharing
-    * a base group (g = id − id%3) are GAIN-SHIFTED re-levelings of
-    * one clip (stored PCM divided by 2^(id%3) — the re-encode an
-    * audio pipeline must catch), decoded from real RIFF/WAVE bytes in
-    * the per-partition codec seam. Then the [[imagePairs]] tail
-    * verbatim: 6 ten-bit bands, ≤50-per-band hot-band cap on the same
-    * exchange the self-join uses, `bit_count(xor) ≤ 5` confirm —
-    * pigeonhole keeps banding lossless at the threshold.
-    */
-  private def audioPairs(s: SparkSession, dir: String): DataFrame = {
-    // corpus hashing = the shared decode-seam fingerprint kernel (the
-    // Knuth-multiplier phase term in the synth de-aliases base clips:
-    // a plain g*31 phase walk left 93 of 1.39M group pairs with
-    // IDENTICAL sign fingerprints at sf0.1, measured; this has zero)
-    val hashes = audioHashesOfParams(audioCorpusParams(s, dir))
-      .withColumnRenamed("dhash", "ahash")
-    val bands = hashes.select(col("media_id"), col("ahash"),
-      explode(expr("transform(sequence(0, 5), b -> " +
-        "struct(b AS bno, shiftright(ahash, b * 10) & 1023 AS bval))"))
-        .as("b"))
-      .select(col("media_id"), col("ahash"),
-        col("b.bno").as("bno"), col("b.bval").as("bval"))
-    val wBand  = Window.partitionBy(col("bno"), col("bval"))
-    val capped = bands.withColumn("bc", count(lit(1)).over(wBand))
-      .filter(col("bc") <= 50).drop("bc")
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a.bno") === col("b.bno") && col("a.bval") === col("b.bval") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        expr("cast(bit_count(a.ahash ^ b.ahash) as int)").as("hamming"))
-      .filter(col("hamming") <= 5)
-      .distinct()
-  }
-
-  /** The SQL twin of [[audioPairs]] up to a `pairs` CTE: the
-    * fingerprint recomputed closed-form from the synthesis parameters
-    * — everything integer (WHT coefficients are exact sums of int16,
-    * `//` is DuckDB's truncating division, matching Scala `/`).
-    */
-  // a def, not a val: dd_audio_purge_apply interpolates this ABOVE the
-  // declaration point (Scala object-init order — the tx_pack_bpe lesson)
-  private def audioPairCtes = """
-      p AS (
-        SELECT doc_id AS media_id,
-               doc_id - (doc_id % 3) AS g,
-               (1::BIGINT << (doc_id % 3)::INT) AS gain
-        FROM documents
-      ), hh AS (
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              list_sum(list_transform(range(0, 64), j ->
-                (((g * 2654435761 + ((b // 6) * 64 + j) * 7
-                   + (g % 13 + 1) * ((b // 6) * 64 + j) * ((b // 6) * 64 + j)
-                   + (g % 29 + 1) * ((b // 6) * 64 + j) * 11)
-                  % 65536 - 32768) // gain)
-                * (CASE WHEN bit_count(([1,2,4,8,16,32][(b % 6)::INT + 1])
-                                       & j) % 2 = 0
-                   THEN 1 ELSE -1 END))) < 0
-            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT AS ahash
-        FROM p
-      ), bands0 AS (
-        SELECT media_id, ahash, unnest(range(0, 6)) AS bno FROM hh
-      ), bands1 AS (
-        SELECT media_id, ahash, bno,
-               (ahash >> (bno * 10)::INT) & 1023 AS bval
-        FROM bands0
-      ), bands AS (
-        SELECT media_id, ahash, bno, bval FROM (
-          SELECT *, count(*) OVER (PARTITION BY bno, bval) AS bc
-          FROM bands1)
-        WHERE bc <= 50
-      ), pairs AS (
-        SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-          bit_count(xor(a.ahash, b.ahash))::INT AS hamming
-        FROM bands a JOIN bands b
-          ON a.bno = b.bno AND a.bval = b.bval AND a.media_id < b.media_id
-        WHERE bit_count(xor(a.ahash, b.ahash)) <= 5
-      )"""
-
-  /** Audio near-duplicate detection over the WHT-sign fingerprints —
-    * the audio leg of the near-dup triangle (text `dd_minhash_lsh`,
-    * image `dd_image_dups`). The planted near-dups are gain-shifted
-    * re-levelings of each base clip; the handful of cross-group pairs
-    * the detector also reports are genuine fingerprint
-    * near-collisions, deterministic on both engines.
-    */
-  val audioDups = Query(
-    "dd_audio_dups",
-    (s, dir) => audioPairs(s, dir).orderBy(col("id_a"), col("id_b")),
-    oracle = Some(s"""
-      WITH $audioPairCtes
-      SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b
-    """),
-  )
-
-  /** The ONE audio near-dup cluster frame (media_id, cluster) — shared
-    * by [[audioClusters]] (the report) and [[audioPurgeApply]] (the
-    * executed deletion), the [[imageClusterFrame]] discipline on the
-    * audio leg.
-    */
-  private[multimodal] def audioClusterFrame(s: SparkSession,
-      dir: String): DataFrame =
-    graft.dedup.DedupQueries.connectedComponents(audioPairs(s, dir))
-      .select(col("id").as("media_id"), col("lbl").as("cluster"))
-
-  /** Transitive closure of [[audioDups]]' pairs — the keep-one-per-
-    * cluster decision table, exactly [[imageClusters]]' machinery.
-    */
-  val audioClusters = Query(
-    "dd_audio_clusters",
-    (s, dir) => audioClusterFrame(s, dir).orderBy(col("media_id")),
-    oracle = Some(s"""
-      WITH RECURSIVE $audioPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql}
-      SELECT id AS media_id, min(lbl) AS cluster
-      FROM walk GROUP BY id ORDER BY media_id
-    """),
-  )
-
-  /** The banded-candidate pair pipeline of [[videoDups]] — the VIDEO
-    * leg of the near-dup family (text MinHash, image dHash, audio
-    * WHT-signs): a 60-bit TEMPORAL fingerprint, bit f = 1 iff frame
-    * f+1's luma sum is below frame f's — the luma-trajectory contour,
-    * walked out of real YUV4MPEG2 bytes in the decode seam (the
-    * mm_scenecut machinery). The planted near-dups are uniform
-    * BRIGHTNESS-SHIFTED re-encodes of each base clip (+v on every
-    * pixel, no wrap — the synthesis caps luma at 250 so the shift
-    * never saturates): a uniform shift moves every frame sum by
-    * exactly v·px, so the contour — and the fingerprint — is
-    * IDENTICAL, the invariance a contour hash exists for. Per-frame
-    * luma levels walk a quadratic Knuth family (coefficients keyed by
-    * g mod 97 / mod 89; a linear walk left thousands of unrelated
-    * clips with colliding contours — the dd_audio_dups lesson,
-    * re-measured here), so unrelated clips collide zero times in
-    * 1.39 M group pairs at sf0.1. Then the [[imagePairs]] tail
-    * verbatim: 6 ten-bit bands, ≤50 hot-band cap, bit_count ≤ 5.
-    */
-  private def videoPairs(s: SparkSession, dir: String): DataFrame = {
-    // corpus hashing = the shared decode-seam fingerprint kernel
-    val hashes = videoHashesOfParams(videoCorpusParams(s, dir))
-      .withColumnRenamed("dhash", "vhash")
-    val bands = hashes.select(col("media_id"), col("vhash"),
-      explode(expr("transform(sequence(0, 5), b -> " +
-        "struct(b AS bno, shiftright(vhash, b * 10) & 1023 AS bval))"))
-        .as("b"))
-      .select(col("media_id"), col("vhash"),
-        col("b.bno").as("bno"), col("b.bval").as("bval"))
-    val wBand  = Window.partitionBy(col("bno"), col("bval"))
-    val capped = bands.withColumn("bc", count(lit(1)).over(wBand))
-      .filter(col("bc") <= 50).drop("bc")
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a.bno") === col("b.bno") && col("a.bval") === col("b.bval") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        expr("cast(bit_count(a.vhash ^ b.vhash) as int)").as("hamming"))
-      .filter(col("hamming") <= 5)
-      .distinct()
-  }
-
-  /** SQL twin of [[videoPairs]] up to `pairs`: a uniform brightness
-    * shift and the constant per-frame pixel ramp cancel out of
-    * consecutive-frame comparisons (sum(f+1) < sum(f) ⟺
-    * base(f+1) < base(f)), so the oracle compares the closed-form
-    * per-frame BASE levels directly — everything integer.
-    */
-  // a def, not a val: dd_video_purge_apply interpolates this above the
-  // declaration point (object-init order)
-  private def videoPairCtes = """
-      p AS (
-        SELECT doc_id AS media_id, doc_id - (doc_id % 3) AS g
-        FROM documents
-      ), hh AS (
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              ((g * 2654435761 + (b+1)*(b+1) * ((g % 97) + 1) * 31
-                 + (b+1) * ((g % 89) + 1) * 7) % 65521) % 200
-              <
-              ((g * 2654435761 + b*b * ((g % 97) + 1) * 31
-                 + b * ((g % 89) + 1) * 7) % 65521) % 200
-            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT AS vhash
-        FROM p
-      ), bands0 AS (
-        SELECT media_id, vhash, unnest(range(0, 6)) AS bno FROM hh
-      ), bands1 AS (
-        SELECT media_id, vhash, bno,
-               (vhash >> (bno * 10)::INT) & 1023 AS bval
-        FROM bands0
-      ), bands AS (
-        SELECT media_id, vhash, bno, bval FROM (
-          SELECT *, count(*) OVER (PARTITION BY bno, bval) AS bc
-          FROM bands1)
-        WHERE bc <= 50
-      ), pairs AS (
-        SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
-          bit_count(xor(a.vhash, b.vhash))::INT AS hamming
-        FROM bands a JOIN bands b
-          ON a.bno = b.bno AND a.bval = b.bval AND a.media_id < b.media_id
-        WHERE bit_count(xor(a.vhash, b.vhash)) <= 5
-      )"""
-
-  /** Video near-duplicate detection over the temporal luma-contour
-    * fingerprints — the fourth and last modality leg. */
-  val videoDups = Query(
-    "dd_video_dups",
-    (s, dir) => videoPairs(s, dir).orderBy(col("id_a"), col("id_b")),
-    oracle = Some(s"""
-      WITH $videoPairCtes
-      SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b
-    """),
-  )
-
-  /** The ONE video near-dup cluster frame — [[audioClusterFrame]]'s
-    * twin on the video leg.
-    */
-  private[multimodal] def videoClusterFrame(s: SparkSession,
-      dir: String): DataFrame =
-    graft.dedup.DedupQueries.connectedComponents(videoPairs(s, dir))
-      .select(col("id").as("media_id"), col("lbl").as("cluster"))
-
-  /** Transitive closure of [[videoDups]]' pairs — [[imageClusters]]'
-    * machinery on the video leg. */
-  val videoClusters = Query(
-    "dd_video_clusters",
-    (s, dir) => videoClusterFrame(s, dir).orderBy(col("media_id")),
-    oracle = Some(s"""
-      WITH RECURSIVE $videoPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql}
-      SELECT id AS media_id, min(lbl) AS cluster
-      FROM walk GROUP BY id ORDER BY media_id
-    """),
-  )
-
   /** Keyframe storyboard manifest — what a video ingestion pipeline
     * actually EMITS from scene detection: one representative frame per
     * scene (frame 0 plus every cut frame, [[sceneCut]]'s integer jump
@@ -2131,12 +1991,8 @@ object Multimodal {
     """),
   )
 
-  // ──────────────── persisted image near-dup index (admission) ────
+  // ──────────────── persisted media near-dup index (admission) ────
 
-  /** Explicit read schemas for the image index's two tables — the
-    * band-index rule: every reachable state (including a bucket
-    * directory that does not exist yet) must stay readable.
-    */
   /** The media index's layout — the shared banded near-dup layout
     * ([[graft.operators.BandedIndex]]): (media_id, dhash) signatures
     * bucketed by `sb`, (media_id, dhash, bno, bval) band rows bucketed
@@ -2149,87 +2005,13 @@ object Multimodal {
     bandsSchema = "media_id LONG, dhash LONG, bno INT, bval LONG, bkt INT",
     sigBktCol = "sb")
 
-  /** Decode-seam hashing: one (media_id, dhash) row per image
-    * described by its synthesis params (media_id, g, v, w, h) — the
-    * blobs are encoded and [[dhash60]]-decoded per partition (the
-    * sanctioned codec seam; a production pipeline reads the blob
-    * column of the media lake here) and never shuffle.
-    */
-  private[graft] def hashesOfParams(params: DataFrame): DataFrame = {
-    import params.sparkSession.implicits._
-    params.select(col("media_id").cast("long"), col("g").cast("long"),
-        col("v").cast("int"), col("w").cast("int"), col("h").cast("int"))
-      .as[(Long, Long, Int, Int, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, g, v, w, h) =>
-          val bytes = BmpCodec.encode(w, h,
-            (x, y) => ((g * 7 + (y.toLong * w + x) * 3 + v) % 256).toInt)
-          (id, dhash60(bytes))
-        }
-      }.toDF("media_id", "dhash")
-  }
-
-  /** The image corpus as synthesis params — the Spark twin of the
-    * oracle's `p` CTE ([[imageParamsCte]]).
-    */
-  private[graft] def imageCorpusParams(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).documents
-      .select(col("doc_id").as("media_id"),
-        (col("doc_id") - col("doc_id") % 3).as("g"),
-        (col("doc_id") % 3).cast("int").as("v"))
-      .withColumn("w", (col("g") % 31 + 1).cast("int"))
-      .withColumn("h", (col("g") % 17 + 1).cast("int"))
-
-  /** Night-1 media arrivals for the image admission demos: a NEW
-    * brightness shift (v = 3) of existing bases — the classic re-export
-    * the screen must catch — plus a genuinely fresh wave of never-seen
-    * base images. The fresh wave uses LARGER canvases (97–127 ×
-    * 53–69) than the corpus's ≤31×17: at corpus dims the 11×6 dhash
-    * sample grid degenerates (few distinct gradient patterns, so any
-    * "fresh" hash collides with some corpus image within Hamming 5)
-    * and the admission demos could not observe their own ingest — a
-    * fresh image must be hashable as genuinely fresh for "batch 2
-    * catches batch 1's re-encode" to be distinguishable from corpus
-    * collisions.
-    */
-  private def freshDims(df: DataFrame): DataFrame = df
-    .withColumn("w", (col("media_id") % 31 + 97).cast("int"))
-    .withColumn("h", (col("media_id") % 17 + 53).cast("int"))
-
-  private[graft] def imageIncoming(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 500000).as("media_id"),
-        (col("doc_id") - col("doc_id") % 3).as("g"), lit(3).as("v"))
-      .withColumn("w", (col("g") % 31 + 1).cast("int"))
-      .withColumn("h", (col("g") % 17 + 1).cast("int"))
-      .unionByName(freshDims(
-        d.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 600000).as("media_id"),
-            (col("doc_id") + 1000000).as("g"), lit(0).as("v"))))
-
-  /** Night-2 arrivals: re-encodes (v = 1, same canvas) of night 1's
-    * FRESH wave — dups ONLY if night 1's admissions were ingested —
-    * plus a second fresh wave. The re-encode wave keys its canvas off
-    * the night-1 id (media_id − 100000) so the twin pair hashes the
-    * same grid.
-    */
-  private[graft] def imageIncoming2(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 3)
-      .select((col("doc_id") + 700000).as("media_id"),
-        (col("doc_id") + 1000000).as("g"), lit(1).as("v"),
-        ((col("doc_id") + 600000) % 31 + 97).cast("int").as("w"),
-        ((col("doc_id") + 600000) % 17 + 53).cast("int").as("h"))
-      .unionByName(freshDims(
-        d.filter(col("doc_id") % 7 === 5)
-          .select((col("doc_id") + 800000).as("media_id"),
-            (col("doc_id") + 2000000).as("g"), lit(0).as("v"))))
-
   /** Bands per image hash: 6 × 10-bit slices of the 64-bit dhash. */
   private val MediaBands = 6
 
   /** (media_id, dhash) → the 6 ten-bit band rows — the ONE band
-    * definition, shared by the index write, the probe's query side,
-    * and the incremental upsert so their rows cannot drift.
+    * definition, shared by the corpus pair pipeline, the index write,
+    * the probe's query side, and the incremental upsert so their rows
+    * cannot drift.
     */
   private def bandsOfHashes(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id"), col("dhash"),
@@ -2272,168 +2054,24 @@ object Multimodal {
         "offsets from max(doc_id) before growing the corpus")
   }
 
-  /** Build-and-publish a media index for one channel, once per corpus
-    * generation (the buildTextIndex discipline: source-keyed path,
-    * atomic publish, stale-generation GC). `family` names the channel
-    * so the three channels' generations GC independently.
-    */
-  private def publishMediaIndex(s: SparkSession, dir: String,
-      family: String)(hashes: => DataFrame): String = synchronized {
-    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
-      dir, "documents.parquet", family)(writeMediaBase(s, dir, hashes))
-  }
-
   /** A media index's base build: the headroom check, then the write. */
-  private def writeMediaBase(s: SparkSession, dir: String,
+  private[graft] def writeMediaBase(s: SparkSession, dir: String,
       hashes: => DataFrame)(tmp: String): Unit = {
     assertWaveHeadroom(s, dir)
     writeMediaIndex(s, hashes, tmp)
   }
 
-  def buildImageIndex(s: SparkSession, dir: String): String =
-    publishMediaIndex(s, dir, "graft_image_index")(
-      hashesOfParams(imageCorpusParams(s, dir)))
-
-  def buildAudioIndex(s: SparkSession, dir: String): String =
-    publishMediaIndex(s, dir, "graft_audio_index")(
-      audioHashesOfParams(audioCorpusParams(s, dir)))
-
-  def buildVideoIndex(s: SparkSession, dir: String): String =
-    publishMediaIndex(s, dir, "graft_video_index")(
-      videoHashesOfParams(videoCorpusParams(s, dir)))
-
-  /** Decode-seam audio fingerprinting: one (media_id, dhash) row per
-    * clip described by its synthesis params (media_id, g, gain) — the
-    * audio twin of [[hashesOfParams]], shared by [[audioPairs]]'
-    * corpus hashing and the audio admission row so the two cannot
-    * drift. (`dhash` is the media index's fingerprint column name,
-    * introduced by the image channel; here it carries the WHT sign
-    * fingerprint.)
+  /** Build-and-publish a channel's index over its corpus hashes, once
+    * per corpus generation (the buildTextIndex discipline: source-keyed
+    * path, atomic publish, stale-generation GC); each channel publishes
+    * under its own family, so the generations GC independently.
     */
-  private[graft] def audioHashesOfParams(params: DataFrame): DataFrame = {
-    import params.sparkSession.implicits._
-    params.select(col("media_id").cast("long"), col("g").cast("long"),
-        col("gain").cast("long"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        it.map { case (id, g, gain) =>
-          val rate = 8000 + (g % 5).toInt * 2000
-          val n    = (640 + (g % 5) * 64).toInt
-          val synth = Array.tabulate(n) { i =>
-            val s0 = (g * 2654435761L + i.toLong * 7 +
-              (g % 13 + 1) * i.toLong * i +
-              (g % 29 + 1) * i.toLong * 11) % 65536 - 32768
-            (s0 / gain).toShort // truncating division (DuckDB `//`)
-          }
-          val samples = WavCodec.decodeSamples(WavCodec.encode(rate, synth))
-          (id, audioHash(samples))
-        }
-      }.toDF("media_id", "dhash")
+  def buildMediaIndex(s: SparkSession, dir: String,
+      ch: MediaChannel): String = synchronized {
+    graft.core.IndexDirs.publishCurrent(s.sparkContext.hadoopConfiguration,
+      dir, "documents.parquet", ch.family("index"))(
+      writeMediaBase(s, dir, ch.corpusHashes(s, dir)))
   }
-
-  private[graft] def audioCorpusParams(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).documents.select(col("doc_id").as("media_id"),
-      (col("doc_id") - col("doc_id") % 3).as("g"),
-      expr("shiftleft(cast(1 as bigint), cast(doc_id % 3 as int))")
-        .as("gain"))
-
-  /** Decode-seam video fingerprinting over params (media_id, g, v):
-    * real Y4M bytes encode and the temporal luma-contour hash decodes
-    * them — the video twin of [[hashesOfParams]].
-    */
-  private[graft] def videoHashesOfParams(params: DataFrame): DataFrame = {
-    import params.sparkSession.implicits._
-    params.select(col("media_id").cast("long"), col("g").cast("long"),
-        col("v").cast("int"))
-      .as[(Long, Long, Int)]
-      .mapPartitions { it =>
-        it.map { case (id, g, v) =>
-          val w   = ((g % 8) + 1).toInt * 2
-          val h   = ((g % 4) + 1).toInt * 2
-          val fps = 24 + (g % 4).toInt * 6
-          val nf  = (61 + g % 5).toInt
-          def base(f: Int): Int =
-            (((g * 2654435761L + f.toLong * f * ((g % 97) + 1) * 31 +
-              f.toLong * ((g % 89) + 1) * 7) % 65521) % 200).toInt
-          val bytes = Y4mCodec.encode(w, h, fps, 1, nf,
-            (f, i) => base(f) + (i * 3) % 50 + v)
-          val sums = Y4mCodec.frameLumaSums(bytes)._3
-          var hash = 0L
-          var b = 0
-          while (b < 60) {
-            if (sums(b + 1) < sums(b)) hash |= 1L << b
-            b += 1
-          }
-          (id, hash)
-        }
-      }.toDF("media_id", "dhash")
-  }
-
-  private[graft] def videoCorpusParams(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).documents.select(col("doc_id").as("media_id"),
-      (col("doc_id") - col("doc_id") % 3).as("g"),
-      (col("doc_id") % 3).cast("int").as("v"))
-
-  /** Night-1 audio arrivals: a NEW re-leveling (gain 8 — the corpus
-    * holds 1/2/4) of existing clips plus a fresh wave of never-heard
-    * clips (new base g, hashes effectively random 60-bit — unlike the
-    * image channel, no dimension trick is needed for freshness).
-    */
-  private[graft] def audioIncoming(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 500000).as("media_id"),
-        (col("doc_id") - col("doc_id") % 3).as("g"), lit(8L).as("gain"))
-      .unionByName(
-        d.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 600000).as("media_id"),
-            (col("doc_id") + 1000000).as("g"), lit(1L).as("gain")))
-
-  /** Night-2 audio arrivals: a re-leveling (gain 2) of night 1's FRESH
-    * wave — near-dups ONLY if night 1's admissions were ingested (the
-    * corpus never saw base g = doc_id + 1000000) — plus a second fresh
-    * wave. The re-level keeps the night-1 twin's g (twin keyed at
-    * media_id − 100000), so the WHT sign fingerprint lands within the
-    * gain-invariance band, the same planted relationship as the
-    * corpus's own gain 1/2/4 triples.
-    */
-  private[graft] def audioIncoming2(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 3)
-      .select((col("doc_id") + 700000).as("media_id"),
-        (col("doc_id") + 1000000).as("g"), lit(2L).as("gain"))
-      .unionByName(
-        d.filter(col("doc_id") % 7 === 5)
-          .select((col("doc_id") + 800000).as("media_id"),
-            (col("doc_id") + 2000000).as("g"), lit(1L).as("gain")))
-
-  /** Night-1 video arrivals: a NEW brightness re-export (v = 3) of
-    * existing clips — hash-IDENTICAL by the contour fingerprint's
-    * brightness invariance, the dup the screen must catch — plus a
-    * fresh wave.
-    */
-  private[graft] def videoIncoming(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 500000).as("media_id"),
-        (col("doc_id") - col("doc_id") % 3).as("g"), lit(3).as("v"))
-      .unionByName(
-        d.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 600000).as("media_id"),
-            (col("doc_id") + 1000000).as("g"), lit(0).as("v")))
-
-  /** Night-2 video arrivals: a brightness re-export (v = 1) of night
-    * 1's FRESH wave — hash-IDENTICAL to its night-1 twin by the
-    * contour fingerprint's brightness invariance, so it screens dup at
-    * Hamming 0 ONLY if night 1's admissions were ingested (the corpus
-    * never saw base g = doc_id + 1000000) — plus a second fresh wave.
-    */
-  private[graft] def videoIncoming2(d: DataFrame): DataFrame =
-    d.filter(col("doc_id") % 7 === 3)
-      .select((col("doc_id") + 700000).as("media_id"),
-        (col("doc_id") + 1000000).as("g"), lit(1).as("v"))
-      .unionByName(
-        d.filter(col("doc_id") % 7 === 5)
-          .select((col("doc_id") + 800000).as("media_id"),
-            (col("doc_id") + 2000000).as("g"), lit(0).as("v")))
-
   /** The ONE screen kernel against a persisted image index: the
     * incoming batch's 6 bands per image resolve to a static partition
     * filter; a first bounded pass counts stored membership of ONLY the
@@ -2534,27 +2172,19 @@ object Multimodal {
       batchHashes.select(col("media_id"), col("dhash")),
       "upsertMediaIndex")(bandsOfHashes)
 
-  /** The image screen as a suffix-parameterized DuckDB CTE chain
-    * ending in `iverdict_<sfx>(media_id, status, best_hamming)` —
-    * instantiable more than once per query text so the stream oracle
-    * can chain sequential screens. `existingCte` / `incomingCte` name
-    * params relations (media_id, g, v, w, h) the caller defined. The
-    * cap is per-band membership of the EXISTING side ≤ 50 — the
-    * probe-time evaluation [[probeMediaIndex]] performs.
+  /** The ONE oracle-side media screen, a suffix-parameterized DuckDB
+    * CTE chain ending in `iverdict_<sfx>(media_id, status,
+    * best_hamming)` — instantiable more than once per query text, so
+    * the stream oracle can chain sequential screens. `existingCte` and
+    * `incomingCte` name parameter relations of the channel. The cap is
+    * per-band membership of the EXISTING side — the probe-time
+    * evaluation [[probeMediaIndex]] performs; banding, candidate join
+    * and verdict mirror that one Spark kernel.
     */
-  /** The ONE oracle-side media screen, generic over the channel's
-    * closed-form fingerprint: `hashSql(rel)` must yield
-    * `SELECT media_id, <formula> AS dhash FROM rel` for a params
-    * relation. Instantiated per channel by [[imageScreenCtes]] /
-    * [[audioScreenCtes]] / [[videoScreenCtes]] — one definition of
-    * banding, probe-time cap, candidate join, and verdict across all
-    * three media channels, mirroring the one [[probeMediaIndex]]
-    * kernel on the Spark side.
-    */
-  private def mediaScreenCtes(sfx: String, existingCte: String,
-      incomingCte: String, hashSql: String => String): String =
-    s"""ihe_$sfx AS (${hashSql(existingCte)}
-      ), ihi_$sfx AS (${hashSql(incomingCte)}
+  private def mediaScreenCtes(ch: MediaChannel, sfx: String,
+      existingCte: String, incomingCte: String): String =
+    s"""ihe_$sfx AS (${ch.hashSql(existingCte)}
+      ), ihi_$sfx AS (${ch.hashSql(incomingCte)}
       ), ibe0_$sfx AS (
         SELECT media_id, dhash, unnest(range(0, 6)) AS bno FROM ihe_$sfx
       ), ibe_$sfx AS (
@@ -2573,7 +2203,8 @@ object Multimodal {
         SELECT DISTINCT i.media_id AS new_id, e.media_id AS old_id,
                bit_count(xor(e.dhash, i.dhash))::INT AS hamming
         FROM ibe_$sfx e
-        JOIN icnt_$sfx c ON e.bno = c.bno AND e.bval = c.bval AND c.bc <= 50
+        JOIN icnt_$sfx c ON e.bno = c.bno AND e.bval = c.bval
+          AND c.bc <= ${graft.operators.BandedIndex.HotBandCap}
         JOIN ibi_$sfx i ON e.bno = i.bno AND e.bval = i.bval
       ), ibest_$sfx AS (
         SELECT new_id AS media_id, min(hamming) AS best
@@ -2585,87 +2216,13 @@ object Multimodal {
         FROM $incomingCte p LEFT JOIN ibest_$sfx b USING (media_id)
       )"""
 
-  /** The image instance of [[mediaScreenCtes]]: the dHash closed form
-    * over params (media_id, g, v, w, h).
+  /** A channel's corpus (`pc`) and night-1 (`in1`) parameter CTEs —
+    * the existing and incoming sides of its admission oracles.
     */
-  private[graft] def imageScreenCtes(sfx: String, existingCte: String,
-      incomingCte: String): String =
-    mediaScreenCtes(sfx, existingCte, incomingCte, rel => s"""
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              (g * 7 + (((b // 10) * h) // 6 * w
-                 + ((b % 10) * w) // 11) * 3 + v) % 256
-              <
-              (g * 7 + (((b // 10) * h) // 6 * w
-                 + (((b % 10) + 1) * w) // 11) * 3 + v) % 256
-            THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT AS dhash
-        FROM $rel""")
-
-  /** The audio instance: the WHT sign fingerprint closed form over
-    * params (media_id, g, gain) — [[audioPairCtes]]'s `hh` formula.
-    */
-  private[graft] def audioScreenCtes(sfx: String, existingCte: String,
-      incomingCte: String): String =
-    mediaScreenCtes(sfx, existingCte, incomingCte, rel => s"""
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              list_sum(list_transform(range(0, 64), j ->
-                (((g * 2654435761 + ((b // 6) * 64 + j) * 7
-                   + (g % 13 + 1) * ((b // 6) * 64 + j) * ((b // 6) * 64 + j)
-                   + (g % 29 + 1) * ((b // 6) * 64 + j) * 11)
-                  % 65536 - 32768) // gain)
-                * (CASE WHEN bit_count(([1,2,4,8,16,32][(b % 6)::INT + 1])
-                                       & j) % 2 = 0
-                   THEN 1 ELSE -1 END))) < 0
-            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT AS dhash
-        FROM $rel""")
-
-  /** The video instance: the temporal luma-contour fingerprint closed
-    * form over params (media_id, g) — [[videoPairCtes]]'s `hh`
-    * formula (brightness shifts and per-pixel texture cancel in the
-    * frame-sum gradient, so only g enters).
-    */
-  private[graft] def videoScreenCtes(sfx: String, existingCte: String,
-      incomingCte: String): String =
-    mediaScreenCtes(sfx, existingCte, incomingCte, rel => s"""
-        SELECT media_id,
-          list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN
-              ((g * 2654435761 + (b+1)*(b+1) * ((g % 97) + 1) * 31
-                 + (b+1) * ((g % 89) + 1) * 7) % 65521) % 200
-              <
-              ((g * 2654435761 + b*b * ((g % 97) + 1) * 31
-                 + b * ((g % 89) + 1) * 7) % 65521) % 200
-            THEN (1::BIGINT << b::INT) ELSE 0::BIGINT END))::BIGINT AS dhash
-        FROM $rel""")
-
-  /** The corpus + night-1 params CTEs shared by the image screen
-    * oracles (the Spark twins are [[imageCorpusParams]] /
-    * [[imageIncoming]]).
-    */
-  private[graft] val imageAdmissionParamsCtes = """
-      ipc AS (
-        SELECT doc_id AS media_id,
-               doc_id - (doc_id % 3) AS g,
-               doc_id % 3 AS v,
-               ((doc_id - (doc_id % 3)) % 31) + 1 AS w,
-               ((doc_id - (doc_id % 3)) % 17) + 1 AS h
-        FROM documents
-      ), iin1 AS (
-        SELECT doc_id + 500000 AS media_id,
-               doc_id - (doc_id % 3) AS g, 3 AS v,
-               ((doc_id - (doc_id % 3)) % 31) + 1 AS w,
-               ((doc_id - (doc_id % 3)) % 17) + 1 AS h
-        FROM documents WHERE doc_id % 7 = 0
-        UNION ALL
-        SELECT doc_id + 600000, doc_id + 1000000, 0,
-               ((doc_id + 600000) % 31) + 97,
-               ((doc_id + 600000) % 17) + 53
-        FROM documents WHERE doc_id % 7 = 3
+  private def admissionCtes(ch: MediaChannel): String =
+    s"""pc AS (${ch.corpusSql}
+      ), in1 AS (${ch.night1Sql}
       )"""
-
   /** Purge propagation into the media index — the DELETE path, so the
     * admission tier stops matching arrivals against purged media (the
     * serving-tier invariant the r11 verdict ranked first): the shared
@@ -2681,400 +2238,85 @@ object Multimodal {
       purge0: DataFrame): Seq[Int] =
     MediaLayout.delete(s, idx, purge0)
 
-  /** A channel's purge list — the SAME keep-one-representative closure
-    * its `dd_*_purge_apply` row executes against the blob lake, so
-    * lake and index cut against ONE list.
-    */
-  private def mediaPurgeList(clusters: DataFrame): DataFrame =
-    graft.dedup.DedupQueries
-      .purgePlan(clusters.withColumnRenamed("media_id", "doc_id"))
-      .filter(col("action") === "purge")
-      .select(col("doc_id").as("media_id"))
-
   /** The delete demo's index for one channel: a fresh family (the
-    * shared `build*Index` generation serves the probe/stream rows and
-    * must not mutate), built over the full corpus and then purged
-    * once per generation — applied-once via the `_purge_applied`
-    * marker with the sigs-presence probe as the idempotence check.
+    * shared [[buildMediaIndex]] generation serves the probe/stream rows
+    * and must not mutate), built over the full corpus and then purged
+    * of the channel's non-representatives — the SAME list its
+    * `dd_<c>_purge_apply` row executes against the blob lake — once per
+    * generation, applied-once via the `_purge_applied` marker with the
+    * sigs-presence probe as the idempotence check.
     */
   private def deleteDemoMediaIndex(s: SparkSession, dir: String,
-      family: String, hashes: DataFrame, purgeList: => DataFrame): String =
+      ch: MediaChannel): String =
     synchronized {
-      lazy val purge = purgeList // derived only when the marker is absent
+      // derived only when the marker is absent
+      lazy val purge = purgeRoutes(clusterFrame(s, dir, ch))
+        .select(col("media_id"))
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
-          dir, "documents.parquet", family, "_purge_applied")(
-        writeMediaBase(s, dir, hashes))(
+          dir, "documents.parquet", ch.family("delete"), "_purge_applied")(
+        writeMediaBase(s, dir, ch.corpusHashes(s, dir)))(
         idx => s.read.schema(MediaLayout.sigsSchema).parquet(s"$idx/sigs")
           .join(purge, Seq("media_id"), "left_semi").limit(1).collect()
           .nonEmpty)(
         idx => deleteFromMediaIndex(s, idx, purge))
     }
-
-  private def deleteDemoImageIndex(s: SparkSession, dir: String): String =
-    deleteDemoMediaIndex(s, dir, "graft_image_delete",
-      hashesOfParams(imageCorpusParams(s, dir)),
-      mediaPurgeList(imageClusterFrame(s, dir)))
-
-  /** The corpus + night-1 params CTEs shared by the audio admission
-    * oracles (`dd_audio_probe`/`dd_audio_upsert`/
-    * `dd_audio_index_delete`/`dd_audio_stream_ingest`) — the audio
-    * twin of [[imageAdmissionParamsCtes]].
-    */
-  private[graft] val audioAdmissionParamsCtes = """
-      apc AS (
-        SELECT doc_id AS media_id, doc_id - (doc_id % 3) AS g,
-               (1::BIGINT << (doc_id % 3)::INT) AS gain
-        FROM documents
-      ), ain1 AS (
-        SELECT doc_id + 500000 AS media_id,
-               doc_id - (doc_id % 3) AS g, 8 AS gain
-        FROM documents WHERE doc_id % 7 = 0
-        UNION ALL
-        SELECT doc_id + 600000, doc_id + 1000000, 1
-        FROM documents WHERE doc_id % 7 = 3
-      )"""
-
-  /** The video twin of [[imageAdmissionParamsCtes]]. */
-  private[graft] val videoAdmissionParamsCtes = """
-      vpc AS (
-        SELECT doc_id AS media_id, doc_id - (doc_id % 3) AS g
-        FROM documents
-      ), vin1 AS (
-        SELECT doc_id + 500000 AS media_id, doc_id - (doc_id % 3) AS g
-        FROM documents WHERE doc_id % 7 = 0
-        UNION ALL
-        SELECT doc_id + 600000, doc_id + 1000000
-        FROM documents WHERE doc_id % 7 = 3
-      )"""
-
-  /** Audio admission SCREEN against the persisted audio index —
-    * [[imageProbe]]'s contract on the audio channel, through the SAME
-    * media-index kernel (build → static band-bucket pruning →
-    * probe-time cap → Hamming confirm); only the decode-seam
-    * fingerprint changes (WHT signs over gain-normalized PCM).
-    * Arrivals: a NEW re-leveling (gain 8) of existing clips + a fresh
-    * wave.
-    */
-  val audioProbe = Query(
-    "dd_audio_probe",
-    (s, dir) => probeMediaIndex(s, buildAudioIndex(s, dir),
-      audioHashesOfParams(audioIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH $audioAdmissionParamsCtes,
-      ${audioScreenCtes("a", "apc", "ain1")}
-      SELECT media_id, status, best_hamming FROM iverdict_a
-      ORDER BY media_id
-    """),
-  )
-
-  /** Video admission SCREEN — the same kernel on the video channel
-    * (temporal luma-contour fingerprint). The re-export wave (v = 3
-    * brightness shift) is hash-IDENTICAL by the fingerprint's
-    * brightness invariance, so the screen must report it dup at
-    * Hamming 0.
-    */
-  val videoProbe = Query(
-    "dd_video_probe",
-    (s, dir) => probeMediaIndex(s, buildVideoIndex(s, dir),
-      videoHashesOfParams(videoIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH $videoAdmissionParamsCtes,
-      ${videoScreenCtes("v", "vpc", "vin1")}
-      SELECT media_id, status, best_hamming FROM iverdict_v
-      ORDER BY media_id
-    """),
-  )
-
-  /** The maintenance demo behind `dd_image_upsert` (and its audio and
-    * video twins) — the tx_index_upsert discipline through the shared
-    * media kernel, generic over the channel's corpus hashes: a base
-    * index built (atomically published, once per corpus generation)
-    * over the corpus MINUS the media_id % 5 == 0 slice, then an
+  /** The maintenance demo behind `dd_<c>_upsert` — the tx_index_upsert
+    * discipline through the shared media kernel: a base index built
+    * (atomically published, once per corpus generation) over the
+    * channel's corpus MINUS the media_id % 5 == 0 slice, then an
     * idempotent append of that slice as the "nightly batch". The final
     * index state is exactly the full corpus, which is what makes each
     * row oracle-gateable against its channel's probe screen verbatim.
     */
   private def upsertDemoMediaIndex(s: SparkSession, dir: String,
-      family: String, hashes: DataFrame): String =
+      ch: MediaChannel): String =
     synchronized {
+      val hashes = ch.corpusHashes(s, dir)
       // apply the nightly batch once per corpus generation (the
       // applied-once discipline: a serving tier probes an up-to-date
       // index, it does not re-run last night's ingest per query). The
-      // r16 marker fast path makes the steady-state re-entry one file
+      // marker fast path makes the steady-state re-entry one file
       // stat; the no-marker path keeps the data-derived presence check
       // (the append-only contract makes re-ingest loud, so presence IS
       // the evidence) before the marker stamps convergence.
       graft.core.IndexDirs.maintainOnce(s.sparkContext.hadoopConfiguration,
-          dir, "documents.parquet", family, "_upsert_applied")(
+          dir, "documents.parquet", ch.family("upsert"), "_upsert_applied")(
         writeMediaBase(s, dir, hashes.filter(col("media_id") % 5 =!= 0)))(
         idx => s.read.schema(MediaLayout.sigsSchema).parquet(s"$idx/sigs")
           .filter(col("media_id") % 5 === 0).limit(1).collect().isEmpty)(
         idx => upsertMediaIndex(s, idx, hashes.filter(col("media_id") % 5 === 0)))
     }
 
-  private def upsertDemoImageIndex(s: SparkSession, dir: String): String =
-    upsertDemoMediaIndex(s, dir, "graft_image_upsert",
-      hashesOfParams(imageCorpusParams(s, dir)))
-
-  /** Image-index MAINTENANCE under the gate — the row probes the index
-    * AFTER a base-build + nightly-batch append, and the oracle is
-    * dd_image_probe's VERBATIM: the probe-after-upsert must equal the
-    * screen against the full-corpus index, which it can only do if the
-    * band routing and the id-bucketed sig append are both right.
+  /** The sequential two-night admission chain of a channel as one
+    * DuckDB query — the oracle of `dd_<c>_stream_ingest`: night 1
+    * screens against the corpus, night 2 against the corpus ∪ night
+    * 1's ADMISSIONS. Night 2's first wave re-encodes night 1's fresh
+    * wave, so it screens 'dup' only if the loop ingested night 1.
     */
-  val imageUpsert = Query(
-    "dd_image_upsert",
-    (s, dir) => probeMediaIndex(s, upsertDemoImageIndex(s, dir),
-      hashesOfParams(imageIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH $imageAdmissionParamsCtes,
-      ${imageScreenCtes("p", "ipc", "iin1")}
-      SELECT media_id, status, best_hamming FROM iverdict_p
-      ORDER BY media_id
-    """),
-  )
-
-  /** Audio-index MAINTENANCE under the gate — [[imageUpsert]]'s
-    * contract through the channel-generic kernel (the r13 verdict's
-    * ask: `upsertMediaIndex` was already channel-generic but nothing
-    * GATED it on the audio channel): base build minus the
-    * media_id % 5 == 0 slice, nightly append of that slice, then the
-    * admission screen — whose oracle is dd_audio_probe's VERBATIM.
-    */
-  val audioUpsert = Query(
-    "dd_audio_upsert",
-    (s, dir) => probeMediaIndex(s,
-      upsertDemoMediaIndex(s, dir, "graft_audio_upsert",
-        audioHashesOfParams(audioCorpusParams(s, dir))),
-      audioHashesOfParams(audioIncoming(Tables(s, dir).documents))),
-    oracle = audioProbe.oracle,
-  )
-
-  /** Video-index MAINTENANCE under the gate — the video leg of the
-    * same contract; oracle = dd_video_probe's verbatim.
-    */
-  val videoUpsert = Query(
-    "dd_video_upsert",
-    (s, dir) => probeMediaIndex(s,
-      upsertDemoMediaIndex(s, dir, "graft_video_upsert",
-        videoHashesOfParams(videoCorpusParams(s, dir))),
-      videoHashesOfParams(videoIncoming(Tables(s, dir).documents))),
-    oracle = videoProbe.oracle,
-  )
-
-  /** Purge propagation into the audio index under the gate —
-    * [[imageIndexDelete]]'s contract on the audio channel: after the
-    * audio purge (the SAME keep-one-representative closure
-    * `dd_audio_purge_apply` executes against the audio lake), the
-    * admission screen must behave as if the index were REBUILT over
-    * the surviving clips; the oracle recomputes the screen over the
-    * corpus minus the recursive cluster closure.
-    */
-  val audioIndexDelete = Query(
-    "dd_audio_index_delete",
-    (s, dir) => probeMediaIndex(s,
-      deleteDemoMediaIndex(s, dir, "graft_audio_delete",
-        audioHashesOfParams(audioCorpusParams(s, dir)),
-        mediaPurgeList(audioClusterFrame(s, dir))),
-      audioHashesOfParams(audioIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH RECURSIVE $audioPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      apurged AS (SELECT media_id FROM cl WHERE media_id <> cluster),
-      $audioAdmissionParamsCtes,
-      asur AS (
-        SELECT media_id, g, gain FROM apc
-        WHERE media_id NOT IN (SELECT media_id FROM apurged)
-      ),
-      ${audioScreenCtes("d", "asur", "ain1")}
-      SELECT media_id, status, best_hamming FROM iverdict_d
-      ORDER BY media_id
-    """),
-  )
-
-  /** Purge propagation into the video index under the gate — the
-    * fourth modality leg, completing the maintenance matrix: every
-    * persisted media admission index now has gated upsert AND delete.
-    */
-  val videoIndexDelete = Query(
-    "dd_video_index_delete",
-    (s, dir) => probeMediaIndex(s,
-      deleteDemoMediaIndex(s, dir, "graft_video_delete",
-        videoHashesOfParams(videoCorpusParams(s, dir)),
-        mediaPurgeList(videoClusterFrame(s, dir))),
-      videoHashesOfParams(videoIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH RECURSIVE $videoPairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      vpurged AS (SELECT media_id FROM cl WHERE media_id <> cluster),
-      $videoAdmissionParamsCtes,
-      vsur AS (
-        SELECT media_id, g FROM vpc
-        WHERE media_id NOT IN (SELECT media_id FROM vpurged)
-      ),
-      ${videoScreenCtes("d", "vsur", "vin1")}
-      SELECT media_id, status, best_hamming FROM iverdict_d
-      ORDER BY media_id
-    """),
-  )
-
-  /** The sequential two-night video admission chain — the oracle of
-    * `dd_video_stream_ingest`. Night 2's first wave re-exports night
-    * 1's fresh admissions at a shifted brightness; the contour hash is
-    * invariant to the shift, so those rows screen dup at Hamming 0
-    * exactly when the loop ingested night 1.
-    */
-  private[graft] def videoStreamIngestOracle: String = s"""
-      WITH $videoAdmissionParamsCtes,
-      ${videoScreenCtes("1", "vpc", "vin1")},
-      vin2 AS (
-        SELECT doc_id + 700000 AS media_id, doc_id + 1000000 AS g
-        FROM documents WHERE doc_id % 7 = 3
+  private[graft] def streamIngestOracle(ch: MediaChannel): String = s"""
+      WITH ${admissionCtes(ch)},
+      ${mediaScreenCtes(ch, "1", "pc", "in1")},
+      in2 AS (${ch.night2Sql}
+      ), ex2 AS (
+        SELECT * FROM pc
         UNION ALL
-        SELECT doc_id + 800000, doc_id + 2000000
-        FROM documents WHERE doc_id % 7 = 5
-      ), vex2 AS (
-        SELECT media_id, g FROM vpc
-        UNION ALL
-        SELECT i.media_id, i.g FROM vin1 i
-        JOIN iverdict_1 vv USING (media_id) WHERE vv.status = 'new'
+        SELECT * FROM in1 WHERE media_id IN
+          (SELECT media_id FROM iverdict_1 WHERE status = 'new')
       ),
-      ${videoScreenCtes("2", "vex2", "vin2")}
+      ${mediaScreenCtes(ch, "2", "ex2", "in2")}
       SELECT media_id, status, best_hamming FROM iverdict_1
       UNION ALL
       SELECT media_id, status, best_hamming FROM iverdict_2
       ORDER BY media_id"""
-
-  /** The sequential two-night audio admission chain as one DuckDB
-    * query — the oracle of `dd_audio_stream_ingest`: night 1 screens
-    * against the corpus, night 2 against the corpus ∪ night 1's
-    * ADMISSIONS (the Spark twins are [[audioIncoming]] /
-    * [[audioIncoming2]]; night 2's first wave re-levels night 1's
-    * fresh admissions, so it screens 'dup' only if the loop ingested
-    * them).
-    */
-  private[graft] def audioStreamIngestOracle: String = s"""
-      WITH $audioAdmissionParamsCtes,
-      ${audioScreenCtes("1", "apc", "ain1")},
-      ain2 AS (
-        SELECT doc_id + 700000 AS media_id,
-               doc_id + 1000000 AS g, 2 AS gain
-        FROM documents WHERE doc_id % 7 = 3
-        UNION ALL
-        SELECT doc_id + 800000, doc_id + 2000000, 1
-        FROM documents WHERE doc_id % 7 = 5
-      ), aex2 AS (
-        SELECT media_id, g, gain FROM apc
-        UNION ALL
-        SELECT i.media_id, i.g, i.gain FROM ain1 i
-        JOIN iverdict_1 vv USING (media_id) WHERE vv.status = 'new'
-      ),
-      ${audioScreenCtes("2", "aex2", "ain2")}
-      SELECT media_id, status, best_hamming FROM iverdict_1
-      UNION ALL
-      SELECT media_id, status, best_hamming FROM iverdict_2
-      ORDER BY media_id"""
-
-  /** Purge propagation under the gate: after the image purge, the
-    * admission screen must behave as if the index were REBUILT over
-    * the surviving media — the oracle recomputes the screen over the
-    * corpus MINUS the same recursive cluster closure
-    * `dd_image_purge_apply` executes. Because the cap is probe-time,
-    * the row is also sensitive to bands whose membership drops back
-    * under 50: their candidates must REAPPEAR after the purge, with no
-    * resurrection machinery to get wrong.
-    */
-  val imageIndexDelete = Query(
-    "dd_image_index_delete",
-    (s, dir) => probeMediaIndex(s, deleteDemoImageIndex(s, dir),
-      hashesOfParams(imageIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH RECURSIVE $imagePairCtes,
-      edges AS (SELECT id_a, id_b FROM pairs),
-      ${graft.dedup.DedupQueries.ccWalkSql},
-      cl AS (SELECT id AS media_id, min(lbl) AS cluster
-             FROM walk GROUP BY id),
-      ipurged AS (SELECT media_id FROM cl WHERE media_id <> cluster),
-      $imageAdmissionParamsCtes,
-      isur AS (
-        SELECT media_id, g, v, w, h FROM ipc
-        WHERE media_id NOT IN (SELECT media_id FROM ipurged)
-      ),
-      ${imageScreenCtes("d", "isur", "iin1")}
-      SELECT media_id, status, best_hamming FROM iverdict_d
-      ORDER BY media_id
-    """),
-  )
-
-  /** The sequential two-night image admission chain as one DuckDB
-    * query — the oracle of `dd_image_stream_ingest`: night 1 screens
-    * against the corpus, night 2 against the corpus ∪ night 1's
-    * ADMISSIONS (the Spark twins are [[imageIncoming]] /
-    * [[imageIncoming2]]; night 2's first wave re-encodes night 1's
-    * fresh admissions, so it screens 'dup' only if the loop ingested
-    * them).
-    */
-  private[graft] def imageStreamIngestOracle: String = s"""
-      WITH $imageAdmissionParamsCtes,
-      ${imageScreenCtes("1", "ipc", "iin1")},
-      iin2 AS (
-        SELECT doc_id + 700000 AS media_id,
-               doc_id + 1000000 AS g, 1 AS v,
-               ((doc_id + 600000) % 31) + 97 AS w,
-               ((doc_id + 600000) % 17) + 53 AS h
-        FROM documents WHERE doc_id % 7 = 3
-        UNION ALL
-        SELECT doc_id + 800000, doc_id + 2000000, 0,
-               ((doc_id + 800000) % 31) + 97,
-               ((doc_id + 800000) % 17) + 53
-        FROM documents WHERE doc_id % 7 = 5
-      ), iex2 AS (
-        SELECT media_id, g, v, w, h FROM ipc
-        UNION ALL
-        SELECT i.media_id, i.g, i.v, i.w, i.h FROM iin1 i
-        JOIN iverdict_1 vv USING (media_id) WHERE vv.status = 'new'
-      ),
-      ${imageScreenCtes("2", "iex2", "iin2")}
-      SELECT media_id, status, best_hamming FROM iverdict_1
-      UNION ALL
-      SELECT media_id, status, best_hamming FROM iverdict_2
-      ORDER BY media_id"""
-
-  /** Media admission SCREEN against the persisted image index — the
-    * image-channel twin of `dd_minhash_cdc`/`dd_band_probe`, closing
-    * the gap that media blobs arrived unscreened while text documents
-    * had a full admission tier: nightly media arrivals (re-exported
-    * brightness shifts of existing images + a genuinely fresh wave)
-    * hash in the decode seam and screen against the index built over
-    * the media corpus. The verdict is per-arrival dup/new at Hamming
-    * ≤ 5 with the best distance — integer-exact, so the oracle is
-    * direct SQL over the synthesis params.
-    */
-  val imageProbe = Query(
-    "dd_image_probe",
-    (s, dir) => probeMediaIndex(s, buildImageIndex(s, dir),
-      hashesOfParams(imageIncoming(Tables(s, dir).documents))),
-    oracle = Some(s"""
-      WITH $imageAdmissionParamsCtes,
-      ${imageScreenCtes("p", "ipc", "iin1")}
-      SELECT media_id, status, best_hamming FROM iverdict_p
-      ORDER BY media_id
-    """),
-  )
 
   def all: Seq[Query] =
     Seq(features, frames, resized, resizedPx, wavDecode, bmpDecode,
-      videoDecode, audioRms, imageDhash, imageDups, imageClusters,
-      spectrogram, sceneCut, audioVad, audioDups, audioClusters,
-      videoDups, videoClusters, storyboard, imageQuality, audioQuality,
-      pairManifest, avSync, imagePurge, imagePurgeApply, audioPurgeApply,
-      videoPurgeApply, alignScore, imageProbe, imageUpsert,
-      imageIndexDelete, audioProbe, videoProbe, audioUpsert, videoUpsert,
-      audioIndexDelete, videoIndexDelete)
+      videoDecode, audioRms, imageDhash, imageRows.dups,
+      imageRows.clusters, spectrogram, sceneCut, audioVad, audioRows.dups,
+      audioRows.clusters, videoRows.dups, videoRows.clusters, storyboard,
+      imageQuality, audioQuality, pairManifest, avSync, imagePurge,
+      imageRows.purgeApply, audioRows.purgeApply, videoRows.purgeApply,
+      alignScore, imageRows.probe, imageRows.upsert, imageRows.indexDelete,
+      audioRows.probe, videoRows.probe, audioRows.upsert, videoRows.upsert,
+      audioRows.indexDelete, videoRows.indexDelete)
 }

@@ -179,6 +179,28 @@ final case class BandedIndex(kind: String, keyCol: String,
     } finally sigs.unpersist()
   }
 
+  /** One admission step of an ingest loop over the index at `idx`:
+    * SCREEN `batch` first (an item must not match itself; `screen`
+    * yields one (key, status, …) verdict row per arrival, bounded by
+    * the nightly batch), then INGEST the 'new' arrivals so the NEXT
+    * batch screens against them. The anti-join on the stored sigs keys
+    * makes a retry after a committed ingest re-apply cleanly, where the
+    * append-only [[upsert]] would fail it loudly. Returns the verdicts.
+    */
+  def admit(s: SparkSession, idx: String, batch: DataFrame)(
+      screen: DataFrame => DataFrame,
+      ingest: DataFrame => Seq[Int]): Seq[Row] = {
+    val verdicts = screen(batch).collect().toSeq
+    val newIds = s.createDataFrame(
+      verdicts.filter(_.getString(1) == "new").map(r => Row(r.getLong(0)))
+        .asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(s"$keyCol LONG"))
+    ingest(batch.join(newIds, Seq(keyCol), "left_semi")
+      .join(s.read.schema(sigsSchema).parquet(s"$idx/sigs")
+        .select(col(keyCol)), Seq(keyCol), "left_anti"))
+    verdicts
+  }
+
   /** Purge the ids of `purge0` (its key column) from the index
     * at `idx`. Presence resolves against `sigs/` — the commit-point
     * table, so a crashed run (bands purged, sigs not yet) still finds

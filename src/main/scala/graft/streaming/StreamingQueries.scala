@@ -1329,27 +1329,9 @@ object StreamingQueries {
       (child, idx) => {
         DQ.writeBandIndex(s,
           Tables(s, dir).documents.select(col("doc_id"), col("text")), idx)
-        (batch, _) => {
-          // SCREEN first (the admission order: a doc must not match
-          // itself); one verdict row per incoming doc — bounded by the
-          // nightly batch
-          val verdicts = DQ.probeBandIndex(child, idx, batch,
-            excludeBatchIds = true).collect().toSeq
-          // INGEST: the admitted docs join the index so the NEXT
-          // batch screens against them. The anti-join on the stored
-          // signatures makes a foreachBatch retry after a committed
-          // upsert re-apply cleanly (append-only admission would
-          // otherwise fail it loudly).
-          import child.implicits._
-          val newIds = verdicts.filter(_.getString(1) == "new")
-            .map(_.getLong(0)).toDF("doc_id")
-          val admitted = batch.join(newIds, Seq("doc_id"), "left_semi")
-            .join(child.read.schema("doc_id LONG, sh ARRAY<LONG>, sbkt INT")
-                .parquet(s"$idx/sigs").select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-          DQ.upsertBandIndex(child, idx, admitted)
-          verdicts
-        }
+        (batch, _) => DQ.BandLayout.admit(child, idx, batch)(
+          DQ.probeBandIndex(child, idx, _, excludeBatchIds = true),
+          DQ.upsertBandIndex(child, idx, _))
       })
   }
 
@@ -1757,170 +1739,67 @@ object StreamingQueries {
     }),
   )
 
-  /** Streaming MEDIA admission — [[streamIngest]]'s admit-and-ingest
-    * discipline on the image channel, closing the gap that media
-    * blobs arrived unscreened while text had a full admission tier:
-    * per micro-batch the arrivals hash in the decode seam
-    * ([[graft.multimodal.Multimodal.hashesOfParams]] — the blobs
-    * never shuffle), SCREEN against the persisted image index
+  /** Streaming MEDIA admission for one channel — [[streamIngest]]'s
+    * admit-and-ingest discipline through the shared media kernel, so
+    * media blobs are screened on arrival as text documents are: per
+    * micro-batch the arrivals hash in the decode seam (the blobs never
+    * shuffle), SCREEN against the persisted index
     * ([[graft.multimodal.Multimodal.probeMediaIndex]] — probe-time
-    * hot-band cap, so cap semantics stay from-scratch under the
-    * ingest history), then the admitted ('new') images INGEST
-    * ([[graft.multimodal.Multimodal.upsertMediaIndex]], append-only;
-    * the stored-sigs anti-join makes a foreachBatch retry after a
-    * committed upsert re-apply cleanly). Night 2's first wave
+    * hot-band cap, so cap semantics stay from-scratch under the ingest
+    * history), then the admitted ('new') items INGEST
+    * ([[graft.operators.BandedIndex.admit]]). Night 2's first wave
     * re-encodes night 1's FRESH admissions — caught as 'dup' ONLY
-    * because night 1 ingested them, which the stateless screen
-    * provably misses (ImageStreamIngestSpec plants the pair and
-    * checks both behaviors). The loop runs once per corpus generation
-    * under an atomic publish and persists its verdict LOG (the
-    * production sink); the gated row reads the log. The oracle
-    * recomputes the sequential chain from scratch: screen 1 over the
-    * corpus, screen 2 over the corpus ∪ screen 1's admissions.
+    * because night 1 ingested them, which the stateless screen provably
+    * misses (MediaStreamIngestSpec plants the pair and checks both
+    * behaviors). The loop runs once per corpus generation under an
+    * atomic publish and persists its verdict LOG (the production sink);
+    * the gated row reads the log.
     */
-  /** One media-channel admit-and-ingest loop through the shared
-    * kernel — the image and audio loops differ only in their corpus
-    * hashes, arrival fixtures, stream schema, and fingerprint
-    * function, so both instantiate this.
-    */
-  private def mediaIngestDemoLog(s: SparkSession, dir: String,
-      family: String, streamSchema: String,
-      corpusHashes: SparkSession => DataFrame,
-      hashesOf: DataFrame => DataFrame,
-      batches: SparkSession => Seq[DataFrame]): String = {
+  private[graft] def mediaIngestDemoLog(s: SparkSession, dir: String,
+      ch: graft.multimodal.Multimodal.MediaChannel): String = {
     import graft.multimodal.{Multimodal => MM}
-    ingestLoop(s, dir, family, "documents.parquet", streamSchema,
-      "media_id LONG, status STRING, best_hamming INT",
-      batches,
+    ingestLoop(s, dir, ch.streamFamily, "documents.parquet",
+      ch.streamSchema, "media_id LONG, status STRING, best_hamming INT",
+      ss => {
+        val d = Tables(ss, dir).documents
+        Seq(ch.night1(d), ch.night2(d))
+      },
       (child, idx) => {
-        MM.assertWaveHeadroom(s, dir)
-        MM.writeMediaIndex(s, corpusHashes(s), idx)
-        (batch, _) => {
-          val hashes = hashesOf(batch)
-          // SCREEN: one verdict row per arrival — bounded by the
-          // nightly batch; the verdicts land in the persisted log
-          val verdicts = MM.probeMediaIndex(child, idx, hashes,
-              excludeBatchIds = true)
-            .collect().toSeq
-          // INGEST: admitted media join the index so the NEXT batch
-          // screens against them; the stored-sigs anti-join makes a
-          // retry after a committed upsert re-apply cleanly (the
-          // append-only upsert would otherwise fail it loudly)
-          import child.implicits._
-          val newIds = verdicts.filter(_.getString(1) == "new")
-            .map(_.getLong(0)).toDF("media_id")
-          val admitted = hashes.join(newIds, Seq("media_id"), "left_semi")
-            .join(child.read
-                .schema("media_id LONG, dhash LONG, sb INT")
-                .parquet(s"$idx/sigs").select(col("media_id")),
-              Seq("media_id"), "left_anti")
-          MM.upsertMediaIndex(child, idx, admitted)
-          verdicts
-        }
+        MM.writeMediaBase(s, dir, ch.corpusHashes(s, dir))(idx)
+        (batch, _) => MM.MediaLayout.admit(child, idx, ch.hashes(batch))(
+          MM.probeMediaIndex(child, idx, _, excludeBatchIds = true),
+          MM.upsertMediaIndex(child, idx, _))
       })
   }
 
-  private[graft] def imageIngestDemoLog(s: SparkSession, dir: String): String = {
-    import graft.multimodal.{Multimodal => MM}
-    mediaIngestDemoLog(s, dir, "graft_stream_img",
-      "media_id LONG, g LONG, v INT, w INT, h INT",
-      ss => MM.hashesOfParams(MM.imageCorpusParams(ss, dir)),
-      MM.hashesOfParams,
-      ss => {
-        val d = Tables(ss, dir).documents
-        Seq(MM.imageIncoming(d), MM.imageIncoming2(d))
-      })
-  }
-
-  val streamImageIngest = Query(
-    "dd_image_stream_ingest",
-    (s, dir) => s.read
-      .schema("media_id LONG, status STRING, best_hamming INT")
-      .parquet(imageIngestDemoLog(s, dir))
-      .orderBy(col("media_id")),
-    oracle = Some(graft.multimodal.Multimodal.imageStreamIngestOracle),
-    eagerPlan = Some((s, dir) => {
-      import graft.multimodal.{Multimodal => MM}
-      // the declared batch shape: the screen over the persisted index
-      // (the ingest half's plan is pinned by ImageIndexSpec)
-      MM.probeMediaIndex(s, MM.buildImageIndex(s, dir),
-        MM.hashesOfParams(MM.imageIncoming2(Tables(s, dir).documents)))
-    }),
-  )
-
-  private[graft] def audioIngestDemoLog(s: SparkSession, dir: String): String = {
-    import graft.multimodal.{Multimodal => MM}
-    mediaIngestDemoLog(s, dir, "graft_stream_aud",
-      "media_id LONG, g LONG, gain LONG",
-      ss => MM.audioHashesOfParams(MM.audioCorpusParams(ss, dir)),
-      MM.audioHashesOfParams,
-      ss => {
-        val d = Tables(ss, dir).documents
-        Seq(MM.audioIncoming(d), MM.audioIncoming2(d))
-      })
-  }
-
-  /** Streaming AUDIO admission — [[streamImageIngest]]'s
-    * admit-and-ingest loop on the audio channel through the one
-    * [[mediaIngestDemoLog]] scaffold (the r13 verdict's ask: the
-    * kernel was channel-generic, the loop was not): night 2's first
-    * wave RE-LEVELS (gain 2) night 1's fresh admissions — caught as
-    * 'dup' only because night 1 ingested them, which the stateless
-    * screen provably misses (AudioStreamIngestSpec plants the pair
-    * and checks both behaviors).
+  /** `dd_<c>_stream_ingest`: the channel's ingest log, gated by the
+    * two-night chain recomputed from scratch
+    * ([[graft.multimodal.Multimodal.streamIngestOracle]]).
     */
-  val streamAudioIngest = Query(
-    "dd_audio_stream_ingest",
-    (s, dir) => s.read
-      .schema("media_id LONG, status STRING, best_hamming INT")
-      .parquet(audioIngestDemoLog(s, dir))
-      .orderBy(col("media_id")),
-    oracle = Some(graft.multimodal.Multimodal.audioStreamIngestOracle),
-    eagerPlan = Some((s, dir) => {
-      import graft.multimodal.{Multimodal => MM}
-      // the declared batch shape: the screen over the persisted index
-      // (the ingest half's plan is pinned by MediaProbeSpec)
-      MM.probeMediaIndex(s, MM.buildAudioIndex(s, dir),
-        MM.audioHashesOfParams(MM.audioIncoming2(Tables(s, dir).documents)))
-    }),
-  )
-
-  private[graft] def videoIngestDemoLog(s: SparkSession, dir: String): String = {
-    import graft.multimodal.{Multimodal => MM}
-    mediaIngestDemoLog(s, dir, "graft_stream_vid",
-      "media_id LONG, g LONG, v INT",
-      ss => MM.videoHashesOfParams(MM.videoCorpusParams(ss, dir)),
-      MM.videoHashesOfParams,
-      ss => {
-        val d = Tables(ss, dir).documents
-        Seq(MM.videoIncoming(d), MM.videoIncoming2(d))
-      })
+  private def mediaStreamIngest(
+      ch: graft.multimodal.Multimodal.MediaChannel): Query = {
+    java.util.Objects.requireNonNull(ch,
+      "media channel read before its initialisation")
+    Query(
+      s"dd_${ch.name}_stream_ingest",
+      (s, dir) => s.read
+        .schema("media_id LONG, status STRING, best_hamming INT")
+        .parquet(mediaIngestDemoLog(s, dir, ch))
+        .orderBy(col("media_id")),
+      oracle = Some(graft.multimodal.Multimodal.streamIngestOracle(ch)),
+      eagerPlan = Some((s, dir) => {
+        import graft.multimodal.{Multimodal => MM}
+        // the declared batch shape: the screen over the persisted index
+        // (the ingest half's plan is pinned by ImageIndexSpec)
+        MM.probeMediaIndex(s, MM.buildMediaIndex(s, dir, ch),
+          ch.hashes(ch.night2(Tables(s, dir).documents)))
+      }),
+    )
   }
 
-  /** Streaming VIDEO admission — the last modality leg, completing the
-    * admit-and-ingest matrix across every channel (band/vector/text/
-    * image/audio/video, all through the one [[ingestLoop]] scaffold):
-    * night 2's first wave brightness-re-exports night 1's fresh
-    * admissions — hash-IDENTICAL by the contour fingerprint's
-    * invariance, so it screens dup AT HAMMING 0 exactly when the loop
-    * ingested night 1 (VideoStreamIngestSpec pins the frozen
-    * counterfactual).
-    */
-  val streamVideoIngest = Query(
-    "dd_video_stream_ingest",
-    (s, dir) => s.read
-      .schema("media_id LONG, status STRING, best_hamming INT")
-      .parquet(videoIngestDemoLog(s, dir))
-      .orderBy(col("media_id")),
-    oracle = Some(graft.multimodal.Multimodal.videoStreamIngestOracle),
-    eagerPlan = Some((s, dir) => {
-      import graft.multimodal.{Multimodal => MM}
-      // the declared batch shape: the screen over the persisted index
-      // (the ingest half's plan is pinned by MediaProbeSpec)
-      MM.probeMediaIndex(s, MM.buildVideoIndex(s, dir),
-        MM.videoHashesOfParams(MM.videoIncoming2(Tables(s, dir).documents)))
-    }),
-  )
+  val streamImageIngest = mediaStreamIngest(graft.multimodal.Multimodal.Image)
+  val streamAudioIngest = mediaStreamIngest(graft.multimodal.Multimodal.Audio)
+  val streamVideoIngest = mediaStreamIngest(graft.multimodal.Multimodal.Video)
 
   def all: Seq[Query] =
     Seq(streamHourly, streamSessions, streamRangeJoin, streamLeftJoin,

@@ -96,6 +96,6 @@ class PurgePlanSpec extends SparkSuite {
       .purgePlan(clustersOf("dd_image_clusters", "media_id"))
     assert(row.exceptAll(emitter).count() == 0 &&
       emitter.exceptAll(row).count() == 0,
-      "dd_image_purge diverges from purgePlan(imageClusterFrame)")
+      "dd_image_purge diverges from purgePlan(clusterFrame(Image))")
   }
 }

@@ -15,7 +15,7 @@ class ImageIndexSpec extends SparkSuite {
   private val dir = sf("sf0.001")
 
   private def corpusHashes() =
-    Multimodal.hashesOfParams(Multimodal.imageCorpusParams(spark, dir))
+    Multimodal.Image.corpusHashes(spark, dir)
 
   private def freshIdx(hashes: org.apache.spark.sql.DataFrame): String = {
     val idx = java.nio.file.Files
@@ -26,8 +26,8 @@ class ImageIndexSpec extends SparkSuite {
 
   private def probeRows(idx: String) =
     Multimodal.probeMediaIndex(spark, idx,
-      Multimodal.hashesOfParams(
-        Multimodal.imageIncoming(Tables(spark, dir).documents)))
+      Multimodal.Image.hashes(
+        Multimodal.Image.night1(Tables(spark, dir).documents)))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
 
   test("probe after upsert == probe of a from-scratch index") {

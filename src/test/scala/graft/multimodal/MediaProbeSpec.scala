@@ -101,9 +101,7 @@ class MediaProbeSpec extends SparkSuite {
     }
     // the three corpora are the same ids through three fingerprints —
     // the indexes must not alias each other's families
-    val img = Multimodal.buildImageIndex(spark, dir)
-    val aud = Multimodal.buildAudioIndex(spark, dir)
-    val vid = Multimodal.buildVideoIndex(spark, dir)
-    assert(Set(img, aud, vid).size == 3, "media index families collide")
+    val idxs = Multimodal.channels.map(Multimodal.buildMediaIndex(spark, dir, _))
+    assert(idxs.toSet.size == 3, "media index families collide")
   }
 }

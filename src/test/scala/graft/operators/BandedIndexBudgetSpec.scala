@@ -60,8 +60,7 @@ class BandedIndexBudgetSpec extends SparkSuite {
   }
 
   test("a media-index upsert and delete stay inside the job budget") {
-    val all = local(Multimodal.hashesOfParams(
-      Multimodal.imageCorpusParams(spark, dir)))
+    val all = local(Multimodal.Image.corpusHashes(spark, dir))
     val idx = tmpIdx("media")
     Multimodal.writeMediaIndex(spark, all.filter(col("media_id") % 5 =!= 0),
       idx)

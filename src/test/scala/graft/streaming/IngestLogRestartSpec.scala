@@ -47,19 +47,11 @@ class IngestLogRestartSpec extends SparkSuite {
     stageOne(DQ.cdcIncoming(Tables(spark, dir).documents), "batch1", t0)
     stageOne(DQ.ingestBatch2(Tables(spark, dir).documents), "batch2",
       t0 + 120000L)
-    val handle: (DataFrame, Long) => Seq[Row] = (batch, _) => {
-      val verdicts = DQ.probeBandIndex(spark, idx, batch,
-        excludeBatchIds = true).collect().toSeq
-      import spark.implicits._
-      val newIds = verdicts.filter(_.getString(1) == "new")
-        .map(_.getLong(0)).toDF("doc_id")
-      val admitted = batch.join(newIds, Seq("doc_id"), "left_semi")
-        .join(spark.read.schema("doc_id LONG, sh ARRAY<LONG>, sbkt INT")
-            .parquet(s"$idx/sigs").select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      DQ.upsertBandIndex(spark, idx, admitted)
-      verdicts
-    }
+    // the loop's own admission step (screen → ingest the admitted)
+    val handle: (DataFrame, Long) => Seq[Row] = (batch, _) =>
+      DQ.BandLayout.admit(spark, idx, batch)(
+        DQ.probeBandIndex(spark, idx, _, excludeBatchIds = true),
+        DQ.upsertBandIndex(spark, idx, _))
     (idx, stage, s"$base/logparts", s"$base/ckpt", handle)
   }
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Self-test for oracle_check.py's dtype hardening.
+"""Self-test for oracle_check.py's dtype hardening and parity_check.py.
 
 Round 9 shipped three queries green locally and red under the driver's
 repr-sensitive hash because DuckDB HUGEINT outputs materialize as
@@ -7,7 +7,9 @@ float64 in pandas while Spark writes int64 — value-equal, hash-
 divergent. oracle_check.py now fails that class in two independent
 ways; this self-test proves BOTH detectors fire (and that a clean
 fixture still passes), so a regression in the checker itself cannot
-silently re-open the gap.
+silently re-open the gap. A second leg plants a one-value difference
+between two Verify directories, once in a Spark result and once in an
+oracle, and proves parity_check.py reports exactly those rows.
 
     python3 tools/oracle_check_selftest.py
 """
@@ -30,6 +32,46 @@ def run_check(sf_dir, out_dir):
          out_dir],
         capture_output=True, text=True)
     return p.returncode, p.stdout
+
+
+def run_parity(dir_a, dir_b, sf_dir):
+    p = subprocess.run(
+        [sys.executable, os.path.join(HERE, "parity_check.py"), dir_a,
+         dir_b, sf_dir],
+        capture_output=True, text=True)
+    return p.returncode, p.stdout
+
+
+def parity_leg(tmp, sf_dir):
+    """Two Verify directories, identical except one value of t_spark's
+    Spark result and one value of t_oracle's oracle SQL."""
+    sides = {}
+    for side, (n, k) in {"a": (2, 2), "b": (3, 3)}.items():
+        d = os.path.join(tmp, f"parity_{side}")
+        for name, vals in [("t_same", [1, 2]), ("t_spark", [1, n]),
+                           ("t_oracle", [1, 2])]:
+            os.makedirs(os.path.join(d, name))
+            pd.DataFrame({"n": pd.Series(vals, dtype="int64")}).to_parquet(
+                os.path.join(d, name, "part-0.parquet"))
+        json.dump({"t_same": "SELECT 1::BIGINT AS n",
+                   "t_spark": "SELECT 1::BIGINT AS n",
+                   "t_oracle": f"SELECT {k}::BIGINT AS n"},
+                  open(os.path.join(d, "oracle_sql.json"), "w"))
+        sides[side] = d
+    rc, out = run_parity(sides["a"], sides["a"], sf_dir)
+    problems = []
+    if rc != 0 or "3 identical, 0 differ" not in out:
+        problems.append("a directory is not identical to itself")
+    rc, out = run_parity(sides["a"], sides["b"], sf_dir)
+    if rc == 0:
+        problems.append("parity exited 0 with planted differences")
+    if "SAME t_same" not in out:
+        problems.append("the unchanged row was not reported identical")
+    if "DIFF t_spark: spark row 1 col n: A=2 B=3" not in out:
+        problems.append("the one-value Spark difference was not reported")
+    if "DIFF t_oracle: oracle row 0 col n: A=2 B=3" not in out:
+        problems.append("the one-value oracle difference was not reported")
+    return problems, out
 
 
 def main():
@@ -82,9 +124,14 @@ def main():
                "HUGEINT oracle output not reported")
         expect("FAIL t_family" in out and "dtype divergence" in out,
                "int64-vs-float64 family divergence not reported")
+        problems, out = parity_leg(tmp, sf_dir)
+        for msg in problems:
+            expect(False, f"parity_check: {msg}")
         if ok:
             print("SELFTEST OK: clean passes, HUGEINT and dtype-family "
-                  "divergence both detected")
+                  "divergence both detected; parity_check catches a "
+                  "one-value difference in a Spark result and in an "
+                  "oracle")
         return 0 if ok else 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
