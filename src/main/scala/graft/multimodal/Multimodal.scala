@@ -65,17 +65,21 @@ object Multimodal {
       .toDF()
   }
 
+  /** The corpus's base image of `id`: 24bpp BMP on a (id % 31 + 1) ×
+    * (id % 17 + 1) canvas, grey(i) = (id·7 + i·3) mod 256 — the [[Image]]
+    * channel's blob at g = id, v = 0.
+    */
+  private[multimodal] def baseImage(id: Long): Array[Byte] =
+    Image.blob(Seq(id, 0L, id % 31 + 1, id % 17 + 1))
+
   /** One synthesized media row; the closed-form parameter formulas here
     * are mirrored verbatim in the `mm_*` oracles.
     */
   private[multimodal] def synthRecord(id: Long, nChars: Long): MediaRecord =
     (id % 3) match {
-      case 0 => // image: 24bpp BMP, grey(i) = (id·7 + i·3) mod 256
-        val w = (id % 31 + 1).toInt
-        val h = (id % 17 + 1).toInt
-        val bytes = BmpCodec.encode(w, h,
-          (x, y) => ((id * 7 + (y.toLong * w + x) * 3) % 256).toInt)
-        MediaRecord(id, "image", bytes, w, h, 0, 1)
+      case 0 => // image: the base image of id ([[baseImage]])
+        MediaRecord(id, "image", baseImage(id), (id % 31 + 1).toInt,
+          (id % 17 + 1).toInt, 0, 1)
       case 1 => // audio: mono 16-bit PCM WAV, sample(i) = (id·31+i·7) mod 2^16 − 2^15
         val rate = 8000 + (id % 5).toInt * 2000
         val n    = (nChars % 240 + 1).toInt
@@ -386,11 +390,7 @@ object Multimodal {
         .orderBy(col("doc_id")).as[Long]
       val decoded = params.mapPartitions { it =>
         it.map { id =>
-          val w = (id % 31 + 1).toInt
-          val h = (id % 17 + 1).toInt
-          val bytes = BmpCodec.encode(w, h,
-            (x, y) => ((id * 7 + (y.toLong * w + x) * 3) % 256).toInt)
-          val b = BmpCodec.decode(bytes)
+          val b = BmpCodec.decode(baseImage(id))
           (id, b.width, b.height, b.bitsPerPixel, b.fileSize, b.meanLevel,
             b.topLeft)
         }
@@ -614,8 +614,7 @@ object Multimodal {
     *    upsert-demo and delete-demo families ([[family]]);
     *    `lakeFamily` and `streamFamily` name the blob lake and the
     *    ingest loop's published root; `logArtifact` and `lakeArtifact`
-    *    name the channel's `ss_index_manifest` entries (a lake without
-    *    an artifact name is not audited);
+    *    name the channel's `ss_index_manifest` entries;
     *  - `params` is the DDL of the synthesis parameters after
     *    `media_id` (the ingest loop's stream schema);
     *  - `blob` synthesizes one container from its parameters (in
@@ -637,7 +636,7 @@ object Multimodal {
     */
   final case class MediaChannel(name: String, lakeFamily: String,
       streamFamily: String, logArtifact: String,
-      lakeArtifact: Option[String], params: String,
+      lakeArtifact: String, params: String,
       blob: Seq[Long] => Array[Byte], fingerprint: Array[Byte] => Long,
       hashExpr: String,
       corpus: DataFrame => DataFrame, night1: DataFrame => DataFrame,
@@ -709,7 +708,7 @@ object Multimodal {
     */
   val Image: MediaChannel = MediaChannel("image",
     lakeFamily = "graft_media_lake", streamFamily = "graft_stream_img",
-    logArtifact = "media_ingest_log", lakeArtifact = Some("media_lake"),
+    logArtifact = "media_ingest_log", lakeArtifact = "media_lake",
     params = "g LONG, v INT, w INT, h INT",
     blob = { case Seq(g, v, w, h) =>
       BmpCodec.encode(w.toInt, h.toInt,
@@ -781,7 +780,7 @@ object Multimodal {
     */
   val Audio: MediaChannel = MediaChannel("audio",
     lakeFamily = "graft_audio_lake", streamFamily = "graft_stream_aud",
-    logArtifact = "audio_ingest_log", lakeArtifact = None,
+    logArtifact = "audio_ingest_log", lakeArtifact = "audio_lake",
     params = "g LONG, gain LONG",
     blob = { case Seq(g, gain) =>
       WavCodec.encode(8000 + (g % 5).toInt * 2000,
@@ -853,7 +852,7 @@ object Multimodal {
     */
   val Video: MediaChannel = MediaChannel("video",
     lakeFamily = "graft_video_lake", streamFamily = "graft_stream_vid",
-    logArtifact = "video_ingest_log", lakeArtifact = None,
+    logArtifact = "video_ingest_log", lakeArtifact = "video_lake",
     params = "g LONG, v INT",
     blob = { case Seq(g, v) =>
       def base(f: Int): Int =
@@ -1880,11 +1879,7 @@ object Multimodal {
         .select(col("doc_id")).as[Long]
       val rows = params.mapPartitions { it =>
         it.map { id =>
-          val w = (id % 31 + 1).toInt
-          val h = (id % 17 + 1).toInt
-          val bytes = BmpCodec.encode(w, h,
-            (x, y) => ((id * 7 + (y.toLong * w + x) * 3) % 256).toInt)
-          val (dw, dh, grey) = BmpCodec.decodeGrey(bytes)
+          val (dw, dh, grey) = BmpCodec.decodeGrey(baseImage(id))
           val n = dw.toLong * dh
           var sum = 0L; var ss = 0L; var sharp = 0L
           var i = 0

@@ -1072,7 +1072,7 @@ object SimilarityQueries {
   /** The `ss_index_manifest` oracle rows of the media channels, each
     * SELECT followed by `UNION ALL`: an index holds the whole corpus,
     * an ingest log one verdict per arrival of the two-night chain, and
-    * an audited lake the corpus minus the purged non-representatives.
+    * a blob lake the corpus minus the purged non-representatives.
     */
   private def mediaManifestSql: String = {
     import graft.multimodal.Multimodal.{channels, clusterCtes, streamIngestOracle}
@@ -1084,12 +1084,12 @@ object SimilarityQueries {
       SELECT '${ch.logArtifact}',
         (SELECT count(*) FROM (${streamIngestOracle(ch)}
         ) t)::BIGINT, true
-      UNION ALL""" + ch.lakeArtifact.fold("") { a => s"""
-      SELECT '$a',
+      UNION ALL
+      SELECT '${ch.lakeArtifact}',
         ((SELECT count(*) FROM documents) -
          (WITH RECURSIVE ${clusterCtes(ch)}
           SELECT count(*) FROM purged))::BIGINT, true
-      UNION ALL""" }
+      UNION ALL"""
     }.mkString
   }
 
@@ -1108,7 +1108,7 @@ object SimilarityQueries {
     * CURRENT source fingerprint
     * ([[graft.core.IndexDirs.stalePublishedGenerations]];
     * IndexManifestSpec proves a planted stale generation flips it).
-    * Cheap by construction: 21 narrow count/1-row reads fused into ONE
+    * Cheap by construction: 23 narrow count/1-row reads fused into ONE
     * union plan (a single Spark action; r16 — the per-family count
     * jobs' planning gaps dominated the row) plus per-family directory
     * listings on the driver — nothing corpus-sized moves.
@@ -1146,11 +1146,11 @@ object SimilarityQueries {
         Seq(index(s"${ch.name}_index", MM.buildMediaIndex(s, dir, ch),
             "sigs", "media_id", docsFp),
           log(ch.logArtifact, SQ.mediaIngestDemoLog(s, dir, ch),
-            "media_id LONG", docsFp)) ++
-          ch.lakeArtifact.map { a =>
-            val lake = MM.ensurePurgedMediaLake(s, dir, ch)
-            (a, items(s"$lake/media", "media_id LONG"), lake, docsFp)
-          }
+            "media_id LONG", docsFp)) :+ {
+          val lake = MM.ensurePurgedMediaLake(s, dir, ch)
+          (ch.lakeArtifact, items(s"$lake/media", "media_id LONG"), lake,
+            docsFp)
+        }
       }
       val entries = media ++ Seq(
         log("admission_log", SQ.ingestDemoLog(s, dir), "doc_id LONG",

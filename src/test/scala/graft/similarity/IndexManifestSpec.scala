@@ -16,23 +16,25 @@ class IndexManifestSpec extends SparkSuite {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
-  test("the healthy deployment audits generation_ok across all twenty-one families") {
+  test("the healthy deployment audits generation_ok on every family") {
     // r14 (the r13 judge's ask #3): the gated row covers every
     // persisted artifact — the index trilogy, the compressed IVF-PQ
     // index, the multi-vector MaxSim index (r15) and its retrain
     // generations (r16), both single-vector retrain generations, the
-    // three media admission indexes, the seven ingest-loop logs, both
-    // post-purge lakes, and the admission service's verdict log
+    // three media admission indexes, the seven ingest-loop logs, the
+    // four post-purge lakes (text, image, audio, video), and the
+    // admission service's verdict log
     val rows = QueryRegistry.byName("ss_index_manifest").run(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
     assert(rows.map(_._1).toSeq ==
-      Seq("admission_log", "audio_index", "audio_ingest_log",
+      Seq("admission_log", "audio_index", "audio_ingest_log", "audio_lake",
         "band_index", "image_index", "ivf_index", "ivfpq_index",
         "maxsim_index", "maxsim_ingest_log", "maxsim_retrain_index",
         "media_ingest_log", "media_lake",
         "pq_ingest_log", "pq_retrain_index", "retrain_index",
         "text_index", "text_ingest_log", "text_lake",
-        "vector_ingest_log", "video_index", "video_ingest_log"))
+        "vector_ingest_log", "video_index", "video_ingest_log",
+        "video_lake"))
     assert(rows.forall(_._3), s"healthy deployment audited stale: $rows")
     assert(rows.forall(_._2 > 0))
     // the retrain generations audit at corpus + batch size — the
@@ -46,7 +48,8 @@ class IndexManifestSpec extends SparkSuite {
     // rows than the corpus (the purge is what makes the count durable)
     val corpus = graft.Tables(spark, dir).documents.count()
     val byName = rows.map(r => r._1 -> r._2).toMap
-    assert(byName("text_lake") < corpus && byName("media_lake") < corpus,
+    assert(Seq("text_lake", "media_lake", "audio_lake", "video_lake")
+      .forall(byName(_) < corpus),
       "a lake audits at full-corpus count — the purge never applied")
   }
 
